@@ -2,9 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.types.{LongType, StringType}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.GraftFunctions
 
 /**
  * SparkSessionExtensions entry point: makes every graft function available
@@ -12,50 +11,13 @@ import org.apache.spark.sql.types.{LongType, StringType}
  * `SparkSession.builder().withExtensions(new GraftExtensions)` or via
  * `spark.sql.extensions=graft.GraftExtensions` on spark-submit — the
  * standard deployment route for a multi-executor cluster (the north rule's
- * spark-submit path). Function bodies are the same StaticInvoke-over-
- * kernel expressions `GraftFunctions.registerAll` installs per-session.
+ * spark-submit path). It injects the same [[GraftFunctions.sqlFunctions]]
+ * table `GraftFunctions.registerAll` installs per-session.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private val K = graft.functions.Kernels.getClass
-
-  private def info(name: String) =
-    new ExpressionInfo(K.getName, name)
-
-  private def inject1(e: SparkSessionExtensions, name: String, fn: String): Unit =
-    e.injectFunction((FunctionIdentifier(name), info(name),
-      (args: Seq[Expression]) =>
-        StaticInvoke(K, StringType, fn, args.take(1), inputTypes = Seq(StringType))))
-
-  private def inject2(e: SparkSessionExtensions, name: String, fn: String): Unit =
-    e.injectFunction((FunctionIdentifier(name), info(name),
-      (args: Seq[Expression]) =>
-        StaticInvoke(K, StringType, fn, args.take(2),
-          inputTypes = Seq(StringType, StringType))))
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    inject1(e, "url_canonicalize", "urlCanonicalize")
-    inject1(e, "url_host", "urlHost")
-    inject1(e, "url_path", "urlPath")
-    inject2(e, "url_resolve", "urlResolve")
-    inject2(e, "url_query_param", "urlQueryParam")
-    inject1(e, "graft_slugify", "slugify")
-    inject1(e, "strip_parens", "stripParens")
-    inject1(e, "normalize_ws", "normalizeWs")
-    inject1(e, "normalize_dashes", "normalizeDashes")
-    inject1(e, "ics_escape", "icsEscape")
-    inject1(e, "ics_fold", "icsFold")
-    inject1(e, "mime_guess", "mimeGuess")
-    inject1(e, "desc_fallback", "descFallback")
-    inject1(e, "lz_decompress_utf16", "lzDecompressUtf16")
-    inject1(e, "lz_compress_utf16", "lzCompressUtf16")
-    inject1(e, "lexical_to_html", "lexicalToHtml")
-    inject2(e, "html_text", "htmlText")
-    e.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
-      (args: Seq[Expression]) =>
-        StaticInvoke(K, LongType, "simhash64", args.take(1), inputTypes = Seq(StringType))))
-    e.injectFunction((FunctionIdentifier("cuckoo_might_contain"), info("cuckoo_might_contain"),
-      (args: Seq[Expression]) =>
-        graft.functions.CuckooMightContain(args(0), args(1))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftFunctions.sqlFunctions.foreach { case (name, builder) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(graft.functions.Kernels.getClass.getName, name), builder))
+    }
 }

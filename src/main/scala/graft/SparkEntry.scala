@@ -980,11 +980,11 @@ object SparkEntry {
     * shuffle partition count should track state size, not the host's core
     * count (guide §2: scale-adaptive partitioning) — 32 HDFS-backed state
     * stores re-committing per micro-batch is pure per-trigger overhead.
-    * Parameterised; production streams size this to their key cardinality. */
+    * Fixed at 4 here; production streams size this to their key cardinality. */
   private def withStreamShuffle[T](s: SparkSession)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = s.conf.get(key)
-    s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_SHUFFLE", "4"))
+    s.conf.set(key, "4")
     try f finally s.conf.set(key, old)
   }
 

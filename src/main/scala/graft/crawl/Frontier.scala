@@ -1,7 +1,6 @@
 package graft.crawl
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.GraftFunctions
@@ -16,14 +15,15 @@ import graft.model.Post
  *
  * Per wave (one BFS depth level):
  *  1. canonicalize + hash every URL (codegen'd kernel expressions);
- *  2. in-wave dedup on url_hash (keep the breadth-first-smallest order key);
- *  3. seen-set filter: Bloom pre-filter + exact anti-join on the maybe
- *     slice ([[SeenSet.filterNew]]);
+ *  2. seen-set filter: incremental Bloom/cuckoo pre-filter + exact
+ *     anti-join on the maybe slice ([[SeenSet.filterNewProbe]]);
+ *  3. in-wave dedup on url_hash (keep the breadth-first-smallest order key);
  *  4. politeness schedule: per-HOST virtual clock — the k-th fetch of a
  *     host is scheduled at (k-1) * crawl_delay(host) (robots-derived
  *     delays; reference precedent: fixed 300 ms,
  *     wordpress/mod.rs:146). Multiple sites on one host (cse/sw boards)
- *     share the bucket;
+ *     share the bucket. Steps 3 and 4 are ONE by-host exchange plus one
+ *     sorted per-partition pass (duplicates of a URL share its host);
  *  5. salted repartition (host_hash, salt) of the fetch stage so a hot
  *     host (Zipf rank 1 = scatch) spreads across `numSalts` partitions
  *     instead of serializing on one — the salted-key priority queue.
@@ -98,10 +98,6 @@ object Crawl {
       maxWaves: Int = 64,
       snapshotDir: Option[String] = None,
       seenSketch: String = "bloom", // "bloom" | "cuckoo"
-      // seed lists are distinct by construction (one URL per (site, page))
-      // — skip the wave-0 in-wave dedup shuffle; set false for seed sources
-      // that may repeat URLs
-      seedsDistinct: Boolean = true,
       // Deterministic fetch-fault injection for the synthetic web:
       // ((site_id, wave) -> number of attempts that fail). The reference
       // tests inject failing plugins the same way to drive run_with_retry
@@ -288,9 +284,9 @@ object Crawl {
     // A failed site contributes NO rows to persisted/returned posts — its
     // earlier-wave fetches happened, but the reference's failed plugin
     // yields an error, not partial output (mod.rs:38-93).
-    def excludeFailedSites(posts: DataFrame): DataFrame =
-      if (midCrawlFailures.isEmpty) posts
-      else posts.filter(!col("site_id").isin(midCrawlFailures.keys.toSeq: _*))
+    def excludeFailedSites(df: DataFrame): DataFrame =
+      if (midCrawlFailures.isEmpty) df
+      else df.filter(!col("site_id").isin(midCrawlFailures.keys.toSeq: _*))
     // The seen table carries only url_hash — recover the failed sites'
     // hashes from the schedule (every seen hash has a schedule row) and
     // anti-join them out, so a resume / the next run re-schedules them.
@@ -306,21 +302,12 @@ object Crawl {
       }
     val fetchLogParts = scala.collection.mutable.ArrayBuffer(
       Seq.empty[(String, Long, Int)].toDF("host", "started_at_ms", "wave"))
-    val debug = sys.env.get("SPARK_GRAFT_CRAWL_DEBUG").contains("1")
-    def tick[T](label: String, wv: Int)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (debug) System.err.println(f"[crawl] w$wv $label ${(System.nanoTime() - t0) / 1e9}%.2fs")
-      r
-    }
 
     while (wave < cfg.maxWaves && frontierCount > 0) {
       // a site that already exhausted its retries fetches nothing further
       // this run (the reference drops the failed plugin for the whole run)
       // — its leftover frontier rows are pruned before any scheduling work
-      val frontierLive =
-        if (midCrawlFailures.isEmpty) frontier
-        else frontier.filter(!col("site_id").isin(midCrawlFailures.keys.toSeq: _*))
+      val frontierLive = excludeFailedSites(frontier)
       // 1. re-materialize the URL from its grammar coordinates (the
       //    frontier persists/shuffles only (site_id, kind, page, row,
       //    depth) — see UrlGrammar), then canonicalize + hash (codegen'd
@@ -358,102 +345,60 @@ object Crawl {
       // 3k-row daemon crawl fans out 128 politeness tasks + 96 writer
       // tasks per wave — pure scheduler overhead and a 96-file stage-out
       // for a wave that fits one task.
-      val rowsPerTask = sys.props.get("graft.rows.per.task")
-        .orElse(sys.env.get("SPARK_GRAFT_ROWS_PER_TASK")).getOrElse("8192").toLong
+      val rowsPerTask = sys.props.getOrElse("graft.rows.per.task", "8192").toLong
       def adaptiveParts(cap: Int): Int =
         math.max(1L, math.min(cap.toLong,
           (frontierCount + rowsPerTask - 1) / rowsPerTask)).toInt
 
-      // 2-4. in-wave dedup (breadth-smallest order key per url_hash) +
-      // seen-set filter + politeness clock. Strategies via SPARK_GRAFT_DEDUP:
-      //  - "fused" (default): seen-filter first (Bloom prefilter: the big
-      //    slice never joins), then ONE exchange clusters each host's rows —
-      //    duplicates of a URL always share the host, so a single sorted
-      //    per-partition pass does the exact dedup AND assigns the per-host
-      //    politeness rank. One wave exchange + one local sort where the
-      //    split strategies pay two of each (dedup shuffle + window
-      //    exchange) — shuffle bytes are the scaling-limited resource;
-      //  - "window": dedup via row_number over a url_hash window, then the
-      //    separate host window (the round-1 shape, kept for A/B);
-      //  - "minby": dedup via hash aggregation with map-side combine — wins
-      //    when duplicate discovery is common (the real-web case), as dupes
-      //    collapse before the shuffle.
-      val keyedCols = keyed.columns
-      val dedupStrategy = sys.env.getOrElse("SPARK_GRAFT_DEDUP", "fused")
-      val scheduled =
-        if (dedupStrategy == "fused") {
-          val fresh0 = tick("sketch+filterNew(build)", wave)(
-            SeenSet.filterNewProbe(keyed, seenAll, "url_hash",
-              sketch.probe(col("url_hash"))))
-          fresh0.select(col("site_id"), col("kind"), col("page"), col("row"),
-              col("depth"), col("crawl_delay_ms"), col("url_hash"), col("host_hash"))
-            .as[WaveRow]
-            // finer than the reducer knob: a host cannot split across
-            // partitions (the politeness rank needs the host contiguous),
-            // so the hot host is a fixed-size task — smaller sibling tasks
-            // let the scheduler overlap it instead of idling at the barrier
-            .repartition(adaptiveParts(parallelism * 4), col("host_hash"))
-            .sortWithinPartitions(col("host_hash"), col("depth"), col("site_id"),
-              col("page"), col("row"), col("url_hash"))
-            .mapPartitions { it =>
-              // hosts are hash-disjoint across partitions and contiguous
-              // after the sort: the dedup set resets per host, so memory is
-              // bounded by the hottest host's wave slice (8 B per URL)
-              val seenUrl = new java.util.HashSet[java.lang.Long]()
-              var curHost = 0L
-              var rank = 0L
-              var started = false
-              it.flatMap { r =>
-                if (!started || r.host_hash != curHost) {
-                  curHost = r.host_hash; rank = 0L; seenUrl.clear(); started = true
-                }
-                if (seenUrl.add(r.url_hash)) {
-                  val out = RankedRow(r.site_id, r.kind, r.page, r.row, r.depth,
-                    r.crawl_delay_ms, r.url_hash, r.host_hash,
-                    rank * r.crawl_delay_ms)
-                  rank += 1
-                  Some(out)
-                } else None
-              }
+      // 2-4. seen-set filter first (sketch prefilter: the big slice never
+      // joins), then ONE exchange clusters each host's rows — duplicates of
+      // a URL always share the host, so a single sorted per-partition pass
+      // does the exact in-wave dedup (breadth-smallest order key per
+      // url_hash) AND assigns the per-host politeness rank. One wave
+      // exchange + one local sort; the split row_number/min_by shapes paid
+      // two of each (dedup shuffle + host window exchange) and lost the
+      // BENCH.md §7 A/B — shuffle bytes are the scaling-limited resource.
+      val scheduled = SeenSet.filterNewProbe(keyed, seenAll, "url_hash",
+          sketch.probe(col("url_hash")))
+        .select(col("site_id"), col("kind"), col("page"), col("row"),
+          col("depth"), col("crawl_delay_ms"), col("url_hash"), col("host_hash"))
+        .as[WaveRow]
+        // finer than the reducer knob: a host cannot split across
+        // partitions (the politeness rank needs the host contiguous),
+        // so the hot host is a fixed-size task — smaller sibling tasks
+        // let the scheduler overlap it instead of idling at the barrier
+        .repartition(adaptiveParts(parallelism * 4), col("host_hash"))
+        .sortWithinPartitions(col("host_hash"), col("depth"), col("site_id"),
+          col("page"), col("row"), col("url_hash"))
+        .mapPartitions { it =>
+          // hosts are hash-disjoint across partitions and contiguous
+          // after the sort: the dedup set resets per host, so memory is
+          // bounded by the hottest host's wave slice (8 B per URL)
+          val seenUrl = new java.util.HashSet[java.lang.Long]()
+          var curHost = 0L
+          var rank = 0L
+          var started = false
+          it.flatMap { r =>
+            if (!started || r.host_hash != curHost) {
+              curHost = r.host_hash; rank = 0L; seenUrl.clear(); started = true
             }
-            .toDF()
-            .withColumn("salt", pmod(col("url_hash"), lit(cfg.numSalts)))
-        } else {
-          val inWave =
-            if (wave == 0 && cfg.seedsDistinct) {
-              // the seed wave is distinct BY CONSTRUCTION (one URL per
-              // (site, page); distinct sites have distinct base URLs)
-              keyed
-            } else if (dedupStrategy == "window") {
-              val wDedup = Window.partitionBy("url_hash")
-                .orderBy(col("depth"), col("site_id"), col("page"), col("row"))
-              keyed.withColumn("_rn", row_number().over(wDedup))
-                .filter(col("_rn") === 1).drop("_rn")
-            } else keyed
-              .groupBy("url_hash")
-              .agg(min_by(
-                struct(keyedCols.filter(_ != "url_hash").map(col): _*),
-                struct(col("depth"), col("site_id"), col("page"), col("row"))).as("_r"))
-              .select(col("url_hash") +: keyedCols.filter(_ != "url_hash")
-                .map(c => col(s"_r.$c").as(c)): _*)
-          val fresh = tick("sketch+filterNew(build)", wave)(
-            SeenSet.filterNewProbe(inWave, seenAll, "url_hash",
-              sketch.probe(col("url_hash"))))
-          val wHost = Window.partitionBy("host_hash")
-            .orderBy(col("depth"), col("site_id"), col("page"), col("row"))
-          fresh
-            .withColumn("ready_ms",
-              (row_number().over(wHost) - 1).cast("long") * col("crawl_delay_ms"))
-            .withColumn("salt", pmod(col("url_hash"), lit(cfg.numSalts)))
-            // uniform url-free schedule schema: the write projection below
-            // re-materializes the URL for every strategy
-            .drop("url")
+            if (seenUrl.add(r.url_hash)) {
+              val out = RankedRow(r.site_id, r.kind, r.page, r.row, r.depth,
+                r.crawl_delay_ms, r.url_hash, r.host_hash,
+                rank * r.crawl_delay_ms)
+              rank += 1
+              Some(out)
+            } else None
+          }
         }
+        .toDF()
+        .withColumn("salt", pmod(col("url_hash"), lit(cfg.numSalts)))
 
       // 5. salted repartition for the fetch stage (defeats host skew — the
-      // window's by-host exchange leaves the hot host in one partition, so
-      // writing directly from it would skew both the parquet encode and the
-      // read-back), then ONE streaming pass stages the wave out to columnar
+      // by-host exchange leaves the hot host in one partition, so writing
+      // directly from it would skew both the parquet encode and the
+      // read-back; Zipf rank 1 was a ~25% single-task straggler without
+      // the salt), then ONE streaming pass stages the wave out to columnar
       // storage (parquet). Wide rows are never cached in memory: the
       // in-memory columnar cache build cost ~3x the compute at 10^6 rows
       // and is pure GC pressure at 10^10 — stage-out to storage is the
@@ -467,56 +412,42 @@ object Crawl {
       // them (the fetch stage prunes to url/site/kind/page/row/depth)
       // never pay for them at all
       val wavePath = s"$workDir/waves/w$wave/schedule"
-      // A/B knob: the salted write exchange spreads the hot host's rows
-      // across writers (Zipf rank-1 is a ~25% single-task straggler
-      // without it); =0 writes straight from the fused layout
-      val saltedWrite = !sys.env.get("SPARK_GRAFT_SALTED_WRITE").contains("0")
       // finer-than-core write tasks: (host, salt) groups are few enough at
       // fleet scale that hashing them into exactly `cores` buckets leaves
       // visible imbalance; 3x gives the scheduler room to overlap without
       // shrinking row groups much (quiet-window A/B at N=2/8: 3x edged 2x
       // on both wall and cpu at 8 cores, flat at 2)
-      val writeParts = adaptiveParts(parallelism *
-        sys.env.getOrElse("SPARK_GRAFT_WRITE_PARTS", "3").toInt)
-      tick("stageout.write", wave) {
-        (if (saltedWrite)
-          scheduled.repartition(writeParts, col("host_hash"), col("salt"))
-        else scheduled)
-          // coordinates only: like `canonical`/`host` (and like the
-          // exchanges above), the wave FILE does not store the URL
-          // string either — at scale 1M the big-wave stage-out parquet
-          // drops 93 → 55 MB (the residue is the incompressible 8-byte
-          // url/host hashes), the dominant wave-write cost. Consumers
-          // re-derive url/canonical/host from the grammar kernel at
-          // read time (fetchInput below); the PERSISTED
-          // schedule/snapshot artifacts still materialize the URL.
-          .withColumn("partition_id", spark_partition_id())
-          .write.mode("overwrite")
-          // wave files are transient single-reader stage-out; pinned A/B at
-          // N=2/N=8 over snappy/lz4/none showed lz4 ~15% slower and
-          // snappy vs none within host noise — keep the parquet default,
-          // expose the knob for cluster-specific tuning
-          .option("compression", sys.env.getOrElse("SPARK_GRAFT_WAVE_CODEC", "snappy"))
-          // dictionary encoding was OFF while the unique URL strings rode
-          // in this file (dict hashing on never-repeating values is pure
-          // LLC pressure); with the file now coordinates-only its string
-          // columns (site_id, kind) have 54/2 distinct values — exactly
-          // what dictionary encoding is for, so the parquet default is
-          // back on (knob retained for A/B)
-          .option("parquet.enable.dictionary",
-            sys.env.getOrElse("SPARK_GRAFT_WAVE_DICT", "true"))
-          // hive-style wave=N leaf dir: the wave number rides as a
-          // PARTITION column on read-back instead of a `lit(wave)` in the
-          // write projection — an int literal is inlined into the
-          // generated code, so every wave used to Janino-compile a fresh
-          // write-stage class (same machine code, different constant);
-          // with the constant in the directory name the projection source
-          // is wave-invariant and every wave of every crawl in a session
-          // shares one compiled class. Value-identical: partition
-          // inference types `wave=N` as the same IntegerType the literal
-          // had.
-          .parquet(s"$wavePath/wave=$wave")
-      }
+      val writeParts = adaptiveParts(parallelism * 3)
+      scheduled.repartition(writeParts, col("host_hash"), col("salt"))
+        // coordinates only: like `canonical`/`host` (and like the
+        // exchanges above), the wave FILE does not store the URL
+        // string either — at scale 1M the big-wave stage-out parquet
+        // drops 93 → 55 MB (the residue is the incompressible 8-byte
+        // url/host hashes), the dominant wave-write cost. Consumers
+        // re-derive url/canonical/host from the grammar kernel at
+        // read time (fetchInput below); the PERSISTED
+        // schedule/snapshot artifacts still materialize the URL.
+        .withColumn("partition_id", spark_partition_id())
+        .write.mode("overwrite")
+        // wave files are transient single-reader stage-out; pinned A/B at
+        // N=2/N=8 over snappy/lz4/none showed lz4 ~15% slower and
+        // snappy vs none within host noise
+        .option("compression", "snappy")
+        // the file is coordinates-only: its string columns (site_id,
+        // kind) have 54/2 distinct values — exactly what dictionary
+        // encoding is for
+        .option("parquet.enable.dictionary", "true")
+        // hive-style wave=N leaf dir: the wave number rides as a
+        // PARTITION column on read-back instead of a `lit(wave)` in the
+        // write projection — an int literal is inlined into the
+        // generated code, so every wave used to Janino-compile a fresh
+        // write-stage class (same machine code, different constant);
+        // with the constant in the directory name the projection source
+        // is wave-invariant and every wave of every crawl in a session
+        // shares one compiled class. Value-identical: partition
+        // inference types `wave=N` as the same IntegerType the literal
+        // had.
+        .parquet(s"$wavePath/wave=$wave")
       val staged = spark.read.parquet(wavePath)
       val fetchInput = staged
         // the URL string re-enters HERE, at read time (one grammar-kernel
@@ -620,23 +551,17 @@ object Crawl {
       // the "small" link set is 3.7M rows, and the next wave's scheduling
       // scan then pays the cache's row-at-a-time deserialization on the hot
       // path (measured: the biggest single CPU consumer of the 8-core
-      // bench). Columnar files read back splittable and prunable; =0
-      // reverts to the cache for A/B.
+      // bench). Columnar files read back splittable and prunable.
       // the link rows persist COORDINATES only — the URL string (~70 B of
       // the ~100 B row) is grammar-derived, so dropping it shrinks the
       // inter-wave frontier file (written AND re-read every wave) by ~2/3;
       // the next wave's `keyed` re-materializes it (UrlGrammar)
       val linksDf = expanded.filter(_.link.isDefined).map(_.link.get).toDF()
         .drop("url")
-      val nextFrontier =
-        if (sys.env.get("SPARK_GRAFT_LINKS_STAGE").contains("0"))
-          linksDf.persist(StorageLevel.MEMORY_AND_DISK)
-        else {
-          val p = s"$workDir/waves/w$wave/links"
-          tick("links.write", wave)(linksDf.write.mode("overwrite").parquet(p))
-          // empty-frontier writes may leave no part files — pin the schema
-          spark.read.schema(linksDf.schema).parquet(p)
-        }
+      val linksPath = s"$workDir/waves/w$wave/links"
+      linksDf.write.mode("overwrite").parquet(linksPath)
+      // empty-frontier writes may leave no part files — pin the schema
+      val nextFrontier = spark.read.schema(linksDf.schema).parquet(linksPath)
 
       // 7. state updates + lineage: the parquet footer makes the fresh
       // count near-free; the frontier count drives the full expand (the
@@ -647,9 +572,9 @@ object Crawl {
       // only on the rare failure path)
       val scheduledCount =
         if (midCrawlFailures.isEmpty) frontierCount
-        else tick("live.count", wave)(frontierLive.count())
-      val freshCount = tick("staged.count", wave)(fetchInput.count())
-      frontierCount = tick("expand+links.count", wave)(nextFrontier.count())
+        else frontierLive.count()
+      val freshCount = fetchInput.count()
+      frontierCount = nextFrontier.count()
       // per-wave constants ride a broadcast 1-row frame, not literals:
       // same Janino-churn argument as the stage-out write — values in
       // relation data keep the lineage projection's generated source
@@ -668,9 +593,7 @@ object Crawl {
       // seen set: its fetches never happened, so a snapshot resume (or the
       // next daemon run) must re-schedule them — the schedule rows above
       // remain as the attempt record the error report cites
-      val seenInput =
-        if (midCrawlFailures.isEmpty) fetchInput
-        else fetchInput.filter(!col("site_id").isin(midCrawlFailures.keys.toSeq: _*))
+      val seenInput = excludeFailedSites(fetchInput)
       seenParts += seenInput.select(col("url_hash"), col("wave").as("first_wave"))
       val seenDelta = if (midCrawlFailures.isEmpty) freshCount else seenInput.count()
       seenCount += seenDelta
@@ -680,7 +603,7 @@ object Crawl {
       // probe ever reads (at the 1M-scale bench this is a ~3.7M-row Bloom
       // rebuild on the last wave, pure Amdahl overhead)
       if (frontierCount > 0)
-        tick("sketch.add", wave)(sketch.add(seenInput, seenDelta, "url_hash")(seenAll))
+        sketch.add(seenInput, seenDelta, "url_hash")(seenAll)
       postParts += wavePosts
       lineageParts += waveLineage
 

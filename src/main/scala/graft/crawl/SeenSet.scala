@@ -67,25 +67,10 @@ object SeenSet {
   /**
    * New-URL filter: rows of `wave` whose `hashCol` is NOT in `seen`.
    * Sketch-negative rows skip the join entirely; sketch-positive rows are
-   * verified with an exact left-anti join. `sketch` selects the
-   * approximate layer: "bloom" (built-in sketch) or "cuckoo" (custom
-   * aggregate, supports deletion for URL retirement).
+   * verified with an exact left-anti join. `probe` is the membership column
+   * of an externally-maintained [[IncrementalSketch]] (Bloom or cuckoo);
+   * `None` means "seen set empty — all new".
    */
-  def filterNew(wave: DataFrame, seen: DataFrame, hashCol: String,
-      seenCount: Long, sketch: String = "bloom"): DataFrame = {
-    if (seenCount == 0L) return wave
-    val probe: Column = sketch match {
-      case "cuckoo" =>
-        val f = buildCuckoo(seen, hashCol, seenCount)
-        graft.functions.CuckooFunctions.cuckoo_might_contain(lit(f), col(hashCol))
-      case _ =>
-        mightContain(buildBloom(seen, hashCol, seenCount), col(hashCol))
-    }
-    filterNewProbe(wave, seen, hashCol, Some(probe))
-  }
-
-  /** [[filterNew]] with an externally-maintained probe column (an
-    * [[IncrementalSketch]]); `None` means "seen set empty — all new". */
   def filterNewProbe(wave: DataFrame, seen: DataFrame, hashCol: String,
       probe: Option[Column]): DataFrame = probe match {
     case None => wave

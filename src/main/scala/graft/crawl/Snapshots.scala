@@ -1,6 +1,7 @@
 package graft.crawl
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
@@ -17,6 +18,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  */
 object Snapshots {
 
+  /** The config fields a snapshot's coordinates-only frontier depends on:
+    * the URL grammar rebuilds different URLs under any other values, so
+    * the manifest records them and [[resume]] refuses a mismatch. */
+  private def pinned(cfg: Crawl.Config): Seq[(String, Any)] = Seq(
+    "scale" -> cfg.scale, "limit_per_site" -> cfg.limitPerSite, "rev" -> cfg.rev,
+    "num_salts" -> cfg.numSalts, "probe_pagination" -> cfg.probePagination)
+
   def write(spark: SparkSession, dir: String, wave: Int,
       tables: Map[String, DataFrame], cfg: Crawl.Config,
       failures: Map[String, String] = Map.empty): Unit = {
@@ -28,11 +36,8 @@ object Snapshots {
     // break the manifest on the first embedded quote)
     val node = graft.sinks.SiteJson.mapper.createObjectNode()
     node.put("wave", wave)
-    node.put("scale", cfg.scale)
-    node.put("limit_per_site", cfg.limitPerSite)
-    node.put("rev", cfg.rev)
-    node.put("num_salts", cfg.numSalts)
-    node.put("probe_pagination", cfg.probePagination)
+    pinned(cfg).foreach { case (k, v) =>
+      node.set[JsonNode](k, graft.sinks.SiteJson.mapper.valueToTree[JsonNode](v)) }
     val counts = node.putObject("row_counts")
     tables.foreach { case (n, df) => counts.put(n, df.count()) }
     // mid-crawl retry-exhausted sites: their state rows are already
@@ -119,23 +124,28 @@ object Snapshots {
    * Resume a crawl from the latest snapshot: re-enter the wave loop at
    * wave v+1 with the persisted frontier/seen/posts state. Idempotent by
    * construction: the seen-set makes re-fetching a no-op and the schedule
-   * is a pure function of the frontier.
+   * is a pure function of the frontier. Throws if `cfg` differs from the
+   * snapshot's config in any [[pinned]] field.
    */
   def resume(spark: SparkSession, dir: String, cfg: Crawl.Config): Crawl.Result = {
     val v = currentVersion(dir).getOrElse(
       throw new IllegalStateException(s"no CURRENT snapshot under $dir"))
     val manifest = Paths.get(dir, "snapshots", s"v$v", "manifest.json")
+    require(Files.exists(manifest), s"snapshot v$v is not committed under $dir")
+    val node = graft.sinks.SiteJson.mapper.readTree(Files.readString(manifest))
+    val mismatched = pinned(cfg).flatMap { case (k, want) =>
+      val got = Option(node.get(k)).map(_.asText).orNull
+      if (got == want.toString) None else Some(s"$k: snapshot $got, config $want")
+    }
+    require(mismatched.isEmpty, s"snapshot v$v under $dir was written by a " +
+      s"different crawl config (${mismatched.mkString("; ")})")
     val failures0: Map[String, Throwable] =
-      if (!Files.exists(manifest)) Map.empty
-      else {
-        val node = graft.sinks.SiteJson.mapper.readTree(Files.readString(manifest))
-        Option(node.get("failed_sites")).toSeq.flatMap { f =>
-          val it = f.fields()
-          Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-            .map(e => e.getKey -> (new RuntimeException(e.getValue.asText()): Throwable))
-            .toSeq
-        }.toMap
-      }
+      Option(node.get("failed_sites")).toSeq.flatMap { f =>
+        val it = f.fields()
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(e => e.getKey -> (new RuntimeException(e.getValue.asText()): Throwable))
+          .toSeq
+      }.toMap
     Crawl.runFrom(spark, cfg,
       frontier0 = readTable(spark, dir, v, "frontier"),
       wave0 = v + 1,

@@ -223,8 +223,8 @@ object SyntheticWeb {
           // Disallow filter must drop these before scheduling)
           val traps =
             if (req.page % 5 == 0)
-              Seq(Req(s"https://${site.host}/private/trap?id=${req.page}",
-                site.site_id, "post", req.page, site.page_size, req.depth + 1))
+              Seq(Req(trapUrl(site, req.page), site.site_id, "post", req.page,
+                trapRow(site), req.depth + 1))
             else Seq.empty
           (None, posts ++ traps ++ next)
         }
@@ -247,6 +247,14 @@ object SyntheticWeb {
       val q = m - pos            // 1-indexed rank from the bottom
       q + (q - 1) / 22
     }
+
+  /** The robots trap a list page links rides the frontier as a "post" row
+    * one past the page's last real row: this sentinel row and [[trapUrl]]
+    * are the trap's whole encoding, shared by discovery ([[expand]]) and
+    * the coordinate rebuild ([[UrlGrammar]]). */
+  def trapRow(site: Site): Int = site.page_size
+  def trapUrl(site: Site, page: Int): String =
+    s"https://${site.host}/private/trap?id=$page"
 
   def isTrap(url: String): Boolean = url.contains("/private/")
 

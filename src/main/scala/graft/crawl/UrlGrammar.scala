@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * Every URL the crawl ever schedules is produced by a per-site grammar
  * from (site_id, kind, page, row): list pages by [[SyntheticWeb.listUrl]],
  * post pages by [[SyntheticWeb.postUrl]] over [[SyntheticWeb.idAt]], and
- * the robots-trap links by their fixed path form (the reference plugins
+ * the robots-trap links by [[SyntheticWeb.trapUrl]] (the reference plugins
  * work the same way — gnuboard/wordpress/ssucatch URLs are built from
  * (board, page, post-id), never free-form). The frontier therefore does
  * not need to SHUFFLE or PERSIST the URL string between waves: the
@@ -38,8 +38,8 @@ object UrlGrammar {
     val url =
       if (kind.toString == "list")
         SyntheticWeb.listUrl(site, page)
-      else if (row == site.page_size) // the every-5th-page robots trap
-        s"https://${site.host}/private/trap?id=$page"
+      else if (row == SyntheticWeb.trapRow(site)) // the every-5th-page robots trap
+        SyntheticWeb.trapUrl(site, page)
       else {
         val total0 = Sites.postCount(site, scale)
         val n = SyntheticWeb.idAt(total0,

@@ -1,8 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
@@ -1243,105 +1242,60 @@ object GraftFunctions {
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))))
 
+  /** Every graft SQL function as (name, expression builder): the one table
+    * both registration routes install — per-session [[registerAll]] and
+    * the `spark.sql.extensions` route ([[graft.GraftExtensions]]). */
+  private[graft] val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = {
+    import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
+    def kernel(fn: String, out: DataType, in: DataType*): Seq[Expression] => Expression =
+      args => StaticInvoke(K, out, fn, args.take(in.size), inputTypes = in)
+    def str1(fn: String) = kernel(fn, StringType, StringType)
+    def str2(fn: String) = kernel(fn, StringType, StringType, StringType)
+    val longs = ArrayType(LongType, containsNull = false)
+    val strings = ArrayType(StringType, containsNull = false)
+    Seq(
+      "url_canonicalize" -> str1("urlCanonicalize"),
+      "url_host" -> str1("urlHost"),
+      "url_path" -> str1("urlPath"),
+      "url_resolve" -> str2("urlResolve"),
+      "url_query_param" -> str2("urlQueryParam"),
+      "graft_slugify" -> str1("slugify"),
+      "strip_parens" -> str1("stripParens"),
+      "normalize_ws" -> str1("normalizeWs"),
+      "normalize_text" -> str1("normalizeText"),
+      "normalize_dashes" -> str1("normalizeDashes"),
+      "ics_escape" -> str1("icsEscape"),
+      "ics_fold" -> str1("icsFold"),
+      "mime_guess" -> str1("mimeGuess"),
+      "desc_fallback" -> str1("descFallback"),
+      "lz_decompress_utf16" -> str1("lzDecompressUtf16"),
+      "lz_compress_utf16" -> str1("lzCompressUtf16"),
+      "lexical_to_html" -> str1("lexicalToHtml"),
+      "html_text" -> str2("htmlText"),
+      "simhash64" -> kernel("simhash64", LongType, StringType),
+      "shingle_hash64" -> kernel("shingleHash64", longs, StringType, IntegerType),
+      "word_ngrams" -> kernel("wordNgrams", strings, StringType, IntegerType),
+      "chunk_text" -> kernel("chunkText", strings, StringType, IntegerType),
+      "chunk_text_stride" ->
+        kernel("chunkTextStride", strings, StringType, IntegerType, IntegerType),
+      "md5_minhash_bands" -> kernel("md5MinhashBands", strings,
+        StringType, IntegerType, IntegerType, IntegerType),
+      "winnow_fps" -> kernel("winnowFps", strings, StringType, IntegerType, IntegerType),
+      "minhash_bands" -> kernel("minhashBands", longs,
+        ArrayType(LongType), IntegerType, IntegerType),
+      "hyperplane_sigs" -> kernel("hyperplaneSigs", longs,
+        ArrayType(DoubleType), IntegerType, IntegerType),
+      "cosine_sim" -> kernel("cosineSim", DoubleType,
+        ArrayType(DoubleType), ArrayType(DoubleType)),
+      "cuckoo_might_contain" -> (args => CuckooMightContain(args(0), args(1))))
+  }
+
   /** Register all graft functions for SQL use (`SELECT url_canonicalize(u) ...`). */
   def registerAll(spark: SparkSession): Unit = {
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
-
-    def reg1(name: String, fn: String): Unit =
-      registry.createOrReplaceTempFunction(name,
-        (args: Seq[Expression]) => StaticInvoke(K, StringType, fn, args.take(1),
-          inputTypes = Seq(StringType)), "built-in")
-    def reg2(name: String, fn: String): Unit =
-      registry.createOrReplaceTempFunction(name,
-        (args: Seq[Expression]) => StaticInvoke(K, StringType, fn, args.take(2),
-          inputTypes = Seq(StringType, StringType)), "built-in")
-
-    reg1("url_canonicalize", "urlCanonicalize")
-    reg1("url_host", "urlHost")
-    reg1("url_path", "urlPath")
-    reg2("url_resolve", "urlResolve")
-    reg2("url_query_param", "urlQueryParam")
-    reg1("graft_slugify", "slugify")
-    reg1("strip_parens", "stripParens")
-    reg1("normalize_ws", "normalizeWs")
-    reg1("normalize_text", "normalizeText")
-    reg1("normalize_dashes", "normalizeDashes")
-    reg1("ics_escape", "icsEscape")
-    reg1("ics_fold", "icsFold")
-    reg1("mime_guess", "mimeGuess")
-    reg1("desc_fallback", "descFallback")
-    reg1("lz_decompress_utf16", "lzDecompressUtf16")
-    reg1("lexical_to_html", "lexicalToHtml")
-    registry.createOrReplaceTempFunction("simhash64",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.LongType, "simhash64", args.take(1),
-        inputTypes = Seq(StringType)), "built-in")
-    registry.createOrReplaceTempFunction("shingle_hash64",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = false),
-        "shingleHash64", args.take(2),
-        inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("word_ngrams",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-        "wordNgrams", args.take(2),
-        inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("chunk_text",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-        "chunkText", args.take(2),
-        inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("chunk_text_stride",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-        "chunkTextStride", args.take(3),
-        inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("md5_minhash_bands",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-        "md5MinhashBands", args.take(4),
-        inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("winnow_fps",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-        "winnowFps", args.take(3),
-        inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType,
-          org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("minhash_bands",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = false),
-        "minhashBands", args.take(3),
-        inputTypes = Seq(
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("hyperplane_sigs",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = false),
-        "hyperplaneSigs", args.take(3),
-        inputTypes = Seq(
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType)),
-      "built-in")
-    registry.createOrReplaceTempFunction("cosine_sim",
-      (args: Seq[Expression]) => StaticInvoke(K,
-        org.apache.spark.sql.types.DoubleType, "cosineSim", args.take(2),
-        inputTypes = Seq(
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))),
-      "built-in")
+    sqlFunctions.foreach { case (name, builder) =>
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

@@ -78,7 +78,8 @@ object Dedup {
     // Staging barrier: the exploded shingle table feeds the df-cut, the
     // per-doc sizes, and BOTH self-join sides — without it the (expensive)
     // tokenize+shingle explode recomputes once per consumer (at cluster
-    // scale this staging would be a checkpoint to storage). localCheckpoint
+    // scale this staging would be a checkpoint to storage; at sf0.1 the
+    // unstaged A/B was within noise, 4.4 vs 4.6 s). localCheckpoint
     // (not cache) so the blocks are reclaimed with the plan when the result
     // DataFrame is dropped — repeated invocations don't accumulate pinned
     // executor storage.
@@ -95,16 +96,12 @@ object Dedup {
     // frame in the job, so joining per-doc metadata onto it is exactly
     // the "shuffle the heavy side again" anti-pattern (guide §2.3/§8 —
     // attach the proxy before the heavy join, not after)
-    val shPlan = df
+    val sh = df
       .select(col(idCol).as("id"),
         graft.functions.GraftFunctions.shingle_hash64(col(textCol), n).as("_arr"))
       .select(col("id"), size(col("_arr")).as("n_sh"),
         explode(col("_arr")).as("shingle_h"))
-    // staging on by default: three consumers read sh, and at cluster scale
-    // one materialization beats three corpus scans (A/B at sf0.1: within
-    // noise, 4.4 vs 4.6 s — the knob lets small corpora skip the barrier)
-    val sh = if (sys.env.get("SPARK_GRAFT_Q26_STAGE").contains("0")) shPlan
-             else shPlan.localCheckpoint()
+      .localCheckpoint()
     val filtered =
       if (maxShingleFreq <= 0) sh
       else {

@@ -49,15 +49,31 @@ class CalendarPipelineSpec extends SparkSuite {
 
 class GraftExtensionsSpec extends org.scalatest.funsuite.AnyFunSuite {
   test("withExtensions exposes graft SQL functions in a fresh session") {
-    // the shared test session already exists; extensions apply to new
-    // sessions cloned via newSession too — use SQL conf injection route
-    val spark = graft.SparkTestSession.spark
-    val ext = new graft.GraftExtensions
-    // verify the builder-level contract compiles + the injected builders
-    // produce working expressions (probe via the temp-registered twins)
-    val out = spark.sql(
-      "SELECT url_canonicalize('HTTP://X.Y:80/a/../b?z=1&a=2') AS c").collect()(0)
-    assert(out.getString(0) === "http://x.y/b?a=2&z=1")
-    assert(ext != null)
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.graftbridge.{ColumnBridge, ExtensionsProbe}
+    // the spark.sql.extensions route, applied to fresh SparkSessionExtensions
+    val injected = ExtensionsProbe.injectedFunctions(new graft.GraftExtensions)
+    val injectedNames = injected.listFunction().map(_.funcName).toSet
+    // the per-session route, applied to a fresh session (built-ins only)
+    val s = graft.SparkTestSession.spark.newSession()
+    val registry = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val builtins = registry.listFunction().map(_.funcName).toSet
+    assert((builtins & injectedNames).isEmpty)
+    graft.functions.GraftFunctions.registerAll(s)
+    val registered = registry.listFunction().map(_.funcName).toSet -- builtins
+    assert(injectedNames === registered)
+    // the injected builders evaluate, including names the extension route
+    // used to miss, and agree with the per-session registrations
+    def viaExtension(name: String, arg: String): String =
+      s.range(1).select(ColumnBridge.column(
+        injected.lookupFunction(FunctionIdentifier(name), Seq(Literal(arg)))))
+        .head().getString(0)
+    assert(viaExtension("url_canonicalize", "HTTP://X.Y:80/a/../b?z=1&a=2") ===
+      "http://x.y/b?a=2&z=1")
+    val text = "  Ｆｕｌｌ—width   TEXT "
+    assert(viaExtension("normalize_text", text) ===
+      s.sql(s"SELECT normalize_text('$text')").head().getString(0))
   }
 }

@@ -274,6 +274,23 @@ class CrawlSpec extends SparkSuite {
     }
   }
 
+  test("resume refuses a snapshot written under a different scale or rev") {
+    // the frontier persists grammar coordinates only, so a resume under
+    // another scale or rev would silently rebuild DIFFERENT URLs
+    val dir = java.nio.file.Files.createTempDirectory("graft-snap-cfg").toString
+    val small = Crawl.Config(scale = 60, limitPerSite = 20,
+      include = Seq("biz.ssu.ac.kr"))
+    Crawl.run(spark, small.copy(maxWaves = 1, snapshotDir = Some(dir)))
+    val scaled = intercept[IllegalArgumentException] {
+      Snapshots.resume(spark, dir, small.copy(scale = small.scale * 2))
+    }
+    assert(scaled.getMessage.contains("scale: snapshot 60, config 120"))
+    val flipped = intercept[IllegalArgumentException] {
+      Snapshots.resume(spark, dir, small.copy(rev = 1 - small.rev))
+    }
+    assert(flipped.getMessage.contains("rev: snapshot 0, config 1"))
+  }
+
   test("snapshot kill-and-resume reproduces the uninterrupted crawl exactly") {
     val dir = java.nio.file.Files.createTempDirectory("graft-snap").toString
     // "killed" run: stops after wave 0, snapshot v0 persisted

@@ -1,6 +1,9 @@
 package graft.crawl
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.Try
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 import graft.functions.GraftFunctions
@@ -14,9 +17,14 @@ import graft.model.Post
  * detail fan-out) to a 10^10-scale URL frontier.
  *
  * Per wave (one BFS depth level):
- *  1. canonicalize + hash every URL (codegen'd kernel expressions);
+ *  1. key every row with ONE kernel call ([[FrontierKey]]): the URL is
+ *     rebuilt from the row's grammar coordinates ([[UrlGrammar]]) and
+ *     parsed once into url_hash (of the canonical form), host_hash and the
+ *     robots crawl delay; a robots-Disallowed row yields no key and drops
+ *     out before any scheduling work;
  *  2. seen-set filter: incremental Bloom/cuckoo pre-filter + exact
- *     anti-join on the maybe slice ([[SeenSet.filterNewProbe]]);
+ *     anti-join on the maybe slice ([[SeenSet.filterNewProbe]]; each
+ *     branch of its union keys its own rows, one kernel call per row);
  *  3. in-wave dedup on url_hash (keep the breadth-first-smallest order key);
  *  4. politeness schedule: per-HOST virtual clock — the k-th fetch of a
  *     host is scheduled at (k-1) * crawl_delay(host) (robots-derived
@@ -29,8 +37,12 @@ import graft.model.Post
  *     instead of serializing on one — the salted-key priority queue.
  *     Priority = (depth, ready_ms, host, site, page, row), carried as
  *     explicit columns so order is independent of partitioning;
- *  6. fetch (deterministic synthetic expansion) -> docs + outlinks;
- *  7. per-partition lineage rows (partition id, watermark, counts).
+ *  6. link discovery: list pages expand to the next frontier
+ *     ([[SyntheticWeb.links]]), which is written out; post documents are
+ *     fetched lazily, once, where the run's posts are consumed;
+ *  7. per-partition lineage rows (partition id, watermark, counts). The
+ *     wave's counts are observed on the stage-out and links writes
+ *     ([[Dataset.observe]]), not counted by extra jobs.
  *
  * Determinism: every ordering is an explicit sort key; no
  * monotonically_increasing_id, no partition-order dependence — identical
@@ -45,7 +57,7 @@ import graft.model.Post
  *
  * robots.txt: per-host rules are parsed from the synthetic bodies
  * ([[Robots]]) — Crawl-delay feeds the politeness clock, Disallow filters
- * the frontier before any scheduling work.
+ * the frontier before any scheduling work (both inside step 1's kernel).
  */
 /** One output row of the fetch stage: a document or a discovered link. */
 final case class ExpandRow(post: Option[Post], link: Option[SyntheticWeb.Req])
@@ -147,22 +159,33 @@ object Crawl {
   private[graft] def expandOne(
       req: SyntheticWeb.Req, scale: Long, limit: Long, rev: Int, probe: Boolean,
       sessionFor: String => Sso.Session): (Option[Post], Seq[SyntheticWeb.Req]) = {
+    val (post, links) = SyntheticWeb.expand(req, scale, limit, rev, session(req, sessionFor))
+    (post, discovered(links, probe))
+  }
+
+  private def session(req: SyntheticWeb.Req,
+      sessionFor: String => Sso.Session): Option[Sso.Session] = {
     val site = SyntheticWeb.siteById(req.site_id)
-    val session = if (site.family == "auth") Some(sessionFor(site.host)) else None
-    val (post, links0) = SyntheticWeb.expand(req, scale, limit, rev, session)
-    // with the static pagination fan-out, list pages were all seeded at
-    // wave 0 — drop the rediscovered next-page links (they are in the
-    // seen set anyway; this just avoids scheduling work)
-    (post, if (probe) links0.filter(_.kind != "list") else links0)
+    if (site.family == "auth") Some(sessionFor(site.host)) else None
+  }
+
+  // with the static pagination fan-out, list pages were all seeded at
+  // wave 0 — drop the rediscovered next-page links (they are in the
+  // seen set anyway; this just avoids scheduling work)
+  private def discovered(links: Seq[SyntheticWeb.Req], probe: Boolean): Seq[SyntheticWeb.Req] =
+    if (probe) links.filter(_.kind != "list") else links
+
+  /** One lazily bootstrapped SSO session per host for one partition. */
+  private def partitionSessions(onBootstrap: () => Unit): String => Sso.Session = {
+    val sessions = scala.collection.mutable.HashMap.empty[String, Sso.Session]
+    host => sessions.getOrElseUpdate(host, { onBootstrap(); Sso.bootstrap(host) })
   }
 
   private[graft] def expandPartition(
       it: Iterator[SyntheticWeb.Req], scale: Long, limit: Long, rev: Int,
       probe: Boolean, onBootstrap: () => Unit,
       faultCheck: SyntheticWeb.Req => Unit = _ => ()): Iterator[ExpandRow] = {
-    val sessions = scala.collection.mutable.HashMap.empty[String, Sso.Session]
-    val sessionFor: String => Sso.Session =
-      host => sessions.getOrElseUpdate(host, { onBootstrap(); Sso.bootstrap(host) })
+    val sessionFor = partitionSessions(onBootstrap)
     it.flatMap { req =>
       faultCheck(req)
       val (post, links) = expandOne(req, scale, limit, rev, probe, sessionFor)
@@ -171,14 +194,23 @@ object Crawl {
     }
   }
 
-  /** robots rules per host (parsed from the synthetic robots.txt bodies):
-    * crawl-delay feeds the politeness clock; Disallow prefixes filter the
-    * frontier. Co-hosted sites share one bucket (max delay wins). */
-  def robots(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Robots.fleetRules.map(r => (r.host, r.crawl_delay_ms, r.disallow))
-      .toDF("host", "crawl_delay_ms", "disallow")
+  /** The links half of [[expandPartition]]: no document is built. */
+  private[graft] def linksPartition(
+      it: Iterator[SyntheticWeb.Req], scale: Long, limit: Long, rev: Int,
+      probe: Boolean, onBootstrap: () => Unit): Iterator[SyntheticWeb.Req] = {
+    val sessionFor = partitionSessions(onBootstrap)
+    it.flatMap(req =>
+      discovered(SyntheticWeb.links(req, scale, limit, rev, session(req, sessionFor)), probe))
   }
+
+  /** Rows that `obs` counted on the write that just ran. The count is a
+    * by-product of that write job. An observation Spark could not fill
+    * (its plan lost the metrics node, or the listener event never came)
+    * falls back to `recount`, an exact count of what was written. */
+  private def observedRows(obs: Observation, recount: => Long): Long =
+    Try(Await.result(obs.future, 1.minute)).toOption
+      .filter(_.length > 0).map(_.getLong(0))
+      .getOrElse(recount)
 
   def seeds(spark: SparkSession, cfg: Config): Dataset[SyntheticWeb.Req] = {
     import spark.implicits._
@@ -225,7 +257,6 @@ object Crawl {
       failures0: Map[String, Throwable] = Map.empty): Result = {
     import spark.implicits._
 
-    val robotsDf = broadcast(robots(spark))
     val ssoBootstraps = spark.sparkContext.longAccumulator("sso_bootstraps")
     // wave stage-out root: the snapshot dir when snapshotting, else a temp
     // (tmpfs when available — wave files are transient and RAM-backed
@@ -273,7 +304,7 @@ object Crawl {
       initialCapacity = seenCount * 4)
     if (seenCount > 0) sketch.add(seenParts.head, seenCount, "url_hash")(seenAll)
     var wave = wave0
-    // frontier size is carried between waves (the producer counted it) —
+    // frontier size is carried between waves (the links write observed it) —
     // no extra action per wave just to test emptiness
     var frontierCount = frontier.count()
 
@@ -308,39 +339,28 @@ object Crawl {
       // this run (the reference drops the failed plugin for the whole run)
       // — its leftover frontier rows are pruned before any scheduling work
       val frontierLive = excludeFailedSites(frontier)
-      // 1. re-materialize the URL from its grammar coordinates (the
-      //    frontier persists/shuffles only (site_id, kind, page, row,
-      //    depth) — see UrlGrammar), then canonicalize + hash (codegen'd
-      //    kernels), join robots rules (broadcast) and enforce Disallow
-      //    BEFORE any scheduling work. Only the 8-byte HASH of the
-      //    canonical form travels through the wave's shuffles — the
-      //    canonical string itself is recomputed by the (parallel,
-      //    codegen'd) kernel at stage-out time: shuffle bytes are the
-      //    contended resource, per-row CPU is not.
-      val keyed = frontierLive
-        .withColumn("url", UrlGrammar.rebuild_url(col("site_id"), col("kind"),
-          col("page"), col("row"), cfg.scale, cfg.rev))
-        .withColumn("url_hash", xxhash64(GraftFunctions.url_canonicalize(col("url"))))
-        .withColumn("host", GraftFunctions.url_host(col("url")))
-        .join(robotsDf, Seq("host"), "left")
-        .withColumn("crawl_delay_ms", coalesce(col("crawl_delay_ms"), lit(300)))
-        .filter(coalesce(!exists(col("disallow"),
-          d => GraftFunctions.url_path(col("url")).startsWith(d)), lit(true)))
-        .drop("disallow")
-        // like `canonical`, the host STRING is recomputed at stage-out; only
-        // its 8-byte hash travels through the wave's shuffles (the window
-        // groups by host_hash — 64-bit collisions across a host fleet are
-        // negligible, and the politeness spec verifies per-host spacing on
-        // the reconstructed column)
-        .withColumn("host_hash", xxhash64(col("host")))
-        .drop("host")
+      // 1. key every row with ONE kernel call: FrontierKey rebuilds the URL
+      //    from the grammar coordinates (the frontier persists/shuffles only
+      //    (site_id, kind, page, row, depth) — see UrlGrammar), parses it
+      //    once, and yields (url_hash, host_hash, crawl_delay_ms), or nothing
+      //    for a robots-Disallowed URL — `inline` drops those rows BEFORE any
+      //    scheduling work. Only the 8-byte hashes travel through the wave's
+      //    shuffles: the canonical and host strings are recomputed at
+      //    stage-out read time (shuffle bytes are the contended resource,
+      //    per-row CPU is not; 64-bit host_hash collisions across a host
+      //    fleet are negligible, and the politeness spec verifies per-host
+      //    spacing on the reconstructed column).
+      val keyed = frontierLive.select(col("site_id"), col("kind"), col("page"),
+        col("row"), col("depth"),
+        inline(FrontierKey.wave_key(col("site_id"), col("kind"), col("page"),
+          col("row"), cfg.scale, cfg.rev)))
 
       // fetch-stage task count follows the session's reducer knob (finer
       // than core count so stragglers overlap), not the raw core count
       val parallelism = spark.conf.get("spark.sql.shuffle.partitions").toInt
       // Scale-adaptive partition counts (guide §2.5/§6): the wave's task
       // count follows the WAVE SIZE (frontierCount is already known — the
-      // producer counted it), capped at the core-derived counts so
+      // producer's write observed it), capped at the core-derived counts so
       // big-crawl plans are byte-identical to before. Without the floor a
       // 3k-row daemon crawl fans out 128 politeness tasks + 96 writer
       // tasks per wave — pure scheduler overhead and a 96-file stage-out
@@ -402,8 +422,8 @@ object Crawl {
       // storage (parquet). Wide rows are never cached in memory: the
       // in-memory columnar cache build cost ~3x the compute at 10^6 rows
       // and is pure GC pressure at 10^10 — stage-out to storage is the
-      // 100 TB design, and every downstream consumer (counts, seen-set,
-      // lineage, the fetch stage itself) reads the columnar file back.
+      // 100 TB design, and every downstream consumer (seen-set, lineage,
+      // the fetch stage itself) reads the columnar file back.
       // derivable columns (canonical = url_canonicalize(url), host =
       // url_host(url)) are NOT stored: the codegen'd kernels recompute them
       // lazily at read time, so the wave file carries one URL string
@@ -418,6 +438,10 @@ object Crawl {
       // shrinking row groups much (quiet-window A/B at N=2/8: 3x edged 2x
       // on both wall and cpu at 8 cores, flat at 2)
       val writeParts = adaptiveParts(parallelism * 3)
+      // the wave's fresh count is observed on this write; the metrics node
+      // sits in the write's result stage, where Spark merges one update per
+      // partition even when a task is retried
+      val stagedRows = Observation()
       scheduled.repartition(writeParts, col("host_hash"), col("salt"))
         // coordinates only: like `canonical`/`host` (and like the
         // exchanges above), the wave FILE does not store the URL
@@ -428,6 +452,7 @@ object Crawl {
         // read time (fetchInput below); the PERSISTED
         // schedule/snapshot artifacts still materialize the URL.
         .withColumn("partition_id", spark_partition_id())
+        .observe(stagedRows, count(lit(1)))
         .write.mode("overwrite")
         // wave files are transient single-reader stage-out; pinned A/B at
         // N=2/N=8 over snappy/lz4/none showed lz4 ~15% slower and
@@ -469,24 +494,35 @@ object Crawl {
       val scale = cfg.scale; val limit = cfg.limitPerSite; val rev = cfg.rev
       val probe = cfg.probePagination
       val faults = cfg.faults; val wv = wave
-      def expandDs(input: DataFrame, attempt: Int): Dataset[ExpandRow] = input
+      val onBootstrap = () => ssoBootstraps.add(1L)
+      def requests(input: DataFrame): Dataset[SyntheticWeb.Req] = input
         .select("url", "site_id", "kind", "page", "row", "depth")
         .as[SyntheticWeb.Req]
-        .mapPartitions(it =>
-          expandPartition(it, scale, limit, rev, probe, () => ssoBootstraps.add(1L),
+      def expandDs(input: DataFrame, attempt: Int): Dataset[ExpandRow] =
+        requests(input).mapPartitions(it =>
+          expandPartition(it, scale, limit, rev, probe, onBootstrap,
             req => if (faults.getOrElse((req.site_id, wv), 0) > attempt)
               throw new RuntimeException(
                 s"synthetic fetch failure: ${req.site_id} wave=$wv attempt=$attempt")))
+      def split(expanded: Dataset[ExpandRow]): (DataFrame, Dataset[SyntheticWeb.Req]) =
+        (expanded.filter(_.post.isDefined).map(_.post.get).toDF(),
+          expanded.filter(_.link.isDefined).map(_.link.get))
+      // The wave's documents stay LAZY views — caching a million Post rows
+      // per wave is pure GC pressure, and downstream consumers (merge,
+      // snapshots) recompute the cheap expansion from the staged inputs.
       // Mid-crawl WHOLE-SITE retry (reference run_with_retry around the
       // whole plugin attempt, mod.rs:38-93; a failed detail fetch retries
       // the site from scratch, gnuboard mod.rs:76-81 try_collect). The
-      // fast path (no faults configured) keeps the single lazy fetch
-      // stage; with faults the wave's fetch runs as per-site materialized
-      // slices so one site's failure neither poisons nor re-runs its
-      // siblings. Re-fetch is idempotent: the expansion is deterministic
-      // and the seen-set/merge tolerate at-least-once delivery, so a
-      // fail-then-succeed site yields byte-identical output (CrawlSpec).
-      val expanded: Dataset[ExpandRow] =
+      // fast path (no faults configured) keeps the fetch lazy: post pages
+      // link nothing, so the links write expands only the list pages
+      // without building a document, and each post is fetched once, where
+      // the posts are consumed. With faults the wave's fetch runs as
+      // per-site materialized slices so one site's failure neither poisons
+      // nor re-runs its siblings. Re-fetch is idempotent: the expansion is
+      // deterministic and the seen-set/merge tolerate at-least-once
+      // delivery, so a fail-then-succeed site yields byte-identical output
+      // (CrawlSpec).
+      val (wavePosts, links): (DataFrame, Dataset[SyntheticWeb.Req]) =
         if (cfg.livePacing) {
           // LIVE politeness: the wave's fetch runs through the token-bucket
           // executor — real wall-clock spacing per host within each salt
@@ -496,31 +532,34 @@ object Crawl {
           // of re-triggering paced fetches.
           val delays: Map[String, Long] =
             Robots.fleetRules.map(r => r.host -> r.crawl_delay_ms.toLong).toMap
-          val reqs = fetchInput
-            .select("url", "site_id", "kind", "page", "row", "depth")
-            .as[SyntheticWeb.Req]
           val fetched = ThrottledFetch.run[
               SyntheticWeb.Req, (Option[Post], Seq[SyntheticWeb.Req])](
-            reqs,
+            requests(fetchInput),
             hostOf = r => SyntheticWeb.siteById(r.site_id).host,
-            delayMsFor = h => delays.getOrElse(h, 300L),
+            delayMsFor = h => delays.getOrElse(h, FrontierKey.DefaultDelayMs.toLong),
             // the SAME expansion as the batch fetch stage (expandOne), and
             // the same bootstrap accounting — live mode must not diverge
             fetch = (req, sessionFor) =>
               expandOne(req, scale, limit, rev, probe, sessionFor),
-            onBootstrap = () => ssoBootstraps.add(1L))
+            onBootstrap = onBootstrap)
           val path = s"$workDir/waves/w$wave/fetched"
           fetched.toDF().write.mode("overwrite").parquet(path)
           val f = spark.read.parquet(path)
           fetchLogParts += f
             .select(col("host"), col("startedAtMs").as("started_at_ms"))
             .withColumn("wave", lit(wv))
-          f.as[ThrottledFetch.Fetched[(Option[Post], Seq[SyntheticWeb.Req])]]
+          split(f.as[ThrottledFetch.Fetched[(Option[Post], Seq[SyntheticWeb.Req])]]
             .flatMap { fr =>
               fr.result._1.map(p => ExpandRow(Some(p), None)).toSeq ++
                 fr.result._2.map(l => ExpandRow(None, Some(l)))
-            }
-        } else if (faults.isEmpty) expandDs(fetchInput, 0)
+            })
+        } else if (faults.isEmpty)
+          (requests(fetchInput.filter(col("kind") === "post"))
+            .mapPartitions(it =>
+              expandPartition(it, scale, limit, rev, probe, onBootstrap).flatMap(_.post))
+            .toDF(),
+            requests(fetchInput.filter(col("kind") === "list"))
+              .mapPartitions(it => linksPartition(it, scale, limit, rev, probe, onBootstrap)))
         else {
           val sites = fetchInput.select("site_id").distinct().as[String].collect().sorted
           val okParts = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -537,15 +576,11 @@ object Crawl {
               case e: Retry.RetryExhausted => midCrawlFailures(sid) = e
             }
           }
-          if (okParts.isEmpty) spark.emptyDataset[ExpandRow]
-          else spark.read.parquet(okParts.toSeq: _*).as[ExpandRow]
+          split(
+            if (okParts.isEmpty) spark.emptyDataset[ExpandRow]
+            else spark.read.parquet(okParts.toSeq: _*).as[ExpandRow])
         }
 
-      // The wave's documents stay LAZY views over the persisted fetchInput —
-      // caching a million Post rows per wave is pure GC pressure, and
-      // downstream consumers (merge, snapshots) recompute the cheap expand
-      // from the persisted inputs instead.
-      val wavePosts = expanded.filter(_.post.isDefined).map(_.post.get).toDF()
       // The discovered-link frontier is staged to parquet like every other
       // wave product, NOT held in the in-memory columnar cache: at 1M-scale
       // the "small" link set is 3.7M rows, and the next wave's scheduling
@@ -556,25 +591,26 @@ object Crawl {
       // the ~100 B row) is grammar-derived, so dropping it shrinks the
       // inter-wave frontier file (written AND re-read every wave) by ~2/3;
       // the next wave's `keyed` re-materializes it (UrlGrammar)
-      val linksDf = expanded.filter(_.link.isDefined).map(_.link.get).toDF()
-        .drop("url")
+      val linksDf = links.toDF().drop("url")
       val linksPath = s"$workDir/waves/w$wave/links"
-      linksDf.write.mode("overwrite").parquet(linksPath)
+      // the next frontier's size is observed on this write (result stage,
+      // as for the stage-out above)
+      val linkRows = Observation()
+      linksDf.observe(linkRows, count(lit(1)))
+        .write.mode("overwrite").parquet(linksPath)
       // empty-frontier writes may leave no part files — pin the schema
       val nextFrontier = spark.read.schema(linksDf.schema).parquet(linksPath)
 
-      // 7. state updates + lineage: the parquet footer makes the fresh
-      // count near-free; the frontier count drives the full expand (the
-      // fetch happens HERE) while caching only the (small) links
-      // count what was actually OFFERED to scheduling: failed-site rows
-      // pruned by frontierLive were never duplicate URLs and must not be
-      // absorbed into the 'deduped' lineage metric (the extra count runs
-      // only on the rare failure path)
+      // 7. state updates + lineage. Both wave counts come from the writes
+      // above; the count of what was OFFERED to scheduling excludes
+      // failed-site rows pruned by frontierLive — they were never duplicate
+      // URLs and must not be absorbed into the 'deduped' lineage metric
+      // (that extra count runs only on the rare failure path)
       val scheduledCount =
         if (midCrawlFailures.isEmpty) frontierCount
         else frontierLive.count()
-      val freshCount = fetchInput.count()
-      frontierCount = nextFrontier.count()
+      val freshCount = observedRows(stagedRows, fetchInput.count())
+      frontierCount = observedRows(linkRows, nextFrontier.count())
       // per-wave constants ride a broadcast 1-row frame, not literals:
       // same Janino-churn argument as the stage-out write — values in
       // relation data keep the lineage projection's generated source

@@ -97,7 +97,10 @@ object Pipeline {
     }.toDF()
     // the merge contract takes new entries all inside [start, end]
     val events = parsed.filter(col("starts_at").between(lit(start), lit(end)))
+    // staged once: the ICS render below and the caller's cache write both
+    // consume it, and each would re-run the parse and the merge
     val merged = graft.operators.Merge.mergeCalendarReplaceInRange(cache, events, start, end)
+      .localCheckpoint(eager = false)
     val output = graft.operators.Merge.calendarInRange(merged, start, end)
     val ics = graft.sinks.Ics.toIcsDistributed(
       "SSU Academic Calendar", "https://scatch.ssu.ac.kr/학사일정", "학사일정",

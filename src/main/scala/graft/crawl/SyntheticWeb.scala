@@ -192,12 +192,20 @@ object SyntheticWeb {
    * take(remain) + stop, gnuboard mod.rs:92-108); post pages yield docs.
    */
   def expand(req: Req, scale: Long, limit: Long, rev: Int,
-      session: Option[Sso.Session] = None): (Option[Post], Seq[Req]) = {
+      session: Option[Sso.Session] = None): (Option[Post], Seq[Req]) =
+    if (req.kind == "post") {
+      val site = siteById(req.site_id)
+      authorize(site, session)
+      (Some(fetchPost(site, parsePostId(req.url, site), rev, Crawl.DefaultSeed)), Seq.empty)
+    } else (None, links(req, scale, limit, rev, session))
+
+  /** The links of one request: exactly `expand(req)._2`, without building
+    * the document — a post page links nothing, so link discovery never
+    * needs to fetch one. */
+  def links(req: Req, scale: Long, limit: Long, rev: Int,
+      session: Option[Sso.Session] = None): Seq[Req] = {
     val site = siteById(req.site_id)
-    // the auth family (ssupath) requires a bootstrapped SSO session for
-    // EVERY fetch (S8, sso.rs:26-92) — unauthenticated requests fail like
-    // the live site's 302-to-login would
-    if (site.family == "auth") Sso.authorize(session, site.host)
+    authorize(site, session)
     req.kind match {
       case "list" =>
         val total0 = Sites.postCount(site, scale)
@@ -206,7 +214,7 @@ object SyntheticWeb {
         val wanted = math.min(visible, limit)
         val pageStart = (req.page - 1).toLong * site.page_size
         val remain = wanted - pageStart
-        if (remain <= 0) (None, Seq.empty)
+        if (remain <= 0) Seq.empty
         else {
           // newest-first: page 1 lists ids total..total-pageSize+1
           val onPage = math.min(site.page_size.toLong, remain)
@@ -226,14 +234,18 @@ object SyntheticWeb {
               Seq(Req(trapUrl(site, req.page), site.site_id, "post", req.page,
                 trapRow(site), req.depth + 1))
             else Seq.empty
-          (None, posts ++ traps ++ next)
+          posts ++ traps ++ next
         }
-      case "post" =>
-        val n = parsePostId(req.url, site)
-        (Some(fetchPost(site, n, rev, Crawl.DefaultSeed)), Seq.empty)
+      case "post" => Seq.empty
       case k => throw new IllegalArgumentException(k)
     }
   }
+
+  // the auth family (ssupath) requires a bootstrapped SSO session for
+  // EVERY fetch (S8, sso.rs:26-92) — unauthenticated requests fail like
+  // the live site's 302-to-login would
+  private def authorize(site: Site, session: Option[Sso.Session]): Unit =
+    if (site.family == "auth") Sso.authorize(session, site.host)
 
   /** The id listed at 0-based position `pos` (newest-first over the full
     * population 1..total), skipping ids % 23 == 0 when rev == 0

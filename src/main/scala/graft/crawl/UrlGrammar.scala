@@ -19,8 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
  * (board, page, post-id), never free-form). The frontier therefore does
  * not need to SHUFFLE or PERSIST the URL string between waves: the
  * 8-byte coordinates are the row identity, and this kernel re-materializes
- * the string at the consumption edges (the `keyed` canonicalize/robots
- * stage and the wave stage-out write) — the same recompute-don't-carry
+ * the string at the consumption edges (the [[FrontierKey]] kernel and the
+ * read of the wave stage-out) — the same recompute-don't-carry
  * treatment `canonical` and `host` already get (guide §2.3/§8: shuffle
  * keys and metadata, recompute/move heavy strings at the edge; per-row
  * CPU is not the contended resource, shuffle and parquet bytes are).
@@ -31,23 +31,25 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 object UrlGrammar {
 
-  /** Rebuild the exact discovered URL of a frontier row. */
-  def rebuildUrl(siteId: UTF8String, kind: UTF8String, page: Int, row: Int,
-      scale: Long, rev: Int): UTF8String = {
-    val site = SyntheticWeb.siteById(siteId.toString)
-    val url =
-      if (kind.toString == "list")
-        SyntheticWeb.listUrl(site, page)
-      else if (row == SyntheticWeb.trapRow(site)) // the every-5th-page robots trap
-        SyntheticWeb.trapUrl(site, page)
-      else {
-        val total0 = Sites.postCount(site, scale)
-        val n = SyntheticWeb.idAt(total0,
-          (page - 1).toLong * site.page_size + row, rev)
-        SyntheticWeb.postUrl(site, n)
-      }
-    UTF8String.fromString(url)
+  /** The exact discovered URL of a frontier row. */
+  def url(siteId: String, kind: String, page: Int, row: Int, scale: Long, rev: Int): String = {
+    val site = SyntheticWeb.siteById(siteId)
+    if (kind == "list")
+      SyntheticWeb.listUrl(site, page)
+    else if (row == SyntheticWeb.trapRow(site)) // the every-5th-page robots trap
+      SyntheticWeb.trapUrl(site, page)
+    else {
+      val total0 = Sites.postCount(site, scale)
+      val n = SyntheticWeb.idAt(total0,
+        (page - 1).toLong * site.page_size + row, rev)
+      SyntheticWeb.postUrl(site, n)
+    }
   }
+
+  /** [[url]] over Spark's string type (the [[rebuild_url]] kernel). */
+  def rebuildUrl(siteId: UTF8String, kind: UTF8String, page: Int, row: Int,
+      scale: Long, rev: Int): UTF8String =
+    UTF8String.fromString(url(siteId.toString, kind.toString, page, row, scale, rev))
 
   /** Codegen'd column form (StaticInvoke — no UDF serialization). */
   def rebuild_url(siteId: Column, kind: Column, page: Column, row: Column,

@@ -25,8 +25,6 @@ package graft.functions
  */
 object UrlKernel {
 
-  private val SchemeRe = "^([A-Za-z][A-Za-z0-9+.-]*):(.*)$".r
-
   private def defaultPort(scheme: String): Int = scheme match {
     case "http"  => 80
     case "https" => 443
@@ -35,7 +33,7 @@ object UrlKernel {
   }
 
   /** Split "scheme://authority/path?query#frag" without java.net.URI (total). */
-  private[functions] final case class Parts(
+  private[graft] final case class Parts(
       scheme: String, authority: String, path: String, query: String, fragment: String) {
     def render(withFragment: Boolean = true): String = {
       val sb = new StringBuilder
@@ -48,13 +46,36 @@ object UrlKernel {
     }
   }
 
-  private[functions] def parse(url: String): Parts = {
-    var rest = url
-    var scheme = ""
-    rest match {
-      case SchemeRe(s, r) => scheme = s; rest = r
-      case _              =>
+  /** Length of the scheme when `url` starts with `scheme:`, else -1. The
+    * same split as the regex `^([A-Za-z][A-Za-z0-9+.-]*):(.*)$` under
+    * `matches()`: a letter, then letters, digits, `+`, `.` or `-` up to the
+    * first `:`, and no line terminator after it (the regex's `.` rejects
+    * them). Scanned by hand: the regex was nearly half of a parse's CPU. */
+  private def schemeEnd(url: String): Int = {
+    val colon = url.indexOf(':')
+    if (colon < 1 || !isAsciiLetter(url.charAt(0))) return -1
+    var i = 1
+    while (i < colon) {
+      val c = url.charAt(i)
+      if (!(isAsciiLetter(c) || (c >= '0' && c <= '9') || c == '+' || c == '.' || c == '-'))
+        return -1
+      i += 1
     }
+    i = colon + 1
+    while (i < url.length) {
+      val c = url.charAt(i)
+      if (c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029') return -1
+      i += 1
+    }
+    colon
+  }
+
+  private def isAsciiLetter(c: Char): Boolean = (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
+
+  private[graft] def parse(url: String): Parts = {
+    val colon = schemeEnd(url)
+    val scheme = if (colon < 0) "" else url.substring(0, colon)
+    var rest = if (colon < 0) url else url.substring(colon + 1)
     var fragment: String = null
     val hashIdx = rest.indexOf('#')
     if (hashIdx >= 0) { fragment = rest.substring(hashIdx + 1); rest = rest.substring(0, hashIdx) }
@@ -116,9 +137,11 @@ object UrlKernel {
   }
 
   /** Canonical URL string; see object doc for the contract. */
-  def canonicalize(url: String): String = {
-    if (url == null) return null
-    val p = parse(url.trim)
+  def canonicalize(url: String): String =
+    if (url == null) null else canonical(parse(url.trim))
+
+  /** [[canonicalize]] of an already-parsed (trimmed) URL. */
+  private[graft] def canonical(p: Parts): String = {
     val scheme = p.scheme.toLowerCase
     val authority =
       if (p.authority == null) null
@@ -148,12 +171,13 @@ object UrlKernel {
   }
 
   /** Host of a URL (lowercased), or null when there is no authority. */
-  def host(url: String): String = {
-    if (url == null) return null
-    val p = parse(url.trim)
+  def host(url: String): String =
+    if (url == null) null else hostOf(parse(url.trim))
+
+  /** [[host]] of an already-parsed (trimmed) URL. */
+  private[graft] def hostOf(p: Parts): String =
     if (p.authority == null) null
     else splitAuthority(p.authority)._2.toLowerCase
-  }
 
   /**
    * RFC 3986 §5.2 reference resolution (the behavior of rust-url's

@@ -158,7 +158,10 @@ object Merge {
     // Insert ranks must still start after the per-site max over the FULL
     // cache; derive it from oldDf and feed it via a broadcast side table.
     val maxRanks = oldDf.groupBy("site_id").agg(max("rank").cast("long").as("_site_max_rank"))
-    val r = mergeEntries(touched, newDf, now)
+    // staged: the daemon checkpoints the posts and then the events, and
+    // each would otherwise re-run the whole join, its windows and the
+    // crawl fetch underneath
+    val r = mergeEntries(touched, newDf, now, stageResult = true)
     // Re-base insert ranks: mergeEntries offset them by max(touched.rank);
     // shift inserts by (siteMax - touchedMax) so they land after the cache max.
     val touchedMax = touched.groupBy("site_id").agg(max("rank").cast("long").as("_touched_max"))

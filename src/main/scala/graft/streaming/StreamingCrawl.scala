@@ -4,8 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import graft.crawl.{Crawl, SyntheticWeb}
-import graft.functions.GraftFunctions
+import graft.crawl.{Crawl, FrontierKey, SyntheticWeb}
 
 /**
  * The crawl's wave loop as a SELF-FEEDING Structured Streaming query
@@ -50,7 +49,6 @@ object StreamingCrawl {
     Crawl.seeds(spark, cfg).toDF()
       .write.mode("overwrite").parquet(frontierDir)
 
-    val robotsDf = broadcast(Crawl.robots(spark))
     val scale = cfg.scale; val limit = cfg.limitPerSite; val rev = cfg.rev
     val probe = cfg.probePagination
     var batches = 0L
@@ -63,13 +61,11 @@ object StreamingCrawl {
         val s = batch.sparkSession
         import s.implicits._
         batches += 1
-        // canonicalize + robots Disallow + in-batch dedup + seen filter
+        // key + robots Disallow (the batch crawl's key kernel, over the
+        // URL this frontier carries) + in-batch dedup + seen filter
         val keyed = batch.toDF()
-          .withColumn("url_hash", xxhash64(GraftFunctions.url_canonicalize(col("url"))))
-          .withColumn("host", GraftFunctions.url_host(col("url")))
-          .join(robotsDf, Seq("host"), "left")
-          .filter(coalesce(!exists(col("disallow"),
-            d => GraftFunctions.url_path(col("url")).startsWith(d)), lit(true)))
+          .select(col("url"), col("site_id"), col("kind"), col("page"), col("row"),
+            col("depth"), inline(FrontierKey.url_key(col("url"))))
           .dropDuplicates("url_hash")
         // same first-run semantics as the batch cache: ONLY a cleanly
         // missing path is empty — a missing dir WITH `.old` swap leftovers

@@ -93,20 +93,24 @@ object StreamingMerge {
       spark.emptyDataset[Post].toDF().withColumn("rank", lit(0L))
     }
 
-  /** Generic snapshot read with the narrow first-run semantics above. */
+  /** Generic snapshot read with the narrow first-run semantics above. The
+    * path is probed rather than a failed read caught: a failed analysis
+    * also reaches the session's query listeners, which report it as an
+    * error of their own. */
   private[graft] def readSnapshotOr(spark: SparkSession, dir: String)(
-      empty: => DataFrame): DataFrame =
-    try spark.read.parquet(dir)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
-        val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-        val leftovers = fs.globStatus(new org.apache.hadoop.fs.Path(dir + ".old*"))
-        require(leftovers == null || leftovers.isEmpty,
-          s"cache $dir missing but swap leftovers exist " +
-            s"(${Option(leftovers).toSeq.flatten.map(_.getPath).mkString(", ")}): " +
-            "recover the .old snapshot instead of restarting from empty")
-        empty
+      empty: => DataFrame): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(path)) spark.read.parquet(dir)
+    else {
+      val leftovers = fs.globStatus(new org.apache.hadoop.fs.Path(dir + ".old*"))
+      require(leftovers == null || leftovers.isEmpty,
+        s"cache $dir missing but swap leftovers exist " +
+          s"(${Option(leftovers).toSeq.flatten.map(_.getPath).mkString(", ")}): " +
+          "recover the .old snapshot instead of restarting from empty")
+      empty
     }
+  }
 
   final case class SeenKey(site_id: String, id: String)
   final case class SeenState(content_hash: Long)

@@ -30,39 +30,21 @@ class CrawlSpec extends SparkSuite {
   private lazy val schedule1 = run1.schedule.cache()
 
   test("UrlGrammar.rebuildUrl reproduces every discovered URL byte-for-byte") {
-    // Walk the FULL expansion graph (driver-side, no Spark) at both revs:
-    // every Req the synthetic web can ever hand the frontier — seeds
-    // (incl. calendar year pages and the probe fan-out), list pagination,
-    // post links, and the every-5th-page robots traps — must rebuild from
-    // its (site_id, kind, page, row) coordinates byte-for-byte, because
-    // the frontier no longer carries the string between waves.
+    // Walk the FULL expansion graph at both revs: every Req the synthetic
+    // web can ever hand the frontier must rebuild from its (site_id, kind,
+    // page, row) coordinates byte-for-byte, because the frontier no longer
+    // carries the string between waves.
     val scale = 200L; val limit = 50L
     for (rev <- 0 to 1) {
-      var checked = 0
-      Sites.all.foreach { site =>
-        val session =
-          if (site.family == "auth") Some(Sso.bootstrap(site.host)) else None
-        var queue = scala.collection.mutable.Queue(
-          SyntheticWeb.Req(SyntheticWeb.listUrl(site, 1), site.site_id, "list", 1, 0, 0))
-        if (site.family == "calendar")
-          queue += SyntheticWeb.Req(SyntheticWeb.listUrl(site, 2), site.site_id, "list", 2, 0, 0)
-        while (queue.nonEmpty) {
-          val req = queue.dequeue()
-          assert(UrlGrammar.rebuildUrl(
-            org.apache.spark.unsafe.types.UTF8String.fromString(req.site_id),
-            org.apache.spark.unsafe.types.UTF8String.fromString(req.kind),
-            req.page, req.row, scale, rev).toString === req.url,
-            s"site=${site.site_id} kind=${req.kind} page=${req.page} row=${req.row} rev=$rev")
-          checked += 1
-          // only expand list pages (post pages yield no links); traps are
-          // never fetched (robots-filtered) but their URLs must rebuild too
-          if (req.kind == "list") {
-            val (_, links) = SyntheticWeb.expand(req, scale, limit, rev, session)
-            queue ++= links
-          }
-        }
+      val walk = ExpansionWalk(scale, limit, rev)
+      walk.foreach { case (req, _) =>
+        assert(UrlGrammar.rebuildUrl(
+          org.apache.spark.unsafe.types.UTF8String.fromString(req.site_id),
+          org.apache.spark.unsafe.types.UTF8String.fromString(req.kind),
+          req.page, req.row, scale, rev).toString === req.url,
+          s"site=${req.site_id} kind=${req.kind} page=${req.page} row=${req.row} rev=$rev")
       }
-      assert(checked > 500, s"rev=$rev walked only $checked reqs — walk broken?")
+      assert(walk.size > 500, s"rev=$rev walked only ${walk.size} reqs — walk broken?")
     }
   }
 

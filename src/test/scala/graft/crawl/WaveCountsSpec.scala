@@ -1,0 +1,64 @@
+package graft.crawl
+
+import graft.SparkSuite
+import org.apache.spark.sql.functions._
+
+/** The wave counts are observed on the stage-out and links writes. The
+  * lineage tallies and snapshot row counts below were recorded when each
+  * wave still counted its staged and discovered rows with separate jobs;
+  * the observed counts must reproduce them exactly. */
+class WaveCountsSpec extends SparkSuite {
+
+  /** Per wave: scheduled, deduped, sum of fetched. */
+  private def tally(r: Crawl.Result): String =
+    r.lineage.groupBy("wave").agg(first("scheduled"), first("deduped"), sum("fetched"))
+      .orderBy("wave").collect().map(_.mkString(",")).mkString(";")
+
+  /** Per committed snapshot version: the manifest's row counts. */
+  private def rowCounts(dir: String): String =
+    Snapshots.versions(dir).map { v =>
+      val manifest = java.nio.file.Files.readString(
+        java.nio.file.Paths.get(s"$dir/snapshots/v$v/manifest.json"))
+      val n = graft.sinks.SiteJson.mapper.readTree(manifest).path("row_counts")
+      Seq("posts", "seen", "frontier", "schedule", "lineage")
+        .map(k => n.path(k).asLong()).mkString(",")
+    }.mkString(";")
+
+  private def crawl(cfg: Crawl.Config): (Crawl.Result, String) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-wave-counts").toString
+    val r = Crawl.run(spark, cfg.copy(snapshotDir = Some(dir)))
+    (r, rowCounts(dir))
+  }
+
+  private val two = Seq("biz.ssu.ac.kr", "bioinfo.ssu.ac.kr")
+
+  test("observed counts: fleet crawl whose last wave discovers no links") {
+    val (r, counts) = crawl(Crawl.Config(scale = 200, limitPerSite = 50))
+    assert(tally(r) === "0,86,0,86;1,717,3,714")
+    assert(counts === "0,86,717,86,1;714,800,0,800,2")
+  }
+
+  test("observed counts: sequential page walk over three waves") {
+    val (r, counts) = crawl(Crawl.Config(scale = 60, limitPerSite = 20, include = two,
+      probePagination = false))
+    assert(tally(r) === "0,2,0,2;1,22,0,22;2,12,0,12")
+    assert(counts === "0,2,22,2,1;20,24,12,24,2;32,36,0,36,3")
+  }
+
+  test("observed counts: every site fails its post wave") {
+    val (r, counts) = crawl(Crawl.Config(scale = 60, limitPerSite = 20,
+      include = Seq("biz.ssu.ac.kr"), faults = Map(("biz.ssu.ac.kr", 1) -> 3)))
+    assert(r.failedSites.keySet === Set("biz.ssu.ac.kr"))
+    assert(tally(r) === "0,2,0,2;1,20,0,20")
+    assert(counts === "0,2,20,2,1;0,0,0,22,2")
+  }
+
+  test("observed counts: every site fails wave 0, so the links write has no input") {
+    val (r, counts) = crawl(Crawl.Config(scale = 60, limitPerSite = 20, include = two,
+      faults = two.map(s => (s, 0) -> 3).toMap))
+    assert(r.failedSites.keySet === two.toSet)
+    assert(tally(r) === "0,4,0,4")
+    assert(counts === "0,0,0,4,1")
+    assert(r.posts.count() === 0)
+  }
+}

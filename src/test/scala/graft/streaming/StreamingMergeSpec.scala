@@ -42,6 +42,26 @@ class StreamingMergeSpec extends SparkSuite {
     assert(cache(0).getAs[Timestamp]("updated_at") === null)
   }
 
+  test("readSnapshotOr: only a cleanly missing path is the empty table") {
+    val dir = Files.createTempDirectory("graft-snapshot-or").toString
+    val empty = Seq.empty[(Long, String)].toDF("k", "v")
+    val missing = StreamingMerge.readSnapshotOr(spark, s"$dir/missing")(empty)
+    assert(missing.count() === 0 && missing.columns.toSeq === Seq("k", "v"))
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/live")
+    assert(StreamingMerge.readSnapshotOr(spark, s"$dir/live")(empty).count() === 1)
+    // a mid-swap crash left only the set-aside copy: refuse to start empty
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/swapped.old7")
+    val refused = intercept[IllegalArgumentException] {
+      StreamingMerge.readSnapshotOr(spark, s"$dir/swapped")(empty)
+    }
+    assert(refused.getMessage.contains("swap leftovers"))
+    // a present but unreadable snapshot is an error, not a first run
+    Files.createDirectories(java.nio.file.Paths.get(s"$dir/broken"))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      StreamingMerge.readSnapshotOr(spark, s"$dir/broken")(empty)
+    }
+  }
+
   test("mapGroupsWithState dedup emits created/unchanged/updated across batches") {
     implicit val sq = spark.sqlContext
     val dir = Files.createTempDirectory("graft-stream2").toString

@@ -25,6 +25,15 @@ import graft.crawl.{Crawl, Pipeline}
  * Flow (main.rs:82-126): crawl all selected sites -> MERGE into the cache
  * -> newest-first top-K -> per-site JSON + RSS + calendar ICS + report,
  * then persist the new cache snapshot.
+ *
+ * Every table of the cycle is computed once, and no job exists only to
+ * feed a driver-side sort or count. A warm cycle at `--limit 30
+ * --scale 1000` over ten sites (4 cores) runs 46 Spark jobs: 2 cache
+ * schema reads, 13 for the two-wave crawl, 11 for the merge (the staged
+ * batch, the merge join with its windows, the clustered layout), 1 for
+ * the events, 2 feed writes from one render, 7 report writes (5 of them
+ * the crawl lineage), 6 for the calendar (its merge and the ICS collect),
+ * 2 cache writes and the markdown report's one collect (2 jobs).
  */
 object Daemon {
 
@@ -183,20 +192,16 @@ object Daemon {
     // (reference cli main.rs:118-125 — any failed site fails the run)
     val allFailed = failedSites ++ crawl.failedSites
 
-    val order = crawl.schedule.select(col("url"),
-      ((col("page").cast("long") * 1000000L) + col("row")).as("seq"))
-    val newPosts = crawl.posts.join(order, Seq("url"), "left")
-      .withColumn("seq", coalesce(col("seq"), lit(0L)))
-
     // INCREMENTAL merge — the product path for a 10^10-row cache:
     //  - only the crawled sites' partitions are SCANNED (partition pruning
     //    on the isin filter — untouched sites contribute zero read or
     //    shuffle rows to the merge);
     //  - within the touched slice, only cache rows whose (site_id, id)
     //    appears in the crawl batch enter the full-outer merge join (the
-    //    batch's key set rides as a BROADCAST semi/anti join — the cache
-    //    side needs no Exchange, and the shuffle is O(batch), not
-    //    O(touched-site history); DaemonSpec audits the shuffle volume);
+    //    batch is staged once and its key set rides as a BROADCAST
+    //    semi/anti join — the cache side needs no Exchange, and the
+    //    shuffle is O(batch), not O(touched-site history); MergeSpec
+    //    audits the shuffle volume);
     //  - only the crawled sites' partitions are REWRITTEN (dynamic
     //    partition overwrite below) — a bounded per-run batch never
     //    rewrites the full cache state.
@@ -205,28 +210,33 @@ object Daemon {
     val touched = liveSiteIds.filterNot(crawl.failedSites.keySet)
     val cacheTouched = cache.filter(col("site_id").isin(touched: _*))
     val cacheUntouched = cache.filter(!col("site_id").isin(touched: _*))
-    val merged = graft.operators.Merge.mergeEntriesIncremental(cacheTouched, newPosts, opts.now)
-    // Canonical storage layout before the write-back: one exchange keyed by
-    // site_id with a (rank, id) sort inside each site. This (a) writes ONE
-    // file per site partition instead of one per (site × shuffle partition)
-    // — the next run's partition-pruned read scans a single file per site
-    // — and (b) makes the persisted bytes a pure function of the logical
-    // cache state, so an identical daemon cycle publishes an identical
-    // tree and the commit no-ops. The exchange moves only the touched
-    // slice, which the dynamic partition overwrite is about to rewrite to
-    // storage anyway; the MERGE itself no longer shuffles site history
-    // (broadcast key semi/anti above).
+    val merged = graft.operators.Merge.mergeEntriesIncremental(
+      cacheTouched, Pipeline.crawlBatch(crawl), opts.now)
+    // Canonical storage layout before the write-back (Merge.clusterBySite):
+    // one exchange keyed by site_id with a (rank, id) sort inside each
+    // site. This (a) writes ONE file per site partition instead of one per
+    // (site × shuffle partition) — the next run's partition-pruned read
+    // scans a single file per site — (b) makes the persisted bytes a pure
+    // function of the logical cache state, so an identical daemon cycle
+    // publishes an identical tree and the commit no-ops, and (c) lets the
+    // feeds render each site's top-K in one narrow pass. The exchange
+    // moves only the touched slice, which the dynamic partition overwrite
+    // is about to rewrite to storage anyway; the MERGE itself no longer
+    // shuffles site history (broadcast key semi/anti above).
     // localCheckpoint both stages it once for the several consumers below
     // AND breaks the cache-read lineage so the dynamic overwrite may write
     // back to the same path it was read from
-    val touchedPosts = merged.posts
-      .repartition(col("site_id"))
-      .sortWithinPartitions(col("site_id"), col("rank"), col("id"))
-      .localCheckpoint()
+    val touchedPosts = graft.operators.Merge.clusterBySite(merged.posts).localCheckpoint()
     // sinks cover the sites this run crawled (the reference daemon emits
     // outputs per crawled plugin, main.rs:192-243 — untouched sites keep
-    // their previous outputs and are neither scanned nor rewritten)
-    val top = graft.operators.Merge.topKPerSite(touchedPosts, opts.limit.toInt)
+    // their previous outputs and are neither scanned nor rewritten). Both
+    // feeds render from the newest `limit` posts of each site in ONE pass
+    // over the clustered checkpoint, staged for its two writes; one row
+    // per site means neither write needs an exchange
+    val feeds = graft.sinks.Feeds.perSite(touchedPosts, opts.limit.toInt)
+      .localCheckpoint(eager = false)
+    val siteJson = feeds.select("site_id", "site_json")
+    val rss = feeds.select("site_id", "rss_xml")
 
     // crawl_success (one per successfully crawled site — the reference
     // emits it per finished plugin, core/mod.rs:53-87) and crawl_failed
@@ -247,11 +257,8 @@ object Daemon {
     // must keep the uncrawled sites' last-good files (the reference's
     // `cp -rv out/* .` publish only ever adds/overwrites) — the default
     // STATIC mode would truncate the whole sites/ and rss/ trees first
-    graft.sinks.SiteJson.write(graft.sinks.SiteJson.perSite(top), s"${opts.out}/sites")
-    graft.sinks.Rss.perSite(top).repartition(col("site_id"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("site_id").text(s"${opts.out}/rss")
+    graft.sinks.SiteJson.write(siteJson, s"${opts.out}/sites")
+    graft.sinks.Rss.write(rss, s"${opts.out}/rss")
     graft.sinks.Report.write(events, s"${opts.out}/reports/content_report")
     allFailed.toSeq
       .map { case (site, e) => (site, e.getMessage) }
@@ -311,8 +318,9 @@ object Daemon {
     val fullCache = cacheUntouched.select(touchedPosts.columns.map(col): _*)
       .unionByName(touchedPosts)
     RunResult(
-      Pipeline.Output(top, fullCache, graft.sinks.SiteJson.perSite(top),
-        graft.sinks.Rss.perSite(top), events, crawl.schedule, crawl.lineage),
+      Pipeline.Output(
+        graft.operators.Merge.topKPerSite(touchedPosts, opts.limit.toInt),
+        fullCache, siteJson, rss, events, crawl.schedule, crawl.lineage),
       allFailed)
   }
 

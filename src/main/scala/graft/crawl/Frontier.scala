@@ -5,7 +5,6 @@ import scala.concurrent.duration._
 import scala.util.Try
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.functions.GraftFunctions
 import graft.model.Post
 
@@ -212,49 +211,59 @@ object Crawl {
       .filter(_.length > 0).map(_.getLong(0))
       .getOrElse(recount)
 
-  def seeds(spark: SparkSession, cfg: Config): Dataset[SyntheticWeb.Req] = {
-    import spark.implicits._
+  /** The seed list of `cfg`'s selected sites: a pure function of the
+    * config, built on the driver, so its size is known without a job. */
+  def seedRequests(cfg: Config): Seq[SyntheticWeb.Req] = {
     val calendarYears = 2 // reference: this year + next (cli main.rs:268-277)
-    val scale = cfg.scale; val limit = cfg.limitPerSite; val rev = cfg.rev
-    val probe = cfg.probePagination
-    val siteSeeds = spark.createDataset(Sites.selected(cfg.include, cfg.exclude))
-    siteSeeds.flatMap { s =>
+    Sites.selected(cfg.include, cfg.exclude).flatMap { s =>
       if (s.family == "calendar")
         (1 to calendarYears).map(y =>
           SyntheticWeb.Req(SyntheticWeb.listUrl(s, y), s.site_id, "list", y, 0, 0))
-      else if (probe) {
+      else if (cfg.probePagination) {
         // static pagination fan-out: the page count is computable up front
         // (reference precedent: ssucatch page fan-out S3,
         // plugins/ssucatch/src/lib.rs:261-295, and chemeng total-pages
         // probe A3, lib.rs:341-372) — every list page is a seed, keeping
         // the crawl at two breadth levels (lists, then posts)
-        val total0 = Sites.postCount(s, scale)
-        val visible = if (rev >= 1) total0 else total0 - total0 / 23
-        val wanted = math.min(visible, limit)
+        val total0 = Sites.postCount(s, cfg.scale)
+        val visible = if (cfg.rev >= 1) total0 else total0 - total0 / 23
+        val wanted = math.min(visible, cfg.limitPerSite)
         val lastPage = math.max(1L, (wanted + s.page_size - 1) / s.page_size).toInt
         (1 to lastPage).map(p =>
           SyntheticWeb.Req(SyntheticWeb.listUrl(s, p), s.site_id, "list", p, 0, 0))
       } else
         Seq(SyntheticWeb.Req(SyntheticWeb.listUrl(s, 1), s.site_id, "list", 1, 0, 0))
-    }.repartition(spark.sparkContext.defaultParallelism)
+    }
+  }
+
+  /** [[seedRequests]] as a Dataset. A local relation already spreads its
+    * rows over the default parallelism, so no repartition exchange. */
+  def seeds(spark: SparkSession, cfg: Config): Dataset[SyntheticWeb.Req] = {
+    import spark.implicits._
+    spark.createDataset(seedRequests(cfg))
   }
 
   def run(spark: SparkSession, cfg: Config): Result = {
     import spark.implicits._
-    runFrom(spark, cfg, seeds(spark, cfg).toDF(), wave0 = 0,
+    val seedReqs = seedRequests(cfg)
+    runFrom(spark, cfg, spark.createDataset(seedReqs).toDF(), wave0 = 0,
       seen0 = Seq.empty[(Long, Int)].toDF("url_hash", "first_wave"),
       posts0 = spark.emptyDataset[Post].toDF(),
-      schedule0 = None, lineage0 = None)
+      schedule0 = None, lineage0 = None,
+      frontierRows = Some(seedReqs.size.toLong), seenRows = Some(0L))
   }
 
   /** Continue a crawl from an arbitrary state (used by snapshot resume).
     * `failures0` carries a resumed snapshot's recorded mid-crawl failures
-    * forward so the resumed run still reports (and keeps excluding) them. */
+    * forward so the resumed run still reports (and keeps excluding) them.
+    * `frontierRows`/`seenRows` are the row counts of `frontier0`/`seen0`
+    * when the caller already knows them; a missing one is counted here. */
   def runFrom(
       spark: SparkSession, cfg: Config, frontier0: DataFrame, wave0: Int,
       seen0: DataFrame, posts0: DataFrame,
       schedule0: Option[DataFrame], lineage0: Option[DataFrame],
-      failures0: Map[String, Throwable] = Map.empty): Result = {
+      failures0: Map[String, Throwable] = Map.empty,
+      frontierRows: Option[Long] = None, seenRows: Option[Long] = None): Result = {
     import spark.implicits._
 
     val ssoBootstraps = spark.sparkContext.longAccumulator("sso_bootstraps")
@@ -284,19 +293,20 @@ object Crawl {
     // column here normalizes every entry path — fresh seeds (which carry
     // the Req url) and resumed snapshots (already url-free) alike
     var frontier = frontier0.drop("url")
-    // Growing state is kept as PARTS (one persisted DataFrame per wave) and
+    // Growing state is kept as PARTS (one DataFrame per wave) and
     // unioned once at the end: rebuilding a growing union tree inside the
     // loop makes Catalyst/AQE re-plan an ever-larger plan every wave — a
     // serial driver cost that destroys N->4N scaling efficiency.
-    val seenParts = scala.collection.mutable.ArrayBuffer(
-      seen0.persist(StorageLevel.MEMORY_AND_DISK))
+    // seen0 is not persisted: it is an empty local relation or a snapshot
+    // parquet read, both cheap to re-scan
+    val seenParts = scala.collection.mutable.ArrayBuffer(seen0)
     val postParts = scala.collection.mutable.ArrayBuffer(posts0)
     val scheduleParts = scala.collection.mutable.ArrayBuffer(
       schedule0.getOrElse(emptySchedule))
     val lineageParts = scala.collection.mutable.ArrayBuffer(
       lineage0.getOrElse(emptyLineage))
     def seenAll = seenParts.reduce(_ unionByName _)
-    var seenCount = seenParts.head.count()
+    var seenCount = seenRows.getOrElse(seen0.count())
     // incrementally-maintained seen sketch: each wave folds its fresh delta
     // in (O(|delta|)) instead of re-aggregating the whole seen set
     // (O(|seen|) per wave — a full-state scan per wave at 10^10 URLs)
@@ -306,7 +316,7 @@ object Crawl {
     var wave = wave0
     // frontier size is carried between waves (the links write observed it) —
     // no extra action per wave just to test emptiness
-    var frontierCount = frontier.count()
+    var frontierCount = frontierRows.getOrElse(frontier.count())
 
     require(!cfg.livePacing || cfg.faults.isEmpty,
       "livePacing and fault injection are separate test modes")

@@ -39,17 +39,9 @@ object Pipeline {
     // of re-crawling (the production shape: one crawl, many consumers)
     val crawl = precomputedCrawl.getOrElse(Crawl.run(spark, cfg))
 
-    // arrival order of the new batch = crawl order (page, row) — join the
-    // schedule (keyed by canonical url hash) to recover it
-    val order = crawl.schedule
-      .filter(col("site_id").isNotNull)
-      .select(col("url"), ((col("page").cast("long") * 1000000L) + col("row")).as("seq"))
-    val newPosts = crawl.posts.join(order, Seq("url"), "left")
-      .withColumn("seq", coalesce(col("seq"), lit(0L)))
-
     // the merged cache feeds four consumers (top-K -> JSON + RSS feeds,
     // the cache snapshot, the event table) — stage it once
-    val merged = Merge.mergeEntries(cache, newPosts, now, stageResult = true)
+    val merged = Merge.mergeEntries(cache, crawlBatch(crawl), now, stageResult = true)
     val top = Merge.topKPerSite(merged.posts, topK)
 
     Output(
@@ -60,6 +52,16 @@ object Pipeline {
       events = merged.events,
       schedule = crawl.schedule,
       lineage = crawl.lineage)
+  }
+
+  /** A crawl's posts as a merge batch: each post with its arrival order
+    * `seq`, the crawl order (page, row) recovered from the schedule. */
+  def crawlBatch(crawl: Crawl.Result): DataFrame = {
+    val order = crawl.schedule
+      .filter(col("site_id").isNotNull)
+      .select(col("url"), ((col("page").cast("long") * 1000000L) + col("row")).as("seq"))
+    crawl.posts.join(order, Seq("url"), "left")
+      .withColumn("seq", coalesce(col("seq"), lit(0L)))
   }
 
   /** Empty cache with the Post+rank schema (first daemon run). */
@@ -101,10 +103,12 @@ object Pipeline {
     // consume it, and each would re-run the parse and the merge
     val merged = graft.operators.Merge.mergeCalendarReplaceInRange(cache, events, start, end)
       .localCheckpoint(eager = false)
-    val output = graft.operators.Merge.calendarInRange(merged, start, end)
+    // the ICS takes the in-range rows unsorted: it puts its collected
+    // blocks in the output order on the driver, no range-partitioned sort
     val ics = graft.sinks.Ics.toIcsDistributed(
       "SSU Academic Calendar", "https://scatch.ssu.ac.kr/학사일정", "학사일정",
-      output.as[graft.model.CalendarEvent])
-    CalendarOutput(output, merged, ics)
+      merged.filter(col("starts_at").between(lit(start), lit(end)))
+        .as[graft.model.CalendarEvent])
+    CalendarOutput(graft.operators.Merge.calendarInRange(merged, start, end), merged, ics)
   }
 }

@@ -125,7 +125,8 @@ object Snapshots {
    * wave v+1 with the persisted frontier/seen/posts state. Idempotent by
    * construction: the seen-set makes re-fetching a no-op and the schedule
    * is a pure function of the frontier. Throws if `cfg` differs from the
-   * snapshot's config in any [[pinned]] field.
+   * snapshot's config in any [[pinned]] field, or if the frontier or seen
+   * table read back holds other than the manifest's row count.
    */
   def resume(spark: SparkSession, dir: String, cfg: Crawl.Config): Crawl.Result = {
     val v = currentVersion(dir).getOrElse(
@@ -146,13 +147,35 @@ object Snapshots {
           .map(e => e.getKey -> (new RuntimeException(e.getValue.asText()): Throwable))
           .toSeq
       }.toMap
+    // the frontier and seen tables are counted anyway (the crawl sizes its
+    // first wave and its seen sketch from them), so checking them against
+    // the manifest's row_counts costs no extra job: a truncated vN — a
+    // lost part file — fails here instead of silently re-crawling less
+    val frontier0 = readTable(spark, dir, v, "frontier")
+    val seen0 = readTable(spark, dir, v, "seen")
+    val frontierRows = checkedCount(node, v, dir, "frontier", frontier0)
+    val seenRows = checkedCount(node, v, dir, "seen", seen0)
     Crawl.runFrom(spark, cfg,
-      frontier0 = readTable(spark, dir, v, "frontier"),
+      frontier0 = frontier0,
       wave0 = v + 1,
-      seen0 = readTable(spark, dir, v, "seen"),
+      seen0 = seen0,
       posts0 = readTable(spark, dir, v, "posts"),
       schedule0 = Some(readTable(spark, dir, v, "schedule")),
       lineage0 = Some(readTable(spark, dir, v, "lineage")),
-      failures0 = failures0)
+      failures0 = failures0,
+      frontierRows = Some(frontierRows), seenRows = Some(seenRows))
+  }
+
+  /** Row count of `table` as read back, which must equal the count the
+    * manifest recorded when version `v` was written. */
+  private def checkedCount(manifest: JsonNode, v: Int, dir: String,
+      table: String, df: DataFrame): Long = {
+    val want = Option(manifest.path("row_counts").get(table)).map(_.asLong).getOrElse(
+      throw new IllegalStateException(s"snapshot v$v under $dir records no $table row count"))
+    val got = df.count()
+    if (got != want) throw new IllegalStateException(
+      s"snapshot v$v under $dir is incomplete: $table has $got rows, " +
+        s"its manifest row_counts records $want")
+    got
   }
 }

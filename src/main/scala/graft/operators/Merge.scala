@@ -59,10 +59,12 @@ object Merge {
    * Exact merge. `newDf` needs an arrival-order column `seq` (0-based order
    * within the batch; pagination order (page, row) flattened) — the
    * reference's stable sort tiebreaker. Emits posts (+`rank`) and a
-   * `post_created`/`post_updated` event table.
+   * `post_created`/`post_updated` event table. Inserts are ranked after the
+   * per-site max of `oldDf.rank`, or after `rankBase` when given: one
+   * `(site_id, rank_base)` row per site, a site without a row starting at 0.
    */
   def mergeEntries(oldDf: DataFrame, newDf: DataFrame, now: Timestamp,
-      stageResult: Boolean = false): MergeResult = {
+      stageResult: Boolean = false, rankBase: Option[DataFrame] = None): MergeResult = {
     val spark = oldDf.sparkSession
 
     val oldRanked =
@@ -84,8 +86,11 @@ object Merge {
 
     val o = oldRanked.select(
       (postCols :+ "rank").map(c => col(c).as(s"o_$c")): _*)
-    val n = newRanked.select(
-      (postCols :+ "new_ord").map(c => col(c).as(s"n_$c")): _*)
+    // inserts only come from the new side, so the base rides on its rows
+    val newBased = rankBase.fold(newRanked)(b =>
+      newRanked.join(broadcast(b.select("site_id", "rank_base")), Seq("site_id"), "left"))
+    val n = newBased.select((postCols ++ Seq("new_ord") ++ rankBase.map(_ => "rank_base"))
+      .map(c => col(c).as(s"n_$c")): _*)
 
     val joined = o.join(n,
       o("o_site_id") === n("n_site_id") && o("o_id") === n("n_id"), "full_outer")
@@ -98,8 +103,10 @@ object Merge {
 
     // Per-site max old rank to append inserts after all existing rows.
     val siteKey = coalesce(oc("site_id"), nc("site_id"))
-    val wSite = Window.partitionBy(siteKey)
-    val maxOldRank = coalesce(max(oc("rank")).over(wSite), lit(0L))
+    val maxOldRank = coalesce(
+      if (rankBase.isDefined) nc("rank_base")
+      else max(oc("rank")).over(Window.partitionBy(siteKey)),
+      lit(0L))
     // Inserts keep the new batch's stable order after the old block:
     // running count of inserts in new-batch order (nulls — old-only rows —
     // sort first and contribute 0).
@@ -148,33 +155,27 @@ object Merge {
   /**
    * Incremental merge for huge caches: only cache rows whose (site_id, id)
    * appears in the new batch enter the join; everything else is passed
-   * through untouched. The new batch is broadcast (it is per-run crawl
-   * output: bounded, small relative to the cache).
+   * through untouched. The new batch is staged once and its key set
+   * broadcast (it is per-run crawl output: bounded, small relative to the
+   * cache).
    */
   def mergeEntriesIncremental(oldDf: DataFrame, newDf: DataFrame, now: Timestamp): MergeResult = {
-    val keys = newDf.select("site_id", "id").distinct()
+    // staged: the key set below and the merge join both read the batch,
+    // and each would otherwise re-run the crawl fetch underneath it
+    val batch = newDf.localCheckpoint(eager = false)
+    // a semi/anti join never multiplies its left rows, so the broadcast
+    // key set needs no distinct (and no aggregate exchange)
+    val keys = batch.select("site_id", "id")
     val touched = oldDf.join(broadcast(keys), Seq("site_id", "id"), "left_semi")
     val untouched = oldDf.join(broadcast(keys), Seq("site_id", "id"), "left_anti")
-    // Insert ranks must still start after the per-site max over the FULL
-    // cache; derive it from oldDf and feed it via a broadcast side table.
-    val maxRanks = oldDf.groupBy("site_id").agg(max("rank").cast("long").as("_site_max_rank"))
+    // Insert ranks start after the per-site max over the FULL cache, not
+    // just its touched rows: an insert gets siteMax + k, and a kept or
+    // updated row keeps its own rank
+    val maxRanks = oldDf.groupBy("site_id").agg(max("rank").cast("long").as("rank_base"))
     // staged: the daemon checkpoints the posts and then the events, and
-    // each would otherwise re-run the whole join, its windows and the
-    // crawl fetch underneath
-    val r = mergeEntries(touched, newDf, now, stageResult = true)
-    // Re-base insert ranks: mergeEntries offset them by max(touched.rank);
-    // shift inserts by (siteMax - touchedMax) so they land after the cache max.
-    val touchedMax = touched.groupBy("site_id").agg(max("rank").cast("long").as("_touched_max"))
-    val adjusted = r.posts
-      .join(broadcast(maxRanks), Seq("site_id"), "left")
-      .join(broadcast(touchedMax), Seq("site_id"), "left")
-      .withColumn("rank",
-        when(col("rank") > coalesce(col("_touched_max"), lit(0L)),
-          col("rank") - coalesce(col("_touched_max"), lit(0L)) +
-            coalesce(col("_site_max_rank"), lit(0L)))
-          .otherwise(col("rank")))
-      .drop("_site_max_rank", "_touched_max")
-    MergeResult(untouched.select(adjusted.columns.map(col): _*).unionByName(adjusted), r.events)
+    // each would otherwise re-run the whole join and its windows
+    val r = mergeEntries(touched, batch, now, stageResult = true, rankBase = Some(maxRanks))
+    MergeResult(untouched.select(r.posts.columns.map(col): _*).unionByName(r.posts), r.events)
   }
 
   /**
@@ -189,6 +190,15 @@ object Merge {
       .bucketBy(buckets, "site_id", "id")
       .sortBy("site_id", "id")
       .saveAsTable(table)
+
+  /** The cache's canonical per-site layout: ONE exchange keyed by site_id,
+    * then a (rank, id) sort inside each site. Each site is whole in one
+    * partition, so a partitioned write emits one file per site, and the
+    * rows' order is a pure function of the logical state.
+    * [[graft.sinks.Feeds]] renders from this layout without a shuffle. */
+  def clusterBySite(posts: DataFrame): DataFrame =
+    posts.repartition(col("site_id"))
+      .sortWithinPartitions(col("site_id"), col("rank"), col("id"))
 
   /** Newest-first top-K per site (reference mod.rs:142-147: `.rev().take(k)`). */
   def topKPerSite(posts: DataFrame, k: Int): DataFrame = {

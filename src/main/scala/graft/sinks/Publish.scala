@@ -46,29 +46,30 @@ object Publish {
   def markdownReport(events: DataFrame): String = {
     val spark = events.sparkSession
     import spark.implicits._
-    val counts = events.groupBy("event").agg(count(lit(1)).as("n"))
-      .as[(String, Long)].collect().toMap
-    def c(e: String): Long = counts.getOrElse(e, 0L)
-
-    // one section per site: "### <site>\n> N new posts\n- [title](url)..."
+    // ONE collect of the per-(event, site) aggregate: the event counts and
+    // every section come from its rows.
+    // One section per site: "### <site>\n> N new posts\n- [title](url)..."
     // (action.yml:67,72 jq template). The events table carries no emission
     // rank, so post order within a site is made DETERMINISTIC by a
     // numeric-aware post_id sort (length-then-value: "9" before "10";
     // plain lexicographic would invert numeric ids)
-    def sections(eventType: String, noun: String): Seq[String] = events
-      .filter(col("event") === eventType)
-      .groupBy(col("site_id"))
+    val bySite = events
+      .groupBy(col("event"), col("site_id"))
       .agg(count(lit(1)).as("n"),
         array_sort(collect_list(struct(
           length(col("post_id")).as("_len"), col("post_id"),
           col("title"), col("url"))))
           .as("posts"))
-      .select(col("site_id"), col("n"),
+      .select(col("event"), col("site_id"), col("n"),
         concat_ws("\n", transform(col("posts"),
           p => concat(lit("- ["), p.getField("title"), lit("]("),
             p.getField("url"), lit(")")))).as("body"))
-      .as[(String, Long, String)].collect().sortBy(_._1).toSeq
-      .map { case (site, n, body) => s"### $site\n> $n $noun\n$body" }
+      .as[(String, String, Long, String)].collect().toSeq
+    val counts = bySite.groupMapReduce(_._1)(_._3)(_ + _)
+    def c(e: String): Long = counts.getOrElse(e, 0L)
+    def sections(eventType: String, noun: String): Seq[String] = bySite
+      .filter(_._1 == eventType).sortBy(_._2)
+      .map { case (_, site, n, body) => s"### $site\n> $n $noun\n$body" }
 
     val sb = new StringBuilder
     sb ++= "# 컨텐츠 업데이트\n\n"

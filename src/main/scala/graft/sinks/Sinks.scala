@@ -1,5 +1,6 @@
 package graft.sinks
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
@@ -17,7 +18,8 @@ import graft.model.{CalendarEvent, Post}
  *
  * Formatting is pure Scala over already-shaped rows; the Spark side
  * aggregates each site's posts with ONE shuffle (groupByKey + mapGroups,
- * ordered inside the group) and writes one file per site via
+ * ordered inside the group), or with none over input already clustered
+ * by site ([[Feeds]]), and writes one file per site via
  * partitionBy(site_id) — at fleet scale sites are independent partitions.
  */
 object Rss {
@@ -77,25 +79,31 @@ object Rss {
     sb.toString
   }
 
+  /** One site's channel over its posts' `to_json` rows, newest first. */
+  def channel(site: String, postJsonsNewestFirst: Seq[String]): String =
+    channelXml(site, s"https://$site", s"$site notices",
+      postJsonsNewestFirst.map(SiteJson.postFromJson))
+
   /**
    * Per-site RSS feeds: one (site_id, xml) row per site. Input must carry
    * a `rank` column (merge insertion order); items are emitted
    * newest-first (top-K semantics applied upstream).
    */
   def perSite(posts: DataFrame): DataFrame = {
-    val spark = posts.sparkSession
-    import spark.implicits._
-    val ranked = posts.orderBy(col("site_id"), col("rank").desc)
-    ranked.select(col("site_id"), col("rank"), to_json(struct(
-      posts.columns.filter(_ != "rank").map(col): _*)).as("post_json"))
-      .as[(String, Long, String)]
+    import posts.sparkSession.implicits._
+    SiteJson.postJsonRows(posts)
       .groupByKey(_._1)
       .mapGroups { (site: String, rows: Iterator[(String, Long, String)]) =>
-        val posts = rows.toSeq.sortBy(-_._2).map(r => SiteJson.postFromJson(r._3))
-        (site, channelXml(site, s"https://$site", s"$site notices", posts))
+        (site, channel(site, rows.toSeq.sortBy(-_._2).map(_._3)))
       }
       .toDF("site_id", "rss_xml")
   }
+
+  /** Write one feed file per site, like [[SiteJson.write]]. */
+  def write(perSiteXml: DataFrame, outDir: String): Unit =
+    perSiteXml.write.mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("site_id").text(outDir)
 }
 
 object Ics {
@@ -140,18 +148,28 @@ object Ics {
 
   /**
    * Same VCALENDAR document, but the per-event escape/fold rendering runs
-   * DISTRIBUTED (one folded VEVENT block per row); the driver only
-   * concatenates the already-rendered block strings, in the dataset's sort
-   * order — byte-identical to [[toIcs]] over the same ordered items, with
-   * no Row collect on the driver.
+   * DISTRIBUTED (one folded VEVENT block per row); the driver collects the
+   * rendered blocks with their (starts_at, id) and concatenates them in the
+   * calendar output order, newest first ([[graft.operators.Merge.calendarInRange]])
+   * — byte-identical to [[toIcs]] over the same items in that order. The
+   * order is a driver-side sort of the collected blocks, not a distributed
+   * one: every block reaches the driver anyway.
    */
   def toIcsDistributed(
       title: String, source: String, desc: String,
       items: Dataset[CalendarEvent]): String = {
     import items.sparkSession.implicits._
     val blocks = items
-      .map(e => eventLines(e).map(TextKernel.icsFold).mkString("\r\n"))
+      .map(e => (e.starts_at, e.id, eventLines(e).map(TextKernel.icsFold).mkString("\r\n")))
       .collect()
+      // starts_at desc, then id desc in Spark's string order (UTF-8 bytes)
+      .sortWith { case ((ta, ia, _), (tb, ib, _)) =>
+        val t = ta.compareTo(tb)
+        if (t != 0) t > 0
+        else java.util.Arrays.compareUnsigned(
+          ia.getBytes(UTF_8), ib.getBytes(UTF_8)) > 0
+      }
+      .map(_._3)
     (headerLines(title, source, desc).map(TextKernel.icsFold) ++
       blocks :+ TextKernel.icsFold("END:VCALENDAR")).mkString("\r\n") + "\r\n"
   }
@@ -259,6 +277,26 @@ object SiteJson {
     item
   }
 
+  /** `(site_id, rank, post_json)` rows: each post as Spark's `to_json` of
+    * its columns other than `rank`, the form both feeds render from. */
+  private[sinks] def postJsonRows(posts: DataFrame): Dataset[(String, Long, String)] = {
+    import posts.sparkSession.implicits._
+    posts.select(col("site_id"), col("rank"), to_json(struct(
+      posts.columns.filter(_ != "rank").map(col): _*)).as("post_json"))
+      .as[(String, Long, String)]
+  }
+
+  /** One site's payload over its posts' `to_json` rows, newest first. */
+  def document(site: String, postJsonsNewestFirst: Seq[String]): String = {
+    val root = mapper.createObjectNode()
+    root.put("title", site)
+    root.put("source", s"https://$site")
+    root.put("description", s"$site notices")
+    val arr = root.putArray("items")
+    postJsonsNewestFirst.foreach(j => arr.add(serdeShapedItem(j)))
+    pretty(root)
+  }
+
   /**
    * Per-site JSON payload (cli main.rs:202-213 shape:
    * {title, source, description, items: [...]}) — one row per site,
@@ -268,33 +306,60 @@ object SiteJson {
    * without zero fractions).
    */
   def perSite(posts: DataFrame): DataFrame = {
-    val spark = posts.sparkSession
-    import spark.implicits._
-    posts.select(col("site_id"), col("rank"), to_json(struct(
-      posts.columns.filter(_ != "rank").map(col): _*)).as("post_json"))
-      .as[(String, Long, String)]
+    import posts.sparkSession.implicits._
+    postJsonRows(posts)
       .groupByKey(_._1)
       .mapGroups { (site: String, rows: Iterator[(String, Long, String)]) =>
-        val root = mapper.createObjectNode()
-        root.put("title", site)
-        root.put("source", s"https://$site")
-        root.put("description", s"$site notices")
-        val arr = root.putArray("items")
-        rows.toSeq.sortBy(-_._2).foreach(r => arr.add(serdeShapedItem(r._3)))
-        (site, pretty(root))
+        (site, document(site, rows.toSeq.sortBy(-_._2).map(_._3)))
       }
       .toDF("site_id", "site_json")
   }
 
   /** Write one file per site (the reference's {out}/{site}/data.json
-    * layout). Dynamic partition overwrite: a run that covers a subset of
-    * sites replaces only those sites' files — uncrawled sites keep their
-    * last-good output (the reference publish never deletes). */
+    * layout). The input holds one row per site, so each site's row sits
+    * in one task and lands as one file without an exchange. Dynamic
+    * partition overwrite: a run that covers a subset of sites replaces
+    * only those sites' files — uncrawled sites keep their last-good output
+    * (the reference publish never deletes). */
   def write(perSiteJson: DataFrame, outDir: String): Unit =
-    perSiteJson.repartition(col("site_id"))
-      .write.mode("overwrite")
+    perSiteJson.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("site_id").json(outDir)
+}
+
+/**
+ * Both per-site feeds, JSON and RSS, rendered in one narrow pass over posts
+ * laid out by [[graft.operators.Merge.clusterBySite]]: every site whole in
+ * one partition, its rows sorted by rank. The pass keeps the last `k` rows
+ * of each site's run — its newest `k` posts, the top-K of
+ * [[graft.operators.Merge.topKPerSite]] — so it needs no window, no
+ * grouping shuffle and no global sort, and its one row per site needs no
+ * exchange before the per-site writes.
+ */
+object Feeds {
+
+  /** `(site_id, site_json, rss_xml)`, one row per site with any post. */
+  def perSite(clusteredPosts: DataFrame, k: Int): DataFrame = {
+    import clusteredPosts.sparkSession.implicits._
+    SiteJson.postJsonRows(clusteredPosts)
+      .mapPartitions { rows =>
+        val in = rows.buffered
+        new Iterator[(String, String, String)] {
+          def hasNext: Boolean = in.hasNext && k > 0
+          def next(): (String, String, String) = {
+            val site = in.head._1
+            val newest = new java.util.ArrayDeque[String](k + 1)
+            while (in.hasNext && in.head._1 == site) {
+              newest.addFirst(in.next()._3)
+              if (newest.size > k) newest.removeLast()
+            }
+            val items = newest.toArray(new Array[String](0)).toSeq
+            (site, SiteJson.document(site, items), Rss.channel(site, items))
+          }
+        }
+      }
+      .toDF("site_id", "site_json", "rss_xml")
+  }
 }
 
 /** Crawl report (K5): JSON-lines event stream + the jq-style aggregation. */

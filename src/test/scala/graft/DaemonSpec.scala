@@ -5,6 +5,103 @@ import org.apache.spark.sql.functions._
 
 class DaemonSpec extends SparkSuite {
 
+  /** A small fixture cycle: every crawl family shape the sinks render —
+    * boards, a co-hosted pair, a rev-1 content drift (biz id 17 lies in
+    * its limit-20 window) and the calendar. */
+  private def cycleOpts(dir: String) = Daemon.Options(out = s"$dir/out",
+    cache = s"$dir/cache", limit = 20, scale = 60,
+    include = Seq("scatch.ssu.ac.kr", "biz.ssu.ac.kr", "cse.ssu.ac.kr/bachelor",
+      "cse.ssu.ac.kr/graduate", "bioinfo.ssu.ac.kr", "ssu-academic-calendar"))
+  private val flipNow = java.sql.Timestamp.valueOf("2026-01-16 00:00:00")
+
+  private def sha256(parts: Array[Byte]*): String = {
+    val d = java.security.MessageDigest.getInstance("SHA-256")
+    parts.foreach(d.update)
+    d.digest().map("%02x".format(_)).mkString
+  }
+
+  /** Digests of what a cycle leaves behind: the bytes of every sink file
+    * (keyed by its site directory — Spark's part-file names carry a job
+    * UUID) and the cache rows, ordered by site, rank and id. */
+  private def outputDigests(dir: String): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    def tree(sub: String): String = {
+      val root = java.nio.file.Paths.get(s"$dir/out/$sub")
+      val walk = java.nio.file.Files.walk(root)
+      val files = try walk.iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p))
+        .filterNot(p => Seq("_", ".").exists(p.getFileName.toString.startsWith))
+        .map(p => (root.relativize(p.getParent).toString,
+          java.nio.file.Files.readAllBytes(p)))
+        .toSeq finally walk.close()
+      sha256(files.sortBy { case (d, b) => (d, new String(b, "UTF-8")) }
+        .flatMap { case (d, b) => Seq((d + "\n").getBytes("UTF-8"), b) }: _*)
+    }
+    def file(rel: String) = sha256(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(s"$dir/out/$rel")))
+    val cache = spark.read.parquet(s"$dir/cache")
+    val rows = cache.select(col("site_id"), col("rank"), col("id"),
+        to_json(struct(cache.columns.map(col): _*)))
+      .orderBy("site_id", "rank", "id").collect().map(_.getString(3))
+    Map("sites" -> tree("sites"), "rss" -> tree("rss"),
+      "calendar.ics" -> file("calendar.ics"), "SUMMARY.md" -> file("reports/SUMMARY.md"),
+      "cache" -> sha256(rows.mkString("\n").getBytes("UTF-8")))
+  }
+
+  test("a cold cycle and a rev flip write the recorded sink bytes and cache rows") {
+    // recorded from the daemon before its sinks rendered in one pass, the
+    // merge ranked inserts from the cache max and the report collected once
+    val dir = java.nio.file.Files.createTempDirectory("graft-daemon-digest").toString
+    val opts = cycleOpts(dir)
+    Daemon.run(spark, opts)
+    assert(outputDigests(dir) === ColdDigests)
+    val flip = Daemon.run(spark, opts.copy(rev = 1, now = flipNow))
+    val tallies = flip.pipeline.events.groupBy("event").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(tallies === FlipTallies)
+    assert(outputDigests(dir) === FlipDigests)
+  }
+
+  test("a warm daemon cycle runs a bounded number of Spark jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-daemon-jobs").toString
+    val opts = cycleOpts(dir)
+    Daemon.run(spark, opts)
+    // jobs are tagged through a local property of this thread, which Spark
+    // hands on to the broadcast and query-stage work it starts for it
+    val key = "graft.test.cycle"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setLocalProperty(key, tag)
+      try Daemon.run(spark, opts.copy(rev = 1, now = flipNow))
+      finally spark.sparkContext.setLocalProperty(key, null)
+      awaitQuiet(jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get > 0 && jobs.get <= MaxWarmCycleJobs, s"${jobs.get} jobs")
+  }
+
+  private val ColdDigests = Map(
+    "sites" -> "ed911301fdcc8c7c6a3d77cf030e17a5c23aebb108fdf92e5c8082625af05e85",
+    "rss" -> "b87979145475c1a0dfa85096a34951711732afcac90741cf8abc1fb51eb8a241",
+    "calendar.ics" -> "88d16c3c450b4f7232b5b8fcc5de14fe05c2fe44140b7eb17ff53dc6bf369d57",
+    "SUMMARY.md" -> "0c02e906d229519f2014034b0cb854844091e15c1f0379bc2e2ebd727455a9bd",
+    "cache" -> "d7c3c614a93b414002f8868193857e831fb2c7bcf8dd97d7bedf270e9574912f")
+  private val FlipTallies = Map("crawl_success" -> 6L, "post_created" -> 2L, "post_updated" -> 2L)
+  private val FlipDigests = Map(
+    "sites" -> "21cb5a784f8082583e93765e6052f853cee534179348f257bdfd2a2ceafd9ea0",
+    "rss" -> "22e37769961d6fab4aa345e2ab3f97570cc42e2ebadaa9b5415c6b869ee8e9e1",
+    "calendar.ics" -> "88d16c3c450b4f7232b5b8fcc5de14fe05c2fe44140b7eb17ff53dc6bf369d57",
+    "SUMMARY.md" -> "299a1023472c302bafec82f8347db87ea404ce268015e90d1d377c33c880d2e0",
+    "cache" -> "12853850c45db65ea4ae5222ef2ebd011902f1a117a70b335f6861d6f40072e4")
+  // the same cycle ran 69 jobs before the merge batch was staged once,
+  // the feeds rendered in one pass and the driver-consumed sorts went
+  private val MaxWarmCycleJobs = 48
+
   test("CLI option parsing mirrors the reference (mutually exclusive include/exclude)") {
     val o = Daemon.parseArgs(Array("--out", "/tmp/o", "--limit", "30",
       "--include", "a.ssu.ac.kr,b.ssu.ac.kr", "--scale", "100"))

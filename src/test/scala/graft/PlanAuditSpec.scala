@@ -140,6 +140,36 @@ class PlanAuditSpec extends SparkSuite {
       s"touched slice must partition-prune:\n${tPlan.take(1200)}")
   }
 
+  test("daemon run: the feed, calendar-ICS and report plans sort nothing globally") {
+    // every plan the run executes, by action name
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(funcName -> qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-daemon").toString
+    spark.listenerManager.register(listener)
+    try {
+      Daemon.run(spark, Daemon.Options(out = s"$dir/out", cache = s"$dir/cache",
+        limit = 10, scale = 60, include = Seq("biz.ssu.ac.kr", "ssu-academic-calendar")))
+      awaitQuiet(plans.size)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq
+    val feeds = all.filter { case (_, p) => p.contains(s"$dir/out/sites") || p.contains(s"$dir/out/rss") }
+    // the ICS render and the markdown report are the run's collects
+    val collects = all.filter(_._1 == "collect")
+    assert(feeds.size === 2, all.map(_._1))
+    assert(collects.exists(_._2.contains("starts_at")), "the ICS collect")
+    assert(collects.exists(_._2.contains("collect_list")), "the report collect")
+    (feeds ++ collects).foreach { case (name, p) =>
+      assert(!p.toLowerCase.contains("rangepartitioning"), s"$name plan:\n$p")
+    }
+  }
+
   test("containment (q60): probe broadcasts, the corpus side never sort-merge-joins") {
     val plan = planOf("q60_containment")
     // probe shingles + df-cut + denominator all ride as broadcasts: the

@@ -22,4 +22,15 @@ object SparkTestSession {
 
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
+
+  /** Listener buses deliver asynchronously: wait until `count`, a tally
+    * a listener keeps, has not moved for three 100 ms polls. */
+  protected def awaitQuiet(count: => Long): Unit = {
+    var last = -1L; var stable = 0
+    while (stable < 3) {
+      Thread.sleep(100)
+      val v = count
+      if (v == last) stable += 1 else { stable = 0; last = v }
+    }
+  }
 }

@@ -273,6 +273,46 @@ class CrawlSpec extends SparkSuite {
     assert(flipped.getMessage.contains("rev: snapshot 0, config 1"))
   }
 
+  test("Crawl.run and Snapshots.resume add nothing to the session's cache") {
+    import org.apache.spark.sql.graftbridge.CacheProbe
+    val dir = java.nio.file.Files.createTempDirectory("graft-snap-cache").toString
+    val small = Crawl.Config(scale = 60, limitPerSite = 20,
+      include = Seq("biz.ssu.ac.kr"))
+    val before = CacheProbe.entries(spark)
+    Crawl.run(spark, small.copy(maxWaves = 1, snapshotDir = Some(dir))).schedule.count()
+    val freshSeen = Seq.empty[(Long, Int)].toDF("url_hash", "first_wave")
+    assert(!CacheProbe.isCached(freshSeen), "the fresh crawl's empty seen table is cached")
+    Snapshots.resume(spark, dir, small).schedule.count()
+    val resumedSeen = spark.read.parquet(s"$dir/snapshots/v0/seen")
+    assert(!CacheProbe.isCached(resumedSeen), "the resumed crawl's seen table is cached")
+    assert(CacheProbe.entries(spark) === before)
+  }
+
+  test("resume refuses a snapshot whose frontier lost a part file") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    def list(dir: String): Seq[Path] = {
+      val s = Files.list(Paths.get(dir))
+      try s.iterator().asScala.toSeq finally s.close()
+    }
+    val dir = Files.createTempDirectory("graft-snap-trunc").toString
+    val small = Crawl.Config(scale = 60, limitPerSite = 20,
+      include = Seq("biz.ssu.ac.kr", "bioinfo.ssu.ac.kr"))
+    Crawl.run(spark, small.copy(maxWaves = 1, snapshotDir = Some(dir)))
+    // a crawl this small writes its frontier as one file: rewrite the same
+    // rows as two files, so that losing one still leaves a readable table
+    val frontier = s"$dir/snapshots/v0/frontier"
+    spark.read.parquet(frontier).repartition(2).write.parquet(s"$dir/frontier2")
+    list(frontier).foreach(Files.delete)
+    Files.delete(Paths.get(frontier))
+    Files.move(Paths.get(s"$dir/frontier2"), Paths.get(frontier))
+    val parts = list(frontier).filter(_.getFileName.toString.startsWith("part-"))
+    assert(parts.size === 2)
+    Files.delete(parts.head)
+    val e = intercept[IllegalStateException](Snapshots.resume(spark, dir, small))
+    assert(e.getMessage.contains("frontier has"), e.getMessage)
+  }
+
   test("snapshot kill-and-resume reproduces the uninterrupted crawl exactly") {
     val dir = java.nio.file.Files.createTempDirectory("graft-snap").toString
     // "killed" run: stops after wave 0, snapshot v0 persisted

@@ -92,17 +92,28 @@ class MergeSpec extends SparkSuite {
   }
 
   test("incremental merge equals exact merge") {
-    val oldPosts = (0 until 50).map(i => post(s"$i", -100 + i, s"T$i", s"C$i"))
+    // site_a: an update plus an insert; site_b: inserts only, so none of
+    // its cache rows is touched; site_c: absent from the cache
+    val oldPosts = (0 until 50).map(i => post(s"$i", -100 + i, s"T$i", s"C$i")) ++
+      (0 until 5).map(i => post(s"b$i", -50 + i, s"B$i", s"CB$i").copy(site_id = "site_b"))
     val newPosts = Seq(
       post("10", 1, "T10-upd", "C10-upd"),
-      post("99", 2, "T99", "C99"))
+      post("99", 2, "T99", "C99"),
+      post("b7", 3, "B7", "CB7").copy(site_id = "site_b"),
+      post("b8", 4, "B8", "CB8").copy(site_id = "site_b"),
+      post("c1", 5, "C1", "CC1").copy(site_id = "site_c"),
+      post("c0", 6, "C0", "CC0").copy(site_id = "site_c"))
     val exact = Merge.mergeEntries(oldPosts.toDF(), newPosts.toDF(), now).posts
     val incr = Merge.mergeEntriesIncremental(
       Merge.mergeEntries(oldPosts.toDF(), spark.emptyDataset[Post].toDF(), now).posts, // ranked cache
       newPosts.toDF(), now).posts
-    val a = exact.orderBy("rank").select("id", "title", "rank").collect().map(_.toString).toSeq
-    val b = incr.orderBy("rank").select("id", "title", "rank").collect().map(_.toString).toSeq
-    assert(a === b)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("site_id", "rank")
+      .select("site_id", "id", "title", "rank").collect().map(_.toString).toSeq
+    assert(rows(incr) === rows(exact))
+    assert(rows(incr).filter(_.contains("site_b")).takeRight(2) ===
+      Seq("[site_b,b7,B7,6]", "[site_b,b8,B8,7]"))
+    assert(rows(incr).filter(_.contains("site_c")) ===
+      Seq("[site_c,c1,C1,1]", "[site_c,c0,C0,2]"))
   }
 
   test("incremental merge shuffles O(batch): cache history rides a broadcast semi/anti, never an Exchange") {
@@ -129,13 +140,7 @@ class MergeSpec extends SparkSuite {
     try {
       val r = Merge.mergeEntriesIncremental(cacheDf, batch, now)
       assert(r.posts.count() === n + 1)
-      // the listener bus is async — wait for the counter to go quiet
-      var last = -1L; var stable = 0
-      while (stable < 3) {
-        Thread.sleep(100)
-        val v = records.get
-        if (v == last) stable += 1 else { stable = 0; last = v }
-      }
+      awaitQuiet(records.get)
       val plan = r.posts.queryExecution.executedPlan.toString
       assert(plan.contains("BroadcastHashJoin"), "batch key set must broadcast")
       // O(batch): window/aggregate shuffles over the 3 touched + 2 batch

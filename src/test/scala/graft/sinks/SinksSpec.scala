@@ -92,6 +92,16 @@ class SinksSpec extends SparkSuite {
     assert(json.length === 1)
     val j = json.head.getAs[String]("site_json")
     assert(j.contains("\"items\": [") && j.indexOf("p5") < j.indexOf("p1"))
+    // the one-pass render over the clustered layout equals both grouped
+    // sinks over the top-K
+    val twoSites = df.unionByName(df.withColumn("site_id", lit("other.com")))
+    val top3 = graft.operators.Merge.topKPerSite(twoSites, 3)
+    val feeds = Feeds.perSite(graft.operators.Merge.clusterBySite(twoSites), 3)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq
+    val grouped = SiteJson.perSite(top3).join(Rss.perSite(top3), "site_id")
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq
+    assert(feeds.map(_._1) === Seq("example.com", "other.com"))
+    assert(feeds === grouped)
   }
 
   test("per-site JSON golden: serde_json::to_string_pretty layout byte-for-byte (main.rs:269-301)") {

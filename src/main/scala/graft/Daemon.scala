@@ -1,7 +1,7 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.crawl.{Crawl, Pipeline}
 
@@ -18,18 +18,22 @@ import graft.crawl.{Crawl, Pipeline}
  *
  * Options mirror the reference: out/cache dirs, per-site limit (default
  * 100 = POST_COUNT_LIMIT, production 30), mutually exclusive
- * include/exclude site filters (main.rs:89-91 — realized as a broadcast
- * semi/anti join, J4), and the calendar crawl range (default this year
- * Jan 1 -> next year Dec 31, main.rs:268-277).
+ * include/exclude site filters (main.rs:89-91 — applied at seed time
+ * through `Crawl.Config.include`, so a pruned site is never scheduled),
+ * and the calendar crawl range (default this year Jan 1 -> next year
+ * Dec 31, main.rs:268-277).
  *
- * Flow (main.rs:82-126): crawl all selected sites -> MERGE into the cache
- * -> newest-first top-K -> per-site JSON + RSS + calendar ICS + report,
- * then persist the new cache snapshot.
+ * Flow (main.rs:82-126): preflight the selected sites -> crawl the
+ * survivors -> [[graft.crawl.Pipeline.runDaemon]] (MERGE into the cache,
+ * newest-first top-K, per-site JSON + RSS) -> write the feeds, the
+ * report and the calendar ICS, then persist the crawled sites' cache
+ * partitions. The daemon adds the crawl status events to the merge's
+ * content events and owns every write.
  *
  * Every table of the cycle is computed once, and no job exists only to
  * feed a driver-side sort or count. A warm cycle at `--limit 30
- * --scale 1000` over ten sites (4 cores) runs 46 Spark jobs: 2 cache
- * schema reads, 13 for the two-wave crawl, 11 for the merge (the staged
+ * --scale 1000` over ten sites (4 cores) runs 44 Spark jobs: 2 cache
+ * schema reads, 11 for the two-wave crawl, 11 for the merge (the staged
  * batch, the merge join with its windows, the clustered layout), 1 for
  * the events, 2 feed writes from one render, 7 report writes (5 of them
  * the crawl lineage), 6 for the calendar (its merge and the ICS collect),
@@ -103,20 +107,6 @@ object Daemon {
     o
   }
 
-  /** Site filter as a broadcast semi/anti join over an arbitrary post table
-    * (J4). The daemon itself prunes sites BEFORE the crawl (seed-time, via
-    * `Crawl.Config.include/exclude` — reference macros.rs:46-113); this
-    * operator remains for filtering post tables that were produced
-    * elsewhere (a cache snapshot, a foreign dump). */
-  def filterSites(spark: SparkSession, posts: DataFrame, opts: Options): DataFrame = {
-    import spark.implicits._
-    if (opts.include.nonEmpty)
-      posts.join(broadcast(opts.include.toDF("site_id")), Seq("site_id"), "left_semi")
-    else if (opts.exclude.nonEmpty)
-      posts.join(broadcast(opts.exclude.toDF("site_id")), Seq("site_id"), "left_anti")
-    else posts
-  }
-
   /**
    * Per-site preflight — the reference's plugin-construction stage (client
    * setup / SSO login / first-page probe) wrapped in run_with_retry
@@ -180,7 +170,7 @@ object Daemon {
       return RunResult(
         Pipeline.Output(empty, cache, spark.emptyDataFrame,
           spark.emptyDataFrame, failEvents,
-          spark.emptyDataFrame, spark.emptyDataFrame),
+          spark.emptyDataFrame, spark.emptyDataFrame, empty, Seq.empty),
         failedSites)
     }
 
@@ -192,73 +182,31 @@ object Daemon {
     // (reference cli main.rs:118-125 — any failed site fails the run)
     val allFailed = failedSites ++ crawl.failedSites
 
-    // INCREMENTAL merge — the product path for a 10^10-row cache:
-    //  - only the crawled sites' partitions are SCANNED (partition pruning
-    //    on the isin filter — untouched sites contribute zero read or
-    //    shuffle rows to the merge);
-    //  - within the touched slice, only cache rows whose (site_id, id)
-    //    appears in the crawl batch enter the full-outer merge join (the
-    //    batch is staged once and its key set rides as a BROADCAST
-    //    semi/anti join — the cache side needs no Exchange, and the
-    //    shuffle is O(batch), not O(touched-site history); MergeSpec
-    //    audits the shuffle volume);
-    //  - only the crawled sites' partitions are REWRITTEN (dynamic
-    //    partition overwrite below) — a bounded per-run batch never
-    //    rewrites the full cache state.
-    // a site that failed mid-crawl keeps its previous cache partition
-    // untouched (a failed plugin run must not disturb persisted state)
-    val touched = liveSiteIds.filterNot(crawl.failedSites.keySet)
-    val cacheTouched = cache.filter(col("site_id").isin(touched: _*))
-    val cacheUntouched = cache.filter(!col("site_id").isin(touched: _*))
-    val merged = graft.operators.Merge.mergeEntriesIncremental(
-      cacheTouched, Pipeline.crawlBatch(crawl), opts.now)
-    // Canonical storage layout before the write-back (Merge.clusterBySite):
-    // one exchange keyed by site_id with a (rank, id) sort inside each
-    // site. This (a) writes ONE file per site partition instead of one per
-    // (site × shuffle partition) — the next run's partition-pruned read
-    // scans a single file per site — (b) makes the persisted bytes a pure
-    // function of the logical cache state, so an identical daemon cycle
-    // publishes an identical tree and the commit no-ops, and (c) lets the
-    // feeds render each site's top-K in one narrow pass. The exchange
-    // moves only the touched slice, which the dynamic partition overwrite
-    // is about to rewrite to storage anyway; the MERGE itself no longer
-    // shuffles site history (broadcast key semi/anti above).
-    // localCheckpoint both stages it once for the several consumers below
-    // AND breaks the cache-read lineage so the dynamic overwrite may write
-    // back to the same path it was read from
-    val touchedPosts = graft.operators.Merge.clusterBySite(merged.posts).localCheckpoint()
-    // sinks cover the sites this run crawled (the reference daemon emits
-    // outputs per crawled plugin, main.rs:192-243 — untouched sites keep
-    // their previous outputs and are neither scanned nor rewritten). Both
-    // feeds render from the newest `limit` posts of each site in ONE pass
-    // over the clustered checkpoint, staged for its two writes; one row
-    // per site means neither write needs an exchange
-    val feeds = graft.sinks.Feeds.perSite(touchedPosts, opts.limit.toInt)
-      .localCheckpoint(eager = false)
-    val siteJson = feeds.select("site_id", "site_json")
-    val rss = feeds.select("site_id", "rss_xml")
+    // merge into the cache and render the crawled sites' feeds
+    val out = Pipeline.runDaemon(cfg, crawl, cache, opts.now, opts.limit.toInt)
 
     // crawl_success (one per successfully crawled site — the reference
     // emits it per finished plugin, core/mod.rs:53-87) and crawl_failed
     // events join the content events (reference writes both the content
     // report and the error report, main.rs:300-340)
     val statusEvents = (
-      touched.map(site => (site, "crawl_success", null: String, null: String, null: String)) ++
+      out.touchedSites
+        .map(site => (site, "crawl_success", null: String, null: String, null: String)) ++
       allFailed.toSeq
         .map { case (site, e) => (site, "crawl_failed", null: String, e.getMessage, null: String) })
       .toDF("site_id", "event", "post_id", "title", "url")
-    // checkpointed like touchedPosts: the event rows read the touched cache
-    // partitions, which the dynamic overwrite below REPLACES — a lazy plan
-    // would dangle on the pre-overwrite file listing
-    val events = merged.events.unionByName(statusEvents).localCheckpoint()
+    // checkpointed like the touched cache: the event rows read the touched
+    // cache partitions, which the dynamic overwrite below REPLACES — a lazy
+    // plan would dangle on the pre-overwrite file listing
+    val events = out.events.unionByName(statusEvents).localCheckpoint()
 
     // sinks (cli main.rs:192-243 layout). DYNAMIC partition overwrite:
     // this run's sinks cover only the crawled sites, and a reused out/ dir
     // must keep the uncrawled sites' last-good files (the reference's
     // `cp -rv out/* .` publish only ever adds/overwrites) — the default
     // STATIC mode would truncate the whole sites/ and rss/ trees first
-    graft.sinks.SiteJson.write(siteJson, s"${opts.out}/sites")
-    graft.sinks.Rss.write(rss, s"${opts.out}/rss")
+    graft.sinks.SiteJson.write(out.siteJson, s"${opts.out}/sites")
+    graft.sinks.Rss.write(out.rss, s"${opts.out}/rss")
     graft.sinks.Report.write(events, s"${opts.out}/reports/content_report")
     allFailed.toSeq
       .map { case (site, e) => (site, e.getMessage) }
@@ -282,7 +230,7 @@ object Daemon {
     // commit); every other site's files are untouched on disk — the
     // scale-safe analog of the reference's per-site cache persistence
     // (mod.rs:269-301). The calendar cache stays a (small) snapshot swap.
-    touchedPosts.write.mode("overwrite")
+    out.touchedCache.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("site_id")
       .parquet(opts.cache)
@@ -315,13 +263,7 @@ object Daemon {
         exclude = Seq("reports"))
     }
 
-    val fullCache = cacheUntouched.select(touchedPosts.columns.map(col): _*)
-      .unionByName(touchedPosts)
-    RunResult(
-      Pipeline.Output(
-        graft.operators.Merge.topKPerSite(touchedPosts, opts.limit.toInt),
-        fullCache, siteJson, rss, events, crawl.schedule, crawl.lineage),
-      allFailed)
+    RunResult(out.copy(events = events), allFailed)
   }
 
   def main(args: Array[String]): Unit = {

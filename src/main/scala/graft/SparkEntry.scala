@@ -66,8 +66,9 @@ object SparkEntry {
   // count prune the payload columns out of the join+windows entirely —
   // cheaper than materializing the full-width merge once (A/B'd: a staged
   // localCheckpoint costs q04 3.4s of payload materialization to save
-  // q05 1.1s). The daemon pipeline (q37/q38), whose consumers DO read all
-  // columns, stages its merge instead (Pipeline.runDaemon).
+  // q05 1.1s). The daemon cycle (q37/q38), whose consumers DO read all
+  // columns, stages its batch, its merge and the clustered slice instead
+  // (Merge.mergeEntriesIncremental under Pipeline.runDaemon).
   private def mergedOrders(s: SparkSession, dir: String): Merge.MergeResult =
     Merge.mergeEntries(ordersOld(s, dir), ordersNew(s, dir), mergeNow)
 
@@ -76,7 +77,8 @@ object SparkEntry {
     * dry-run shape: limit 20, dry-run.yml:16). */
   def entry(spark: SparkSession): DataFrame = {
     import graft.crawl.{Crawl, Pipeline}
-    Pipeline.runDaemon(spark, Crawl.Config(scale = 60, limitPerSite = 20),
+    val cfg = Crawl.Config(scale = 60, limitPerSite = 20)
+    Pipeline.runDaemon(cfg, Crawl.run(spark, cfg),
       Pipeline.emptyCache(spark), mergeNow, topK = 20).topPosts
   }
 
@@ -416,9 +418,9 @@ object SparkEntry {
 
     "q38_recrawl_events" -> { (s, _) =>
       val cfg1 = crawlCfg.copy(rev = 1)
-      val run1 = graft.crawl.Pipeline.runDaemon(s, cfg1,
+      val run1 = graft.crawl.Pipeline.runDaemon(cfg1, cachedCrawl(s, cfg1),
         cachedDaemonRun0(s).cache, Timestamp.valueOf("2026-01-16 00:00:00"),
-        topK = 30, precomputedCrawl = Some(cachedCrawl(s, cfg1)))
+        topK = 30)
       run1.events.groupBy("event").agg(count(lit(1)).as("n"))
     },
 
@@ -1021,17 +1023,14 @@ object SparkEntry {
 
   /** q37 and q38 both need the SAME rev-0 daemon run (crawl -> merge ->
     * feeds over the empty cache): share one, fed by the memoized crawl
-    * stage; the merged cache is checkpointed once (it's ~500 rows) so the
-    * recrawl query doesn't recompute the rev-0 merge. */
+    * stage. The run stages its merged cache slice, so the recrawl query
+    * doesn't recompute the rev-0 merge. */
   private val daemonMemo = new java.util.concurrent.ConcurrentHashMap[
     SparkSession, graft.crawl.Pipeline.Output]()
   private def cachedDaemonRun0(s: SparkSession): graft.crawl.Pipeline.Output =
-    daemonMemo.computeIfAbsent(s, _ => {
-      val out = graft.crawl.Pipeline.runDaemon(s, crawlCfg,
-        graft.crawl.Pipeline.emptyCache(s), mergeNow, topK = 30,
-        precomputedCrawl = Some(cachedCrawl(s, crawlCfg)))
-      out.copy(cache = out.cache.localCheckpoint(eager = false))
-    })
+    daemonMemo.computeIfAbsent(s, _ =>
+      graft.crawl.Pipeline.runDaemon(crawlCfg, cachedCrawl(s, crawlCfg),
+        graft.crawl.Pipeline.emptyCache(s), mergeNow, topK = 30))
 
   /**
    * BPE oracle generator: unrolls `rounds` merge iterations as a DuckDB

@@ -5,6 +5,7 @@ import scala.concurrent.duration._
 import scala.util.Try
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 import graft.functions.GraftFunctions
 import graft.model.Post
 
@@ -452,7 +453,7 @@ object Crawl {
       // sits in the write's result stage, where Spark merges one update per
       // partition even when a task is retried
       val stagedRows = Observation()
-      scheduled.repartition(writeParts, col("host_hash"), col("salt"))
+      val stageOut = scheduled.repartition(writeParts, col("host_hash"), col("salt"))
         // coordinates only: like `canonical`/`host` (and like the
         // exchanges above), the wave FILE does not store the URL
         // string either — at scale 1M the big-wave stage-out parquet
@@ -462,7 +463,7 @@ object Crawl {
         // read time (fetchInput below); the PERSISTED
         // schedule/snapshot artifacts still materialize the URL.
         .withColumn("partition_id", spark_partition_id())
-        .observe(stagedRows, count(lit(1)))
+      stageOut.observe(stagedRows, count(lit(1)))
         .write.mode("overwrite")
         // wave files are transient single-reader stage-out; pinned A/B at
         // N=2/N=8 over snappy/lz4/none showed lz4 ~15% slower and
@@ -479,11 +480,14 @@ object Crawl {
         // write-stage class (same machine code, different constant);
         // with the constant in the directory name the projection source
         // is wave-invariant and every wave of every crawl in a session
-        // shares one compiled class. Value-identical: partition
-        // inference types `wave=N` as the same IntegerType the literal
-        // had.
+        // shares one compiled class. Value-identical: the read-back
+        // types `wave` as the same IntegerType the literal had.
         .parquet(s"$wavePath/wave=$wave")
-      val staged = spark.read.parquet(wavePath)
+      // read back with the schema just written (no schema-inference job):
+      // the written columns, then the `wave` partition column
+      val staged = spark.read
+        .schema(stageOut.schema.add("wave", IntegerType))
+        .parquet(wavePath)
       val fetchInput = staged
         // the URL string re-enters HERE, at read time (one grammar-kernel
         // evaluation per consuming projection — per-row CPU in parallel

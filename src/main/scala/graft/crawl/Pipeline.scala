@@ -4,59 +4,104 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Merge
-import graft.sinks.{Report, Rss, SiteJson}
+import graft.sinks.Feeds
 
 /**
- * The daemon run (reference entry point, packages/cli/src/main.rs:82-126):
- * crawl every site -> merge against the persistent cache -> newest-first
- * top-K per site -> JSON + RSS feeds + crawl report, plus the updated
- * cache snapshot (the next run's merge input).
+ * The daemon cycle (reference entry point, packages/cli/src/main.rs:82-126):
+ * a crawl -> merge against the persistent cache -> newest-first top-K per
+ * site -> JSON + RSS feeds, plus the updated cache (the next run's merge
+ * input). [[graft.Daemon.run]] runs the crawl, calls [[runDaemon]] and
+ * writes its outputs.
  *
- * Spark shape (SURVEY.md §3.1): one job; stages split at the cache MERGE
- * (hash shuffle on (site_id, id)) and the per-site partitioned sinks.
+ * Spark shape: the merge shuffles only the crawl batch (its keys ride as
+ * a broadcast), one exchange clusters the crawled sites' slice by site,
+ * and both feeds render in one narrow pass over that slice.
  */
 object Pipeline {
 
   final case class Output(
-      topPosts: DataFrame, // top-K per site, output order
+      topPosts: DataFrame, // top-K per crawled site
       cache: DataFrame,    // merged cache (next run input)
       siteJson: DataFrame,
       rss: DataFrame,
       events: DataFrame,
       schedule: DataFrame,
-      lineage: DataFrame)
+      lineage: DataFrame,
+      // the crawled sites' merged cache rows, clustered by site and staged:
+      // what the daemon writes back over those sites' cache partitions
+      touchedCache: DataFrame,
+      // the sites whose cache rows this cycle merged: crawled, not failed
+      touchedSites: Seq[String])
 
+  /**
+   * Merge `crawl`, a crawl run with `cfg`, into `cache` and render the
+   * feeds of the sites it crawled.
+   *
+   * INCREMENTAL merge — the product path for a 10^10-row cache:
+   *  - only the crawled sites' partitions are SCANNED (partition pruning
+   *    on the isin filter — untouched sites contribute zero read or
+   *    shuffle rows to the merge);
+   *  - within the touched slice, only cache rows whose (site_id, id)
+   *    appears in the crawl batch enter the full-outer merge join (the
+   *    batch is staged once and its key set rides as a BROADCAST
+   *    semi/anti join — the cache side needs no Exchange, and the
+   *    shuffle is O(batch), not O(touched-site history); MergeSpec
+   *    audits the shuffle volume);
+   *  - only the crawled sites' rows come back as `touchedCache`, which a
+   *    dynamic partition overwrite can write over their partitions alone.
+   * A site that failed mid-crawl keeps its previous cache rows untouched
+   * (a failed plugin run must not disturb persisted state).
+   */
   def runDaemon(
-      spark: SparkSession,
       cfg: Crawl.Config,
+      crawl: Crawl.Result,
       cache: DataFrame,
       now: Timestamp,
-      topK: Int = 100,
-      precomputedCrawl: Option[Crawl.Result] = None): Output = {
-
-    // a caller that already ran (and staged) this config's crawl passes it
-    // in — the daemon derives merge + feeds from the staged waves instead
-    // of re-crawling (the production shape: one crawl, many consumers)
-    val crawl = precomputedCrawl.getOrElse(Crawl.run(spark, cfg))
-
-    // the merged cache feeds four consumers (top-K -> JSON + RSS feeds,
-    // the cache snapshot, the event table) — stage it once
-    val merged = Merge.mergeEntries(cache, crawlBatch(crawl), now, stageResult = true)
-    val top = Merge.topKPerSite(merged.posts, topK)
+      topK: Int = 100): Output = {
+    val touched = Sites.selected(cfg.include, cfg.exclude).map(_.site_id)
+      .filterNot(crawl.failedSites.keySet)
+    val cacheTouched = cache.filter(col("site_id").isin(touched: _*))
+    val cacheUntouched = cache.filter(!col("site_id").isin(touched: _*))
+    val merged = Merge.mergeEntriesIncremental(cacheTouched, crawlBatch(crawl), now)
+    // Canonical storage layout before the write-back (Merge.clusterBySite):
+    // one exchange keyed by site_id with a (rank, id) sort inside each
+    // site. This (a) writes ONE file per site partition instead of one per
+    // (site × shuffle partition) — the next run's partition-pruned read
+    // scans a single file per site — (b) makes the persisted bytes a pure
+    // function of the logical cache state, so an identical daemon cycle
+    // publishes an identical tree and the commit no-ops, and (c) lets the
+    // feeds render each site's top-K in one narrow pass. The exchange
+    // moves only the touched slice, which the dynamic partition overwrite
+    // is about to rewrite to storage anyway; the MERGE itself no longer
+    // shuffles site history (broadcast key semi/anti above).
+    // localCheckpoint both stages it once for the several consumers below
+    // AND breaks the cache-read lineage so the dynamic overwrite may write
+    // back to the same path it was read from
+    val touchedPosts = Merge.clusterBySite(merged.posts).localCheckpoint()
+    // feeds cover the sites this run crawled (the reference daemon emits
+    // outputs per crawled plugin, main.rs:192-243 — untouched sites keep
+    // their previous outputs and are neither scanned nor rewritten). Both
+    // feeds render from the newest `topK` posts of each site in ONE pass
+    // over the clustered checkpoint, staged for its two writes; one row
+    // per site means neither write needs an exchange
+    val feeds = Feeds.perSite(touchedPosts, topK).localCheckpoint(eager = false)
 
     Output(
-      topPosts = top,
-      cache = merged.posts,
-      siteJson = SiteJson.perSite(top),
-      rss = Rss.perSite(top),
+      topPosts = Merge.topKPerSite(touchedPosts, topK),
+      cache = cacheUntouched.select(touchedPosts.columns.map(col): _*)
+        .unionByName(touchedPosts),
+      siteJson = feeds.select("site_id", "site_json"),
+      rss = feeds.select("site_id", "rss_xml"),
       events = merged.events,
       schedule = crawl.schedule,
-      lineage = crawl.lineage)
+      lineage = crawl.lineage,
+      touchedCache = touchedPosts,
+      touchedSites = touched)
   }
 
   /** A crawl's posts as a merge batch: each post with its arrival order
     * `seq`, the crawl order (page, row) recovered from the schedule. */
-  def crawlBatch(crawl: Crawl.Result): DataFrame = {
+  private def crawlBatch(crawl: Crawl.Result): DataFrame = {
     val order = crawl.schedule
       .filter(col("site_id").isNotNull)
       .select(col("url"), ((col("page").cast("long") * 1000000L) + col("row")).as("seq"))

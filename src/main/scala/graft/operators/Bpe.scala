@@ -84,21 +84,8 @@ object Bpe {
   def applyMerges(df: DataFrame, textCol: String, merges: Seq[(String, String)])
       : DataFrame =
     // one kernel pass per document: the nested-transform formulation
-    // (kept below as the parity reference) interpreted numMerges
-    // CodegenFallback lambda frames per WORD per row — q77 2.3 s -> 0.6 s
-    // at sf0.1
+    // (the parity reference in src/test, ColumnReferences) interpreted
+    // numMerges CodegenFallback lambda frames per WORD per row — q77
+    // 2.3 s -> 0.6 s at sf0.1
     df.withColumn("subwords", K.bpe_segment(col(textCol), merges))
-
-  /** The original HOF-chain formulation of [[applyMerges]] — the parity
-    * REFERENCE for the one-pass segment kernel (spec-only). */
-  private[graft] def applyMergesColumns(
-      df: DataFrame, textCol: String, merges: Seq[(String, String)]): DataFrame = {
-    val base = df.withColumn("_words",
-      transform(Dedup.tokens(col(textCol)),
-        w => concat(split(w, ""), array(lit("</w>")))))
-    val merged = merges.foldLeft(col("_words")) { case (acc, (l, r)) =>
-      transform(acc, syms => K.bpe_merge_step(syms, lit(l), lit(r)))
-    }
-    base.withColumn("subwords", flatten(merged)).drop("_words")
-  }
 }

@@ -131,32 +131,6 @@ object Similarity {
       .select(col("a"), col("b"), round(col("sim"), 6).as("sim"))
   }
 
-  /** Deterministic pseudo-random hyperplane component for (seed, plane, dim). */
-  private def planeComponent(plane: Int, dim: Column, seed: Long): Column = {
-    // xxhash64 of (plane, dim, seed) mapped to [-1, 1)
-    (xxhash64(lit(plane), dim, lit(seed)).cast("double") / lit(Long.MaxValue.toDouble))
-  }
-
-  /**
-   * Random-hyperplane signature via column arithmetic — the REFERENCE
-   * construction for [[graft.functions.Kernels.hyperplaneSigs]], kept for
-   * the value-parity spec only. The product paths ([[lshTopK]],
-   * [[nearDupPairsLsh]]) use the one-pass StaticInvoke kernel: this
-   * version interprets `tables * bits` aggregate/zip_with folds per row,
-   * each allocating an intermediate array and re-deriving plane components
-   * — the q30 hot spot the kernel removed.
-   */
-  private[operators] def hyperplaneSignature(vec: Column, bits: Int, seed: Long): Column = {
-    val sigBits = (0 until bits).map { p =>
-      val dotExpr = aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * planeComponent(p, i, seed)),
-        lit(0.0), (acc, v) => acc + v)
-      when(dotExpr >= 0, lit(1L << p)).otherwise(lit(0L))
-    }
-    sigBits.reduce((a, b) => a.bitwiseOR(b))
-  }
-
   /**
    * IVF (inverted-file) ANN: a coarse quantizer of `nlist` centroids is
    * trained with a few deterministic Lloyd iterations (init = hash-order

@@ -210,8 +210,8 @@ object TextAnalysis {
       minTokens: Int = 20, maxTokens: Int = 100000,
       maxPunctRatio: Double = 0.3, minStopwordRatio: Double = 0.02,
       minMeanWordLen: Double = 2.0, maxMeanWordLen: Double = 5.0): DataFrame =
-    // one-pass codegen'd gate kernel: the struct-field formulation (kept
-    // below as the parity reference) decomposes under
+    // one-pass codegen'd gate kernel: the struct-field formulation (the
+    // parity reference in src/test, ColumnReferences) decomposes under
     // SimplifyExtractValueOps into TEN independent tokenizations per row
     // inside an interpreted CodegenFallback filter — measured 3.0 s -> one
     // linear pass at sf0.1 (q54); value parity pinned in
@@ -219,20 +219,6 @@ object TextAnalysis {
     df.filter(graft.functions.GraftFunctions.quality_gate(col(textCol),
       minTokens, maxTokens, maxPunctRatio, minStopwordRatio,
       minMeanWordLen, maxMeanWordLen))
-
-  /** The original struct-field formulation of [[qualityFilter]] — the
-    * parity REFERENCE for the one-pass gate kernel (spec-only). */
-  private[graft] def qualityFilterColumns(
-      df: DataFrame, textCol: String,
-      minTokens: Int = 20, maxTokens: Int = 100000,
-      maxPunctRatio: Double = 0.3, minStopwordRatio: Double = 0.02,
-      minMeanWordLen: Double = 2.0, maxMeanWordLen: Double = 5.0): DataFrame = {
-    val q = qualityFeatures(col(textCol))
-    df.filter(q.getField("n_tokens").between(minTokens, maxTokens) &&
-      q.getField("punct_ratio") <= maxPunctRatio &&
-      q.getField("stopword_ratio") >= minStopwordRatio &&
-      q.getField("mean_word_len").between(minMeanWordLen, maxMeanWordLen))
-  }
 
   /**
    * TF-IDF top terms per document — the keyword-extraction / feature table
@@ -268,8 +254,8 @@ object TextAnalysis {
     // one-pass repetition_stats kernel computes [n_tokens, n_distinct,
     // top_c, n_bigrams, n_distinct_bi] within the row (byte-domain token
     // equality, identical to the exploded groupBy it replaces — parity
-    // spec in SpanDedupPiiSpec; the old four-exchange shape is kept below
-    // as repetitionFeaturesColumns). The explode(array(..)) generate is
+    // spec in SpanDedupPiiSpec against the old four-exchange shape in
+    // src/test, ColumnReferences). The explode(array(..)) generate is
     // the single-evaluation barrier: extracting five fields from a bare
     // projection would let CollapseProject inline the kernel per field
     // (the qualityFilter lesson), while a filter referencing the generate
@@ -286,41 +272,6 @@ object TextAnalysis {
         greatest(col("_s").getItem(0), lit(1L)), 6).as("top_token_frac"),
       round((col("_s").getItem(3) - col("_s").getItem(4)).cast("double") /
         greatest(col("_s").getItem(3), lit(1L)), 6).as("dup_bigram_frac"))
-  }
-
-  /** The pre-kernel four-exchange formulation of [[repetitionFeatures]]
-    * (explode → keyed aggregations → join), kept as the parity reference. */
-  private[graft] def repetitionFeaturesColumns(
-      df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = Dedup.tokens(col(textCol))
-    val base = df.select(col(idCol).as("doc_id"), toks.as("_toks"))
-    val tokStats = base
-      .select(col("doc_id"), explode(col("_toks")).as("tok"))
-      .groupBy("doc_id", "tok").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id").agg(
-        sum(col("c")).as("n_tokens"),
-        count(lit(1)).as("n_distinct"),
-        max(col("c")).as("top_c"))
-    // linear word_ngrams kernel pass — the element_at-per-position column
-    // formulation is O(len²) per row after CollapseProject inlines the
-    // tokenizer into every gram site (the ngramCounts lesson)
-    val biStats = df
-      .select(col(idCol).as("doc_id"),
-        explode(graft.functions.GraftFunctions.word_ngrams(col(textCol), 2)).as("g"))
-      .groupBy("doc_id", "g").agg(count(lit(1)).as("c"))
-      .groupBy("doc_id").agg(
-        sum(col("c")).as("n_bigrams"),
-        count(lit(1)).as("n_distinct_bi"))
-    tokStats.join(biStats, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        col("n_tokens"),
-        round((col("n_tokens") - col("n_distinct")).cast("double") /
-          greatest(col("n_tokens"), lit(1L)), 6).as("dup_token_frac"),
-        round(col("top_c").cast("double") /
-          greatest(col("n_tokens"), lit(1L)), 6).as("top_token_frac"),
-        round((coalesce(col("n_bigrams"), lit(0L)) - coalesce(col("n_distinct_bi"), lit(0L)))
-          .cast("double") / greatest(coalesce(col("n_bigrams"), lit(0L)), lit(1L)), 6)
-          .as("dup_bigram_frac"))
   }
 
   /**

@@ -16,10 +16,9 @@ import graft.model.{CalendarEvent, Post}
  *  - per-site JSON (cli/src/main.rs:202-213);
  *  - JSON-lines crawl report (cli/src/main.rs:300-340).
  *
- * Formatting is pure Scala over already-shaped rows; the Spark side
- * aggregates each site's posts with ONE shuffle (groupByKey + mapGroups,
- * ordered inside the group), or with none over input already clustered
- * by site ([[Feeds]]), and writes one file per site via
+ * Formatting is pure Scala over already-shaped rows. The per-site feeds
+ * render in one narrow pass over posts already clustered by site
+ * ([[Feeds]]), and each writes one file per site via
  * partitionBy(site_id) — at fleet scale sites are independent partitions.
  */
 object Rss {
@@ -83,21 +82,6 @@ object Rss {
   def channel(site: String, postJsonsNewestFirst: Seq[String]): String =
     channelXml(site, s"https://$site", s"$site notices",
       postJsonsNewestFirst.map(SiteJson.postFromJson))
-
-  /**
-   * Per-site RSS feeds: one (site_id, xml) row per site. Input must carry
-   * a `rank` column (merge insertion order); items are emitted
-   * newest-first (top-K semantics applied upstream).
-   */
-  def perSite(posts: DataFrame): DataFrame = {
-    import posts.sparkSession.implicits._
-    SiteJson.postJsonRows(posts)
-      .groupByKey(_._1)
-      .mapGroups { (site: String, rows: Iterator[(String, Long, String)]) =>
-        (site, channel(site, rows.toSeq.sortBy(-_._2).map(_._3)))
-      }
-      .toDF("site_id", "rss_xml")
-  }
 
   /** Write one feed file per site, like [[SiteJson.write]]. */
   def write(perSiteXml: DataFrame, outDir: String): Unit =
@@ -182,7 +166,7 @@ object SiteJson {
     m
   }
 
-  /** Rehydrate a Post from Spark's to_json output (used by grouped sinks). */
+  /** Rehydrate a Post from Spark's to_json output (the RSS channel's items). */
   def postFromJson(json: String): Post = {
     val n = mapper.readTree(json)
     def opt(f: String): Option[String] =
@@ -286,7 +270,12 @@ object SiteJson {
       .as[(String, Long, String)]
   }
 
-  /** One site's payload over its posts' `to_json` rows, newest first. */
+  /** One site's payload over its posts' `to_json` rows, newest first:
+    * the cli main.rs:202-213 shape {title, source, description, items},
+    * PRETTY-printed byte-for-byte like the reference's
+    * serde_json::to_string_pretty output, items in exact SsufidPost serde
+    * shape (declaration field order, None as null, RFC3339 timestamps
+    * without zero fractions). */
   def document(site: String, postJsonsNewestFirst: Seq[String]): String = {
     val root = mapper.createObjectNode()
     root.put("title", site)
@@ -295,24 +284,6 @@ object SiteJson {
     val arr = root.putArray("items")
     postJsonsNewestFirst.foreach(j => arr.add(serdeShapedItem(j)))
     pretty(root)
-  }
-
-  /**
-   * Per-site JSON payload (cli main.rs:202-213 shape:
-   * {title, source, description, items: [...]}) — one row per site,
-   * PRETTY-printed byte-for-byte like the reference's
-   * serde_json::to_string_pretty output, items in exact SsufidPost serde
-   * shape (declaration field order, None as null, RFC3339 timestamps
-   * without zero fractions).
-   */
-  def perSite(posts: DataFrame): DataFrame = {
-    import posts.sparkSession.implicits._
-    postJsonRows(posts)
-      .groupByKey(_._1)
-      .mapGroups { (site: String, rows: Iterator[(String, Long, String)]) =>
-        (site, document(site, rows.toSeq.sortBy(-_._2).map(_._3)))
-      }
-      .toDF("site_id", "site_json")
   }
 
   /** Write one file per site (the reference's {out}/{site}/data.json

@@ -77,8 +77,8 @@ object ApiDrive {
     println("cuckoo false negatives: " + fp + " (must be 0)")
 
     // 6. Daemon pipeline: merge + top-K + RSS
-    val out = graft.crawl.Pipeline.runDaemon(spark,
-      graft.crawl.Crawl.Config(scale = 100, limitPerSite = 20),
+    val out = graft.crawl.Pipeline.runDaemon(
+      graft.crawl.Crawl.Config(scale = 100, limitPerSite = 20), crawl,
       graft.crawl.Pipeline.emptyCache(spark), java.sql.Timestamp.valueOf("2026-03-01 00:00:00"), topK = 10)
     println("pipeline sites with feeds: " + out.rss.count)
 

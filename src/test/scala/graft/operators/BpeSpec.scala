@@ -102,7 +102,7 @@ class BpeSpec extends SparkSuite {
     val viaKernel = Bpe.applyMerges(docs, "text", merges)
       .select("doc_id", "subwords").collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    val viaColumns = Bpe.applyMergesColumns(docs, "text", merges)
+    val viaColumns = ColumnReferences.applyMergesColumns(docs, "text", merges)
       .select("doc_id", "subwords").collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(viaKernel === viaColumns)
@@ -110,7 +110,7 @@ class BpeSpec extends SparkSuite {
     val noMerge = Bpe.applyMerges(docs, "text", Seq.empty)
       .select("doc_id", "subwords").collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    val noMergeRef = Bpe.applyMergesColumns(docs, "text", Seq.empty)
+    val noMergeRef = ColumnReferences.applyMergesColumns(docs, "text", Seq.empty)
       .select("doc_id", "subwords").collect()
       .map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     assert(noMerge === noMergeRef)

@@ -145,7 +145,7 @@ class DedupSimilaritySpec extends SparkSuite {
       graft.functions.GraftFunctions.hyperplane_sigs(col("_v"), bits, tables).as("sigs"))
     val reference = v.select(col("vec_id"),
       array((0 until tables).map(t =>
-        Similarity.hyperplaneSignature(col("_v"), bits, t * 7919L + 13L)): _*).as("sigs"))
+        ColumnReferences.hyperplaneSignature(col("_v"), bits, t * 7919L + 13L)): _*).as("sigs"))
     val a = kernel.orderBy("vec_id").as[(Long, Seq[Long])].collect().toSeq
     val b = reference.orderBy("vec_id").as[(Long, Seq[Long])].collect().toSeq
     assert(a === b)
@@ -256,7 +256,7 @@ class DedupSimilaritySpec extends SparkSuite {
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val viaKernel = TextAnalysis.qualityFilter(df, "text")
       .select("doc_id").as[Long].collect().toSet
-    val viaColumns = TextAnalysis.qualityFilterColumns(df, "text")
+    val viaColumns = ColumnReferences.qualityFilterColumns(df, "text")
       .select("doc_id").as[Long].collect().toSet
     assert(viaKernel === viaColumns)
     assert(viaKernel.nonEmpty)
@@ -266,7 +266,7 @@ class DedupSimilaritySpec extends SparkSuite {
       TextAnalysis.qualityFilter(d, "text", minTokens = 0,
         minStopwordRatio = 0.0, minMeanWordLen = 0.0)
     val looseRef = (d: org.apache.spark.sql.DataFrame) =>
-      TextAnalysis.qualityFilterColumns(d, "text", minTokens = 0,
+      ColumnReferences.qualityFilterColumns(d, "text", minTokens = 0,
         minStopwordRatio = 0.0, minMeanWordLen = 0.0)
     assert(loose(df).select("doc_id").as[Long].collect().toSet ===
       looseRef(df).select("doc_id").as[Long].collect().toSet)

@@ -83,7 +83,7 @@ class SpanDedupPiiSpec extends SparkSuite {
       .as[(Long, Long, Double, Double, Double)].collect()
       .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
     val viaKernel = rows(TextAnalysis.repetitionFeatures(df, "doc_id", "text"))
-    val viaColumns = rows(TextAnalysis.repetitionFeaturesColumns(df, "doc_id", "text"))
+    val viaColumns = rows(ColumnReferences.repetitionFeaturesColumns(df, "doc_id", "text"))
     assert(viaKernel === viaColumns)
     // zero-token docs (null / empty / all-whitespace) drop in both shapes
     assert(!viaKernel.contains(9001L) && !viaKernel.contains(9002L) &&

@@ -78,30 +78,37 @@ class SinksSpec extends SparkSuite {
     ics.split("\r\n").foreach(l => assert(l.getBytes("UTF-8").length <= 75))
   }
 
+  /** Both feeds of each site through the one-pass render over the
+    * clustered layout, as (site_id, site_json, rss_xml) sorted by site. */
+  private def feeds(posts: org.apache.spark.sql.DataFrame, k: Int) =
+    Feeds.perSite(graft.operators.Merge.clusterBySite(posts), k)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+      .toSeq.sortBy(_._1)
+
   test("per-site sinks emit one row per site, newest-first") {
     import org.apache.spark.sql.functions._
     val posts = (1 to 5).map(i => basicPost.copy(id = s"p$i", title = s"T$i"))
     import spark.implicits._
     val df = posts.toDF().withColumn("rank", col("id").substr(2, 9).cast("long"))
-    val rss = Rss.perSite(df).collect()
-    assert(rss.length === 1)
-    val xml = rss.head.getAs[String]("rss_xml")
-    def at(t: String) = xml.indexOf(s"<title>$t</title>")
-    assert(at("T5") < at("T4") && at("T4") < at("T1"))
-    val json = SiteJson.perSite(df).collect()
-    assert(json.length === 1)
-    val j = json.head.getAs[String]("site_json")
-    assert(j.contains("\"items\": [") && j.indexOf("p5") < j.indexOf("p1"))
-    // the one-pass render over the clustered layout equals both grouped
-    // sinks over the top-K
     val twoSites = df.unionByName(df.withColumn("site_id", lit("other.com")))
-    val top3 = graft.operators.Merge.topKPerSite(twoSites, 3)
-    val feeds = Feeds.perSite(graft.operators.Merge.clusterBySite(twoSites), 3)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq
-    val grouped = SiteJson.perSite(top3).join(Rss.perSite(top3), "site_id")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).sortBy(_._1).toSeq
-    assert(feeds.map(_._1) === Seq("example.com", "other.com"))
-    assert(feeds === grouped)
+    val rendered = feeds(twoSites, 3)
+    assert(rendered.map(_._1) === Seq("example.com", "other.com"))
+    val (_, j, xml) = rendered.head
+    def at(t: String) = xml.indexOf(s"<title>$t</title>")
+    assert(at("T5") < at("T4") && at("T4") < at("T3") && at("T2") === -1)
+    assert(j.contains("\"items\": [") && j.indexOf("p5") < j.indexOf("p3") &&
+      !j.contains("\"p2\""))
+    // reference: each site's collected rows, newest (highest rank) first,
+    // cut to k, rendered by the per-site document and channel builders
+    val reference = twoSites
+      .select(col("site_id"), col("rank"),
+        to_json(struct(twoSites.columns.filter(_ != "rank").map(col): _*)))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
+      .groupBy(_._1).toSeq.sortBy(_._1).map { case (site, rows) =>
+        val items = rows.sortBy(-_._2).take(3).map(_._3)
+        (site, SiteJson.document(site, items), Rss.channel(site, items))
+      }
+    assert(rendered === reference)
   }
 
   test("per-site JSON golden: serde_json::to_string_pretty layout byte-for-byte (main.rs:269-301)") {
@@ -112,7 +119,7 @@ class SinksSpec extends SparkSuite {
         author = None, category = Seq.empty),
       basicPost.copy(id = "p1", title = "One"))
       .toDF().withColumn("rank", col("id").substr(2, 9).cast("long"))
-    val j = SiteJson.perSite(df).collect().head.getAs[String]("site_json")
+    val j = feeds(df, 2).head._2
     // reference-shaped fixture: what serde_json::to_string_pretty emits for
     // {title, source, description, items:[...]} with these two posts —
     // 2-space indent, `"key": value`, one element per line, EVERY
@@ -166,7 +173,7 @@ class SinksSpec extends SparkSuite {
     val df = Seq(basicPost.copy(id = "p1",
       attachments = Seq(Attachment("https://example.com/a.pdf", None, Some("application/pdf")))))
       .toDF().withColumn("rank", lit(1L))
-    val j = SiteJson.perSite(df).collect().head.getAs[String]("site_json")
+    val j = feeds(df, 1).head._2
     val expectedAttachment =
       """      "attachments": [
         |        {

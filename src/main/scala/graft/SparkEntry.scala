@@ -331,7 +331,7 @@ object SparkEntry {
     // pairs (block tiles) -> clusters -> keep one per cluster ----
     "q53_embedding_dedup" -> ((s, dir) =>
       Similarity.dedupCorpusByEmbedding(t(s, dir, "embeddings"),
-        "vec_id", "embedding", 0.4)
+        "vec_id", "embedding", 0.4, Similarity.PairStage.Exact())
         .select(col("vec_id"))),
 
     // ---- the composed quality gate: documents inside the token/punct/

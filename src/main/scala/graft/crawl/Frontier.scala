@@ -227,8 +227,7 @@ object Crawl {
         // probe A3, lib.rs:341-372) — every list page is a seed, keeping
         // the crawl at two breadth levels (lists, then posts)
         val total0 = Sites.postCount(s, cfg.scale)
-        val visible = if (cfg.rev >= 1) total0 else total0 - total0 / 23
-        val wanted = math.min(visible, cfg.limitPerSite)
+        val wanted = math.min(SyntheticWeb.visibleCount(total0, cfg.rev), cfg.limitPerSite)
         val lastPage = math.max(1L, (wanted + s.page_size - 1) / s.page_size).toInt
         (1 to lastPage).map(p =>
           SyntheticWeb.Req(SyntheticWeb.listUrl(s, p), s.site_id, "list", p, 0, 0))

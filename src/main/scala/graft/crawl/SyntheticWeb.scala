@@ -84,8 +84,10 @@ object SyntheticWeb {
 
   /** Does this post's content change at rev >= 1? */
   def changesAtRev1(n: Long): Boolean = n % 17 == 0
-  /** Does this post exist only at rev >= 1? */
-  def newAtRev1(n: Long): Boolean = n % 23 == 0
+  /** How many of the posts 1..total a list walk shows at `rev`: the ids
+    * with id % 23 == 0 exist only at rev >= 1. */
+  def visibleCount(total: Long, rev: Int): Long =
+    if (rev >= 1) total else total - total / 23
 
   /**
    * Fetch a post page -> one interleaved document. The content interleaves
@@ -209,9 +211,7 @@ object SyntheticWeb {
     req.kind match {
       case "list" =>
         val total0 = Sites.postCount(site, scale)
-        // posts with id % 23 == 0 don't exist yet at rev 0
-        val visible = if (rev >= 1) total0 else total0 - (total0 / 23)
-        val wanted = math.min(visible, limit)
+        val wanted = math.min(visibleCount(total0, rev), limit)
         val pageStart = (req.page - 1).toLong * site.page_size
         val remain = wanted - pageStart
         if (remain <= 0) Seq.empty
@@ -255,8 +255,7 @@ object SyntheticWeb {
   def idAt(total: Long, pos: Long, rev: Int): Long =
     if (rev >= 1) total - pos
     else {
-      val m = total - total / 23 // non-multiples in [1, total]
-      val q = m - pos            // 1-indexed rank from the bottom
+      val q = visibleCount(total, rev) - pos // 1-indexed rank from the bottom
       q + (q - 1) / 22
     }
 

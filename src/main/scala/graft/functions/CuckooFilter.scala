@@ -176,8 +176,4 @@ object CuckooFilter {
   def isSaturated(bytes: Array[Byte]): Boolean =
     bytes.length == 4 + ByteBuffer.wrap(bytes).getInt * SlotsPerBucket * 2 + 1 &&
       bytes(bytes.length - 1) != 0
-
-  /** Static helper for the codegen'd membership expression. */
-  def mightContainSerialized(bytes: Array[Byte], hash: Long): Boolean =
-    deserialize(bytes).mightContain(hash)
 }

@@ -83,34 +83,3 @@ object CalendarEvent {
       a.location.map(_.trim) == b.location.map(_.trim) &&
       a.url.map(_.trim) == b.url.map(_.trim)
 }
-
-/** A frontier entry: one URL scheduled for fetching. */
-final case class FrontierUrl(
-    url: String,
-    canonical: String,
-    url_hash: Long,
-    host: String,
-    host_hash: Long,
-    depth: Int,
-    discovered_seq: Long,
-    parent_hash: Long)
-
-/** Per-(run, partition) lineage row demanded by the north rule. */
-final case class LineageRow(
-    run_id: String,
-    wave: Int,
-    partition_id: Int,
-    frontier_watermark: Long,
-    scheduled: Long,
-    deduped: Long,
-    fetched: Long)
-
-/** Crawl report event (reference: tracing events, core/mod.rs:53-87). */
-final case class CrawlEvent(
-    run_id: String,
-    site_id: String,
-    event: String, // crawl_success | crawl_failed | post_created | post_updated
-    post_id: Option[String],
-    title: Option[String],
-    url: Option[String],
-    elapsed_s: Option[Double])

@@ -256,14 +256,15 @@ object Similarity {
    * transitive near-dup clusters (min-label + pointer jumping) -> one
    * canonical row per cluster. The embedding-space analog of
    * [[Dedup.dedupCorpus]]; every stage is the scale-shaped operator
-   * above. The default stage is the exact tile join for value-exactness;
-   * production corpora beyond ~10⁶ vectors should pass
+   * above. The stage has no default, so every caller states its cost:
+   * [[PairStage.Exact]] is value-exact but O(n²), for tests and bounded
+   * corpora; production corpora beyond ~10⁶ vectors pass
    * [[PairStage.Lsh]] (high thresholds) or [[PairStage.Clustered]]
    * (any threshold, SemDeDup semantics) — both sub-quadratic.
    */
   def dedupCorpusByEmbedding(
       corpus: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      stage: PairStage = PairStage.Exact()): DataFrame = {
+      stage: PairStage): DataFrame = {
     val pairs = stage match {
       case PairStage.Exact(blocks) =>
         nearDupPairs(corpus, idCol, vecCol, threshold, blocks)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /**
  * Text analysis for training-data curation: token counting, quality
- * scoring, language identification, document fingerprinting. Everything is
+ * scoring, language identification, vocabulary building. Everything is
  * pure column arithmetic (whole-stage codegen; no UDFs), so the operators
  * cost one streaming pass over the corpus with full predicate/column
  * pushdown upstream.
@@ -23,11 +23,6 @@ object TextAnalysis {
 
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = size(tokensK(text))
-
-  /** BPE-ish subword count estimate: word-pieces + digits + punctuation runs. */
-  def subwordCount(text: Column): Column =
-    size(filter(split(lower(text), "(?=[^a-z0-9가-힣])|(?<=[^a-z0-9가-힣])"),
-      t => length(trim(t)) > 0))
 
   /**
    * Quality features (length / punctuation / stopword ratios) — the usual
@@ -75,9 +70,6 @@ object TextAnalysis {
       when(acc === "und" && score > 0 && score === best, lit(lang)).otherwise(acc)
     }
   }
-
-  /** Rolling-hash document fingerprint: md5 of the sorted distinct token set. */
-  def docFingerprint(text: Column): Column = Dedup.fingerprint(text)
 
   /**
    * Vocabulary build: term frequency + document frequency per whitespace

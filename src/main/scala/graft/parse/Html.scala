@@ -44,11 +44,6 @@ object Html {
       graft.functions.TextKernel.normalizeWs(sb.toString)
     }
 
-    /** Raw text of the DIRECT text children only (trimmed). */
-    def ownText: String =
-      graft.functions.TextKernel.normalizeWs(
-        children.filter(_.isText).map(_.textContent).mkString(" "))
-
     /** Serialize this element (tag + attrs + children) back to HTML. */
     def outerHtml: String = {
       if (isText) return escape(textContent)

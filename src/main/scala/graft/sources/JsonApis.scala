@@ -8,9 +8,11 @@ import graft.functions.GraftFunctions
 /**
  * JSON-API board sources (SURVEY.md §2.1 S6, §1.6): typed response
  * envelopes parsed with `from_json` + explicit schemas — the declarative
- * Spark face of the reference's serde deserialization. One function per
- * envelope family; each takes a DataFrame with (site_id, body) where body
- * is the raw response text, and returns flattened post rows.
+ * Spark face of the reference's serde deserialization. Each board is its
+ * envelope schema plus a row mapper over one list element; the one parse
+ * is [[JsonApis.explodeEnvelope]]. Each `parseX` takes a DataFrame with
+ * (site_id, body), body being the raw response text, and returns
+ * flattened post rows.
  *
  * Per-family envelope shapes and date dialects follow the reference:
  *  - media/mediamba (plugins/media/src/lib.rs:96-140): boards[] with
@@ -27,11 +29,48 @@ import graft.functions.GraftFunctions
  *  - study (plugins/study/src/lib.rs:44-124): lz-string-UTF16-compressed
  *    JSON transport, decompressed by the lz_decompress_utf16 expression.
  *
- * All timestamps are parsed then KST->UTC normalized (assume_offset(+9)).
+ * media, oasis and stu guard their list with a success flag: a response
+ * whose flag is not true yields no rows. All timestamps are parsed then
+ * KST->UTC normalized (assume_offset(+9)).
  */
 object JsonApis {
 
   private def kstToUtc(c: Column): Column = to_utc_timestamp(c, "Asia/Seoul")
+
+  /** The one envelope parse: `body` is parsed against `schema` into the
+    * envelope `r`, `list(r)` picks the post list, each `carry` field of the
+    * envelope rides along every post, and `row` maps one list element `p`
+    * to output columns. Output: site_id, the carried fields, then `row(p)`;
+    * the rows are exactly `explode(list(r))`'s, null list elements included.
+    *
+    * Plan shape: `explode` over a `from_json` child makes
+    * InferFiltersFromGenerate copy the (CodegenFallback) parse into an
+    * interpreted `size(..)>0 AND isnotnull(..)` filter, and nested-column
+    * aliasing keeps a third copy in the extraction project — THREE parses
+    * per row (measured 2.8 s -> 0.9 s at sf0.1, q39). The outer explode
+    * skips that rule (it only fires for inner generates), and the
+    * row-equivalence filter below references the GENERATE OUTPUT `p`, so
+    * it cannot be pushed back under the generate and re-inlined: rows
+    * with a null/empty list (the only ones explode_outer adds) have
+    * p IS NULL and size(_l) null/0 and are dropped — exactly `explode`'s
+    * row set, including null list ELEMENTS (kept: size(_l) > 0). A success
+    * flag therefore goes INTO the list (`when(r.success, list)`, null when
+    * the flag is not true): as a filter of its own, the optimizer would
+    * copy the parse into it. */
+  private def explodeEnvelope(df: DataFrame, body: Column, schema: StructType,
+      list: Column => Column, carry: Seq[(String, Column => Column)] = Nil)(
+      row: Column => Seq[Column]): DataFrame = {
+    val r = col("r")
+    val l = col("_l")
+    val p = col("p")
+    val kept = col("site_id") +: carry.map { case (name, _) => col(name) }
+    val fields = carry.map { case (name, f) => f(r).as(name) }
+    df.select(col("site_id"), from_json(body, schema).as("r"))
+      .select(col("site_id") +: list(r).as("_l") +: fields: _*)
+      .select(kept ++ Seq(l, explode_outer(l).as("p")): _*)
+      .filter(size(l) > 0 || p.isNotNull)
+      .select(kept ++ row(p): _*)
+  }
 
   val mediaSchema: StructType = StructType(Seq(
     StructField("success", BooleanType),
@@ -51,19 +90,17 @@ object JsonApis {
 
   /** media/mediamba boards -> posts; Lexical content rendered to HTML. */
   def parseMedia(df: DataFrame, baseUrl: String): DataFrame =
-    df.select(col("site_id"), from_json(col("body"), mediaSchema).as("r"))
-      .filter(col("r.success"))
-      .select(col("site_id"), explode(col("r.data.boards")).as("b"))
-      .select(
-        col("site_id"),
-        col("b.id").cast("string").as("id"),
-        concat(lit(baseUrl), lit("/"), col("b.id")).as("url"),
-        col("b.userName").as("author"),
-        col("b.title").as("title"),
-        when(col("b.isPinned"), array(lit("공지"))).otherwise(array().cast("array<string>"))
+    explodeEnvelope(df, col("body"), mediaSchema,
+      r => when(r("success"), r("data")("boards"))) { p => Seq(
+        p("id").cast("string").as("id"),
+        concat(lit(baseUrl), lit("/"), p("id")).as("url"),
+        p("userName").as("author"),
+        p("title").as("title"),
+        when(p("isPinned"), array(lit("공지"))).otherwise(array().cast("array<string>"))
           .as("category"),
-        kstToUtc(to_timestamp(col("b.createdAt"), "yyyy-MM-dd HH:mm:ss")).as("created_at"),
-        GraftFunctions.lexical_to_html(col("b.content")).as("content"))
+        kstToUtc(to_timestamp(p("createdAt"), "yyyy-MM-dd HH:mm:ss")).as("created_at"),
+        GraftFunctions.lexical_to_html(p("content")).as("content"))
+      }
 
   val oasisSchema: StructType = StructType(Seq(
     StructField("success", BooleanType),
@@ -83,18 +120,16 @@ object JsonApis {
       StructField("max", LongType))))))
 
   def parseOasis(df: DataFrame, baseUrl: String): DataFrame =
-    df.select(col("site_id"), from_json(col("body"), oasisSchema).as("r"))
-      .filter(col("r.success"))
-      .select(col("site_id"), explode(col("r.data.list")).as("p"))
-      .select(
-        col("site_id"),
-        col("p.id").cast("string").as("id"),
-        concat(lit(baseUrl), lit("/"), col("p.id")).as("url"),
-        col("p.writer").as("author"),
-        col("p.title").as("title"),
-        kstToUtc(to_timestamp(col("p.createdDate"), "yyyy-MM-dd HH:mm:ss")).as("created_at"),
-        col("p.originalImageUrl").as("thumbnail"),
-        col("p.contents").as("content"))
+    explodeEnvelope(df, col("body"), oasisSchema,
+      r => when(r("success"), r("data")("list"))) { p => Seq(
+        p("id").cast("string").as("id"),
+        concat(lit(baseUrl), lit("/"), p("id")).as("url"),
+        p("writer").as("author"),
+        p("title").as("title"),
+        kstToUtc(to_timestamp(p("createdDate"), "yyyy-MM-dd HH:mm:ss")).as("created_at"),
+        p("originalImageUrl").as("thumbnail"),
+        p("contents").as("content"))
+      }
 
   val startupSchema: StructType = StructType(Seq(
     StructField("code", StringType),
@@ -108,32 +143,17 @@ object JsonApis {
           StructField("noticeYn", StringType),
           StructField("regDt", StringType)))))))))))))
 
-  /** startup: Y/N flag -> bool, ISO-T datetime (lib.rs:134-135,184-194).
-    *
-    * Plan shape: `explode` over a `from_json` child makes
-    * InferFiltersFromGenerate copy the (CodegenFallback) parse into an
-    * interpreted `size(..)>0 AND isnotnull(..)` filter, and nested-column
-    * aliasing keeps a third copy in the extraction project — THREE parses
-    * per row (measured 2.8 s -> 0.9 s at sf0.1, q39). The outer explode
-    * skips that rule (it only fires for inner generates), and the
-    * row-equivalence filter below references the GENERATE OUTPUT `p`, so
-    * it cannot be pushed back under the generate and re-inlined: rows
-    * with a null/empty list (the only ones explode_outer adds) have
-    * p IS NULL and size(_l) null/0 and are dropped — exactly `explode`'s
-    * row set, including null list ELEMENTS (kept: size(_l) > 0). */
+  /** startup: Y/N flag -> bool, ISO-T datetime (lib.rs:134-135,184-194). */
   def parseStartup(df: DataFrame, baseUrl: String): DataFrame =
-    df.select(col("site_id"), from_json(col("body"), startupSchema).as("r"))
-      .select(col("site_id"), col("r.data.content.list").as("_l"))
-      .select(col("site_id"), col("_l"), explode_outer(col("_l")).as("p"))
-      .filter(size(col("_l")) > 0 || col("p").isNotNull)
-      .select(
-        col("site_id"),
-        col("p.seq").cast("string").as("id"),
-        concat(lit(baseUrl), lit("/"), col("p.seq")).as("url"),
-        col("p.title").as("title"),
-        (upper(col("p.noticeYn")) === "Y").as("is_announcement"),
-        kstToUtc(to_timestamp(col("p.regDt"), "yyyy-MM-dd'T'HH:mm:ss")).as("created_at"),
-        col("p.contents").as("content"))
+    explodeEnvelope(df, col("body"), startupSchema,
+      r => r("data")("content")("list")) { p => Seq(
+        p("seq").cast("string").as("id"),
+        concat(lit(baseUrl), lit("/"), p("seq")).as("url"),
+        p("title").as("title"),
+        (upper(p("noticeYn")) === "Y").as("is_announcement"),
+        kstToUtc(to_timestamp(p("regDt"), "yyyy-MM-dd'T'HH:mm:ss")).as("created_at"),
+        p("contents").as("content"))
+      }
 
   val stuSchema: StructType = StructType(Seq(
     StructField("isSuccess", BooleanType),
@@ -148,17 +168,15 @@ object JsonApis {
         StructField("createdAt", StringType))))))))))
 
   def parseStu(df: DataFrame, baseUrl: String): DataFrame =
-    df.select(col("site_id"), from_json(col("body"), stuSchema).as("r"))
-      .filter(col("r.isSuccess"))
-      .select(col("site_id"), explode(col("r.data.postListResDto")).as("p"))
-      .select(
-        col("site_id"),
-        col("p.postId").cast("string").as("id"),
-        concat(lit(baseUrl), lit("/"), col("p.postId")).as("url"),
-        col("p.writer").as("author"),
-        col("p.title").as("title"),
-        kstToUtc(to_timestamp(col("p.createdAt"), "yyyy/MM/dd HH:mm:ss")).as("created_at"),
-        col("p.content").as("content"))
+    explodeEnvelope(df, col("body"), stuSchema,
+      r => when(r("isSuccess"), r("data")("postListResDto"))) { p => Seq(
+        p("postId").cast("string").as("id"),
+        concat(lit(baseUrl), lit("/"), p("postId")).as("url"),
+        p("writer").as("author"),
+        p("title").as("title"),
+        kstToUtc(to_timestamp(p("createdAt"), "yyyy/MM/dd HH:mm:ss")).as("created_at"),
+        p("content").as("content"))
+      }
 
   /** ssfilm: untagged `false | "n"` cursor — read leniently as string
     * ("false" => exhausted), keyset pagination driver-side (S5). */
@@ -172,16 +190,14 @@ object JsonApis {
     StructField("LastNoticeIndex", StringType)))
 
   def parseSsfilm(df: DataFrame, baseUrl: String): DataFrame =
-    df.select(col("site_id"), from_json(col("body"), ssfilmSchema).as("r"))
-      .select(col("site_id"), col("r.LastNoticeIndex").as("cursor"),
-        explode(col("r.data_list")).as("p"))
-      .select(
-        col("site_id"), col("cursor"),
-        col("p.notice_index").cast("string").as("id"),
-        concat(lit(baseUrl), lit("/view?no="), col("p.notice_index")).as("url"),
-        col("p.notice_title").as("title"),
-        kstToUtc(to_timestamp(col("p.reg_date"), "yyyy-MM-dd HH:mm:ss")).as("created_at"),
-        col("p.notice_content").as("content"))
+    explodeEnvelope(df, col("body"), ssfilmSchema, r => r("data_list"),
+      Seq("cursor" -> (r => r("LastNoticeIndex")))) { p => Seq(
+        p("notice_index").cast("string").as("id"),
+        concat(lit(baseUrl), lit("/view?no="), p("notice_index")).as("url"),
+        p("notice_title").as("title"),
+        kstToUtc(to_timestamp(p("reg_date"), "yyyy-MM-dd HH:mm:ss")).as("created_at"),
+        p("notice_content").as("content"))
+      }
 
   val studySchema: StructType = StructType(Seq(
     StructField("uri", StringType),
@@ -205,20 +221,18 @@ object JsonApis {
    * base64-encoded sbSeq (study lib.rs:37-42; golden: 2945 -> Mjk0NQ==).
    */
   def parseStudy(df: DataFrame, baseUrl: String): DataFrame =
-    df.select(col("site_id"),
-      from_json(GraftFunctions.lz_decompress_utf16(col("body")), studySchema).as("r"))
-      .select(col("site_id"), col("r.paginationInfo.totalPageCount").as("total_pages"),
-        explode(col("r.list")).as("p"))
-      .select(
-        col("site_id"), col("total_pages"),
-        col("p.sbSeq").cast("string").as("id"),
-        concat(lit(baseUrl), lit("?sbSeq="), base64(col("p.sbSeq").cast("string").cast("binary")))
+    explodeEnvelope(df, GraftFunctions.lz_decompress_utf16(col("body")), studySchema,
+      r => r("list"), Seq("total_pages" -> (r => r("paginationInfo")("totalPageCount")))) {
+      p => Seq(
+        p("sbSeq").cast("string").as("id"),
+        concat(lit(baseUrl), lit("?sbSeq="), base64(p("sbSeq").cast("string").cast("binary")))
           .as("url"),
-        col("p.userNm").as("author"),
-        col("p.title").as("title"),
-        kstToUtc(to_timestamp(col("p.regDt"), "yyyy.MM.dd")).as("created_at"),
-        transform(col("p.fileList"), f => struct(
+        p("userNm").as("author"),
+        p("title").as("title"),
+        kstToUtc(to_timestamp(p("regDt"), "yyyy.MM.dd")).as("created_at"),
+        transform(p("fileList"), f => struct(
           f.getField("fileUrl").as("url"),
           f.getField("fileNm").as("name"),
           GraftFunctions.mime_guess(f.getField("fileNm")).as("mime_type"))).as("attachments"))
+    }
 }

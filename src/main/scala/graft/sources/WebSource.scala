@@ -184,8 +184,8 @@ private class WebReaderFactory(fields: Array[String]) extends PartitionReaderFac
     new PartitionReader[InternalRow] {
       private val site = graft.crawl.SyntheticWeb.siteById(p.siteId)
       private val total0 = graft.crawl.Sites.postCount(site, p.scale)
-      private val visible = if (p.rev >= 1) total0 else total0 - total0 / 23
-      private val wanted = math.min(visible, p.cap)
+      private val wanted =
+        math.min(graft.crawl.SyntheticWeb.visibleCount(total0, p.rev), p.cap)
       private var produced = 0L
       private var row: InternalRow = _
 

@@ -170,7 +170,7 @@ object ApiDrive {
     // 13c. The embedding-space analog + the composed quality gate
     val emb001 = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val embKept = graft.operators.Similarity.dedupCorpusByEmbedding(
-      emb001, "vec_id", "embedding", 0.4)
+      emb001, "vec_id", "embedding", 0.4, graft.operators.Similarity.PairStage.Exact())
     val quality = graft.operators.TextAnalysis.qualityFilter(docs001, "text")
     println(s"embedding dedup: ${emb001.count} -> ${embKept.count}; " +
       s"quality gate: ${docs001.count} -> ${quality.count}")

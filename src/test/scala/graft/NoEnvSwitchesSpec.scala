@@ -4,10 +4,10 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The crawl, operator, sink and streaming layers and the daemon take their
-  * settings from `Crawl.Config`, `Daemon.Options` and call arguments only:
-  * no environment variable may select a code path there, so a measured A/B
-  * loser cannot come back as a hidden switch. */
+/** The crawl, operator, sink, streaming, source, parse and function layers
+  * and the daemon take their settings from `Crawl.Config`, `Daemon.Options`
+  * and call arguments only: no environment variable may select a code path
+  * there, so a measured A/B loser cannot come back as a hidden switch. */
 class NoEnvSwitchesSpec extends AnyFunSuite {
 
   private def scalaFiles(under: String): Seq[Path] = {
@@ -33,5 +33,9 @@ class NoEnvSwitchesSpec extends AnyFunSuite {
   test("graft.sinks, graft.streaming and the daemon read no environment switches") {
     assertNoEnvReads(Seq("sinks", "streaming", "Daemon.scala").flatMap(scalaFiles),
       atLeast = 6)
+  }
+
+  test("graft.sources, graft.parse and graft.functions read no environment switches") {
+    assertNoEnvReads(Seq("sources", "parse", "functions").flatMap(scalaFiles), atLeast = 10)
   }
 }

@@ -168,7 +168,8 @@ class DedupSimilaritySpec extends SparkSuite {
   test("embedding-dedup corpus: dropped rows are exactly the non-representative cluster members") {
     val pairs = Similarity.nearDupPairs(emb, "vec_id", "embedding", 0.4)
     val clusters = Dedup.nearDupClusters(pairs)
-    val kept = Similarity.dedupCorpusByEmbedding(emb, "vec_id", "embedding", 0.4)
+    val kept = Similarity.dedupCorpusByEmbedding(emb, "vec_id", "embedding", 0.4,
+      Similarity.PairStage.Exact())
     val dropped = emb.select("vec_id")
       .join(kept.select("vec_id"), Seq("vec_id"), "left_anti")
     val nonReps = clusters.filter(col("id") =!= col("cluster"))
@@ -193,7 +194,8 @@ class DedupSimilaritySpec extends SparkSuite {
       Seq((i.toLong * 2, base.toSeq), (i.toLong * 2 + 1, clone.toSeq))
     }
     val planted = rows.toDF("vec_id", "embedding")
-    val exact = Similarity.dedupCorpusByEmbedding(planted, "vec_id", "embedding", 0.9)
+    val exact = Similarity.dedupCorpusByEmbedding(planted, "vec_id", "embedding", 0.9,
+      Similarity.PairStage.Exact())
       .select("vec_id").as[Long].collect().toSet
     val lsh = Similarity.dedupCorpusByEmbedding(planted, "vec_id", "embedding", 0.9,
       Similarity.PairStage.Lsh(bitsPerTable = 8, tables = 16))

@@ -32,12 +32,13 @@ import graft.crawl.{Crawl, Pipeline}
  *
  * Every table of the cycle is computed once, and no job exists only to
  * feed a driver-side sort or count. A warm cycle at `--limit 30
- * --scale 1000` over ten sites (4 cores) runs 44 Spark jobs: 2 cache
+ * --scale 1000` over ten sites (4 cores) runs 42 Spark jobs: 2 cache
  * schema reads, 11 for the two-wave crawl, 11 for the merge (the staged
  * batch, the merge join with its windows, the clustered layout), 1 for
- * the events, 2 feed writes from one render, 7 report writes (5 of them
- * the crawl lineage), 6 for the calendar (its merge and the ICS collect),
- * 2 cache writes and the markdown report's one collect (2 jobs).
+ * the events, 2 feed writes from one render, 5 report writes (3 of them
+ * the crawl lineage, one aggregation over both waves), 6 for the
+ * calendar (its merge and the ICS collect), 2 cache writes and the
+ * markdown report's one collect (2 jobs).
  */
 object Daemon {
 

@@ -3,9 +3,9 @@ package graft.crawl
 import scala.concurrent.Await
 import scala.concurrent.duration._
 import scala.util.Try
-import org.apache.spark.sql.{DataFrame, Dataset, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.functions.GraftFunctions
 import graft.model.Post
 
@@ -40,7 +40,9 @@ import graft.model.Post
  *  6. link discovery: list pages expand to the next frontier
  *     ([[SyntheticWeb.links]]), which is written out; post documents are
  *     fetched lazily, once, where the run's posts are consumed;
- *  7. per-partition lineage rows (partition id, watermark, counts). The
+ *  7. state: every wave stages out into one table root, partitioned by
+ *     wave, and the run's seen set, schedule and per-(wave, partition)
+ *     lineage are views over the waves it wrote, one scan each. The
  *     wave's counts are observed on the stage-out and links writes
  *     ([[Dataset.observe]]), not counted by extra jobs.
  *
@@ -100,6 +102,11 @@ private[graft] object TempDirs {
 object Crawl {
 
   val DefaultSeed = 42L
+
+  /** The wave stage-out as written (a [[RankedRow]], its salt and the
+    * writer's partition id), then the `wave` directory column. */
+  private val StageSchema = Encoders.product[RankedRow].schema
+    .add("salt", LongType).add("partition_id", IntegerType).add("wave", IntegerType)
 
   final case class Config(
       scale: Long = 1000L,
@@ -282,41 +289,11 @@ object Crawl {
       TempDirs.register(dir)
       dir.toString
     }
-    val emptySchedule = Seq.empty[(Int, String, String, String, Long, String, Int, Int, Int, Long, Int)]
-      .toDF("wave", "host", "url", "canonical", "url_hash", "site_id", "page", "row", "depth",
-        "ready_ms", "crawl_delay_ms")
-    val emptyLineage = Seq.empty[(Int, Int, Long, Long, Long)]
-      .toDF("wave", "partition_id", "scheduled", "deduped", "fetched")
-
     // the frontier is url-free inside the wave loop (UrlGrammar derives
     // the string from coordinates at the consumption edges); dropping the
     // column here normalizes every entry path — fresh seeds (which carry
     // the Req url) and resumed snapshots (already url-free) alike
     var frontier = frontier0.drop("url")
-    // Growing state is kept as PARTS (one DataFrame per wave) and
-    // unioned once at the end: rebuilding a growing union tree inside the
-    // loop makes Catalyst/AQE re-plan an ever-larger plan every wave — a
-    // serial driver cost that destroys N->4N scaling efficiency.
-    // seen0 is not persisted: it is an empty local relation or a snapshot
-    // parquet read, both cheap to re-scan
-    val seenParts = scala.collection.mutable.ArrayBuffer(seen0)
-    val postParts = scala.collection.mutable.ArrayBuffer(posts0)
-    val scheduleParts = scala.collection.mutable.ArrayBuffer(
-      schedule0.getOrElse(emptySchedule))
-    val lineageParts = scala.collection.mutable.ArrayBuffer(
-      lineage0.getOrElse(emptyLineage))
-    def seenAll = seenParts.reduce(_ unionByName _)
-    var seenCount = seenRows.getOrElse(seen0.count())
-    // incrementally-maintained seen sketch: each wave folds its fresh delta
-    // in (O(|delta|)) instead of re-aggregating the whole seen set
-    // (O(|seen|) per wave — a full-state scan per wave at 10^10 URLs)
-    val sketch = new SeenSet.IncrementalSketch(cfg.seenSketch,
-      initialCapacity = seenCount * 4)
-    if (seenCount > 0) sketch.add(seenParts.head, seenCount, "url_hash")(seenAll)
-    var wave = wave0
-    // frontier size is carried between waves (the links write observed it) —
-    // no extra action per wave just to test emptiness
-    var frontierCount = frontierRows.getOrElse(frontier.count())
 
     require(!cfg.livePacing || cfg.faults.isEmpty,
       "livePacing and fault injection are separate test modes")
@@ -328,21 +305,77 @@ object Crawl {
     def excludeFailedSites(df: DataFrame): DataFrame =
       if (midCrawlFailures.isEmpty) df
       else df.filter(!col("site_id").isin(midCrawlFailures.keys.toSeq: _*))
-    // The seen table carries only url_hash — recover the failed sites'
+
+    // Every wave stages out into ONE table root, hive-partitioned by wave,
+    // and the run's seen, schedule and lineage are views over the waves it
+    // wrote: one scan of their explicit leaf dirs per view. A union tree
+    // of per-wave frames would grow every wave, and Catalyst/AQE would
+    // re-plan the ever-larger plan — a serial driver cost that destroys
+    // N->4N scaling efficiency. The root itself is never listed: a resumed
+    // snapshot dir can still hold stage-outs of waves after its CURRENT.
+    val stageRoot = s"$workDir/waves/w/schedule"
+    def staged(waves: Seq[Int]): DataFrame =
+      if (waves.isEmpty) spark.createDataFrame(java.util.List.of[Row](), StageSchema)
+      else spark.read.schema(StageSchema).option("basePath", stageRoot)
+        .parquet(waves.map(w => s"$stageRoot/wave=$w"): _*)
+    // the URL string re-enters HERE, at read time (one grammar-kernel
+    // evaluation per consuming projection — per-row CPU in parallel
+    // stages, traded for the dominant stage-out write/read bytes)
+    def withUrls(df: DataFrame): DataFrame = df
+      .withColumn("url", UrlGrammar.rebuild_url(col("site_id"), col("kind"),
+        col("page"), col("row"), cfg.scale, cfg.rev))
+      .withColumn("canonical", GraftFunctions.url_canonicalize(col("url")))
+      .withColumn("host", GraftFunctions.url_host(col("url")))
+    // seen0 is not persisted: it is an empty local relation or a snapshot
+    // parquet read, both cheap to re-scan. A site that exhausted mid-crawl
+    // retries keeps its URLs OUT of the seen set: its fetches never
+    // happened, so a snapshot resume (or the next daemon run) must
+    // re-schedule them — its schedule rows remain as the attempt record
+    // the error report cites
+    def seen(waves: Seq[Int]): DataFrame = seen0.unionByName(
+      excludeFailedSites(staged(waves)).select(col("url_hash"), col("wave").as("first_wave")))
+    def schedule(waves: Seq[Int]): DataFrame = {
+      val run = withUrls(staged(waves)).select("wave", "host", "url", "canonical",
+        "url_hash", "site_id", "page", "row", "depth", "ready_ms", "crawl_delay_ms")
+      schedule0.fold(run)(_ unionByName run)
+    }
+    // (wave, scheduled, deduped) per wave this run wrote: driver values
+    // the writes observed
+    val waveCounts = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
+    // ONE aggregation over every wave's stage-out; the per-wave constants
+    // ride a broadcast relation, not literals, so the generated code is
+    // wave-invariant (types: int, long, long)
+    def lineage(waves: Seq[Int]): DataFrame = {
+      val run = staged(waves).groupBy(col("wave"), col("partition_id"))
+        .agg(count(lit(1)).as("fetched"))
+        .join(broadcast(waveCounts.toSeq.toDF("wave", "scheduled", "deduped")), "wave")
+        .select("wave", "partition_id", "scheduled", "deduped", "fetched")
+      lineage0.fold(run)(_ unionByName run)
+    }
+    // The seen table carries only url_hash (and a resumed seen0 may hold a
+    // site that fails later in this run) — recover the failed sites'
     // hashes from the schedule (every seen hash has a schedule row) and
-    // anti-join them out, so a resume / the next run re-schedules them.
-    // Bounded by the failed sites' slice, and only runs on failure.
-    def excludeFailedSeen(seen: DataFrame,
-        schedParts: scala.collection.Seq[DataFrame]): DataFrame =
+    // anti-join them out. Bounded by the failed sites' slice, and only
+    // runs on failure.
+    def excludeFailedSeen(seen: DataFrame, schedule: DataFrame): DataFrame =
       if (midCrawlFailures.isEmpty) seen
-      else {
-        val failedHashes = schedParts.reduce(_ unionByName _)
-          .filter(col("site_id").isin(midCrawlFailures.keys.toSeq: _*))
-          .select("url_hash").distinct()
-        seen.join(failedHashes, Seq("url_hash"), "left_anti")
-      }
+      else seen.join(schedule.filter(col("site_id").isin(midCrawlFailures.keys.toSeq: _*))
+        .select("url_hash").distinct(), Seq("url_hash"), "left_anti")
+
+    val postParts = scala.collection.mutable.ArrayBuffer(posts0)
     val fetchLogParts = scala.collection.mutable.ArrayBuffer(
       Seq.empty[(String, Long, Int)].toDF("host", "started_at_ms", "wave"))
+    var seenCount = seenRows.getOrElse(seen0.count())
+    // incrementally-maintained seen sketch: each wave folds its fresh delta
+    // in (O(|delta|)) instead of re-aggregating the whole seen set
+    // (O(|seen|) per wave — a full-state scan per wave at 10^10 URLs)
+    val sketch = new SeenSet.IncrementalSketch(cfg.seenSketch,
+      initialCapacity = seenCount * 4)
+    if (seenCount > 0) sketch.add(seen0, seenCount, "url_hash")(seen0)
+    var wave = wave0
+    // frontier size is carried between waves (the links write observed it) —
+    // no extra action per wave just to test emptiness
+    var frontierCount = frontierRows.getOrElse(frontier.count())
 
     while (wave < cfg.maxWaves && frontierCount > 0) {
       // a site that already exhausted its retries fetches nothing further
@@ -388,7 +421,7 @@ object Crawl {
       // exchange + one local sort; the split row_number/min_by shapes paid
       // two of each (dedup shuffle + host window exchange) and lost the
       // BENCH.md §7 A/B — shuffle bytes are the scaling-limited resource.
-      val scheduled = SeenSet.filterNewProbe(keyed, seenAll, "url_hash",
+      val scheduled = SeenSet.filterNewProbe(keyed, seen(wave0 until wave), "url_hash",
           sketch.probe(col("url_hash")))
         .select(col("site_id"), col("kind"), col("page"), col("row"),
           col("depth"), col("crawl_delay_ms"), col("url_hash"), col("host_hash"))
@@ -441,7 +474,6 @@ object Crawl {
       // bandwidth-contended) stage-out, and consumers that never touch
       // them (the fetch stage prunes to url/site/kind/page/row/depth)
       // never pay for them at all
-      val wavePath = s"$workDir/waves/w$wave/schedule"
       // finer-than-core write tasks: (host, salt) groups are few enough at
       // fleet scale that hashing them into exactly `cores` buckets leaves
       // visible imbalance; 3x gives the scheduler room to overlap without
@@ -481,23 +513,8 @@ object Crawl {
         // is wave-invariant and every wave of every crawl in a session
         // shares one compiled class. Value-identical: the read-back
         // types `wave` as the same IntegerType the literal had.
-        .parquet(s"$wavePath/wave=$wave")
-      // read back with the schema just written (no schema-inference job):
-      // the written columns, then the `wave` partition column
-      val staged = spark.read
-        .schema(stageOut.schema.add("wave", IntegerType))
-        .parquet(wavePath)
-      val fetchInput = staged
-        // the URL string re-enters HERE, at read time (one grammar-kernel
-        // evaluation per consuming projection — per-row CPU in parallel
-        // stages, traded for the dominant stage-out write/read bytes)
-        .withColumn("url", UrlGrammar.rebuild_url(col("site_id"), col("kind"),
-          col("page"), col("row"), cfg.scale, cfg.rev))
-        .withColumn("canonical", GraftFunctions.url_canonicalize(col("url")))
-        .withColumn("host", GraftFunctions.url_host(col("url")))
-
-      val waveLineageBase = fetchInput.groupBy(col("partition_id"))
-        .agg(count(lit(1)).as("fetched"))
+        .parquet(s"$stageRoot/wave=$wave")
+      val fetchInput = withUrls(staged(Seq(wave)))
 
       // 6. fetch = deterministic synthetic expansion (typed transform).
       // Auth-family (SSO) sites need a bootstrapped session: init ONCE PER
@@ -624,26 +641,8 @@ object Crawl {
         else frontierLive.count()
       val freshCount = observedRows(stagedRows, fetchInput.count())
       frontierCount = observedRows(linkRows, nextFrontier.count())
-      // per-wave constants ride a broadcast 1-row frame, not literals:
-      // same Janino-churn argument as the stage-out write — values in
-      // relation data keep the lineage projection's generated source
-      // wave-invariant (types unchanged: int, long, long)
-      val waveMeta = Seq((wave, scheduledCount, scheduledCount - freshCount))
-        .toDF("wave", "scheduled", "deduped")
-      val waveLineage = waveLineageBase
-        .crossJoin(broadcast(waveMeta))
-        .select("wave", "partition_id", "scheduled", "deduped", "fetched")
-
-      // schedule part re-reads the staged parquet (no recompute)
-      scheduleParts += fetchInput.select(
-        "wave", "host", "url", "canonical", "url_hash", "site_id", "page", "row",
-        "depth", "ready_ms", "crawl_delay_ms")
-      // a site that exhausted mid-crawl retries keeps its URLs OUT of the
-      // seen set: its fetches never happened, so a snapshot resume (or the
-      // next daemon run) must re-schedule them — the schedule rows above
-      // remain as the attempt record the error report cites
+      waveCounts += ((wave, scheduledCount, scheduledCount - freshCount))
       val seenInput = excludeFailedSites(fetchInput)
-      seenParts += seenInput.select(col("url_hash"), col("wave").as("first_wave"))
       val seenDelta = if (midCrawlFailures.isEmpty) freshCount else seenInput.count()
       seenCount += seenDelta
       // the sketch exists to prefilter the NEXT wave's frontier — when the
@@ -652,11 +651,12 @@ object Crawl {
       // probe ever reads (at the 1M-scale bench this is a ~3.7M-row Bloom
       // rebuild on the last wave, pure Amdahl overhead)
       if (frontierCount > 0)
-        sketch.add(seenInput, seenDelta, "url_hash")(seenAll)
+        sketch.add(seenInput, seenDelta, "url_hash")(seen(wave0 to wave))
       postParts += wavePosts
-      lineageParts += waveLineage
 
       cfg.snapshotDir.foreach { dir =>
+        val done = wave0 to wave
+        val sched = schedule(done)
         // failed sites are filtered OUT of the persisted posts/seen state
         // (their earlier-wave contributions included — the 'failed plugin
         // yields an error, not partial output' contract must survive a
@@ -664,10 +664,10 @@ object Crawl {
         // still reports them
         Snapshots.write(spark, dir, wave, Map(
           "posts" -> excludeFailedSites(postParts.reduce(_ unionByName _)),
-          "seen" -> excludeFailedSeen(seenAll, scheduleParts),
+          "seen" -> excludeFailedSeen(seen(done), sched),
           "frontier" -> nextFrontier,
-          "schedule" -> scheduleParts.reduce(_ unionByName _),
-          "lineage" -> lineageParts.reduce(_ unionByName _)), cfg,
+          "schedule" -> sched,
+          "lineage" -> lineage(done)), cfg,
           failures = midCrawlFailures.toMap.view.mapValues(_.getMessage).toMap)
       }
 
@@ -680,11 +680,13 @@ object Crawl {
     // output — mod.rs:38-93); its schedule/lineage rows remain as the
     // attempt record the error report cites
     val livePosts = excludeFailedSites(postParts.reduce(_ unionByName _))
+    val done = wave0 until wave
+    val sched = schedule(done)
     Result(
       livePosts,
-      excludeFailedSeen(seenAll, scheduleParts.toSeq),
-      scheduleParts.reduce(_ unionByName _),
-      lineageParts.reduce(_ unionByName _),
+      excludeFailedSeen(seen(done), sched),
+      sched,
+      lineage(done),
       ssoBootstraps,
       midCrawlFailures.toMap,
       fetchLogParts.reduce(_ unionByName _))

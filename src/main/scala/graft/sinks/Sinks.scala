@@ -113,12 +113,7 @@ object Ics {
 
   /** Full VCALENDAR (ics.rs:7-29): PRODID, escaped headers, folded lines. */
   def toIcs(title: String, source: String, desc: String, items: Seq[CalendarEvent]): String = {
-    val lines = Seq(
-      "BEGIN:VCALENDAR", "VERSION:2.0", "CALSCALE:GREGORIAN",
-      "PRODID:-//ssufid//calendar//KO",
-      s"X-WR-CALNAME:${TextKernel.icsEscape(title)}",
-      s"X-WR-CALDESC:${TextKernel.icsEscape(desc)}",
-      s"URL:$source") ++
+    val lines = headerLines(title, source, desc) ++
       items.flatMap(eventLines) :+ "END:VCALENDAR"
     lines.map(TextKernel.icsFold).mkString("\r\n") + "\r\n"
   }

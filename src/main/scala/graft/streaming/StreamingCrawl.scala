@@ -57,7 +57,7 @@ object StreamingCrawl {
       .writeStream
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.ProcessingTime(0L))
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
         import s.implicits._
         batches += 1
@@ -69,7 +69,7 @@ object StreamingCrawl {
           .dropDuplicates("url_hash")
         // same first-run semantics as the batch cache: ONLY a cleanly
         // missing path is empty — a missing dir WITH `.old` swap leftovers
-        // (crash between the two renames below, then checkpoint resume)
+        // (crash inside the swap below, then checkpoint resume)
         // fails loudly instead of silently restarting the seen set from
         // empty and re-fetching history into the append-mode posts dir
         val seen = StreamingMerge.readSnapshotOr(s, seenDir)(
@@ -86,18 +86,12 @@ object StreamingCrawl {
         // discovered links feed the WATCHED directory -> next micro-batch
         val links = expanded.filter(_.link.isDefined).map(_.link.get).toDF()
         if (!links.isEmpty) links.write.mode("append").parquet(frontierDir)
-        // seen-state swap (same rename-aside snapshot discipline as
-        // foreachBatchMerge: old state is never deleted before the new one
-        // is in place)
-        val newSeen = seen.unionByName(fresh.select("url_hash"))
+        // seen-state swap: the same checked rename-aside commit as
+        // foreachBatchMerge's cache, so old state is never deleted before
+        // the new one is in place
         val tmp = seenDir + ".next"
-        newSeen.write.mode("overwrite").parquet(tmp)
-        val fs = org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
-        val dst = new org.apache.hadoop.fs.Path(seenDir)
-        val aside = new org.apache.hadoop.fs.Path(seenDir + ".old")
-        if (fs.exists(dst)) fs.rename(dst, aside)
-        fs.rename(new org.apache.hadoop.fs.Path(tmp), dst)
-        if (fs.exists(aside)) fs.delete(aside, true)
+        seen.unionByName(fresh.select("url_hash")).write.mode("overwrite").parquet(tmp)
+        StreamingMerge.swapSnapshot(s, seenDir, tmp, batchId.toString)
         fresh.unpersist()
         ()
       }

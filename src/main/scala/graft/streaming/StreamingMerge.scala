@@ -43,11 +43,7 @@ object StreamingMerge {
         val spark = batch.sparkSession
         val cache = readCacheOrEmpty(spark, cacheDir)
         val merged = Merge.mergeEntries(cache, batch.toDF(), now()).posts
-        // snapshot-commit the new cache version, then swap. The OLD snapshot
-        // is renamed ASIDE (never deleted before the new one is in place):
-        // a crash mid-swap leaves either the old cache live or a recoverable
-        // `.old` sibling — never silently-empty state (the reference only
-        // treats NotFound as first-run, core/mod.rs read_cache).
+        // snapshot-commit the new cache version, then swap it in
         val tmp = cacheDir + s".v$batchId"
         merged.write.mode("overwrite").parquet(tmp)
         swapSnapshot(spark, cacheDir, tmp, batchId.toString)
@@ -64,9 +60,8 @@ object StreamingMerge {
    */
   private[graft] def swapSnapshot(
       spark: SparkSession, dir: String, tmp: String, tag: String): Unit = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      spark.sparkContext.hadoopConfiguration)
     val dst = new org.apache.hadoop.fs.Path(dir)
+    val fs = dst.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val aside = new org.apache.hadoop.fs.Path(dir + s".old$tag")
     // rename returns false (not an exception) on several FileSystems —
     // every step must be CHECKED or a failed commit followed by the aside
@@ -88,10 +83,7 @@ object StreamingMerge {
    * instead of silently restarting history from empty.
    */
   private[graft] def readCacheOrEmpty(spark: SparkSession, cacheDir: String): DataFrame =
-    readSnapshotOr(spark, cacheDir) {
-      import spark.implicits._
-      spark.emptyDataset[Post].toDF().withColumn("rank", lit(0L))
-    }
+    readSnapshotOr(spark, cacheDir)(graft.crawl.Pipeline.emptyCache(spark))
 
   /** Generic snapshot read with the narrow first-run semantics above. The
     * path is probed rather than a failed read caught: a failed analysis

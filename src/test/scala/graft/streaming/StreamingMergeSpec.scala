@@ -62,6 +62,32 @@ class StreamingMergeSpec extends SparkSuite {
     }
   }
 
+  test("swapSnapshot: a rename that returns false fails the swap and keeps the old snapshot") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.stuckrename.impl", classOf[StuckRenameFileSystem].getName)
+    conf.setBoolean("fs.stuckrename.impl.disable.cache", true)
+    val dir = Files.createTempDirectory("graft-swap").toString
+    def write(name: String, v: String): Unit =
+      Seq((1L, v)).toDF("k", "v").write.parquet(s"$dir/$name")
+    def value(name: String): String =
+      spark.read.parquet(s"$dir/$name").as[(Long, String)].head()._2
+    // the old snapshot cannot be set aside: nothing moves
+    write("stuck-live", "old"); write("next-a", "new")
+    intercept[IllegalArgumentException] {
+      StreamingMerge.swapSnapshot(spark, s"stuckrename://$dir/stuck-live",
+        s"stuckrename://$dir/next-a", "1")
+    }
+    assert(value("stuck-live") === "old" && value("next-a") === "new")
+    // the commit rename fails: the set-aside snapshot is put back
+    write("live", "old"); write("stuck-next", "new")
+    intercept[IllegalStateException] {
+      StreamingMerge.swapSnapshot(spark, s"stuckrename://$dir/live",
+        s"stuckrename://$dir/stuck-next", "2")
+    }
+    assert(value("live") === "old")
+    assert(!Files.exists(java.nio.file.Paths.get(s"$dir/live.old2")))
+  }
+
   test("mapGroupsWithState dedup emits created/unchanged/updated across batches") {
     implicit val sq = spark.sqlContext
     val dir = Files.createTempDirectory("graft-stream2").toString
@@ -106,4 +132,13 @@ class StreamingMergeSpec extends SparkSuite {
     // couple of days stay open — expect most but not necessarily all rows
     assert(got > 0 && got <= batch.count())
   }
+}
+
+/** The local file system under the `stuckrename` scheme, except that
+  * renaming a path whose name starts with `stuck` returns false instead of
+  * moving it, as a rename can on several Hadoop file systems. */
+class StuckRenameFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("stuckrename:///")
+  override def rename(src: org.apache.hadoop.fs.Path, dst: org.apache.hadoop.fs.Path): Boolean =
+    !src.getName.startsWith("stuck") && super.rename(src, dst)
 }

@@ -76,33 +76,6 @@ object BenchWorker {
     val scale = args(1).toLong
     val limit = args(2).toLong
     val spark = Bench.session(cpus, aqeDefault = "false")
-    // optional skew audit: per-stage task-time sum/max (a stage whose max
-    // task dwarfs sum/cores is straggler-bound — cores sit idle at its tail)
-    if (sys.env.get("SPARK_GRAFT_STAGE_DEBUG").contains("1")) {
-      val stats = new java.util.concurrent.ConcurrentHashMap[Int, (String, Int, Long, Long)]()
-      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val d = t.taskInfo.duration
-          stats.merge(t.stageId, ("", 1, d, d), (a, b) =>
-            (a._1, a._2 + 1, a._3 + d, math.max(a._4, d)))
-        }
-        override def onStageCompleted(s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-          val i = s.stageInfo
-          val st = stats.getOrDefault(i.stageId, ("", 0, 0L, 0L))
-          // stage wall + absolute completion time expose scheduler gaps:
-          // wall >> sum/cores means tail/quantization idle INSIDE the
-          // stage; a jump between one stage's done-at and the next's
-          // done-at minus its wall is driver-serial time BETWEEN stages
-          val wall = (for { a <- i.submissionTime; b <- i.completionTime }
-            yield (b - a) / 1e3).getOrElse(-1.0)
-          val doneAt = i.completionTime.getOrElse(0L)
-          System.err.println(f"[stage] id=${i.stageId}%3d tasks=${st._2}%3d " +
-            f"sum=${st._3 / 1e3}%7.2fs max=${st._4 / 1e3}%6.2fs " +
-            f"ideal=${st._3 / 1e3 / cpus}%6.2fs wall=$wall%6.2fs " +
-            f"done=$doneAt%d  ${i.name.take(50)}")
-        }
-      })
-    }
     try {
       Bench.crawlOnce(spark, scale = 30000, limit = 10000) // warmup
       spark.catalog.clearCache()

@@ -31,12 +31,12 @@ import graft.crawl.{Crawl, Pipeline}
  * content events and owns every write.
  *
  * Every table of the cycle is computed once, and no job exists only to
- * feed a driver-side sort or count. A warm cycle at `--limit 30
- * --scale 1000` over ten sites (4 cores) runs 42 Spark jobs: 2 cache
- * schema reads, 11 for the two-wave crawl, 11 for the merge (the staged
+ * feed a driver-side sort or count or to infer a known schema. A warm
+ * cycle at `--limit 30 --scale 1000` over ten sites (4 cores) runs 38
+ * Spark jobs: 11 for the two-wave crawl, 11 for the merge (the staged
  * batch, the merge join with its windows, the clustered layout), 1 for
  * the events, 2 feed writes from one render, 5 report writes (3 of them
- * the crawl lineage, one aggregation over both waves), 6 for the
+ * the crawl lineage, one aggregation over both waves), 4 for the
  * calendar (its merge and the ICS collect), 2 cache writes and the
  * markdown report's one collect (2 jobs).
  */

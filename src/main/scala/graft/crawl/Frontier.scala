@@ -210,11 +210,12 @@ object Crawl {
       discovered(SyntheticWeb.links(req, scale, limit, rev, session(req, sessionFor)), probe))
   }
 
-  /** Rows that `obs` counted on the write that just ran. The count is a
-    * by-product of that write job. An observation Spark could not fill
-    * (its plan lost the metrics node, or the listener event never came)
-    * falls back to `recount`, an exact count of what was written. */
-  private def observedRows(obs: Observation, recount: => Long): Long =
+  /** Rows that `obs` counted on the write that just ran (a wave write or
+    * a snapshot table). The count is a by-product of that write job. An
+    * observation Spark could not fill (its plan lost the metrics node, or
+    * the listener event never came) falls back to `recount`, an exact
+    * count of what was written. */
+  private[crawl] def observedRows(obs: Observation, recount: => Long): Long =
     Try(Await.result(obs.future, 1.minute)).toOption
       .filter(_.length > 0).map(_.getLong(0))
       .getOrElse(recount)

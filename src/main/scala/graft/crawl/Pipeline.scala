@@ -145,8 +145,11 @@ object Pipeline {
     // the merge contract takes new entries all inside [start, end]
     val events = parsed.filter(col("starts_at").between(lit(start), lit(end)))
     // staged once: the ICS render below and the caller's cache write both
-    // consume it, and each would re-run the parse and the merge
-    val merged = graft.operators.Merge.mergeCalendarReplaceInRange(cache, events, start, end)
+    // consume it, and each would re-run the parse and the merge. One
+    // partition sorted in place gives the cache file the merge's
+    // (starts_at, id) order without a range-partitioning sample job
+    val merged = graft.operators.Merge.calendarReplaceInRange(cache, events, start, end)
+      .coalesce(1).sortWithinPartitions(col("starts_at"), col("id"))
       .localCheckpoint(eager = false)
     // the ICS takes the in-range rows unsorted: it puts its collected
     // blocks in the output order on the driver, no range-partitioned sort

@@ -2,7 +2,8 @@ package graft.crawl
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /**
  * Iceberg-STYLE snapshot convention over Parquet (no Iceberg runtime jar is
@@ -29,8 +30,13 @@ object Snapshots {
       tables: Map[String, DataFrame], cfg: Crawl.Config,
       failures: Map[String, String] = Map.empty): Unit = {
     val vdir = Paths.get(dir, "snapshots", s"v$wave")
-    tables.foreach { case (name, df) =>
-      df.write.mode("overwrite").parquet(vdir.resolve(name).toString)
+    // each table's row count is observed on its write; the fallback
+    // recount pins the schema, as an empty write may leave no part file
+    val rowCounts = tables.toSeq.map { case (name, df) =>
+      val path = vdir.resolve(name).toString
+      val rows = Observation()
+      df.observe(rows, count(lit(1))).write.mode("overwrite").parquet(path)
+      name -> Crawl.observedRows(rows, spark.read.schema(df.schema).parquet(path).count())
     }
     // jackson-rendered (site messages are free text — hand-quoting would
     // break the manifest on the first embedded quote)
@@ -39,7 +45,7 @@ object Snapshots {
     pinned(cfg).foreach { case (k, v) =>
       node.set[JsonNode](k, graft.sinks.SiteJson.mapper.valueToTree[JsonNode](v)) }
     val counts = node.putObject("row_counts")
-    tables.foreach { case (n, df) => counts.put(n, df.count()) }
+    rowCounts.foreach { case (n, rows) => counts.put(n, rows) }
     // mid-crawl retry-exhausted sites: their state rows are already
     // filtered out of posts/seen above; the record here lets a RESUMED run
     // keep reporting (and excluding) them

@@ -146,9 +146,9 @@ object Dedup {
    * here while its Jaccard vs the long doc is ~0 — the case
    * [[ngramJaccardPairs]] structurally cannot catch.
    *
-   * Scale shape (the decontamination deployment: corpus >> probe): with
-   * `broadcastProbe` on (default), the probe's hashed shingles ride to
-   * every executor and the CORPUS SIDE NEVER SHUFFLES before the pair
+   * Scale shape (the decontamination deployment: corpus >> probe): the
+   * probe's hashed shingles ride to every executor as a broadcast, so
+   * the CORPUS SIDE NEVER SHUFFLES before the pair
    * aggregation — one corpus scan, map-side hash join, then a shuffle of
    * matched (corpus_id, probe_id) pairs only. The df-cut (same hot-shingle
    * guard as q26, applied to BOTH sides and to the probe denominator)
@@ -159,8 +159,7 @@ object Dedup {
   def containmentPairs(
       corpus: DataFrame, corpusId: String, corpusText: String,
       probe: DataFrame, probeId: String, probeText: String,
-      n: Int, threshold: Double, maxShingleFreq: Long = 0L,
-      broadcastProbe: Boolean = true): DataFrame = {
+      n: Int, threshold: Double, maxShingleFreq: Long = 0L): DataFrame = {
     val ch = corpus.select(col(corpusId).as("corpus_id"),
       explode(shingleHashes(col(corpusText), n)).as("shingle_h"))
     val hot = ch.groupBy("shingle_h").count()
@@ -171,13 +170,12 @@ object Dedup {
     // join) — stage it once; the corpus-side explode stays lazy on purpose
     // (at decontamination scale, re-running a map-side scan is cheaper
     // than materializing a corpus-sized shingle table)
-    val pf0 = probe.select(col(probeId).as("probe_id"),
+    val pf = probe.select(col(probeId).as("probe_id"),
       explode(shingleHashes(col(probeText), n)).as("shingle_h"))
       .join(broadcast(hot), Seq("shingle_h"), "left_anti")
       .localCheckpoint()
-    val pf = if (broadcastProbe) broadcast(pf0) else pf0
-    val np = pf0.groupBy("probe_id").agg(count(lit(1)).as("np"))
-    val inter = cf.join(pf, Seq("shingle_h"))
+    val np = pf.groupBy("probe_id").agg(count(lit(1)).as("np"))
+    val inter = cf.join(broadcast(pf), Seq("shingle_h"))
       .filter(col("corpus_id") =!= col("probe_id"))
       .groupBy("probe_id", "corpus_id").agg(count(lit(1)).as("inter"))
     inter.join(broadcast(np), Seq("probe_id"))

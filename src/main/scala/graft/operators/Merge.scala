@@ -216,6 +216,11 @@ object Merge {
    * date-partitioned state table only in-range partitions are rewritten.
    */
   def mergeCalendarReplaceInRange(
+      oldDf: DataFrame, newDf: DataFrame, start: Timestamp, end: Timestamp): DataFrame =
+    calendarReplaceInRange(oldDf, newDf, start, end).orderBy(col("starts_at"), col("id"))
+
+  /** [[mergeCalendarReplaceInRange]]'s rows without its global order. */
+  def calendarReplaceInRange(
       oldDf: DataFrame, newDf: DataFrame, start: Timestamp, end: Timestamp): DataFrame = {
     val dedupNew =
       if (newDf.columns.contains("seq")) {
@@ -228,7 +233,6 @@ object Merge {
     val keptOld = oldDf.filter(!col("starts_at").between(lit(start), lit(end)))
       .join(dedupNew.select("id"), Seq("id"), "left_anti")
     keptOld.unionByName(dedupNew.select(keptOld.columns.map(col): _*))
-      .orderBy(col("starts_at"), col("id"))
   }
 
   /** Calendar output filter (mod.rs:258-266): in-range, newest-first. */

@@ -4,7 +4,8 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.functions.TextKernel
 import graft.model.{CalendarEvent, Post}
@@ -16,10 +17,11 @@ import graft.model.{CalendarEvent, Post}
  *  - per-site JSON (cli/src/main.rs:202-213);
  *  - JSON-lines crawl report (cli/src/main.rs:300-340).
  *
- * Formatting is pure Scala over already-shaped rows. The per-site feeds
- * render in one narrow pass over posts already clustered by site
- * ([[Feeds]]), and each writes one file per site via
- * partitionBy(site_id) — at fleet scale sites are independent partitions.
+ * Formatting is pure Scala over already-shaped rows. Both per-site feeds
+ * render from the typed [[Post]] rows, like the reference renders from its
+ * post records, in one narrow pass over posts already clustered by site
+ * ([[Feeds]]); each writes one file per site via partitionBy(site_id) — at
+ * fleet scale sites are independent partitions.
  */
 object Rss {
 
@@ -77,11 +79,6 @@ object Rss {
     sb.append("</channel></rss>")
     sb.toString
   }
-
-  /** One site's channel over its posts' `to_json` rows, newest first. */
-  def channel(site: String, postJsonsNewestFirst: Seq[String]): String =
-    channelXml(site, s"https://$site", s"$site notices",
-      postJsonsNewestFirst.map(SiteJson.postFromJson))
 
   /** Write one feed file per site, like [[SiteJson.write]]. */
   def write(perSiteXml: DataFrame, outDir: String): Unit =
@@ -161,37 +158,6 @@ object SiteJson {
     m
   }
 
-  /** Rehydrate a Post from Spark's to_json output (the RSS channel's items). */
-  def postFromJson(json: String): Post = {
-    val n = mapper.readTree(json)
-    def opt(f: String): Option[String] =
-      if (n.has(f) && !n.get(f).isNull) Some(n.get(f).asText()) else None
-    def ts(f: String): Option[Timestamp] =
-      opt(f).map(v => Timestamp.from(java.time.OffsetDateTime.parse(v).toInstant))
-    import scala.jdk.CollectionConverters._
-    val cats =
-      if (n.has("category")) n.get("category").elements().asScala.map(_.asText()).toSeq
-      else Seq.empty
-    val atts =
-      if (n.has("attachments"))
-        n.get("attachments").elements().asScala.map { a =>
-          graft.model.Attachment(a.get("url").asText(),
-            if (a.has("name") && !a.get("name").isNull) Some(a.get("name").asText()) else None,
-            if (a.has("mime_type") && !a.get("mime_type").isNull) Some(a.get("mime_type").asText()) else None)
-        }.toSeq
-      else Seq.empty
-    Post(
-      site_id = n.get("site_id").asText(), id = n.get("id").asText(),
-      url = n.get("url").asText(), author = opt("author"),
-      title = n.get("title").asText(), description = opt("description"),
-      category = cats,
-      created_at = ts("created_at").getOrElse(new Timestamp(0)),
-      updated_at = ts("updated_at"),
-      thumbnail = opt("thumbnail"),
-      content = if (n.has("content")) n.get("content").asText() else "",
-      attachments = atts, metadata = None)
-  }
-
   /**
    * serde_json::to_string_pretty layout (the reference's per-site cache
    * emitter, cli main.rs:269-301 uses exactly this): 2-space indent,
@@ -216,68 +182,59 @@ object SiteJson {
     } else n.toString
   }
 
-  // SsufidPost serde field order (post.rs:23-41) — no skip_serializing_if
-  // anywhere, so serde_json emits EVERY field, None as `null`
-  private val PostFieldOrder = Seq("id", "url", "author", "title", "description",
-    "category", "created_at", "updated_at", "thumbnail", "content",
-    "attachments", "metadata")
-  private val AttachmentFieldOrder = Seq("url", "name", "mime_type")
+  // time's RFC3339 formatter (the reference's serde format for SsufidPost
+  // timestamps) omits an all-zero subsecond part; a post carries at most
+  // millisecond precision into the feed
+  private val Rfc3339Seconds = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")
+    .withZone(ZoneOffset.UTC)
 
-  /** Spark's to_json drops null fields and stamps `.000` second fractions;
-    * serde_json::to_string_pretty emits every SsufidPost field (None ->
-    * null, post.rs has no skip_serializing_if) in declaration order, and
-    * time's RFC3339 formatter omits an all-zero subsecond part. Rebuild
-    * the item node to that exact shape. */
-  private def serdeShapedItem(postJson: String): com.fasterxml.jackson.databind.JsonNode = {
-    def rfc3339(n: com.fasterxml.jackson.databind.JsonNode) =
-      if (n == null || n.isNull) n
-      else new com.fasterxml.jackson.databind.node.TextNode(
-        n.asText().replaceFirst("\\.0+Z$", "Z"))
-    val src = mapper.readTree(postJson)
-    val item = mapper.createObjectNode()
-    PostFieldOrder.foreach { f =>
-      val v = src.get(f) match {
-        case null => com.fasterxml.jackson.databind.node.NullNode.getInstance()
-        case n if f == "created_at" || f == "updated_at" => rfc3339(n)
-        case n if f == "attachments" =>
-          val arr = mapper.createArrayNode()
-          n.elements().forEachRemaining { a =>
-            val att = mapper.createObjectNode()
-            AttachmentFieldOrder.foreach(af => att.set[com.fasterxml.jackson.databind.JsonNode](
-              af, Option(a.get(af)).getOrElse(
-                com.fasterxml.jackson.databind.node.NullNode.getInstance())))
-            arr.add(att)
-          }
-          arr
-        case n => n
-      }
-      item.set[com.fasterxml.jackson.databind.JsonNode](f, v)
+  private def rfc3339(ts: Timestamp): String = {
+    val at = Instant.ofEpochMilli(ts.getTime)
+    val millis = at.getNano / 1000000
+    Rfc3339Seconds.format(at) + (if (millis == 0) "" else f".$millis%03d") + "Z"
+  }
+
+  /** One item in exact SsufidPost serde shape: every field in declaration
+    * order (post.rs:23-41 has no skip_serializing_if, so serde_json emits
+    * each one, None as `null`), attachments likewise (post.rs:6-10). */
+  private def item(p: Post): ObjectNode = {
+    val n = mapper.createObjectNode()
+    n.put("id", p.id)
+    n.put("url", p.url)
+    n.put("author", p.author.orNull)
+    n.put("title", p.title)
+    n.put("description", p.description.orNull)
+    val cats = n.putArray("category")
+    p.category.foreach(c => cats.add(c))
+    n.put("created_at", rfc3339(p.created_at))
+    n.put("updated_at", p.updated_at.map(rfc3339).orNull)
+    n.put("thumbnail", p.thumbnail.orNull)
+    n.put("content", p.content)
+    val atts = n.putArray("attachments")
+    p.attachments.foreach { a =>
+      atts.addObject().put("url", a.url).put("name", a.name.orNull)
+        .put("mime_type", a.mime_type.orNull)
     }
-    item
+    p.metadata match {
+      case Some(m) =>
+        val meta = n.putObject("metadata")
+        m.foreach { case (k, v) => meta.put(k, v) }
+      case None => n.putNull("metadata")
+    }
+    n
   }
 
-  /** `(site_id, rank, post_json)` rows: each post as Spark's `to_json` of
-    * its columns other than `rank`, the form both feeds render from. */
-  private[sinks] def postJsonRows(posts: DataFrame): Dataset[(String, Long, String)] = {
-    import posts.sparkSession.implicits._
-    posts.select(col("site_id"), col("rank"), to_json(struct(
-      posts.columns.filter(_ != "rank").map(col): _*)).as("post_json"))
-      .as[(String, Long, String)]
-  }
-
-  /** One site's payload over its posts' `to_json` rows, newest first:
-    * the cli main.rs:202-213 shape {title, source, description, items},
+  /** One site's payload over its posts, newest first: the cli
+    * main.rs:202-213 shape {title, source, description, items},
     * PRETTY-printed byte-for-byte like the reference's
-    * serde_json::to_string_pretty output, items in exact SsufidPost serde
-    * shape (declaration field order, None as null, RFC3339 timestamps
-    * without zero fractions). */
-  def document(site: String, postJsonsNewestFirst: Seq[String]): String = {
+    * serde_json::to_string_pretty output. */
+  def document(site: String, postsNewestFirst: Seq[Post]): String = {
     val root = mapper.createObjectNode()
     root.put("title", site)
     root.put("source", s"https://$site")
     root.put("description", s"$site notices")
     val arr = root.putArray("items")
-    postJsonsNewestFirst.foreach(j => arr.add(serdeShapedItem(j)))
+    postsNewestFirst.foreach(p => arr.add(item(p)))
     pretty(root)
   }
 
@@ -307,20 +264,21 @@ object Feeds {
   /** `(site_id, site_json, rss_xml)`, one row per site with any post. */
   def perSite(clusteredPosts: DataFrame, k: Int): DataFrame = {
     import clusteredPosts.sparkSession.implicits._
-    SiteJson.postJsonRows(clusteredPosts)
+    clusteredPosts.as[Post]
       .mapPartitions { rows =>
         val in = rows.buffered
         new Iterator[(String, String, String)] {
           def hasNext: Boolean = in.hasNext && k > 0
           def next(): (String, String, String) = {
-            val site = in.head._1
-            val newest = new java.util.ArrayDeque[String](k + 1)
-            while (in.hasNext && in.head._1 == site) {
-              newest.addFirst(in.next()._3)
+            val site = in.head.site_id
+            val newest = new java.util.ArrayDeque[Post](k + 1)
+            while (in.hasNext && in.head.site_id == site) {
+              newest.addFirst(in.next())
               if (newest.size > k) newest.removeLast()
             }
-            val items = newest.toArray(new Array[String](0)).toSeq
-            (site, SiteJson.document(site, items), Rss.channel(site, items))
+            val posts = newest.toArray(new Array[Post](0)).toSeq
+            (site, SiteJson.document(site, posts),
+              Rss.channelXml(site, s"https://$site", s"$site notices", posts))
           }
         }
       }

@@ -88,13 +88,17 @@ object StreamingMerge {
   /** Generic snapshot read with the narrow first-run semantics above. The
     * path is probed rather than a failed read caught: a failed analysis
     * also reaches the session's query listeners, which report it as an
-    * error of their own. */
+    * error of their own. A snapshot that holds data files reads with
+    * `empty`'s schema, so no job infers it; one without any reads
+    * schemaless and fails analysis rather than pass for a first run. */
   private[graft] def readSnapshotOr(spark: SparkSession, dir: String)(
       empty: => DataFrame): DataFrame = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) spark.read.parquet(dir)
-    else {
+    if (fs.exists(path)) {
+      if (holdsDataFiles(fs, path)) spark.read.schema(empty.schema).parquet(dir)
+      else spark.read.parquet(dir)
+    } else {
       val leftovers = fs.globStatus(new org.apache.hadoop.fs.Path(dir + ".old*"))
       require(leftovers == null || leftovers.isEmpty,
         s"cache $dir missing but swap leftovers exist " +
@@ -103,6 +107,17 @@ object StreamingMerge {
       empty
     }
   }
+
+  /** Whether `dir` holds a file a Spark read would scan: one whose path
+    * below `dir` has no `_` or `.` component (markers, checksums and
+    * uncommitted task output do). */
+  private def holdsDataFiles(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path): Boolean =
+    fs.listStatus(dir).exists { st =>
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".") &&
+        (st.isFile || holdsDataFiles(fs, st.getPath))
+    }
 
   final case class SeenKey(site_id: String, id: String)
   final case class SeenState(content_hash: Long)

@@ -38,4 +38,8 @@ class NoEnvSwitchesSpec extends AnyFunSuite {
   test("graft.sources, graft.parse and graft.functions read no environment switches") {
     assertNoEnvReads(Seq("sources", "parse", "functions").flatMap(scalaFiles), atLeast = 10)
   }
+
+  test("the scaling bench worker reads no environment switches") {
+    assertNoEnvReads(scalaFiles("BenchWorker.scala"), atLeast = 1)
+  }
 }

@@ -32,6 +32,30 @@ class WaveCountsSpec extends SparkSuite {
 
   private val two = Seq("biz.ssu.ac.kr", "bioinfo.ssu.ac.kr")
 
+  test("a snapshot crawl starts no count job from Snapshots") {
+    // a query execution is described by its action's call site (its jobs
+    // are not: adaptive query stages start them from another thread)
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+              if s.description.startsWith("count at Snapshots.scala") =>
+            counts.add(s.description)
+          case _ =>
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (_, rows) = try {
+      val r = crawl(Crawl.Config(scale = 60, limitPerSite = 20, include = two,
+        probePagination = false))
+      awaitQuiet(counts.size.toLong)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(rows === "0,2,22,2,1;20,24,12,24,2;32,36,0,36,3")
+    assert(counts.isEmpty, counts)
+  }
+
   test("observed counts: fleet crawl whose last wave discovers no links") {
     val (r, counts) = crawl(Crawl.Config(scale = 200, limitPerSite = 50))
     assert(tally(r) === "0,86,0,86;1,717,3,714")

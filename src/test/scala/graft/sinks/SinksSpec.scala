@@ -98,17 +98,41 @@ class SinksSpec extends SparkSuite {
     assert(at("T5") < at("T4") && at("T4") < at("T3") && at("T2") === -1)
     assert(j.contains("\"items\": [") && j.indexOf("p5") < j.indexOf("p3") &&
       !j.contains("\"p2\""))
-    // reference: each site's collected rows, newest (highest rank) first,
+    // reference: each site's collected posts, newest (highest rank) first,
     // cut to k, rendered by the per-site document and channel builders
     val reference = twoSites
-      .select(col("site_id"), col("rank"),
-        to_json(struct(twoSites.columns.filter(_ != "rank").map(col): _*)))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
-      .groupBy(_._1).toSeq.sortBy(_._1).map { case (site, rows) =>
-        val items = rows.sortBy(-_._2).take(3).map(_._3)
-        (site, SiteJson.document(site, items), Rss.channel(site, items))
+      .select(struct(twoSites.columns.filter(_ != "rank").map(col): _*), col("rank"))
+      .as[(Post, Long)].collect().toSeq
+      .groupBy(_._1.site_id).toSeq.sortBy(_._1).map { case (site, rows) =>
+        val items = rows.sortBy(-_._2).take(3).map(_._1)
+        (site, SiteJson.document(site, items),
+          Rss.channelXml(site, s"https://$site", s"$site notices", items))
       }
     assert(rendered === reference)
+  }
+
+  test("the feed render reads typed posts: no JSON encode in its plan") {
+    import org.apache.spark.sql.catalyst.expressions.{Literal, StructsToJson}
+    import org.apache.spark.sql.catalyst.expressions.json.StructsToJsonEvaluator
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val df = Seq(basicPost).toDF().withColumn("rank", lit(1L))
+    val plan = Feeds.perSite(graft.operators.Merge.clusterBySite(df), 1)
+      .queryExecution.optimizedPlan
+    // to_json is runtime-replaceable: the optimizer leaves an invoke of
+    // its evaluator, a literal, in place of the StructsToJson node
+    val encodes = plan.map(_.expressions.map(_.collect {
+      case j: StructsToJson => j
+      case l @ Literal(_: StructsToJsonEvaluator, _) => l
+    }.size).sum).sum
+    assert(encodes === 0, plan.treeString)
+  }
+
+  test("a post without created_at fails the render instead of dating it 1970") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val df = Seq(basicPost.copy(created_at = null)).toDF().withColumn("rank", lit(1L))
+    intercept[org.apache.spark.SparkException](feeds(df, 1))
   }
 
   test("per-site JSON golden: serde_json::to_string_pretty layout byte-for-byte (main.rs:269-301)") {

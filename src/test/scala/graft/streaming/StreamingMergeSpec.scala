@@ -62,6 +62,32 @@ class StreamingMergeSpec extends SparkSuite {
     }
   }
 
+  test("readSnapshotOr: a live snapshot reads with the given schema and starts no job") {
+    val dir = Files.createTempDirectory("graft-snapshot-jobs").toString
+    val empty = Seq.empty[(Long, String)].toDF("k", "v")
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.partitionBy("v").parquet(s"$dir/live")
+    // jobs are tagged through a local property of this thread
+    val key = "graft.test.snapshot"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(key) == tag) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val live = try {
+      spark.sparkContext.setLocalProperty(key, tag)
+      try StreamingMerge.readSnapshotOr(spark, s"$dir/live")(empty)
+      finally spark.sparkContext.setLocalProperty(key, null)
+    } finally {
+      awaitQuiet(jobs.get)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get === 0)
+    assert(live.columns.toSeq === Seq("k", "v"))
+    assert(live.as[(Long, String)].collect().sorted.toSeq === Seq((1L, "a"), (2L, "b")))
+  }
+
   test("swapSnapshot: a rename that returns false fails the swap and keeps the old snapshot") {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.stuckrename.impl", classOf[StuckRenameFileSystem].getName)

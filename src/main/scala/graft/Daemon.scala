@@ -1,7 +1,7 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.crawl.{Crawl, Pipeline}
 
@@ -31,14 +31,15 @@ import graft.crawl.{Crawl, Pipeline}
  * content events and owns every write.
  *
  * Every table of the cycle is computed once, and no job exists only to
- * feed a driver-side sort or count or to infer a known schema. A warm
- * cycle at `--limit 30 --scale 1000` over ten sites (4 cores) runs 38
- * Spark jobs: 11 for the two-wave crawl, 11 for the merge (the staged
- * batch, the merge join with its windows, the clustered layout), 1 for
- * the events, 2 feed writes from one render, 5 report writes (3 of them
- * the crawl lineage, one aggregation over both waves), 4 for the
- * calendar (its merge and the ICS collect), 2 cache writes and the
- * markdown report's one collect (2 jobs).
+ * feed a driver-side sort or count or to infer a known schema. The
+ * driver-sized outputs (the reports' events, SUMMARY.md, the ICS) render
+ * on the driver from one collect each. A warm cycle at `--limit 30
+ * --scale 1000` over ten sites (4 cores) runs 35 Spark jobs: 11 for the
+ * two-wave crawl, 10 for the merge (the staged batch, the merge join
+ * with its windows, the clustered layout), 1 to collect the events, 2
+ * feed writes from one render, 5 report writes (3 of them the crawl
+ * lineage, one aggregation over both waves), 4 for the calendar (its
+ * merge and the ICS collect) and 2 cache writes.
  */
 object Daemon {
 
@@ -155,22 +156,11 @@ object Daemon {
     // reporting, the cache is untouched (reference: every plugin failed ->
     // error tally only, main.rs:118-125)
     if (liveSiteIds.isEmpty) {
-      val failEvents = failedSites.toSeq
-        .map { case (site, e) => (site, "crawl_failed", null: String, e.getMessage, null: String) }
-        .toDF("site_id", "event", "post_id", "title", "url")
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"${opts.out}/reports"))
-      graft.sinks.Report.write(failEvents, s"${opts.out}/reports/content_report")
-      failedSites.toSeq.map { case (site, e) => (site, e.getMessage) }
-        .toDF("site_id", "error")
-        .write.mode("overwrite").json(s"${opts.out}/reports/error_report")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"${opts.out}/reports/SUMMARY.md"),
-        graft.sinks.Publish.markdownReport(failEvents))
+      val events = writeReports(spark, opts.out, Seq.empty, Seq.empty, failedSites)
       val empty = Pipeline.emptyCache(spark)
       return RunResult(
         Pipeline.Output(empty, cache, spark.emptyDataFrame,
-          spark.emptyDataFrame, failEvents,
+          spark.emptyDataFrame, events,
           spark.emptyDataFrame, spark.emptyDataFrame, empty, Seq.empty),
         failedSites)
     }
@@ -186,21 +176,6 @@ object Daemon {
     // merge into the cache and render the crawled sites' feeds
     val out = Pipeline.runDaemon(cfg, crawl, cache, opts.now, opts.limit.toInt)
 
-    // crawl_success (one per successfully crawled site — the reference
-    // emits it per finished plugin, core/mod.rs:53-87) and crawl_failed
-    // events join the content events (reference writes both the content
-    // report and the error report, main.rs:300-340)
-    val statusEvents = (
-      out.touchedSites
-        .map(site => (site, "crawl_success", null: String, null: String, null: String)) ++
-      allFailed.toSeq
-        .map { case (site, e) => (site, "crawl_failed", null: String, e.getMessage, null: String) })
-      .toDF("site_id", "event", "post_id", "title", "url")
-    // checkpointed like the touched cache: the event rows read the touched
-    // cache partitions, which the dynamic overwrite below REPLACES — a lazy
-    // plan would dangle on the pre-overwrite file listing
-    val events = out.events.unionByName(statusEvents).localCheckpoint()
-
     // sinks (cli main.rs:192-243 layout). DYNAMIC partition overwrite:
     // this run's sinks cover only the crawled sites, and a reused out/ dir
     // must keep the uncrawled sites' last-good files (the reference's
@@ -208,11 +183,10 @@ object Daemon {
     // STATIC mode would truncate the whole sites/ and rss/ trees first
     graft.sinks.SiteJson.write(out.siteJson, s"${opts.out}/sites")
     graft.sinks.Rss.write(out.rss, s"${opts.out}/rss")
-    graft.sinks.Report.write(events, s"${opts.out}/reports/content_report")
-    allFailed.toSeq
-      .map { case (site, e) => (site, e.getMessage) }
-      .toDF("site_id", "error")
-      .write.mode("overwrite").json(s"${opts.out}/reports/error_report")
+    // collected before the cache overwrite below: the event rows read the
+    // touched cache partitions, which that dynamic overwrite REPLACES
+    val events = writeReports(spark, opts.out,
+      out.events.as[Event].collect().toSeq, out.touchedSites, allFailed)
     crawl.lineage.write.mode("overwrite").json(s"${opts.out}/reports/lineage")
 
     // calendar path
@@ -245,12 +219,6 @@ object Daemon {
       s"${opts.cache}_calendar", s"${opts.cache}_calendar_next",
       opts.now.getTime.toString)
 
-    // analyze-report markdown summary (action.yml:38-77 — the step-summary
-    // payload; also the Slack block content, which is network-bound and out
-    // of engine scope)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"${opts.out}/reports/SUMMARY.md"),
-      graft.sinks.Publish.markdownReport(events))
     // publish (K6): commit out/* + the cache into the data repository
     // ("update: YYYY-MM-DD HH:MM", no-op when the tree is unchanged —
     // daemon.yml:127-143)
@@ -265,6 +233,36 @@ object Daemon {
     }
 
     RunResult(out.copy(events = events), allFailed)
+  }
+
+  /** A report row: (site_id, event, post_id, title, url). */
+  private type Event = (String, String, String, String, String)
+
+  /**
+   * The run's reports, written here for both exits: `content_report` (the
+   * merge's content events, then crawl_success per crawled site — the
+   * reference emits it per finished plugin, core/mod.rs:53-87 — and
+   * crawl_failed per failed site), `error_report` (main.rs:300-340) and
+   * the analyze-report SUMMARY.md (action.yml:38-77 — the step-summary
+   * payload; also the Slack block content, which is network-bound and out
+   * of engine scope). Returns the events as a local relation.
+   */
+  private def writeReports(spark: SparkSession, outDir: String,
+      contentEvents: Seq[Event], crawledSites: Seq[String],
+      failed: Map[String, Throwable]): DataFrame = {
+    import spark.implicits._
+    val events = (contentEvents ++
+      crawledSites.map(site => (site, "crawl_success", null: String, null: String, null: String)) ++
+      failed.toSeq.map { case (site, e) =>
+        (site, "crawl_failed", null: String, e.getMessage, null: String) })
+      .toDF("site_id", "event", "post_id", "title", "url")
+    graft.sinks.Report.write(events, s"$outDir/reports/content_report")
+    failed.toSeq.map { case (site, e) => (site, e.getMessage) }
+      .toDF("site_id", "error")
+      .write.mode("overwrite").json(s"$outDir/reports/error_report")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/reports/SUMMARY.md"),
+      graft.sinks.Publish.markdownReport(events))
+    events
   }
 
   def main(args: Array[String]): Unit = {

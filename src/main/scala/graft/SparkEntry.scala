@@ -508,7 +508,7 @@ object SparkEntry {
     // Structured Streaming query over a watched frontier directory;
     // equality with the batch crawl asserted in StreamingCrawlSpec ----
     "q49_streaming_crawl" -> { (s, _) =>
-      val dir = scratchDir("graft-scrawl-q")
+      val dir = graft.crawl.TempDirs.create("graft-scrawl-q")
       val r = withStreamShuffle(s)(graft.streaming.StreamingCrawl.run(s,
         graft.crawl.Crawl.Config(scale = 60, limitPerSite = 10), dir))
       r.posts.groupBy("site_id").agg(count(lit(1)).as("n_posts"))
@@ -524,7 +524,7 @@ object SparkEntry {
     "q58_streaming_sessions" -> { (s, dir) =>
       import s.implicits._
       import graft.streaming.{SessEvent, StreamingSessions}
-      val tmp = scratchDir("graft-ssess-q")
+      val tmp = graft.crawl.TempDirs.create("graft-ssess-q")
       // one parquet dir per intended micro-batch; mtimes staggered so the
       // file source's (timestamp, path) order replays chronologically
       def stamp(dir: String, order: Int): Unit = {
@@ -594,7 +594,7 @@ object SparkEntry {
     // Output carries (fp, text) only: whichever duplicate row wins, the
     // emitted columns are identical, so the result is order-independent. ----
     "q88_streaming_dedup" -> { (s, dir) =>
-      val tmp = scratchDir("graft-sdedup-q")
+      val tmp = graft.crawl.TempDirs.create("graft-sdedup-q")
       def stamp(dir: String, order: Int): Unit = {
         val t = java.nio.file.attribute.FileTime.fromMillis(1000000000000L + order * 60000L)
         val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
@@ -947,20 +947,6 @@ object SparkEntry {
 
   /** Daemon-production-shaped crawl config (limit 30, daemon.yml:26-29). */
   private val crawlCfg = graft.crawl.Crawl.Config(scale = 100, limitPerSite = 30)
-
-  /** Transient fixture dir for the streaming queries, tmpfs-backed when
-    * available (guide §6: the micro-batch input files, state stores and
-    * commit logs are RAM-transient scratch — putting them on /dev/shm
-    * removes per-trigger fsync/disk jitter; the crawl's wave stage-out
-    * already does this). Registered for JVM-exit cleanup. */
-  private def scratchDir(prefix: String): String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val base = if (java.nio.file.Files.isWritable(shm)) shm
-               else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    val dir = java.nio.file.Files.createTempDirectory(base, prefix)
-    graft.crawl.TempDirs.register(dir)
-    dir.toString
-  }
 
   /** q26, q51 and q52 all derive from the SAME exact-Jaccard pair table
     * (and q51/q52 from the same transitive clusters) — the "detect once,

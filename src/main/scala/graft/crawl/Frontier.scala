@@ -77,8 +77,9 @@ final case class RankedRow(site_id: String, kind: String, page: Int, row: Int,
     depth: Int, crawl_delay_ms: Int, url_hash: Long, host_hash: Long, ready_ms: Long)
 
 /**
- * JVM-wide registry of transient crawl work dirs, reclaimed by ONE shutdown
- * hook (registering a hook per Crawl.run would accumulate threads in
+ * JVM-wide registry of transient work dirs (the crawl's wave stage-out,
+ * the streaming queries' fixtures), reclaimed by ONE shutdown hook
+ * (registering a hook per Crawl.run would accumulate threads in
  * long-lived sessions). Deletion walks depth-first with the directory
  * stream closed eagerly (Files.walk in try/finally — Files.list left open
  * leaks an fd per directory during the recursive delete).
@@ -96,7 +97,20 @@ private[graft] object TempDirs {
       } catch { case _: Throwable => () }
     }
   }))
-  def register(dir: java.nio.file.Path): Unit = { hook; dirs.add(dir); () }
+
+  /** A fresh dir for transient work files, reclaimed at JVM exit: on tmpfs
+    * when `/dev/shm` is writable (RAM-backed scratch has no fsync or disk
+    * jitter; a cluster would use HDFS/S3 here), else under
+    * `java.io.tmpdir`. Not deleted earlier: result DataFrames may lazily
+    * re-read its files for the session's lifetime. */
+  def create(prefix: String): String = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    val base = if (java.nio.file.Files.isWritable(shm)) shm
+               else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    val dir = java.nio.file.Files.createTempDirectory(base, prefix)
+    hook; dirs.add(dir)
+    dir.toString
+  }
 }
 
 object Crawl {
@@ -275,21 +289,10 @@ object Crawl {
     import spark.implicits._
 
     val ssoBootstraps = spark.sparkContext.longAccumulator("sso_bootstraps")
-    // wave stage-out root: the snapshot dir when snapshotting, else a temp
-    // (tmpfs when available — wave files are transient and RAM-backed
-    // stage-out removes disk-IO jitter; a cluster would use HDFS/S3 here)
-    val workDir = cfg.snapshotDir.getOrElse {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      val base = if (java.nio.file.Files.isWritable(shm)) shm
-                 else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-      val dir = java.nio.file.Files.createTempDirectory(base, "graft-crawl-")
-      // transient stage-out is reclaimed at JVM exit — result DataFrames
-      // lazily re-read these files for the session's lifetime, so earlier
-      // deletion would break downstream consumers; without the cleanup
-      // every crawl leaks its wave files into tmpfs
-      TempDirs.register(dir)
-      dir.toString
-    }
+    // wave stage-out root: the snapshot dir when snapshotting, else a
+    // transient dir — without the exit cleanup every crawl would leak its
+    // wave files into tmpfs
+    val workDir = cfg.snapshotDir.getOrElse(TempDirs.create("graft-crawl-"))
     // the frontier is url-free inside the wave loop (UrlGrammar derives
     // the string from coordinates at the consumption edges); dropping the
     // column here normalizes every entry path — fresh seeds (which carry

@@ -124,9 +124,9 @@ object Pipeline {
    * inference ([[graft.parse.CalendarParser]], the full port of
    * ssu-academic-calendar lib.rs:104-271), merge replace-in-range against
    * the cache, render the in-range output to one ICS document (with real
-   * DTEND lines). Parsing is distributed (one task per year page);
-   * per-event VEVENT rendering is distributed too — the driver only
-   * concatenates the final block strings.
+   * DTEND lines). Parsing is distributed (one task per year page); the
+   * ICS, one string over a two-year calendar, renders on the driver from
+   * one collect.
    */
   def runCalendar(
       spark: SparkSession,
@@ -151,12 +151,12 @@ object Pipeline {
     val merged = graft.operators.Merge.calendarReplaceInRange(cache, events, start, end)
       .coalesce(1).sortWithinPartitions(col("starts_at"), col("id"))
       .localCheckpoint(eager = false)
-    // the ICS takes the in-range rows unsorted: it puts its collected
-    // blocks in the output order on the driver, no range-partitioned sort
-    val ics = graft.sinks.Ics.toIcsDistributed(
+    // that partition in reverse is calendarInRange's (starts_at desc, id
+    // desc) order: the merge keeps each id once, so no two rows tie
+    val ics = graft.sinks.Ics.toIcs(
       "SSU Academic Calendar", "https://scatch.ssu.ac.kr/학사일정", "학사일정",
       merged.filter(col("starts_at").between(lit(start), lit(end)))
-        .as[graft.model.CalendarEvent])
+        .as[graft.model.CalendarEvent].collect().reverse.toSeq)
     CalendarOutput(graft.operators.Merge.calendarInRange(merged, start, end), merged, ics)
   }
 }

@@ -27,9 +27,8 @@ import org.apache.spark.sql.functions._
  *
  * Scale design (100 TB cache, small per-batch crawl):
  *  - the exact merge is ONE full-outer shuffle join keyed by
- *    (site_id, id) — both sides hash-partitioned on the same key, so
- *    co-partitioned state tables (bucketed by site_id, id) make it
- *    shuffle-free on the cache side;
+ *    (site_id, id), then one site exchange for the post-join rank
+ *    windows;
  *  - [[mergeEntriesIncremental]] avoids rewriting the untouched cache: the
  *    (small) new batch's key set is broadcast as a join filter, only the
  *    touched slice of the cache enters the join, the rest is passed
@@ -80,16 +79,12 @@ object Merge {
       if (newDf.columns.contains("seq")) newDf
       else newDf.withColumn("seq", xxhash64(col("site_id"), col("id")))
 
-    // Stable processing order of the new batch: created_at, then arrival.
-    val newRanked = newSeq.withColumn("new_ord",
-      row_number().over(Window.partitionBy("site_id").orderBy(col("created_at"), col("seq"))))
-
     val o = oldRanked.select(
       (postCols :+ "rank").map(c => col(c).as(s"o_$c")): _*)
     // inserts only come from the new side, so the base rides on its rows
-    val newBased = rankBase.fold(newRanked)(b =>
-      newRanked.join(broadcast(b.select("site_id", "rank_base")), Seq("site_id"), "left"))
-    val n = newBased.select((postCols ++ Seq("new_ord") ++ rankBase.map(_ => "rank_base"))
+    val newBased = rankBase.fold(newSeq)(b =>
+      newSeq.join(broadcast(b.select("site_id", "rank_base")), Seq("site_id"), "left"))
+    val n = newBased.select((postCols ++ Seq("seq") ++ rankBase.map(_ => "rank_base"))
       .map(c => col(c).as(s"n_$c")): _*)
 
     val joined = o.join(n,
@@ -108,9 +103,11 @@ object Merge {
       else max(oc("rank")).over(Window.partitionBy(siteKey)),
       lit(0L))
     // Inserts keep the new batch's stable order after the old block:
-    // running count of inserts in new-batch order (nulls — old-only rows —
-    // sort first and contribute 0).
-    val wIns = Window.partitionBy(siteKey).orderBy(nc("new_ord").asc_nulls_first)
+    // running count of inserts in new-batch order, created_at then arrival
+    // (nulls — old-only rows — sort first and contribute 0). Ordering by
+    // the new side's own columns needs no ranking exchange before the join.
+    val wIns = Window.partitionBy(siteKey)
+      .orderBy(nc("created_at").asc_nulls_first, nc("seq").asc_nulls_first)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val insertRank = maxOldRank + sum(when(isInsert, 1L).otherwise(0L)).over(wIns)
 
@@ -177,19 +174,6 @@ object Merge {
     val r = mergeEntries(touched, batch, now, stageResult = true, rankBase = Some(maxRanks))
     MergeResult(untouched.select(r.posts.columns.map(col): _*).unionByName(r.posts), r.events)
   }
-
-  /**
-   * Persist the cache as a BUCKETED state table (hash-bucketed + sorted on
-   * the merge key): a catalog read of this table arrives already
-   * hash-distributed on (site_id, id), so the cache side of the MERGE join
-   * needs NO Exchange — at a 10^10-row cache that is the difference
-   * between shuffling the whole state every run or only the new batch.
-   */
-  def writeBucketedCache(posts: DataFrame, table: String, buckets: Int): Unit =
-    posts.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "site_id", "id")
-      .sortBy("site_id", "id")
-      .saveAsTable(table)
 
   /** The cache's canonical per-site layout: ONE exchange keyed by site_id,
     * then a (rank, id) sort inside each site. Each site is whole in one

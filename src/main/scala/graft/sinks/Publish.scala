@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Publish (K6): the reference's post-crawl CI step re-expressed as an
@@ -39,37 +40,29 @@ object Publish {
    * Exact layout of the reference's markdown step
    * (analyze-report/action.yml:59-77): header, success/fail counts, a
    * per-plugin section per created/updated group, or the "nothing changed"
-   * line. Aggregation runs in the engine (groupBy site/event — the jq
-   * `group_by(.span.plugin)` analog); only the per-site rendered sections
-   * are collected (bounded by the site fleet, not the post count).
+   * line. Every event's title and URL lands in the markdown, so the rows
+   * are collected once and counted and grouped on the driver (the jq
+   * `group_by(.span.plugin)` analog).
    */
   def markdownReport(events: DataFrame): String = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    // ONE collect of the per-(event, site) aggregate: the event counts and
-    // every section come from its rows.
+    import events.sparkSession.implicits._
+    val rows = events.select("event", "site_id", "post_id", "title", "url")
+      .as[(String, String, String, String, String)].collect().toSeq
+    def c(e: String): Long = rows.count(_._1 == e).toLong
     // One section per site: "### <site>\n> N new posts\n- [title](url)..."
     // (action.yml:67,72 jq template). The events table carries no emission
     // rank, so post order within a site is made DETERMINISTIC by a
     // numeric-aware post_id sort (length-then-value: "9" before "10";
-    // plain lexicographic would invert numeric ids)
-    val bySite = events
-      .groupBy(col("event"), col("site_id"))
-      .agg(count(lit(1)).as("n"),
-        array_sort(collect_list(struct(
-          length(col("post_id")).as("_len"), col("post_id"),
-          col("title"), col("url"))))
-          .as("posts"))
-      .select(col("event"), col("site_id"), col("n"),
-        concat_ws("\n", transform(col("posts"),
-          p => concat(lit("- ["), p.getField("title"), lit("]("),
-            p.getField("url"), lit(")")))).as("body"))
-      .as[(String, String, Long, String)].collect().toSeq
-    val counts = bySite.groupMapReduce(_._1)(_._3)(_ + _)
-    def c(e: String): Long = counts.getOrElse(e, 0L)
-    def sections(eventType: String, noun: String): Seq[String] = bySite
-      .filter(_._1 == eventType).sortBy(_._2)
-      .map { case (_, site, n, body) => s"### $site\n> $n $noun\n$body" }
+    // plain lexicographic would invert numeric ids); a post without a
+    // title or URL counts but renders no line
+    def sections(eventType: String, noun: String): Seq[String] = rows
+      .filter(_._1 == eventType).groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (site, posts) =>
+        val lines = posts.sorted(PostOrder).collect {
+          case (_, _, _, title, url) if title != null && url != null => s"- [$title]($url)"
+        }
+        s"### $site\n> ${posts.size} $noun\n${lines.mkString("\n")}"
+      }
 
     val sb = new StringBuilder
     sb ++= "# 컨텐츠 업데이트\n\n"
@@ -86,6 +79,19 @@ object Publish {
     if (c("post_created") == 0 && c("post_updated") == 0)
       sb ++= "_게시 혹은 변경된 공지가 없습니다._\n"
     sb.result()
+  }
+
+  // Spark's order for (character length of post_id, post_id, title, url):
+  // strings by UTF-8 bytes (UTF8String.compareTo), nulls first in each field
+  private val PostOrder: Ordering[(String, String, String, String, String)] = {
+    val str = Ordering.Option(Ordering.fromLessThan[String](
+      (a, b) => UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0))
+    Ordering.by[(String, String, String, String, String),
+        (Option[Int], Option[String], Option[String], Option[String])] {
+      case (_, _, id, title, url) =>
+        (Option(id).map(i => i.codePointCount(0, i.length)),
+          Option(id), Option(title), Option(url))
+    }(Ordering.Tuple4(Ordering.Option(Ordering.Int), str, str, str))
   }
 
   private def sha(parts: String*): String = {

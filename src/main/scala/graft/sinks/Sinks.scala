@@ -1,11 +1,10 @@
 package graft.sinks
 
-import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextKernel
 import graft.model.{CalendarEvent, Post}
@@ -108,46 +107,19 @@ object Ics {
     base :+ "END:VEVENT"
   }
 
-  /** Full VCALENDAR (ics.rs:7-29): PRODID, escaped headers, folded lines. */
+  /** Full VCALENDAR (ics.rs:7-29): PRODID, escaped headers, folded lines,
+    * one VEVENT per item in the given order. The document is one string,
+    * so it renders on the driver: the daemon hands it the calendar's
+    * in-range rows newest first ([[graft.crawl.Pipeline.runCalendar]]). */
   def toIcs(title: String, source: String, desc: String, items: Seq[CalendarEvent]): String = {
-    val lines = headerLines(title, source, desc) ++
+    val lines = Seq(
+      "BEGIN:VCALENDAR", "VERSION:2.0", "CALSCALE:GREGORIAN",
+      "PRODID:-//ssufid//calendar//KO",
+      s"X-WR-CALNAME:${TextKernel.icsEscape(title)}",
+      s"X-WR-CALDESC:${TextKernel.icsEscape(desc)}",
+      s"URL:$source") ++
       items.flatMap(eventLines) :+ "END:VCALENDAR"
     lines.map(TextKernel.icsFold).mkString("\r\n") + "\r\n"
-  }
-
-  private def headerLines(title: String, source: String, desc: String): Seq[String] = Seq(
-    "BEGIN:VCALENDAR", "VERSION:2.0", "CALSCALE:GREGORIAN",
-    "PRODID:-//ssufid//calendar//KO",
-    s"X-WR-CALNAME:${TextKernel.icsEscape(title)}",
-    s"X-WR-CALDESC:${TextKernel.icsEscape(desc)}",
-    s"URL:$source")
-
-  /**
-   * Same VCALENDAR document, but the per-event escape/fold rendering runs
-   * DISTRIBUTED (one folded VEVENT block per row); the driver collects the
-   * rendered blocks with their (starts_at, id) and concatenates them in the
-   * calendar output order, newest first ([[graft.operators.Merge.calendarInRange]])
-   * — byte-identical to [[toIcs]] over the same items in that order. The
-   * order is a driver-side sort of the collected blocks, not a distributed
-   * one: every block reaches the driver anyway.
-   */
-  def toIcsDistributed(
-      title: String, source: String, desc: String,
-      items: Dataset[CalendarEvent]): String = {
-    import items.sparkSession.implicits._
-    val blocks = items
-      .map(e => (e.starts_at, e.id, eventLines(e).map(TextKernel.icsFold).mkString("\r\n")))
-      .collect()
-      // starts_at desc, then id desc in Spark's string order (UTF-8 bytes)
-      .sortWith { case ((ta, ia, _), (tb, ib, _)) =>
-        val t = ta.compareTo(tb)
-        if (t != 0) t > 0
-        else java.util.Arrays.compareUnsigned(
-          ia.getBytes(UTF_8), ib.getBytes(UTF_8)) > 0
-      }
-      .map(_._3)
-    (headerLines(title, source, desc).map(TextKernel.icsFold) ++
-      blocks :+ TextKernel.icsFold("END:VCALENDAR")).mkString("\r\n") + "\r\n"
   }
 }
 

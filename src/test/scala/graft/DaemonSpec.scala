@@ -102,8 +102,9 @@ class DaemonSpec extends SparkSuite {
   // the feeds rendered in one pass and the driver-consumed sorts went,
   // 2 more before the crawl lineage became one aggregation, and 4 more
   // before the cache reads took their known schema and the calendar
-  // merge sorted in place
-  private val MaxWarmCycleJobs = 38
+  // merge sorted in place, and 3 more before the reports rendered from
+  // one events collect and the merge's insert order lost its exchange
+  private val MaxWarmCycleJobs = 35
 
   test("CLI option parsing mirrors the reference (mutually exclusive include/exclude)") {
     val o = Daemon.parseArgs(Array("--out", "/tmp/o", "--limit", "30",
@@ -161,6 +162,9 @@ class DaemonSpec extends SparkSuite {
     assert(res.pipeline.topPosts.count() === 0)
     assert(spark.read.parquet(s"$dir/cache").count() === cacheRows, "cache must be untouched")
     assert(spark.read.json(s"$dir/out2/reports/error_report").count() === 1)
+    val content = spark.read.json(s"$dir/out2/reports/content_report")
+      .select("site_id", "event").collect().map(r => (r.getString(0), r.getString(1)))
+    assert(content.toSeq === Seq(("biz.ssu.ac.kr", "crawl_failed")))
     val md = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$dir/out2/reports/SUMMARY.md"))
     assert(md.contains("0 성공, **1 실패**"))
@@ -190,7 +194,7 @@ class DaemonSpec extends SparkSuite {
       include = Seq("scatch.ssu.ac.kr", "biz.ssu.ac.kr"))
     Daemon.run(spark, opts)
 
-    // step summary written from the engine aggregation (action.yml:59-77)
+    // the analyze-report step summary (action.yml:59-77)
     val md = java.nio.file.Files.readString(
       java.nio.file.Paths.get(s"$dir/out/reports/SUMMARY.md"))
     assert(md.startsWith("# 컨텐츠 업데이트"))

@@ -4,10 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The crawl, operator, sink, streaming, source, parse and function layers
-  * and the daemon take their settings from `Crawl.Config`, `Daemon.Options`
-  * and call arguments only: no environment variable may select a code path
-  * there, so a measured A/B loser cannot come back as a hidden switch. */
+/** Every `src/main` file outside the frozen `Bench`/`Verify` harness and
+  * the `BenchExtra` side instrument takes its settings from `Crawl.Config`,
+  * `Daemon.Options` and call arguments only: no environment variable may
+  * select a code path there, so a measured A/B loser cannot come back as a
+  * hidden switch. */
 class NoEnvSwitchesSpec extends AnyFunSuite {
 
   private def scalaFiles(under: String): Seq[Path] = {
@@ -41,5 +42,10 @@ class NoEnvSwitchesSpec extends AnyFunSuite {
 
   test("the scaling bench worker reads no environment switches") {
     assertNoEnvReads(scalaFiles("BenchWorker.scala"), atLeast = 1)
+  }
+
+  test("the query table, the SQL extension and graft.model read no environment switches") {
+    assertNoEnvReads(Seq("SparkEntry.scala", "GraftExtensions.scala", "model")
+      .flatMap(scalaFiles), atLeast = 3)
   }
 }

@@ -160,11 +160,11 @@ class PlanAuditSpec extends SparkSuite {
     import scala.jdk.CollectionConverters._
     val all = plans.asScala.toSeq
     val feeds = all.filter { case (_, p) => p.contains(s"$dir/out/sites") || p.contains(s"$dir/out/rss") }
-    // the ICS render and the markdown report are the run's collects
+    // the ICS render and the reports' merge events are the run's collects
     val collects = all.filter(_._1 == "collect")
     assert(feeds.size === 2, all.map(_._1))
     assert(collects.exists(_._2.contains("starts_at")), "the ICS collect")
-    assert(collects.exists(_._2.contains("collect_list")), "the report collect")
+    assert(collects.exists(_._2.contains("_event")), "the report collect")
     (feeds ++ collects).foreach { case (name, p) =>
       assert(!p.toLowerCase.contains("rangepartitioning"), s"$name plan:\n$p")
     }

@@ -3,6 +3,7 @@ package graft.operators
 import java.sql.Timestamp
 import graft.SparkSuite
 import graft.model.Post
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class BucketedCacheSpec extends SparkSuite {
@@ -13,12 +14,21 @@ class BucketedCacheSpec extends SparkSuite {
     new Timestamp(Timestamp.valueOf("2026-01-01 00:00:00").getTime + id.toInt * 1000L),
     None, None, s"C$id", Seq.empty, None)
 
+  /** Persist posts as a table hash-bucketed and sorted on the merge key:
+    * a catalog read of it arrives hash-distributed on (site_id, id), so
+    * the cache side of the MERGE join needs no Exchange. */
+  private def writeBucketedCache(posts: DataFrame, table: String, buckets: Int): Unit =
+    posts.write.mode("overwrite").format("parquet")
+      .bucketBy(buckets, "site_id", "id")
+      .sortBy("site_id", "id")
+      .saveAsTable(table)
+
   test("bucketed cache table joins without an Exchange on the cache side") {
     val cache = Merge.mergeEntries(
       spark.emptyDataset[Post].toDF(),
       (1 to 200).map(i => post(i.toString)).toDF(), Timestamp.valueOf("2026-02-01 00:00:00"))
       .posts
-    Merge.writeBucketedCache(cache, "graft_cache_test", buckets = 4)
+    writeBucketedCache(cache, "graft_cache_test", buckets = 4)
     try {
       val bucketed = spark.table("graft_cache_test")
       val batch = (150 to 250).map(i => post(i.toString)).toDF()

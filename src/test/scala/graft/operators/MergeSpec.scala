@@ -150,6 +150,23 @@ class MergeSpec extends SparkSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
+  test("exact merge plan: one (site_id, id) exchange per join side and one site exchange " +
+      "for the rank windows") {
+    // a session of its own with AQE off, so the plan shows every exchange
+    val session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.enabled", "false")
+    val cache = session.createDataFrame((0 until 20).map(i => post(s"$i", i, s"T$i", s"C$i")))
+      .withColumn("rank", col("id").cast("long") + 1)
+    val batch = session.createDataFrame(Seq(
+      post("5", 100, "T5-upd", "C5-upd"), post("99", 101, "T99", "C99")))
+      .withColumn("seq", col("id").cast("long"))
+    val plan = Merge.mergeEntries(cache, batch, now).posts.queryExecution.executedPlan
+    val exchanges = plan.collect {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    assert(exchanges.size === 3, plan.treeString)
+  }
+
   test("topKPerSite returns newest-first top-K (mod.rs:142-147)") {
     val posts = (0 until 10).map(i => post(s"$i", i, s"T$i", s"C$i"))
     val ranked = Merge.mergeEntries(

@@ -39,6 +39,20 @@ class PublishSpec extends SparkSuite {
     assert(!md.contains("## 게시된 공지"))
   }
 
+  test("markdown report: post ids sort by length then value, Korean titles render unchanged") {
+    val md = Publish.markdownReport(events(
+      ("cse.ssu.ac.kr", "post_created", "100", "기말고사 일정", "https://cse.ssu.ac.kr/100"),
+      ("cse.ssu.ac.kr", "post_created", "10", "장학금 신청 안내", "https://cse.ssu.ac.kr/10"),
+      ("cse.ssu.ac.kr", "post_created", "9", "수강신청 공지", "https://cse.ssu.ac.kr/9"),
+      ("cse.ssu.ac.kr", "post_created", "11", "Exam", "https://cse.ssu.ac.kr/11")))
+    assert(md === "# 컨텐츠 업데이트\n\n0 성공, **0 실패**\n" +
+      "## 게시된 공지\n### cse.ssu.ac.kr\n> 4 new posts\n" +
+      "- [수강신청 공지](https://cse.ssu.ac.kr/9)\n" +
+      "- [장학금 신청 안내](https://cse.ssu.ac.kr/10)\n" +
+      "- [Exam](https://cse.ssu.ac.kr/11)\n" +
+      "- [기말고사 일정](https://cse.ssu.ac.kr/100)\n\n")
+  }
+
   test("publish: commit on change, no-op when clean, parent chain, vanished-file sweep") {
     val src = Files.createTempDirectory("graft-pub-src")
     val repo = Files.createTempDirectory("graft-pub-repo")

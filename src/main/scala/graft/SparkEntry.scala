@@ -525,52 +525,29 @@ object SparkEntry {
       import s.implicits._
       import graft.streaming.{SessEvent, StreamingSessions}
       val tmp = graft.crawl.TempDirs.create("graft-ssess-q")
-      // one parquet dir per intended micro-batch; mtimes staggered so the
-      // file source's (timestamp, path) order replays chronologically
-      def stamp(dir: String, order: Int): Unit = {
-        val t = java.nio.file.attribute.FileTime.fromMillis(1000000000000L + order * 60000L)
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        try walk.forEach(p => java.nio.file.Files.setLastModifiedTime(p, t))
-        finally walk.close()
-      }
-      // the slice never reaches the driver (the q88 pattern): chunk
-      // membership comes from the chronological rank, ONE distributed
-      // partitioned write emits every micro-batch dir, then the dirs are
-      // renamed into the watched layout and mtime-stamped. In-file row
-      // order is irrelevant to the event-time session semantics — only
-      // trigger MEMBERSHIP matters, and rank-chunking reproduces the
-      // previous grouped(67) slicing exactly ((ts, event_id) is unique).
+      // the slice never reaches the driver: chunk membership comes from
+      // the chronological rank. In-file row order is irrelevant to the
+      // event-time session semantics — only trigger MEMBERSHIP matters,
+      // and rank-chunking reproduces the previous grouped(67) slicing
+      // exactly ((ts, event_id) is unique).
       val slice = t(s, dir, "events").orderBy("ts", "event_id").limit(200)
         .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
           col("event_id"), col("value"))
+      // an unpartitioned window is one task, but it only ranks the 200
+      // rows left after the limit
       val wOrd = Window.orderBy("ts", "event_id")
-      slice
-        .withColumn("_b", floor((row_number().over(wOrd) - 1) / lit(67)).cast("long"))
-        .write.partitionBy("_b").parquet(s"$tmp/stage")
-      val stage58 = java.nio.file.Paths.get(s"$tmp/stage")
-      val in58 = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$tmp/in"))
-      val parts58 = java.nio.file.Files.list(stage58)
-      val nChunks58 = try {
-        var k = 0
-        parts58.filter(p => p.getFileName.toString.startsWith("_b=")).forEach { p =>
-          val i = p.getFileName.toString.stripPrefix("_b=").toInt
-          java.nio.file.Files.move(p, in58.resolve(s"b$i.parquet"))
-          k = math.max(k, i + 1)
-        }
-        k
-      } finally parts58.close()
-      (0 until nChunks58).foreach(i => stamp(s"$tmp/in/b$i.parquet", i))
+      val nChunks = stageStreamChunks(
+        slice.withColumn("_b", floor((row_number().over(wOrd) - 1) / lit(67)).cast("long")), tmp)
       // sentinel horizon from the 200-row STAGED slice (re-running the
       // slice plan would sort the events table a second time)
       val lastMs = s.read.parquet(
-          (0 until nChunks58).map(i => s"$tmp/in/b$i.parquet"): _*)
+          (0 until nChunks).map(i => s"$tmp/in/b$i.parquet"): _*)
         .agg(max(col("ts"))).head().getTimestamp(0).getTime
       (0 until 2).foreach { k =>
         s.createDataset(Seq(SessEvent(-1L,
           new Timestamp(lastMs + (k + 1) * 7200L * 1000L), 0L, 0.0)))
           .repartition(1).write.parquet(s"$tmp/in/z$k.parquet")
-        stamp(s"$tmp/in/z$k.parquet", 100 + k) }
+        stampMtime(s"$tmp/in/z$k.parquet", 100 + k) }
       val in = s.readStream.schema(s.read.parquet(s"$tmp/in/b0.parquet").schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$tmp/in/*")
         .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
@@ -595,41 +572,20 @@ object SparkEntry {
     // emitted columns are identical, so the result is order-independent. ----
     "q88_streaming_dedup" -> { (s, dir) =>
       val tmp = graft.crawl.TempDirs.create("graft-sdedup-q")
-      def stamp(dir: String, order: Int): Unit = {
-        val t = java.nio.file.attribute.FileTime.fromMillis(1000000000000L + order * 60000L)
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        try walk.forEach(p => java.nio.file.Files.setLastModifiedTime(p, t))
-        finally walk.close()
-      }
       // chunk so the micro-batch COUNT stays ~6 at any sf (the output is
       // winner-independent — it equals batch DISTINCT under any chunking —
       // but 50+ one-file triggers would spend the bench on trigger
       // overhead, not dedup); 97 exactly reproduces the sf0.01 layout
       val nDocs = t(s, dir, "documents").count()
       val chunk = math.max(97, math.ceil(nDocs / 6.0).toInt)
-      // the corpus never reaches the driver: ONE partitioned write emits
-      // every micro-batch dir (chunk id from the doc_id rank), then the
-      // dirs are renamed into the watched layout and mtime-stamped
-      val wByDoc = Window.orderBy("doc_id")
-      t(s, dir, "documents")
+      // the corpus never reaches the driver and no window ranks it: the
+      // chunk id comes from doc_id ranges (doc_id is dense 0..n-1, so this
+      // is the doc_id-rank chunking)
+      stageStreamChunks(t(s, dir, "documents")
         .select(col("doc_id"), col("text"),
           expr("timestamp_seconds(1700000000 + doc_id)").as("ts"),
-          floor((row_number().over(wByDoc) - 1) / lit(chunk)).cast("long").as("_b"))
-        .write.partitionBy("_b").parquet(s"$tmp/stage")
-      val stageDir = java.nio.file.Paths.get(s"$tmp/stage")
-      val inDir = java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get(s"$tmp/in"))
-      val parts = java.nio.file.Files.list(stageDir)
-      val nChunks = try {
-        var k = 0
-        parts.filter(p => p.getFileName.toString.startsWith("_b=")).forEach { p =>
-          val i = p.getFileName.toString.stripPrefix("_b=").toInt
-          java.nio.file.Files.move(p, inDir.resolve(s"b$i.parquet"))
-          k = math.max(k, i + 1)
-        }
-        k
-      } finally parts.close()
-      (0 until nChunks).foreach(i => stamp(s"$tmp/in/b$i.parquet", i))
+          floor(col("doc_id") / lit(chunk)).cast("long").as("_b")), tmp)
+      val inDir = java.nio.file.Paths.get(s"$tmp/in")
       // replay the first batch last: real duplicates that MUST be dropped
       // (their keys' state is live — the horizon spans the whole slice);
       // a file-level copy of b0 is byte-identical to re-writing its rows
@@ -640,7 +596,7 @@ object SparkEntry {
       try b0Files.forEach(p =>
         java.nio.file.Files.copy(p, replay.resolve(p.getFileName.toString)))
       finally b0Files.close()
-      stamp(s"$tmp/in/replay.parquet", 100)
+      stampMtime(s"$tmp/in/replay.parquet", 100)
       // 2 files per trigger: still several REAL micro-batches (cross-batch
       // state drops exercised; the replay file sorts last by mtime so it
       // always lands in a later trigger than its originals), at half the
@@ -974,6 +930,37 @@ object SparkEntry {
     val old = s.conf.get(key)
     s.conf.set(key, "4")
     try f finally s.conf.set(key, old)
+  }
+
+  /** Sets the mtime of `dir` and everything under it to minute `order`
+    * after a fixed epoch, so a file source's (timestamp, path) order
+    * replays a streaming fixture's dirs in `order` order. */
+  private def stampMtime(dir: String, order: Int): Unit = {
+    val t = java.nio.file.attribute.FileTime.fromMillis(1000000000000L + order * 60000L)
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.forEach(p => java.nio.file.Files.setLastModifiedTime(p, t))
+    finally walk.close()
+  }
+
+  /** Stages a streaming fixture: ONE partitioned write of `df` by its long
+    * chunk id `_b` emits every micro-batch dir, then each is renamed into
+    * the watched layout `<tmp>/in/b<i>.parquet` and mtime-stamped with its
+    * chunk id. Returns the chunk count. */
+  private def stageStreamChunks(df: DataFrame, tmp: String): Int = {
+    df.write.partitionBy("_b").parquet(s"$tmp/stage")
+    val in = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$tmp/in"))
+    val parts = java.nio.file.Files.list(java.nio.file.Paths.get(s"$tmp/stage"))
+    val nChunks = try {
+      var k = 0
+      parts.filter(p => p.getFileName.toString.startsWith("_b=")).forEach { p =>
+        val i = p.getFileName.toString.stripPrefix("_b=").toInt
+        java.nio.file.Files.move(p, in.resolve(s"b$i.parquet"))
+        k = math.max(k, i + 1)
+      }
+      k
+    } finally parts.close()
+    (0 until nChunks).foreach(i => stampMtime(s"$tmp/in/b$i.parquet", i))
+    nChunks
   }
 
   /** Learned BPE merge table per (session, sf dir) — q76 and q77 both

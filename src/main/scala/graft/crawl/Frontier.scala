@@ -196,17 +196,11 @@ object Crawl {
   private def discovered(links: Seq[SyntheticWeb.Req], probe: Boolean): Seq[SyntheticWeb.Req] =
     if (probe) links.filter(_.kind != "list") else links
 
-  /** One lazily bootstrapped SSO session per host for one partition. */
-  private def partitionSessions(onBootstrap: () => Unit): String => Sso.Session = {
-    val sessions = scala.collection.mutable.HashMap.empty[String, Sso.Session]
-    host => sessions.getOrElseUpdate(host, { onBootstrap(); Sso.bootstrap(host) })
-  }
-
   private[graft] def expandPartition(
       it: Iterator[SyntheticWeb.Req], scale: Long, limit: Long, rev: Int,
       probe: Boolean, onBootstrap: () => Unit,
       faultCheck: SyntheticWeb.Req => Unit = _ => ()): Iterator[ExpandRow] = {
-    val sessionFor = partitionSessions(onBootstrap)
+    val sessionFor = Sso.partitionSessions(onBootstrap)
     it.flatMap { req =>
       faultCheck(req)
       val (post, links) = expandOne(req, scale, limit, rev, probe, sessionFor)
@@ -219,7 +213,7 @@ object Crawl {
   private[graft] def linksPartition(
       it: Iterator[SyntheticWeb.Req], scale: Long, limit: Long, rev: Int,
       probe: Boolean, onBootstrap: () => Unit): Iterator[SyntheticWeb.Req] = {
-    val sessionFor = partitionSessions(onBootstrap)
+    val sessionFor = Sso.partitionSessions(onBootstrap)
     it.flatMap(req =>
       discovered(SyntheticWeb.links(req, scale, limit, rev, session(req, sessionFor)), probe))
   }

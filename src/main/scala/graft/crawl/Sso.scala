@@ -55,6 +55,14 @@ object Sso {
     Session(host, cookie)
   }
 
+  /** One lazily bootstrapped session per host for one partition: the
+    * first request against a host calls `onBootstrap` and pays the
+    * [[bootstrap]], later ones in the task reuse its session. */
+  def partitionSessions(onBootstrap: () => Unit): String => Session = {
+    val sessions = scala.collection.mutable.HashMap.empty[String, Session]
+    host => sessions.getOrElseUpdate(host, { onBootstrap(); bootstrap(host) })
+  }
+
   /** Reject a fetch without a valid session for the host (the live site's
     * 302-to-login for unauthenticated requests). */
   def authorize(session: Option[Session], host: String): Unit = {

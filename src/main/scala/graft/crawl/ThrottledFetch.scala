@@ -43,9 +43,7 @@ object ThrottledFetch {
       onBootstrap: () => Unit = () => ())(
       implicit enc: Encoder[Fetched[O]]): Dataset[Fetched[O]] = {
     reqs.mapPartitions { it =>
-      val sessions = scala.collection.mutable.HashMap.empty[String, Sso.Session]
-      val sessionFor: String => Sso.Session =
-        host => sessions.getOrElseUpdate(host, { onBootstrap(); Sso.bootstrap(host) })
+      val sessionFor = Sso.partitionSessions(onBootstrap)
       val nextFree = scala.collection.mutable.HashMap.empty[String, Long]
       it.map { req =>
         val host = hostOf(req)

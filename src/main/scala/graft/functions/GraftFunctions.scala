@@ -1,11 +1,15 @@
 package graft.functions
 
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
 import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -17,6 +21,73 @@ import org.apache.spark.unsafe.types.UTF8String
 object Kernels {
   private def s(u: UTF8String): String = if (u == null) null else u.toString
   private def u(v: String): UTF8String = if (v == null) null else UTF8String.fromString(v)
+  private def emptyStrings: ArrayData = new GenericArrayData(Array.empty[UTF8String])
+
+  /**
+   * The one tokenizer of the text kernels: the non-empty tokens of `text`
+   * as UTF-8 byte arrays. `lower` splits `UTF8String.toLowerCase` on Java
+   * `\s+` (the `filter(split(lower(t), '\\s+'), x -> length(x) > 0)`
+   * column shape, [[graft.operators.Dedup.tokens]]); otherwise the text is
+   * split on single spaces with its bytes kept (`split(t, ' ')`, same
+   * filter). `qualityGate` and `bpeSegment` scan the lowered string in
+   * place instead, and `simhash64` lowercases the Java string.
+   */
+  private def tokens(text: UTF8String, lower: Boolean): Array[Array[Byte]] = {
+    val raw = if (lower) text.toLowerCase.toString.split("\\s+") else text.toString.split(" ")
+    var m = 0
+    var i = 0
+    while (i < raw.length) { if (raw(i).nonEmpty) m += 1; i += 1 }
+    val toks = new Array[Array[Byte]](m)
+    m = 0; i = 0
+    while (i < raw.length) {
+      if (raw(i).nonEmpty) { toks(m) = raw(i).getBytes(StandardCharsets.UTF_8); m += 1 }
+      i += 1
+    }
+    toks
+  }
+
+  /** The one gram writer: space-joins token ranges into a byte buffer the
+    * caller reuses for every gram of a row (grown when a gram outgrows it). */
+  private final class GramWriter {
+    var buf = new Array[Byte](256)
+
+    /** Writes tokens [lo, hi) space-joined into `buf`; returns the length. */
+    def write(toks: Array[Array[Byte]], lo: Int, hi: Int): Int = {
+      var len = hi - lo - 1
+      var k = lo
+      while (k < hi) { len += toks(k).length; k += 1 }
+      if (len > buf.length) buf = new Array[Byte](len * 2)
+      var p = 0
+      k = lo
+      while (k < hi) {
+        if (k > lo) { buf(p) = ' '.toByte; p += 1 }
+        System.arraycopy(toks(k), 0, buf, p, toks(k).length); p += toks(k).length
+        k += 1
+      }
+      len
+    }
+
+    /** A copy of the first `len` bytes of `buf` as a string. */
+    def string(len: Int): UTF8String = UTF8String.fromBytes(java.util.Arrays.copyOf(buf, len))
+  }
+
+  private val hexDigits = "0123456789abcdef".toCharArray
+
+  /** The first `nHex` lowercase hex digits of the md5 of `buf[0, len)`:
+    * `substring(md5(g), 1, nHex)`. */
+  private def md5HexPrefix(md: MessageDigest, buf: Array[Byte], len: Int,
+      nHex: Int): Array[Char] = {
+    md.update(buf, 0, len)
+    val dig = md.digest()
+    val cs = new Array[Char](nHex)
+    var c = 0
+    while (c < nHex) {
+      val b = dig(c / 2)
+      cs(c) = hexDigits(if (c % 2 == 0) (b >> 4) & 0xF else b & 0xF)
+      c += 1
+    }
+    cs
+  }
 
   def urlCanonicalize(x: UTF8String): UTF8String = u(UrlKernel.canonicalize(s(x)))
   def urlHost(x: UTF8String): UTF8String = u(UrlKernel.host(s(x)))
@@ -58,51 +129,24 @@ object Kernels {
    * tokenize/slice/concat column expressions. The shingle stage is the
    * shared hot path of the n-gram Jaccard and MinHash-LSH dedup operators.
    */
-  def shingleHash64(text: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val empty = new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Long])
-    if (text == null) return empty
-    val raw = text.toLowerCase.toString.split("\\s+")
-    var m = 0
-    var i = 0
-    while (i < raw.length) { if (raw(i).nonEmpty) m += 1; i += 1 }
-    if (m < n) return empty
-    val toks = new Array[Array[Byte]](m)
-    i = 0; var j = 0
-    while (i < raw.length) {
-      if (raw(i).nonEmpty) {
-        toks(j) = raw(i).getBytes(java.nio.charset.StandardCharsets.UTF_8); j += 1
-      }
-      i += 1
-    }
-    val count = m - n + 1
+  def shingleHash64(text: UTF8String, n: Int): ArrayData = {
+    if (text == null) return new GenericArrayData(Array.empty[Long])
+    val toks = tokens(text, lower = true)
+    if (toks.length < n) return new GenericArrayData(Array.empty[Long])
+    val count = toks.length - n + 1
     val seen = new java.util.HashSet[java.lang.Long](count * 2)
     val out = new Array[Long](count)
     var nOut = 0
-    var buf = new Array[Byte](256)
-    i = 0
+    val g = new GramWriter
+    var i = 0
     while (i < count) {
-      var len = n - 1
-      var k = 0
-      while (k < n) { len += toks(i + k).length; k += 1 }
-      if (len > buf.length) buf = new Array[Byte](len * 2)
-      var p = 0
-      k = 0
-      while (k < n) {
-        if (k > 0) { buf(p) = ' '.toByte; p += 1 }
-        val t = toks(i + k)
-        System.arraycopy(t, 0, buf, p, t.length); p += t.length
-        k += 1
-      }
-      val h = org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-        buf, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len, 42L)
+      val len = g.write(toks, i, i + n)
+      val h = XXH64.hashUnsafeBytes(g.buf, Platform.BYTE_ARRAY_OFFSET, len, 42L)
       if (seen.add(h)) { out(nOut) = h; nOut += 1 }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      if (nOut == count) out else java.util.Arrays.copyOf(out, nOut))
+    new GenericArrayData(if (nOut == count) out else java.util.Arrays.copyOf(out, nOut))
   }
-
-  import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
   /**
    * PQ subspace encoder: per subspace s, the index of the FIRST centroid
@@ -294,43 +338,15 @@ object Kernels {
    * position re-splits the whole document (measured 9.5 s → sub-second at
    * sf0.1 for the bigram LM count).
    */
-  def wordNgrams(text: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val empty = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array.empty[UTF8String])
-    if (text == null) return empty
-    val raw = text.toLowerCase.toString.split("\\s+")
-    var m = 0
+  def wordNgrams(text: UTF8String, n: Int): ArrayData = {
+    if (text == null) return emptyStrings
+    val toks = tokens(text, lower = true)
+    if (toks.length < n) return emptyStrings
+    val out = new Array[UTF8String](toks.length - n + 1)
+    val g = new GramWriter
     var i = 0
-    while (i < raw.length) { if (raw(i).nonEmpty) m += 1; i += 1 }
-    if (m < n) return empty
-    val toks = new Array[Array[Byte]](m)
-    i = 0; var j = 0
-    while (i < raw.length) {
-      if (raw(i).nonEmpty) {
-        toks(j) = raw(i).getBytes(java.nio.charset.StandardCharsets.UTF_8); j += 1
-      }
-      i += 1
-    }
-    val count = m - n + 1
-    val out = new Array[UTF8String](count)
-    i = 0
-    while (i < count) {
-      var len = n - 1
-      var k = 0
-      while (k < n) { len += toks(i + k).length; k += 1 }
-      val buf = new Array[Byte](len)
-      var p = 0
-      k = 0
-      while (k < n) {
-        if (k > 0) { buf(p) = ' '.toByte; p += 1 }
-        val t = toks(i + k)
-        System.arraycopy(t, 0, buf, p, t.length); p += t.length
-        k += 1
-      }
-      out(i) = UTF8String.fromBytes(buf)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    while (i < out.length) { out(i) = g.string(g.write(toks, i, i + n)); i += 1 }
+    new GenericArrayData(out)
   }
 
   /**
@@ -343,24 +359,17 @@ object Kernels {
    * aggregations → join shape paid four exchanges for counts a linear
    * scan of the row produces directly.
    */
-  def repetitionStats(text: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    if (text == null)
-      return new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        Array[Long](0L, 0L, 0L, 0L, 0L))
-    val raw = text.toLowerCase.toString.split("\\s+")
-    var m = 0
-    var i = 0
-    while (i < raw.length) { if (raw(i).nonEmpty) m += 1; i += 1 }
-    val toks = new Array[String](m)
-    i = 0; var j = 0
-    while (i < raw.length) { if (raw(i).nonEmpty) { toks(j) = raw(i); j += 1 }; i += 1 }
+  def repetitionStats(text: UTF8String): ArrayData = {
+    if (text == null) return new GenericArrayData(Array[Long](0L, 0L, 0L, 0L, 0L))
+    val toks = tokens(text, lower = true)
+    val m = toks.length
     // UTF8String keys: byte-domain equality, matching the exploded
     // groupBy (Java String equality differs on unpaired surrogates)
     val tokCounts = new java.util.HashMap[UTF8String, Long](m * 2)
     var topC = 0L
-    i = 0
+    var i = 0
     while (i < m) {
-      val k = UTF8String.fromString(toks(i))
+      val k = UTF8String.fromBytes(toks(i))
       val c = tokCounts.getOrDefault(k, 0L) + 1L
       tokCounts.put(k, c)
       if (c > topC) topC = c
@@ -370,16 +379,13 @@ object Kernels {
     var nDistinctBi = 0L
     if (m >= 2) {
       val biSet = new java.util.HashSet[UTF8String](m * 2)
+      val g = new GramWriter
       i = 0
-      while (i < m - 1) {
-        biSet.add(UTF8String.fromString(toks(i) + " " + toks(i + 1)))
-        i += 1
-      }
+      while (i < m - 1) { biSet.add(g.string(g.write(toks, i, i + 2))); i += 1 }
       nBi = (m - 1).toLong
       nDistinctBi = biSet.size.toLong
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array[Long](m.toLong, tokCounts.size.toLong, topC, nBi, nDistinctBi))
+    new GenericArrayData(Array[Long](m.toLong, tokCounts.size.toLong, topC, nBi, nDistinctBi))
   }
 
   /**
@@ -393,56 +399,23 @@ object Kernels {
    * same 15-hex-char window minima with one digest per gram and a sliding
    * compare (measured 11.3 s -> sub-second for q86 at sf0.1).
    */
-  def winnowFps(text: UTF8String, k: Int, w: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val empty = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array.empty[UTF8String])
-    if (text == null) return empty
-    val raw = text.toLowerCase.toString.split("\\s+")
-    var m = 0
-    var i = 0
-    while (i < raw.length) { if (raw(i).nonEmpty) m += 1; i += 1 }
-    if (m < k) return empty
-    val toks = new Array[Array[Byte]](m)
-    i = 0; var j = 0
-    while (i < raw.length) {
-      if (raw(i).nonEmpty) {
-        toks(j) = raw(i).getBytes(java.nio.charset.StandardCharsets.UTF_8); j += 1
-      }
-      i += 1
-    }
-    val count = m - k + 1
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hexDigits = "0123456789abcdef".toCharArray
+  def winnowFps(text: UTF8String, k: Int, w: Int): ArrayData = {
+    if (text == null) return emptyStrings
+    val toks = tokens(text, lower = true)
+    if (toks.length < k) return emptyStrings
+    val count = toks.length - k + 1
+    val md = MessageDigest.getInstance("MD5")
+    val g = new GramWriter
     val hashes = new Array[String](count)
-    i = 0
+    var i = 0
     while (i < count) {
-      var len = k - 1
-      var t = 0
-      while (t < k) { len += toks(i + t).length; t += 1 }
-      val buf = new Array[Byte](len)
-      var p = 0
-      t = 0
-      while (t < k) {
-        if (t > 0) { buf(p) = ' '.toByte; p += 1 }
-        val tok = toks(i + t)
-        System.arraycopy(tok, 0, buf, p, tok.length); p += tok.length
-        t += 1
-      }
-      val dig = md.digest(buf)
-      // first 15 lowercase hex chars (= substring(md5(g), 1, 15))
-      val cs = new Array[Char](15)
-      var c = 0
-      while (c < 15) {
-        val b = dig(c / 2)
-        cs(c) = hexDigits(if (c % 2 == 0) (b >> 4) & 0xF else b & 0xF)
-        c += 1
-      }
-      hashes(i) = new String(cs)
+      val len = g.write(toks, i, i + k)
+      hashes(i) = new String(md5HexPrefix(md, g.buf, len, 15))
       i += 1
     }
     val windows = math.max(count - w + 1, 1)
     val seen = new java.util.LinkedHashSet[String]()
-    j = 0
+    var j = 0
     while (j < windows) {
       var mn = hashes(j)
       var x = j + 1
@@ -455,7 +428,7 @@ object Kernels {
     val it = seen.iterator()
     i = 0
     while (it.hasNext) { out(i) = UTF8String.fromString(it.next()); i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /**
@@ -475,7 +448,7 @@ object Kernels {
    * explode drops them — same rows as the chain after its size filter).
    */
   def md5MinhashBands(text: UTF8String, n: Int, perms: Int,
-      bands: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+      bands: Int): ArrayData = {
     // the kernel is SQL-registered, so it must validate its own window
     // geometry: perms > 6 would read past the 16-byte md5 digest, and
     // bands that don't divide perms would silently drop signature minima
@@ -486,52 +459,21 @@ object Kernels {
       throw new IllegalArgumentException(
         s"md5_minhash_bands: need n >= 1, 1 <= perms <= 6 (5-hex-char md5 " +
         s"windows), and bands dividing perms; got n=$n perms=$perms bands=$bands")
-    val empty = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array.empty[UTF8String])
-    if (text == null) return empty
-    val raw = text.toLowerCase.toString.split("\\s+")
-    var m = 0
-    var i = 0
-    while (i < raw.length) { if (raw(i).nonEmpty) m += 1; i += 1 }
-    if (m < n) return empty
-    val toks = new Array[Array[Byte]](m)
-    i = 0; var j = 0
-    while (i < raw.length) {
-      if (raw(i).nonEmpty) {
-        toks(j) = raw(i).getBytes(java.nio.charset.StandardCharsets.UTF_8); j += 1
-      }
-      i += 1
-    }
-    val count = m - n + 1
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hexDigits = "0123456789abcdef".toCharArray
+    if (text == null) return emptyStrings
+    val toks = tokens(text, lower = true)
+    if (toks.length < n) return emptyStrings
+    val count = toks.length - n + 1
+    val md = MessageDigest.getInstance("MD5")
+    val g = new GramWriter
     // running per-permutation minima over 5-hex-char md5 windows
     val mins = Array.fill(perms)(null: String)
-    i = 0
+    var i = 0
     while (i < count) {
-      var len = n - 1
-      var t = 0
-      while (t < n) { len += toks(i + t).length; t += 1 }
-      val buf = new Array[Byte](len)
-      var p = 0
-      t = 0
-      while (t < n) {
-        if (t > 0) { buf(p) = ' '.toByte; p += 1 }
-        val tok = toks(i + t)
-        System.arraycopy(tok, 0, buf, p, tok.length); p += tok.length
-        t += 1
-      }
-      val dig = md.digest(buf)
-      val cs = new Array[Char](5 * perms) // first 5*perms of 32 hex chars
-      var c = 0
-      while (c < 5 * perms) {
-        val b = dig(c / 2)
-        cs(c) = hexDigits(if (c % 2 == 0) (b >> 4) & 0xF else b & 0xF)
-        c += 1
-      }
+      val len = g.write(toks, i, i + n)
+      val hex = md5HexPrefix(md, g.buf, len, 5 * perms)
       var q = 0
       while (q < perms) {
-        val w = new String(cs, 5 * q, 5)
+        val w = new String(hex, 5 * q, 5)
         if (mins(q) == null || w.compareTo(mins(q)) < 0) mins(q) = w
         q += 1
       }
@@ -547,7 +489,7 @@ object Kernels {
       out(b) = UTF8String.fromString(sb.toString)
       b += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /**
@@ -556,111 +498,41 @@ object Kernels {
    * Window i covers tokens [i·stride, i·stride + size); emission stops
    * with the first window that covers the document end (so no window is a
    * strict suffix-subset of its predecessor), and that last window may be
-   * short. Same
-   * linear-pass rationale as [[chunkText]] (which equals stride == size);
-   * token bytes are preserved (no lowercasing — samples keep their text).
+   * short. With stride == size this is the non-overlapping span-grain
+   * chunker (`chunk_text`). Same linear-pass rationale as [[wordNgrams]]
+   * (the slice/concat_ws column formulation re-walks the token array per
+   * chunk); token bytes are preserved (no lowercasing — samples keep their
+   * text).
    */
-  def chunkTextStride(text: UTF8String, size: Int, stride: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val empty = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array.empty[UTF8String])
-    if (text == null || size < 1 || stride < 1) return empty
-    val raw = text.toString.split(" ")
-    var m = 0
-    var i = 0
-    while (i < raw.length) { if (raw(i).nonEmpty) m += 1; i += 1 }
-    if (m == 0) return empty
-    val toks = new Array[Array[Byte]](m)
-    i = 0; var j = 0
-    while (i < raw.length) {
-      if (raw(i).nonEmpty) {
-        toks(j) = raw(i).getBytes(java.nio.charset.StandardCharsets.UTF_8); j += 1
-      }
-      i += 1
-    }
+  def chunkTextStride(text: UTF8String, size: Int, stride: Int): ArrayData = {
+    if (text == null || size < 1 || stride < 1) return emptyStrings
+    val toks = tokens(text, lower = false)
+    val m = toks.length
+    if (m == 0) return emptyStrings
     // stop once a window's end reaches the document end: with stride <
     // size, later starts would emit strict suffix-subsets of the previous
     // window (duplicate training samples). The last window is the first
     // whose [start, start+size) covers the tail. Starts must also stay
     // below m: with stride > size the cover-the-tail count alone would
-    // schedule an empty window past the last token (negative buffer size).
+    // schedule an empty window past the last token.
     val nWinCover = if (m <= size) 1 else (m - size + stride - 1) / stride + 1
-    val nWin = math.min((m - 1) / stride + 1, nWinCover)
-    val out = new Array[UTF8String](nWin)
+    val out = new Array[UTF8String](math.min((m - 1) / stride + 1, nWinCover))
+    val g = new GramWriter
     var w = 0
-    while (w < nWin) {
+    while (w < out.length) {
       val start = w * stride
-      val end = math.min(start + size, m)
-      var len = end - start - 1
-      var t = start
-      while (t < end) { len += toks(t).length; t += 1 }
-      val buf = new Array[Byte](len)
-      var p = 0
-      t = start
-      while (t < end) {
-        if (t > start) { buf(p) = ' '.toByte; p += 1 }
-        System.arraycopy(toks(t), 0, buf, p, toks(t).length); p += toks(t).length
-        t += 1
-      }
-      out(w) = UTF8String.fromBytes(buf)
+      out(w) = g.string(g.write(toks, start, math.min(start + size, m)))
       w += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /**
-   * Fixed-token-count chunk strings of a document (the span-grain chunker):
-   * chunk i = tokens [i*size, (i+1)*size) space-joined. Same linear-pass
-   * rationale as [[wordNgrams]] — the slice/concat_ws column formulation
-   * re-walks the token array per chunk. NOTE lowercases nothing: chunks
-   * preserve the original token bytes.
-   */
-  def chunkText(text: UTF8String, chunkSize: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val empty = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      Array.empty[UTF8String])
-    if (text == null) return empty
-    val raw = text.toString.split(" ")
-    var m = 0
-    var i = 0
-    while (i < raw.length) { if (raw(i).nonEmpty) m += 1; i += 1 }
-    if (m == 0) return empty
-    val toks = new Array[Array[Byte]](m)
-    i = 0; var j = 0
-    while (i < raw.length) {
-      if (raw(i).nonEmpty) {
-        toks(j) = raw(i).getBytes(java.nio.charset.StandardCharsets.UTF_8); j += 1
-      }
-      i += 1
-    }
-    val nChunks = (m + chunkSize - 1) / chunkSize
-    val out = new Array[UTF8String](nChunks)
-    var c = 0
-    while (c < nChunks) {
-      val lo = c * chunkSize
-      val hi = math.min(lo + chunkSize, m)
-      var len = hi - lo - 1
-      var k = lo
-      while (k < hi) { len += toks(k).length; k += 1 }
-      val buf = new Array[Byte](len)
-      var p = 0
-      k = lo
-      while (k < hi) {
-        if (k > lo) { buf(p) = ' '.toByte; p += 1 }
-        val t = toks(k)
-        System.arraycopy(t, 0, buf, p, t.length); p += t.length
-        k += 1
-      }
-      out(c) = UTF8String.fromBytes(buf)
-      c += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** Adjacent symbol pairs of a symbol array, as "l r" strings (BPE pair
     * statistics; word-internal only — callers explode per word type). */
-  def bpePairs(syms: org.apache.spark.sql.catalyst.util.ArrayData)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
+  def bpePairs(syms: ArrayData)
+      : ArrayData = {
     val n = if (syms == null) 0 else syms.numElements()
-    if (n < 2) return new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    if (n < 2) return new GenericArrayData(
       Array.empty[UTF8String])
     val out = new Array[UTF8String](n - 1)
     var i = 0
@@ -669,18 +541,18 @@ object Kernels {
         UTF8String.fromString(" "), syms.getUTF8String(i + 1))
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** One BPE merge applied to a symbol array: every non-overlapping
     * left-to-right occurrence of (l, r) becomes the concatenation l+r —
     * the reference semantics of the original BPE algorithm (Sennrich et
     * al. 2016), where "aaa" under merge (a,a) yields ["aa","a"]. */
-  def bpeMergeStep(syms: org.apache.spark.sql.catalyst.util.ArrayData,
+  def bpeMergeStep(syms: ArrayData,
       l: UTF8String, r: UTF8String)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
+      : ArrayData = {
     val n = if (syms == null) 0 else syms.numElements()
-    if (n == 0) return new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    if (n == 0) return new GenericArrayData(
       Array.empty[UTF8String])
     val out = new Array[UTF8String](n)
     var nOut = 0
@@ -693,7 +565,7 @@ object Kernels {
         out(nOut) = syms.getUTF8String(i); nOut += 1; i += 1
       }
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    new GenericArrayData(
       if (nOut == n) out else java.util.Arrays.copyOf(out, nOut))
   }
 
@@ -708,9 +580,9 @@ object Kernels {
    * which interpreted every lambda frame per word per merge.
    */
   def bpeSegment(text: UTF8String,
-      ls: org.apache.spark.sql.catalyst.util.ArrayData,
-      rs: org.apache.spark.sql.catalyst.util.ArrayData)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
+      ls: ArrayData,
+      rs: ArrayData)
+      : ArrayData = {
     val lower = text.toLowerCase.toString
     val nMerges = ls.numElements()
     val mL = new Array[String](nMerges)
@@ -767,7 +639,7 @@ object Kernels {
         while (j < n) { out += UTF8String.fromString(syms(j)); j += 1 }
       }
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
+    new GenericArrayData(out.toArray)
   }
 
   /** splitmix64 finalizer — cheap full-avalanche 64-bit mixer. */
@@ -790,8 +662,8 @@ object Kernels {
    * documents collide everywhere and are then rejected by the exact-Jaccard
    * verify, matching the column-fold semantics it replaces.
    */
-  def minhashBands(shingleHashes: org.apache.spark.sql.catalyst.util.ArrayData,
-      numBands: Int, rowsPerBand: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def minhashBands(shingleHashes: ArrayData,
+      numBands: Int, rowsPerBand: Int): ArrayData = {
     val numHashes = numBands * rowsPerBand
     val mins = new Array[Long](numHashes)
     java.util.Arrays.fill(mins, Long.MaxValue)
@@ -822,7 +694,7 @@ object Kernels {
       buckets(b) = acc
       b += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(buckets)
+    new GenericArrayData(buckets)
   }
 
   /**
@@ -837,8 +709,8 @@ object Kernels {
    * in a tight loop — no per-bit array allocation, no interpreted HOF
    * folds (tables*bits of them, each re-walking the vector).
    */
-  def hyperplaneSigs(vec: org.apache.spark.sql.catalyst.util.ArrayData,
-      bits: Int, tables: Int): org.apache.spark.sql.catalyst.util.ArrayData = {
+  def hyperplaneSigs(vec: ArrayData,
+      bits: Int, tables: Int): ArrayData = {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     val d = vec.numElements()
     val dots = new Array[Double](tables * bits)
@@ -872,14 +744,14 @@ object Kernels {
       out(t) = sig
       t += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /** FNV-1a 64-bit over UTF-8 bytes — deterministic token hash for simhash. */
   private def fnv64(t: String): Long = {
     var h = -3750763034362895579L // FNV offset basis
     var i = 0
-    val bytes = t.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val bytes = t.getBytes(StandardCharsets.UTF_8)
     while (i < bytes.length) {
       h ^= (bytes(i) & 0xFFL)
       h *= 1099511628211L // FNV prime
@@ -900,8 +772,8 @@ object Kernels {
    * Arrays must be null-element-free; the shorter length wins (zip_with
    * would null-pad, but all callers guarantee equal dims).
    */
-  def cosineSim(a: org.apache.spark.sql.catalyst.util.ArrayData,
-      b: org.apache.spark.sql.catalyst.util.ArrayData): Double = {
+  def cosineSim(a: ArrayData,
+      b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
@@ -923,8 +795,8 @@ object Kernels {
    * mirror: `list_transform(v, x -> CAST(floor(CAST(x AS DOUBLE) * 1000000
    * + 0.5) AS BIGINT))`.
    */
-  def quantizeVec(vec: org.apache.spark.sql.catalyst.util.ArrayData)
-      : org.apache.spark.sql.catalyst.util.ArrayData = {
+  def quantizeVec(vec: ArrayData)
+      : ArrayData = {
     val n = vec.numElements()
     val out = new Array[Long](n)
     var i = 0
@@ -932,7 +804,7 @@ object Kernels {
       out(i) = math.floor(vec.getDouble(i) * 1000000.0 + 0.5).toLong
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
 
   /**
@@ -940,8 +812,8 @@ object Kernels {
    * micro-unit inputs (|q| <= ~10^7) a 64-dim sum stays far below 2^63 —
    * overflow-free by construction at embedding scale.
    */
-  def l2sqQ(a: org.apache.spark.sql.catalyst.util.ArrayData,
-      b: org.apache.spark.sql.catalyst.util.ArrayData): Long = {
+  def l2sqQ(a: ArrayData,
+      b: ArrayData): Long = {
     val n = math.min(a.numElements(), b.numElements())
     var acc = 0L
     var i = 0
@@ -955,7 +827,10 @@ object Kernels {
 
   /**
    * 64-bit SimHash over lowercase whitespace tokens: per-bit vote of each
-   * token's FNV-1a hash; sign of the vote decides the output bit.
+   * token's FNV-1a hash; sign of the vote decides the output bit. It
+   * lowercases the Java `String` (not the `UTF8String` the shared
+   * [[tokens]] lowers), so it keeps its own split: the two lowerings can
+   * differ, and with them the hash values.
    */
   def simhash64(text: UTF8String): Long = {
     if (text == null) return 0L
@@ -989,78 +864,70 @@ object Kernels {
 object GraftFunctions {
 
   private val K = Kernels.getClass
+  private val longs = ArrayType(LongType, containsNull = false)
+  private val strings = ArrayType(StringType, containsNull = false)
+  private val arrL = ArrayType(LongType)
+  private val arrD = ArrayType(DoubleType)
+  private val arrArrD = ArrayType(arrD)
+  private val arrArrArrD = ArrayType(arrArrD)
+  private val arrI = ArrayType(IntegerType)
 
-  private def invoke1(name: String, c: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, StringType, name, Seq(ColumnBridge.expression(c)),
-      inputTypes = Seq(StringType)))
+  /** The one `StaticInvoke` builder: Kernels method `fn` with its return
+    * and input types. Each kernel's signature is written down once, in
+    * [[sqlFunctions]] or, for a kernel with no SQL name, in its Column
+    * function. */
+  private def kernel(fn: String, out: DataType, in: DataType*): Seq[Expression] => Expression =
+    args => StaticInvoke(K, out, fn, args.take(in.size), inputTypes = in)
 
-  private def invoke2(name: String, a: Column, b: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, StringType, name,
-      Seq(ColumnBridge.expression(a), ColumnBridge.expression(b)),
-      inputTypes = Seq(StringType, StringType)))
+  private def call(build: Seq[Expression] => Expression, args: Column*): Column =
+    ColumnBridge.column(build(args.map(ColumnBridge.expression)))
 
-  def url_canonicalize(c: Column): Column = invoke1("urlCanonicalize", c)
-  def url_host(c: Column): Column = invoke1("urlHost", c)
-  def url_path(c: Column): Column = invoke1("urlPath", c)
-  def url_resolve(base: Column, ref: Column): Column = invoke2("urlResolve", base, ref)
-  def url_query_param(c: Column, key: Column): Column = invoke2("urlQueryParam", c, key)
+  /** The Column twin of SQL function `name`: its builder, so both routes
+    * build equal expressions. */
+  private def sql(name: String, args: Column*): Column = call(sqlBuilders(name), args: _*)
+  private lazy val sqlBuilders = sqlFunctions.toMap
+
+  def url_canonicalize(c: Column): Column = sql("url_canonicalize", c)
+  def url_host(c: Column): Column = sql("url_host", c)
+  def url_path(c: Column): Column = sql("url_path", c)
+  def url_resolve(base: Column, ref: Column): Column = sql("url_resolve", base, ref)
+  def url_query_param(c: Column, key: Column): Column = sql("url_query_param", c, key)
   /** 64-bit identity of a URL in the seen-set: xxhash64 of the canonical form. */
   def url_hash(c: Column): Column = xxhash64(url_canonicalize(c))
 
-  def slugify(c: Column): Column = invoke1("slugify", c)
-  def strip_parens(c: Column): Column = invoke1("stripParens", c)
-  def normalize_ws(c: Column): Column = invoke1("normalizeWs", c)
+  def slugify(c: Column): Column = sql("graft_slugify", c)
+  def strip_parens(c: Column): Column = sql("strip_parens", c)
+  def normalize_ws(c: Column): Column = sql("normalize_ws", c)
   /** NFC + ROOT-locale lowercase + whitespace collapse + trim (dedup keying). */
-  def normalize_text(c: Column): Column = invoke1("normalizeText", c)
-  def normalize_dashes(c: Column): Column = invoke1("normalizeDashes", c)
-  def ics_escape(c: Column): Column = invoke1("icsEscape", c)
-  def ics_fold(c: Column): Column = invoke1("icsFold", c)
-  def mime_guess(c: Column): Column = invoke1("mimeGuess", c)
-  def desc_fallback(c: Column): Column = invoke1("descFallback", c)
-  def lz_decompress_utf16(c: Column): Column = invoke1("lzDecompressUtf16", c)
-  def lz_compress_utf16(c: Column): Column = invoke1("lzCompressUtf16", c)
-  def lexical_to_html(c: Column): Column = invoke1("lexicalToHtml", c)
-  def html_text(html: Column, selector: Column): Column = invoke2("htmlText", html, selector)
-  def html_attr(html: Column, selector: Column, attr: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, StringType, "htmlAttr",
-      Seq(ColumnBridge.expression(html), ColumnBridge.expression(selector),
-        ColumnBridge.expression(attr)),
-      inputTypes = Seq(StringType, StringType, StringType)))
+  def normalize_text(c: Column): Column = sql("normalize_text", c)
+  def normalize_dashes(c: Column): Column = sql("normalize_dashes", c)
+  def ics_escape(c: Column): Column = sql("ics_escape", c)
+  def ics_fold(c: Column): Column = sql("ics_fold", c)
+  def mime_guess(c: Column): Column = sql("mime_guess", c)
+  def desc_fallback(c: Column): Column = sql("desc_fallback", c)
+  def lz_decompress_utf16(c: Column): Column = sql("lz_decompress_utf16", c)
+  def lz_compress_utf16(c: Column): Column = sql("lz_compress_utf16", c)
+  def lexical_to_html(c: Column): Column = sql("lexical_to_html", c)
+  def html_text(html: Column, selector: Column): Column = sql("html_text", html, selector)
+  def html_attr(html: Column, selector: Column, attr: Column): Column =
+    call(kernel("htmlAttr", StringType, StringType, StringType, StringType), html, selector, attr)
   /** 64-bit SimHash of a text column (token-level, FNV-1a votes). */
-  def simhash64(c: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, org.apache.spark.sql.types.LongType, "simhash64",
-      Seq(ColumnBridge.expression(c)), inputTypes = Seq(StringType)))
+  def simhash64(c: Column): Column = sql("simhash64", c)
 
   /** Distinct word-n-gram shingle hashes of a text column (array<bigint>,
     * value-identical to hashing the shingle strings) — codegen'd kernel. */
-  def shingle_hash64(text: Column, n: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false),
-      "shingleHash64",
-      Seq(ColumnBridge.expression(text), ColumnBridge.expression(lit(n))),
-      inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType)))
+  def shingle_hash64(text: Column, n: Int): Column = sql("shingle_hash64", text, lit(n))
 
   /** Adjacent word n-grams of a text column as strings (array<string>,
     * all occurrences in document order) — linear-pass codegen'd kernel. */
-  def word_ngrams(text: Column, n: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "wordNgrams",
-      Seq(ColumnBridge.expression(text), ColumnBridge.expression(lit(n))),
-      inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType)))
+  def word_ngrams(text: Column, n: Int): Column = sql("word_ngrams", text, lit(n))
 
   /** One-pass per-document repetition stats `[n_tokens, n_distinct, top_c,
     * n_bigrams, n_distinct_bi]` (array<bigint>) — codegen'd kernel,
     * value-identical to the exploded tokens / word_ngrams(2) aggregations
     * (see Kernels.repetitionStats; parity spec in SpanDedupPiiSpec). */
   def repetition_stats(text: Column): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false),
-      "repetitionStats",
-      Seq(ColumnBridge.expression(text)),
-      inputTypes = Seq(StringType)))
+    call(kernel("repetitionStats", longs, StringType), text)
 
   /** One-pass quality-envelope gate (boolean) — value-identical to the
     * qualityFeatures-struct predicate (see Kernels.qualityGate; parity
@@ -1068,191 +935,95 @@ object GraftFunctions {
   def quality_gate(text: Column, minTokens: Int, maxTokens: Int,
       maxPunctRatio: Double, minStopwordRatio: Double,
       minMeanWordLen: Double, maxMeanWordLen: Double): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.BooleanType, "qualityGate",
-      Seq(ColumnBridge.expression(text),
-        ColumnBridge.expression(lit(minTokens)), ColumnBridge.expression(lit(maxTokens)),
-        ColumnBridge.expression(lit(maxPunctRatio)), ColumnBridge.expression(lit(minStopwordRatio)),
-        ColumnBridge.expression(lit(minMeanWordLen)), ColumnBridge.expression(lit(maxMeanWordLen))),
-      inputTypes = Seq(StringType,
-        org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.DoubleType, org.apache.spark.sql.types.DoubleType,
-        org.apache.spark.sql.types.DoubleType, org.apache.spark.sql.types.DoubleType)))
+    call(kernel("qualityGate", BooleanType, StringType, IntegerType, IntegerType,
+        DoubleType, DoubleType, DoubleType, DoubleType),
+      text, lit(minTokens), lit(maxTokens), lit(maxPunctRatio), lit(minStopwordRatio),
+      lit(minMeanWordLen), lit(maxMeanWordLen))
 
   /** Sliding-window chunk strings with stride (array<string>) —
     * linear-pass codegen'd kernel for overlapping context windows. */
   def chunk_text_stride(text: Column, size: Int, stride: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "chunkTextStride",
-      Seq(ColumnBridge.expression(text), ColumnBridge.expression(lit(size)),
-        ColumnBridge.expression(lit(stride))),
-      inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.IntegerType)))
+    sql("chunk_text_stride", text, lit(size), lit(stride))
+
+  /** Fixed-token-count chunk strings of a text column (array<string>):
+    * the span-grain chunker, [[chunk_text_stride]] with stride == size. */
+  def chunk_text(text: Column, chunkSize: Int): Column =
+    chunk_text_stride(text, chunkSize, chunkSize)
 
   /** Portable md5-MinHash band keys of a text column (array<string>,
     * one key per band) — linear-pass codegen'd kernel, value-identical to
     * the substring(md5(shingle)) column chain (and to its DuckDB replay). */
   def md5_minhash_bands(text: Column, n: Int, perms: Int, bands: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "md5MinhashBands",
-      Seq(ColumnBridge.expression(text), ColumnBridge.expression(lit(n)),
-        ColumnBridge.expression(lit(perms)), ColumnBridge.expression(lit(bands))),
-      inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.IntegerType)))
+    sql("md5_minhash_bands", text, lit(n), lit(perms), lit(bands))
 
   /** Winnowing fingerprints of a text column (array<string> of 15-hex-char
     * md5-prefix window minima) — linear-pass codegen'd kernel. */
-  def winnow_fps(text: Column, k: Int, w: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "winnowFps",
-      Seq(ColumnBridge.expression(text), ColumnBridge.expression(lit(k)),
-        ColumnBridge.expression(lit(w))),
-      inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType,
-        org.apache.spark.sql.types.IntegerType)))
-
-  /** Fixed-token-count chunk strings of a text column (array<string>) —
-    * linear-pass codegen'd kernel for the span-grain chunker. */
-  def chunk_text(text: Column, chunkSize: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "chunkText",
-      Seq(ColumnBridge.expression(text), ColumnBridge.expression(lit(chunkSize))),
-      inputTypes = Seq(StringType, org.apache.spark.sql.types.IntegerType)))
+  def winnow_fps(text: Column, k: Int, w: Int): Column = sql("winnow_fps", text, lit(k), lit(w))
 
   /** Adjacent "l r" symbol-pair strings of an array<string> column —
     * codegen'd kernel for BPE pair statistics. */
   def bpe_pairs(syms: Column): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "bpePairs", Seq(ColumnBridge.expression(syms)),
-      inputTypes = Seq(org.apache.spark.sql.types.ArrayType(StringType))))
+    call(kernel("bpePairs", strings, ArrayType(StringType)), syms)
 
   /** Full BPE re-segmentation (tokenize -> char symbols + </w> -> replay
     * merges in rank order -> flatten) as ONE kernel pass — value-identical
     * to the nested transform(bpe_merge_step) HOF chain (BpeSpec parity). */
   def bpe_segment(text: Column, merges: Seq[(String, String)]): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "bpeSegment",
-      Seq(ColumnBridge.expression(text),
-        ColumnBridge.expression(lit(merges.map(_._1).toArray)),
-        ColumnBridge.expression(lit(merges.map(_._2).toArray))),
-      inputTypes = Seq(StringType,
-        org.apache.spark.sql.types.ArrayType(StringType),
-        org.apache.spark.sql.types.ArrayType(StringType))))
+    call(kernel("bpeSegment", strings, StringType, ArrayType(StringType), ArrayType(StringType)),
+      text, lit(merges.map(_._1).toArray), lit(merges.map(_._2).toArray))
 
   /** One BPE merge (l, r) -> l+r applied non-overlapping left-to-right
     * over an array<string> symbol column — codegen'd kernel. */
   def bpe_merge_step(syms: Column, l: Column, r: Column): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false),
-      "bpeMergeStep",
-      Seq(ColumnBridge.expression(syms), ColumnBridge.expression(l),
-        ColumnBridge.expression(r)),
-      inputTypes = Seq(org.apache.spark.sql.types.ArrayType(StringType),
-        StringType, StringType)))
+    call(kernel("bpeMergeStep", strings, ArrayType(StringType), StringType, StringType),
+      syms, l, r)
 
   /** MinHash band-bucket hashes (array<bigint>, one per band) of a
     * shingle-hash array column — single-pass codegen'd kernel. */
   def minhash_bands(shingleHashes: Column, numBands: Int, rowsPerBand: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false),
-      "minhashBands",
-      Seq(ColumnBridge.expression(shingleHashes),
-        ColumnBridge.expression(lit(numBands)), ColumnBridge.expression(lit(rowsPerBand))),
-      inputTypes = Seq(
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType)))
+    sql("minhash_bands", shingleHashes, lit(numBands), lit(rowsPerBand))
 
   /** All hyperplane-LSH table signatures (array<bigint>, one packed-bits
     * signature per table) of an array<double> vector — one-pass codegen'd
     * kernel, value-identical to the per-bit HOF construction. */
   def hyperplane_sigs(vec: Column, bits: Int, tables: Int): Column =
-    ColumnBridge.column(StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false),
-      "hyperplaneSigs",
-      Seq(ColumnBridge.expression(vec),
-        ColumnBridge.expression(lit(bits)), ColumnBridge.expression(lit(tables))),
-      inputTypes = Seq(
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType)))
-
-  private val arrD = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.DoubleType)
-  private val arrArrD = org.apache.spark.sql.types.ArrayType(arrD)
-  private val arrArrArrD = org.apache.spark.sql.types.ArrayType(arrArrD)
-  private val arrI = org.apache.spark.sql.types.ArrayType(
-    org.apache.spark.sql.types.IntegerType)
+    sql("hyperplane_sigs", vec, lit(bits), lit(tables))
 
   /** PQ subspace codes (array<int>) — one-pass argmin kernel over
     * (subvectors, codebook), HOF-chain value-identical. */
-  def pq_encode(svs: Column, cb: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.IntegerType, containsNull = false), "pqEncode",
-      Seq(ColumnBridge.expression(svs), ColumnBridge.expression(cb)),
-      inputTypes = Seq(arrArrD, arrArrArrD)))
+  def pq_encode(svs: Column, cb: Column): Column = call(
+    kernel("pqEncode", ArrayType(IntegerType, containsNull = false), arrArrD, arrArrArrD), svs, cb)
 
   /** Reconstructed squared norm of PQ codes (double). */
-  def pq_recon_norm2(codes: Column, cb: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, org.apache.spark.sql.types.DoubleType, "pqReconNorm2",
-      Seq(ColumnBridge.expression(codes), ColumnBridge.expression(cb)),
-      inputTypes = Seq(arrI, arrArrArrD)))
+  def pq_recon_norm2(codes: Column, cb: Column): Column =
+    call(kernel("pqReconNorm2", DoubleType, arrI, arrArrArrD), codes, cb)
 
   /** Per-query ADC dot tables (array<array<double>>). */
-  def pq_dot_tables(qsvs: Column, cb: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, arrArrD, "pqDotTables",
-      Seq(ColumnBridge.expression(qsvs), ColumnBridge.expression(cb)),
-      inputTypes = Seq(arrArrD, arrArrArrD)))
+  def pq_dot_tables(qsvs: Column, cb: Column): Column =
+    call(kernel("pqDotTables", arrArrD, arrArrD, arrArrArrD), qsvs, cb)
 
   /** ADC score Σ_s tabs[s][codes[s]] (double). */
-  def pq_adc(codes: Column, tabs: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, org.apache.spark.sql.types.DoubleType, "pqAdc",
-      Seq(ColumnBridge.expression(codes), ColumnBridge.expression(tabs)),
-      inputTypes = Seq(arrI, arrArrD)))
+  def pq_adc(codes: Column, tabs: Column): Column =
+    call(kernel("pqAdc", DoubleType, arrI, arrArrD), codes, tabs)
 
   /** Cosine similarity over two array<double> columns (codegen'd static
     * kernel; callers pre-cast float embeddings ONCE, not per pair). */
-  def cosine_sim(a: Column, b: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, org.apache.spark.sql.types.DoubleType, "cosineSim",
-      Seq(ColumnBridge.expression(a), ColumnBridge.expression(b)),
-      inputTypes = Seq(
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
+  def cosine_sim(a: Column, b: Column): Column = sql("cosine_sim", a, b)
 
   /** Micro-unit integer quantization of a double vector (see Kernels.quantizeVec). */
-  def quantize_vec(c: Column): Column = ColumnBridge.column(
-    StaticInvoke(K,
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false),
-      "quantizeVec", Seq(ColumnBridge.expression(c)),
-      inputTypes = Seq(
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType))))
+  def quantize_vec(c: Column): Column = call(kernel("quantizeVec", longs, arrD), c)
 
   /** Exact squared L2 distance between two long vectors (see Kernels.l2sqQ). */
-  def l2sq_q(a: Column, b: Column): Column = ColumnBridge.column(
-    StaticInvoke(K, org.apache.spark.sql.types.LongType, "l2sqQ",
-      Seq(ColumnBridge.expression(a), ColumnBridge.expression(b)),
-      inputTypes = Seq(
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))))
+  def l2sq_q(a: Column, b: Column): Column = call(kernel("l2sqQ", LongType, arrL, arrL), a, b)
 
   /** Every graft SQL function as (name, expression builder): the one table
     * both registration routes install — per-session [[registerAll]] and
-    * the `spark.sql.extensions` route ([[graft.GraftExtensions]]). */
+    * the `spark.sql.extensions` route ([[graft.GraftExtensions]]) — and
+    * the builders the Column twins above call. */
   private[graft] val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = {
-    import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
-    def kernel(fn: String, out: DataType, in: DataType*): Seq[Expression] => Expression =
-      args => StaticInvoke(K, out, fn, args.take(in.size), inputTypes = in)
     def str1(fn: String) = kernel(fn, StringType, StringType)
     def str2(fn: String) = kernel(fn, StringType, StringType, StringType)
-    val longs = ArrayType(LongType, containsNull = false)
-    val strings = ArrayType(StringType, containsNull = false)
+    val stride = kernel("chunkTextStride", strings, StringType, IntegerType, IntegerType)
     Seq(
       "url_canonicalize" -> str1("urlCanonicalize"),
       "url_host" -> str1("urlHost"),
@@ -1275,18 +1046,15 @@ object GraftFunctions {
       "simhash64" -> kernel("simhash64", LongType, StringType),
       "shingle_hash64" -> kernel("shingleHash64", longs, StringType, IntegerType),
       "word_ngrams" -> kernel("wordNgrams", strings, StringType, IntegerType),
-      "chunk_text" -> kernel("chunkText", strings, StringType, IntegerType),
-      "chunk_text_stride" ->
-        kernel("chunkTextStride", strings, StringType, IntegerType, IntegerType),
+      // chunk_text(t, n) = chunk_text_stride(t, n, n)
+      "chunk_text" -> (args => stride(args.take(2) ++ args.slice(1, 2))),
+      "chunk_text_stride" -> stride,
       "md5_minhash_bands" -> kernel("md5MinhashBands", strings,
         StringType, IntegerType, IntegerType, IntegerType),
       "winnow_fps" -> kernel("winnowFps", strings, StringType, IntegerType, IntegerType),
-      "minhash_bands" -> kernel("minhashBands", longs,
-        ArrayType(LongType), IntegerType, IntegerType),
-      "hyperplane_sigs" -> kernel("hyperplaneSigs", longs,
-        ArrayType(DoubleType), IntegerType, IntegerType),
-      "cosine_sim" -> kernel("cosineSim", DoubleType,
-        ArrayType(DoubleType), ArrayType(DoubleType)),
+      "minhash_bands" -> kernel("minhashBands", longs, arrL, IntegerType, IntegerType),
+      "hyperplane_sigs" -> kernel("hyperplaneSigs", longs, arrD, IntegerType, IntegerType),
+      "cosine_sim" -> kernel("cosineSim", DoubleType, arrD, arrD),
       "cuckoo_might_contain" -> (args => CuckooMightContain(args(0), args(1))))
   }
 

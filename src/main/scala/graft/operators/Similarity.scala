@@ -132,11 +132,53 @@ object Similarity {
   }
 
   /**
+   * Integer-exact nearest-centroid assignment over the quantized vector
+   * `_q`: `_dists` holds the exact L2² to every centroid and `bucket` its
+   * first argmin (ties to the smallest index). The centroid matrix rides
+   * as DATA (a broadcast single-row table), never as expression-tree
+   * literals: plan/codegen size is O(1) in the centroid count, so
+   * thousands of centroids neither blow up the driver nor re-plan a giant
+   * expression every Lloyd iteration, and every task gets the matrix once.
+   */
+  private def nearestCentroid(df: DataFrame, centroids: Array[Seq[Long]],
+      bucket: String): DataFrame = {
+    import df.sparkSession.implicits._
+    df.crossJoin(broadcast(Seq(Tuple1(centroids.toSeq)).toDF("_cents")))
+      .withColumn("_dists", transform(col("_cents"), c => GraftFunctions.l2sq_q(col("_q"), c)))
+      .withColumn(bucket, (array_position(col("_dists"), array_min(col("_dists"))) - 1).cast("int"))
+      .drop("_cents")
+  }
+
+  /**
+   * One integer Lloyd update: the floored mean of each cluster's `_q`
+   * vectors, collected at (cluster, dim) grain — k*d rows, one shuffle,
+   * the corpus never shuffles — and assembled into centroid arrays on the
+   * driver. A cluster that lost all its members keeps its centroid.
+   */
+  private def lloydUpdate(assigned: DataFrame, bucket: String,
+      centroids: Array[Seq[Long]]): Array[Seq[Long]] = {
+    val rows = assigned
+      .select(col(bucket).as("_c"), posexplode(col("_q")).as(Seq("_pos", "_x")))
+      .groupBy("_c", "_pos")
+      .agg(sum(col("_x")).as("_s"), count(lit(1)).as("_n"))
+      // floored integer mean fld(s, n): the numerator is made divisible
+      // by n first, so `div` is exact and sign-correct in every engine
+      .withColumn("_m", expr("(_s - ((_s % _n + _n) % _n)) div _n"))
+      .select(col("_c"), col("_pos"), col("_m"))
+      .collect()
+    val byC = rows.groupBy(_.getInt(0)).map { case (c, rs) =>
+      c -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
+    }
+    centroids.indices.map(i => byC.getOrElse(i, centroids(i))).toArray
+  }
+
+  /**
    * IVF (inverted-file) ANN: a coarse quantizer of `nlist` centroids is
    * trained with a few deterministic Lloyd iterations (init = hash-order
-   * sample; assignment by the cosine kernel; centroid update is one
-   * groupBy-average per iteration — all distributed, only the tiny
-   * nlist x dim centroid table ever reaches the driver). The corpus is
+   * sample; assignment by exact integer L2² in [[nearestCentroid]];
+   * centroid update is one floored-mean aggregation per iteration in
+   * [[lloydUpdate]] — all distributed, only the tiny nlist x dim centroid
+   * table ever reaches the driver). The corpus is
    * bucketed by nearest centroid; a query probes its `nprobe` nearest
    * buckets and exact-reranks the candidates. `nprobe == nlist` degrades
    * to exact brute force (asserted in the spec); smaller nprobe trades
@@ -147,8 +189,6 @@ object Similarity {
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nlist: Int = 16, nprobe: Int = 4, iters: Int = 3,
       trainPerList: Int = 256): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val v = corpus.select(col(idCol).as("_id"),
       col(vecCol).cast("array<double>").as("_v"),
       GraftFunctions.quantize_vec(col(vecCol).cast("array<double>")).as("_q"))
@@ -177,35 +217,11 @@ object Similarity {
     var centroids: Array[Seq[Long]] = train
       .orderBy(trainOrder: _*).limit(nlist)
       .collect().map(_.getSeq[Long](1))
-    // The centroid matrix rides as DATA (a broadcast single-row table),
-    // never as expression-tree literals: plan/codegen size is O(1) in
-    // nlist, so production nlist (thousands) neither blows up the driver
-    // nor re-plans a giant expression every Lloyd iteration. The join is a
-    // 1-row broadcast (every task gets the matrix once); all per-row work
-    // stays in array expressions over the joined column.
-    def withBucket(df: DataFrame): DataFrame =
-      df.crossJoin(broadcast(Seq(Tuple1(centroids.map(_.toSeq).toSeq)).toDF("_cents")))
-        .withColumn("_dists", transform(col("_cents"),
-          c => GraftFunctions.l2sq_q(col("_q"), c)))
-        .withColumn("_bucket",
-          (array_position(col("_dists"), array_min(col("_dists"))) - 1).cast("int"))
-        .drop("_cents")
     // Lloyd: iters assignment passes, iters-1 floored-integer-mean updates
-    // (per-(cluster, dim) grain — nlist*dim longs to the driver, the
-    // corpus never shuffles)
     (1 until iters).foreach { _ =>
-      val rows = withBucket(train)
-        .select(col("_bucket").as("_c"), posexplode(col("_q")).as(Seq("_pos", "_x")))
-        .groupBy("_c", "_pos")
-        .agg(sum(col("_x")).as("_s"), count(lit(1)).as("_n"))
-        .withColumn("_m", expr("(_s - ((_s % _n + _n) % _n)) div _n"))
-        .select(col("_c"), col("_pos"), col("_m"))
-        .collect()
-      val byC = rows.groupBy(_.getInt(0)).map { case (c, rs) =>
-        c -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
-      }
-      centroids = centroids.indices.map(i => byC.getOrElse(i, centroids(i))).toArray
+      centroids = lloydUpdate(nearestCentroid(train, centroids, "_bucket"), "_bucket", centroids)
     }
+    def withBucket(df: DataFrame): DataFrame = nearestCentroid(df, centroids, "_bucket")
     val bucketed = withBucket(v)
       .select(col("_id").as("neighbor_id"), col("_v").as("_cv"), col("_bucket"))
     // each query probes its nprobe nearest buckets (smallest integer L2²,
@@ -436,8 +452,6 @@ object Similarity {
    */
   def kmeansClusters(df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int = 3): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(k > 0 && iters > 0, "k and iters must be positive")
     val quant = df.select(col(idCol).as("_id"),
       GraftFunctions.quantize_vec(col(vecCol).cast("array<double>")).as("_q"))
@@ -445,31 +459,10 @@ object Similarity {
     var centroids: Array[Seq[Long]] = quant
       .orderBy(md5(col("_id").cast("string")), col("_id")).limit(k)
       .collect().map(_.getSeq[Long](1))
-    def assigned: DataFrame = quant
-      .crossJoin(broadcast(Seq(Tuple1(centroids.map(_.toSeq).toSeq)).toDF("_cents")))
-      .withColumn("_dists", transform(col("_cents"),
-        c => GraftFunctions.l2sq_q(col("_q"), c)))
-      .withColumn("cluster",
-        (array_position(col("_dists"), array_min(col("_dists"))) - 1).cast("int"))
+    def assigned: DataFrame = nearestCentroid(quant, centroids, "cluster")
       .withColumn("dist_q", array_min(col("_dists")))
     (1 until iters).foreach { _ =>
-      // collect at (cluster, pos) grain — k*d rows — and assemble the
-      // centroid arrays on the driver: one shuffle per iteration instead
-      // of two (the collect_list re-grouping was a second exchange whose
-      // only job was array assembly the driver does for free)
-      val rows = assigned
-        .select(col("cluster").as("_c"), posexplode(col("_q")).as(Seq("_pos", "_x")))
-        .groupBy("_c", "_pos")
-        .agg(sum(col("_x")).as("_s"), count(lit(1)).as("_n"))
-        // floored integer mean fld(s, n): the numerator is made divisible
-        // by n first, so `div` is exact and sign-correct in every engine
-        .withColumn("_m", expr("(_s - ((_s % _n + _n) % _n)) div _n"))
-        .select(col("_c"), col("_pos"), col("_m"))
-        .collect()
-      val byC = rows.groupBy(_.getInt(0)).map { case (c, rs) =>
-        c -> rs.sortBy(_.getInt(1)).map(_.getLong(2)).toSeq
-      }
-      centroids = centroids.indices.map(i => byC.getOrElse(i, centroids(i))).toArray
+      centroids = lloydUpdate(assigned, "cluster", centroids)
     }
     assigned.select(col("_id").as(idCol), col("cluster"), col("dist_q"))
   }

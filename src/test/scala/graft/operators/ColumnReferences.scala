@@ -8,6 +8,25 @@ import graft.functions.GraftFunctions
   * kernels: the parity references that pin each kernel's values. */
 object ColumnReferences {
 
+  /** `filter(split(lower(t), '\\s+'), x -> length(x) > 0)`: the tokens the
+    * lowercasing text kernels (`word_ngrams`, `shingle_hash64`, ...) split. */
+  def lowerTokens(text: Column): Column =
+    filter(split(lower(text), "\\s+"), x => length(x) > 0)
+
+  /** `filter(split(t, ' '), x -> length(x) > 0)`: the tokens the chunkers
+    * (`chunk_text`, `chunk_text_stride`) split, bytes kept. */
+  def spaceTokens(text: Column): Column =
+    filter(split(text, " "), x => length(x) > 0)
+
+  /** Non-overlapping `n`-token chunks of [[spaceTokens]], space-joined: the
+    * slice/array_join formulation of `chunk_text(t, n)`. */
+  def chunkTextColumns(text: Column, n: Int): Column = {
+    val toks = spaceTokens(text)
+    when(toks.isNotNull, transform(
+      filter(sequence(lit(0), size(toks)), i => i < size(toks) && i % n === 0),
+      i => array_join(slice(toks, i + 1, lit(n)), " ")))
+  }
+
   /** The struct-field formulation of [[TextAnalysis.qualityFilter]]: the
     * reference for the one-pass `quality_gate` kernel. */
   def qualityFilterColumns(

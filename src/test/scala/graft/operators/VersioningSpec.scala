@@ -51,7 +51,7 @@ class VersioningSpec extends SparkSuite {
     // stride == size equals the non-overlapping chunker
     val eq = df.select(
       graft.functions.GraftFunctions.chunk_text_stride(col("text"), 3, 3).as("a"),
-      graft.functions.GraftFunctions.chunk_text(col("text"), 3).as("b"))
+      ColumnReferences.chunkTextColumns(col("text"), 3).as("b"))
       .collect()
     eq.foreach(r => assert(r.getSeq[String](0) === r.getSeq[String](1)))
     // SQL registration resolves

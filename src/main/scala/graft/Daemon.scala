@@ -34,12 +34,12 @@ import graft.crawl.{Crawl, Pipeline}
  * feed a driver-side sort or count or to infer a known schema. The
  * driver-sized outputs (the reports' events, SUMMARY.md, the ICS) render
  * on the driver from one collect each. A warm cycle at `--limit 30
- * --scale 1000` over ten sites (4 cores) runs 35 Spark jobs: 11 for the
- * two-wave crawl, 10 for the merge (the staged batch, the merge join
- * with its windows, the clustered layout), 1 to collect the events, 2
- * feed writes from one render, 5 report writes (3 of them the crawl
- * lineage, one aggregation over both waves), 4 for the calendar (its
- * merge and the ICS collect) and 2 cache writes.
+ * --scale 1000` over ten sites (4 cores) runs 28 Spark jobs: 11 for the
+ * two-wave crawl, 3 for the merge (one site exchange and the staged pass
+ * per site), 1 to collect the events, 2 feed writes from one render, 5
+ * report writes (3 of them the crawl lineage, one aggregation over both
+ * waves), 4 for the calendar (its merge and the ICS collect) and 2 cache
+ * writes; a site whose merge created or updated no post writes none.
  */
 object Daemon {
 
@@ -183,10 +183,8 @@ object Daemon {
     // STATIC mode would truncate the whole sites/ and rss/ trees first
     graft.sinks.SiteJson.write(out.siteJson, s"${opts.out}/sites")
     graft.sinks.Rss.write(out.rss, s"${opts.out}/rss")
-    // collected before the cache overwrite below: the event rows read the
-    // touched cache partitions, which that dynamic overwrite REPLACES
-    val events = writeReports(spark, opts.out,
-      out.events.as[Event].collect().toSeq, out.touchedSites, allFailed)
+    val contentEvents = out.events.as[Event].collect().toSeq
+    val events = writeReports(spark, opts.out, contentEvents, out.touchedSites, allFailed)
     crawl.lineage.write.mode("overwrite").json(s"${opts.out}/reports/lineage")
 
     // calendar path
@@ -201,14 +199,15 @@ object Daemon {
       java.nio.file.Paths.get(s"${opts.out}/calendar.ics"), cal.ics)
 
     // persist the cache INCREMENTALLY: dynamic partition overwrite rewrites
-    // ONLY the crawled sites' partitions (per-partition staging+rename
-    // commit); every other site's files are untouched on disk — the
-    // scale-safe analog of the reference's per-site cache persistence
-    // (mod.rs:269-301). The calendar cache stays a (small) snapshot swap.
-    out.touchedCache.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("site_id")
-      .parquet(opts.cache)
+    // ONLY the partitions of crawled sites whose merge created or updated
+    // a post (per-partition staging+rename commit); any other site merged
+    // to its cache rows at their ranks, so its files stay untouched and an
+    // unchanged cycle writes none — the scale-safe analog of the
+    // reference's per-site cache persistence (mod.rs:269-301)
+    val changedSites = contentEvents.map(_._1).distinct
+    if (changedSites.nonEmpty)
+      out.touchedCache.filter(col("site_id").isin(changedSites: _*)).write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").partitionBy("site_id").parquet(opts.cache)
     // calendar cache advances via the rename-aside snapshot swap: the new
     // version is written BESIDE the live one (its plan still reads the old
     // files), then committed — a mid-swap crash leaves the old snapshot or

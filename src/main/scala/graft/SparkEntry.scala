@@ -66,9 +66,8 @@ object SparkEntry {
   // count prune the payload columns out of the join+windows entirely —
   // cheaper than materializing the full-width merge once (A/B'd: a staged
   // localCheckpoint costs q04 3.4s of payload materialization to save
-  // q05 1.1s). The daemon cycle (q37/q38), whose consumers DO read all
-  // columns, stages its batch, its merge and the clustered slice instead
-  // (Merge.mergeEntriesIncremental under Pipeline.runDaemon).
+  // q05 1.1s). The daemon's merge (q37/q38), whose consumers read all
+  // columns, stages its output instead (Merge.mergeBySite).
   private def mergedOrders(s: SparkSession, dir: String): Merge.MergeResult =
     Merge.mergeEntries(ordersOld(s, dir), ordersNew(s, dir), mergeNow)
 

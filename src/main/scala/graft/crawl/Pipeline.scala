@@ -13,9 +13,9 @@ import graft.sinks.Feeds
  * input). [[graft.Daemon.run]] runs the crawl, calls [[runDaemon]] and
  * writes its outputs.
  *
- * Spark shape: the merge shuffles only the crawl batch (its keys ride as
- * a broadcast), one exchange clusters the crawled sites' slice by site,
- * and both feeds render in one narrow pass over that slice.
+ * Spark shape: one exchange and one pass per site merge the crawled
+ * sites' cache slice with the crawl batch, and both feeds render in one
+ * narrow pass over its output.
  */
 object Pipeline {
 
@@ -41,12 +41,8 @@ object Pipeline {
    *  - only the crawled sites' partitions are SCANNED (partition pruning
    *    on the isin filter — untouched sites contribute zero read or
    *    shuffle rows to the merge);
-   *  - within the touched slice, only cache rows whose (site_id, id)
-   *    appears in the crawl batch enter the full-outer merge join (the
-   *    batch is staged once and its key set rides as a BROADCAST
-   *    semi/anti join — the cache side needs no Exchange, and the
-   *    shuffle is O(batch), not O(touched-site history); MergeSpec
-   *    audits the shuffle volume);
+   *  - [[Merge.mergeBySite]] merges that slice with the crawl batch; its
+   *    output is the layout the feeds, the events and the write-back read;
    *  - only the crawled sites' rows come back as `touchedCache`, which a
    *    dynamic partition overwrite can write over their partitions alone.
    * A site that failed mid-crawl keeps its previous cache rows untouched
@@ -62,22 +58,8 @@ object Pipeline {
       .filterNot(crawl.failedSites.keySet)
     val cacheTouched = cache.filter(col("site_id").isin(touched: _*))
     val cacheUntouched = cache.filter(!col("site_id").isin(touched: _*))
-    val merged = Merge.mergeEntriesIncremental(cacheTouched, crawlBatch(crawl), now)
-    // Canonical storage layout before the write-back (Merge.clusterBySite):
-    // one exchange keyed by site_id with a (rank, id) sort inside each
-    // site. This (a) writes ONE file per site partition instead of one per
-    // (site × shuffle partition) — the next run's partition-pruned read
-    // scans a single file per site — (b) makes the persisted bytes a pure
-    // function of the logical cache state, so an identical daemon cycle
-    // publishes an identical tree and the commit no-ops, and (c) lets the
-    // feeds render each site's top-K in one narrow pass. The exchange
-    // moves only the touched slice, which the dynamic partition overwrite
-    // is about to rewrite to storage anyway; the MERGE itself no longer
-    // shuffles site history (broadcast key semi/anti above).
-    // localCheckpoint both stages it once for the several consumers below
-    // AND breaks the cache-read lineage so the dynamic overwrite may write
-    // back to the same path it was read from
-    val touchedPosts = Merge.clusterBySite(merged.posts).localCheckpoint()
+    val Merge.MergeResult(touchedPosts, events) =
+      Merge.mergeBySite(cacheTouched, crawlBatch(crawl), now)
     // feeds cover the sites this run crawled (the reference daemon emits
     // outputs per crawled plugin, main.rs:192-243 — untouched sites keep
     // their previous outputs and are neither scanned nor rewritten). Both
@@ -88,11 +70,10 @@ object Pipeline {
 
     Output(
       topPosts = Merge.topKPerSite(touchedPosts, topK),
-      cache = cacheUntouched.select(touchedPosts.columns.map(col): _*)
-        .unionByName(touchedPosts),
+      cache = cacheUntouched.unionByName(touchedPosts),
       siteJson = feeds.select("site_id", "site_json"),
       rss = feeds.select("site_id", "rss_xml"),
-      events = merged.events,
+      events = events,
       schedule = crawl.schedule,
       lineage = crawl.lineage,
       touchedCache = touchedPosts,

@@ -342,6 +342,8 @@ object Kernels {
     if (text == null) return emptyStrings
     val toks = tokens(text, lower = true)
     if (toks.length < n) return emptyStrings
+    // a 1-gram is its token, whose bytes this row owns: wrap, not copy
+    if (n == 1) return new GenericArrayData(toks.map(UTF8String.fromBytes))
     val out = new Array[UTF8String](toks.length - n + 1)
     val g = new GramWriter
     var i = 0

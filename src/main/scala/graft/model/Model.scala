@@ -1,6 +1,7 @@
 package graft.model
 
 import java.sql.Timestamp
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * Core data model of the engine.
@@ -39,15 +40,24 @@ final case class Post(
 object Post {
   /**
    * Content-equality for change detection — reference semantics
-   * (packages/ssufid/src/core/post.rs:50-56): compares *trimmed* id,
-   * exact title/category, *trimmed* content; deliberately excludes
-   * url/author/dates/attachments/metadata.
+   * (packages/ssufid/src/core/post.rs:50-56): compares *trimmed* id, title
+   * and content and the exact category; deliberately excludes
+   * url/author/dates/attachments/metadata. It answers as its Column twin
+   * [[graft.operators.Merge.contentsEq]]: a trim drops spaces only, as
+   * Spark's `trim`, and a null equals only a null.
    */
   def contentsEq(a: Post, b: Post): Boolean =
-    a.id.trim == b.id.trim &&
-      a.title == b.title &&
-      a.category == b.category &&
-      a.content.trim == b.content.trim
+    contentsEq(a.id, a.title, a.category, a.content)(b.id, b.title, b.category, b.content)
+
+  /** [[contentsEq]] over the four fields it reads. */
+  def contentsEq(id: String, title: String, category: collection.Seq[String], content: String)(
+      id2: String, title2: String, category2: collection.Seq[String], content2: String): Boolean =
+    trimmedEq(id, id2) && trimmedEq(title, title2) && category == category2 &&
+      trimmedEq(content, content2)
+
+  private def trimmedEq(a: String, b: String): Boolean =
+    if (a == null || b == null) a == b
+    else UTF8String.fromString(a).trim() == UTF8String.fromString(b).trim()
 }
 
 /** One span of an interleaved text+media document. kind in {text, image, attachment}. */
@@ -68,18 +78,3 @@ final case class CalendarEvent(
     ends_at: Option[Timestamp],
     location: Option[String],
     url: Option[String])
-
-object CalendarEvent {
-  /**
-   * Reference contents_eq (calendar.rs:56-65): trims every string field,
-   * compares timestamps exactly.
-   */
-  def contentsEq(a: CalendarEvent, b: CalendarEvent): Boolean =
-    a.id.trim == b.id.trim &&
-      a.title.trim == b.title.trim &&
-      a.description.map(_.trim) == b.description.map(_.trim) &&
-      a.starts_at == b.starts_at &&
-      a.ends_at == b.ends_at &&
-      a.location.map(_.trim) == b.location.map(_.trim) &&
-      a.url.map(_.trim) == b.url.map(_.trim)
-}

@@ -1,9 +1,13 @@
 package graft.operators
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructType}
+import graft.model.Post
 
 /**
  * The merge/upsert core of the engine — a faithful, distributed
@@ -25,15 +29,11 @@ import org.apache.spark.sql.functions._
  *    timestamp — the reference's nondeterministic `OffsetDateTime::now` is
  *    made deterministic here), at the old row's rank (event `post_updated`).
  *
- * Scale design (100 TB cache, small per-batch crawl):
- *  - the exact merge is ONE full-outer shuffle join keyed by
- *    (site_id, id), then one site exchange for the post-join rank
- *    windows;
- *  - [[mergeEntriesIncremental]] avoids rewriting the untouched cache: the
- *    (small) new batch's key set is broadcast as a join filter, only the
- *    touched slice of the cache enters the join, the rest is passed
- *    through unchanged — at 10^10 rows this turns a full-cache shuffle
- *    into a broadcast semi/anti join.
+ * Scale design (100 TB cache, small per-batch crawl): [[mergeEntries]] is
+ * ONE full-outer shuffle join keyed by (site_id, id) plus one site
+ * exchange for its rank windows; the daemon's [[mergeBySite]] is the
+ * reference's sequential pass, one per site behind ONE site_id exchange,
+ * over only the crawled sites' cache partitions.
  *
  * Both inputs must carry the post schema (graft.model.Post + site_id);
  * `old` may carry a `rank` column (insertion order from the previous
@@ -59,33 +59,17 @@ object Merge {
    * within the batch; pagination order (page, row) flattened) — the
    * reference's stable sort tiebreaker. Emits posts (+`rank`) and a
    * `post_created`/`post_updated` event table. Inserts are ranked after the
-   * per-site max of `oldDf.rank`, or after `rankBase` when given: one
-   * `(site_id, rank_base)` row per site, a site without a row starting at 0.
+   * per-site max of `oldDf.rank`.
    */
-  def mergeEntries(oldDf: DataFrame, newDf: DataFrame, now: Timestamp,
-      stageResult: Boolean = false, rankBase: Option[DataFrame] = None): MergeResult = {
-    val spark = oldDf.sparkSession
-
+  def mergeEntries(oldDf: DataFrame, newDf: DataFrame, now: Timestamp): MergeResult = {
     val oldRanked =
       if (oldDf.columns.contains("rank")) oldDf
       else oldDf.withColumn("rank",
         row_number().over(Window.partitionBy("site_id").orderBy(col("created_at"), col("id"))))
 
-    // Arrival-order tiebreaker: callers pass `seq` (crawl order). The
-    // fallback derives it from explicit content columns — NEVER from
-    // partition order (monotonically_increasing_id would silently break
-    // the engine-wide determinism contract for created_at ties).
-    val newSeq =
-      if (newDf.columns.contains("seq")) newDf
-      else newDf.withColumn("seq", xxhash64(col("site_id"), col("id")))
-
     val o = oldRanked.select(
       (postCols :+ "rank").map(c => col(c).as(s"o_$c")): _*)
-    // inserts only come from the new side, so the base rides on its rows
-    val newBased = rankBase.fold(newSeq)(b =>
-      newSeq.join(broadcast(b.select("site_id", "rank_base")), Seq("site_id"), "left"))
-    val n = newBased.select((postCols ++ Seq("seq") ++ rankBase.map(_ => "rank_base"))
-      .map(c => col(c).as(s"n_$c")): _*)
+    val n = withSeq(newDf).select((postCols :+ "seq").map(c => col(c).as(s"n_$c")): _*)
 
     val joined = o.join(n,
       o("o_site_id") === n("n_site_id") && o("o_id") === n("n_id"), "full_outer")
@@ -98,10 +82,7 @@ object Merge {
 
     // Per-site max old rank to append inserts after all existing rows.
     val siteKey = coalesce(oc("site_id"), nc("site_id"))
-    val maxOldRank = coalesce(
-      if (rankBase.isDefined) nc("rank_base")
-      else max(oc("rank")).over(Window.partitionBy(siteKey)),
-      lit(0L))
+    val maxOldRank = coalesce(max(oc("rank")).over(Window.partitionBy(siteKey)), lit(0L))
     // Inserts keep the new batch's stable order after the old block:
     // running count of inserts in new-batch order, created_at then arrival
     // (nulls — old-only rows — sort first and contribute 0). Ordering by
@@ -129,7 +110,7 @@ object Merge {
     val createdAt = when(isUpdate && nc("updated_at").isNotNull, nc("created_at"))
       .otherwise(pick("created_at"))
 
-    val merged0 = joined.select(
+    result(joined.select(
       (postCols.map {
         case "created_at" => createdAt.as("created_at")
         case f            => pick(f).as(f)
@@ -137,52 +118,94 @@ object Merge {
         when(isInsert, insertRank).otherwise(oc("rank")).cast("long").as("rank") :+
         when(isInsert, lit("post_created"))
           .when(isUpdate, lit("post_updated"))
-          .otherwise(lit(null).cast("string")).as("_event")): _*)
-    // stageResult: materialize the joined/window'd merge ONCE (lazily, on
-    // first consumer) so posts and events don't each re-run the full-outer
-    // join + three windows — the one-crawl-many-consumers daemon shape.
-    val merged = if (stageResult) merged0.localCheckpoint(eager = false) else merged0
-
-    val events = merged.filter(col("_event").isNotNull)
-      .select(col("site_id"), col("_event").as("event"), col("id").as("post_id"),
-        col("title"), col("url"))
-    MergeResult(merged.drop("_event"), events)
+          .otherwise(lit(null).cast("string")).as("_event")): _*))
   }
 
   /**
-   * Incremental merge for huge caches: only cache rows whose (site_id, id)
-   * appears in the new batch enter the join; everything else is passed
-   * through untouched. The new batch is staged once and its key set
-   * broadcast (it is per-run crawl output: bounded, small relative to the
-   * cache).
+   * [[mergeEntries]]' result for `cache` rows with their `rank` and a
+   * `batch` unique on (site_id, id), as the reference computes it: ONE
+   * site_id exchange takes both, a sort puts each site's batch rows (null
+   * rank) before its cache rows in (rank, id) order, and one pass per site
+   * buffers the batch, streams the cache rows through, each kept or
+   * replaced at its rank, then appends the unmatched batch rows. The output
+   * is the cache's layout, each site whole in one partition in (rank, id)
+   * order: a partitioned write emits one file per site with bytes that are
+   * a function of the logical state, and [[graft.sinks.Feeds]] renders it
+   * without a shuffle. It is staged (an eager localCheckpoint), which also
+   * cuts its lineage to `cache`: the caller may overwrite what it read.
    */
-  def mergeEntriesIncremental(oldDf: DataFrame, newDf: DataFrame, now: Timestamp): MergeResult = {
-    // staged: the key set below and the merge join both read the batch,
-    // and each would otherwise re-run the crawl fetch underneath it
-    val batch = newDf.localCheckpoint(eager = false)
-    // a semi/anti join never multiplies its left rows, so the broadcast
-    // key set needs no distinct (and no aggregate exchange)
-    val keys = batch.select("site_id", "id")
-    val touched = oldDf.join(broadcast(keys), Seq("site_id", "id"), "left_semi")
-    val untouched = oldDf.join(broadcast(keys), Seq("site_id", "id"), "left_anti")
-    // Insert ranks start after the per-site max over the FULL cache, not
-    // just its touched rows: an insert gets siteMax + k, and a kept or
-    // updated row keeps its own rank
-    val maxRanks = oldDf.groupBy("site_id").agg(max("rank").cast("long").as("rank_base"))
-    // staged: the daemon checkpoints the posts and then the events, and
-    // each would otherwise re-run the whole join and its windows
-    val r = mergeEntries(touched, batch, now, stageResult = true, rankBase = Some(maxRanks))
-    MergeResult(untouched.select(r.posts.columns.map(col): _*).unionByName(r.posts), r.events)
+  def mergeBySite(cache: DataFrame, batch: DataFrame, now: Timestamp): MergeResult = {
+    val side = (df: DataFrame, rank: Column, seq: Column) =>
+      df.select(postCols.map(col) :+ rank.cast("long").as("rank") :+ seq.cast("long").as("seq"): _*)
+    val sides = side(withSeq(batch), lit(null), col("seq"))
+      .unionByName(side(cache, col("rank"), lit(null)))
+      .repartition(col("site_id"))
+      .sortWithinPartitions(col("site_id"), col("rank"), col("id"))
+    result(sides
+      .mapPartitions { (in: Iterator[Row]) =>
+        val rows = in.buffered
+        Iterator.continually(rows).takeWhile(_.hasNext).flatMap(mergeSite(_, now))
+      }(Encoders.row(StructType(sides.schema.init).add("_event", StringType)))
+      // the pass hides its output order from the planner: this sort finds
+      // the rows in order and declares it, so the cache write adds none
+      .sortWithinPartitions(col("site_id"), col("rank"), col("id"))
+      .localCheckpoint())
   }
 
-  /** The cache's canonical per-site layout: ONE exchange keyed by site_id,
-    * then a (rank, id) sort inside each site. Each site is whole in one
-    * partition, so a partitioned write emits one file per site, and the
-    * rows' order is a pure function of the logical state.
-    * [[graft.sinks.Feeds]] renders from this layout without a shuffle. */
-  def clusterBySite(posts: DataFrame): DataFrame =
-    posts.repartition(col("site_id"))
-      .sortWithinPartitions(col("site_id"), col("rank"), col("id"))
+  // a pass row holds the post's fields, then `rank`, then `seq` or `_event`
+  private val Seq(siteIx, idIx, titleIx, categoryIx, createdIx, updatedIx, contentIx) =
+    Seq("site_id", "id", "title", "category", "created_at", "updated_at", "content")
+      .map(postCols.indexOf)
+  private val rankIx = postCols.size
+
+  /** The merge of the site at the head of `rows`, which it consumes. */
+  private def mergeSite(rows: BufferedIterator[Row], now: Timestamp): Iterator[Row] = {
+    val site = rows.head.getString(siteIx)
+    def inSite = rows.hasNext && rows.head.getString(siteIx) == site
+    // the site's batch rows that no cache row has matched yet
+    val batch = mutable.LinkedHashMap.empty[String, Row]
+    while (inSite && rows.head.isNullAt(rankIx)) {
+      val n = rows.next()
+      require(batch.put(n.getString(idIx), n).isEmpty, s"batch repeats $site/${n.getString(idIx)}")
+    }
+    var lastRank = 0L
+    def out(r: Row, rank: Long, ev: String): Array[Any] =
+      Array.tabulate(rankIx + 2)(i => if (i < rankIx) r.get(i) else if (i == rankIx) rank else ev)
+    val cached = Iterator.continually(rows).takeWhile(_ => inSite).map(_.next()).map { o =>
+      lastRank = o.getLong(rankIx)
+      new GenericRow(batch.remove(o.getString(idIx)) match {
+        case Some(n) if !Post.contentsEq(o.getString(idIx), o.getString(titleIx),
+            o.getSeq[String](categoryIx), o.getString(contentIx))(n.getString(idIx),
+            n.getString(titleIx), n.getSeq[String](categoryIx), n.getString(contentIx)) =>
+          val v = out(n, lastRank, "post_updated")
+          // a new row without its own updated_at keeps the old created_at
+          // and is stamped `now` (reference mod.rs:361-371)
+          if (n.isNullAt(updatedIx)) { v(createdIx) = o.get(createdIx); v(updatedIx) = now }
+          v
+        case _ => out(o, lastRank, null)
+      })
+    }
+    // `++` takes its right side by name: the inserts are ordered, as the
+    // exact merge orders them, and ranked once the cache rows have gone by
+    cached ++ batch.values.toSeq
+      .sortBy(n => (Option(n.getTimestamp(createdIx)), n.getLong(rankIx + 1)))
+      .iterator.zipWithIndex
+      .map { case (n, k) => new GenericRow(out(n, lastRank + k + 1, "post_created")) }
+  }
+
+  /** Arrival-order tiebreaker: callers pass `seq` (crawl order). The
+    * fallback derives it from explicit content columns — NEVER from
+    * partition order (monotonically_increasing_id would silently break
+    * the engine-wide determinism contract for created_at ties). */
+  private def withSeq(newDf: DataFrame): DataFrame =
+    if (newDf.columns.contains("seq")) newDf
+    else newDf.withColumn("seq", xxhash64(col("site_id"), col("id")))
+
+  /** Posts and their events from merged rows that carry `_event`. */
+  private def result(merged: DataFrame): MergeResult =
+    MergeResult(merged.drop("_event"), merged.filter(col("_event").isNotNull)
+      .select(col("site_id"), col("_event").as("event"), col("id").as("post_id"),
+        col("title"), col("url")))
 
   /** Newest-first top-K per site (reference mod.rs:142-147: `.rev().take(k)`). */
   def topKPerSite(posts: DataFrame, k: Int): DataFrame = {

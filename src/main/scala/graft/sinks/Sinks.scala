@@ -224,8 +224,8 @@ object SiteJson {
 
 /**
  * Both per-site feeds, JSON and RSS, rendered in one narrow pass over posts
- * laid out by [[graft.operators.Merge.clusterBySite]]: every site whole in
- * one partition, its rows sorted by rank. The pass keeps the last `k` rows
+ * laid out as [[graft.operators.Merge.mergeBySite]] leaves them: every site
+ * whole in one partition, its rows sorted by rank. The pass keeps the last `k` rows
  * of each site's run — its newest `k` posts, the top-K of
  * [[graft.operators.Merge.topKPerSite]] — so it needs no window, no
  * grouping shuffle and no global sort, and its one row per site needs no

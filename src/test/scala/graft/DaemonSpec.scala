@@ -3,16 +3,20 @@ package graft
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
-class DaemonSpec extends SparkSuite {
+object DaemonSpec {
 
   /** A small fixture cycle: every crawl family shape the sinks render —
     * boards, a co-hosted pair, a rev-1 content drift (biz id 17 lies in
     * its limit-20 window) and the calendar. */
-  private def cycleOpts(dir: String) = Daemon.Options(out = s"$dir/out",
+  def cycleOpts(dir: String): Daemon.Options = Daemon.Options(out = s"$dir/out",
     cache = s"$dir/cache", limit = 20, scale = 60,
     include = Seq("scatch.ssu.ac.kr", "biz.ssu.ac.kr", "cse.ssu.ac.kr/bachelor",
       "cse.ssu.ac.kr/graduate", "bioinfo.ssu.ac.kr", "ssu-academic-calendar"))
-  private val flipNow = java.sql.Timestamp.valueOf("2026-01-16 00:00:00")
+  val flipNow: java.sql.Timestamp = java.sql.Timestamp.valueOf("2026-01-16 00:00:00")
+}
+
+class DaemonSpec extends SparkSuite {
+  import DaemonSpec._
 
   private def sha256(parts: Array[Byte]*): String = {
     val d = java.security.MessageDigest.getInstance("SHA-256")
@@ -103,8 +107,9 @@ class DaemonSpec extends SparkSuite {
   // 2 more before the crawl lineage became one aggregation, and 4 more
   // before the cache reads took their known schema and the calendar
   // merge sorted in place, and 3 more before the reports rendered from
-  // one events collect and the merge's insert order lost its exchange
-  private val MaxWarmCycleJobs = 35
+  // one events collect and the merge's insert order lost its exchange,
+  // and 7 more before the merge became one per-site pass
+  private val MaxWarmCycleJobs = 28
 
   test("CLI option parsing mirrors the reference (mutually exclusive include/exclude)") {
     val o = Daemon.parseArgs(Array("--out", "/tmp/o", "--limit", "30",
@@ -242,18 +247,7 @@ class DaemonSpec extends SparkSuite {
       include = Seq("biz.ssu.ac.kr", "bioinfo.ssu.ac.kr"))
     Daemon.run(spark, base)
 
-    def cacheFiles(): Map[String, (Long, Long)] = {
-      val root = java.nio.file.Paths.get(s"$dir/cache")
-      val walk = java.nio.file.Files.walk(root)
-      try {
-        import scala.jdk.CollectionConverters._
-        walk.iterator().asScala
-          .filter(p => p.toString.endsWith(".parquet"))
-          .map(p => root.relativize(p).toString ->
-            (java.nio.file.Files.size(p), java.nio.file.Files.getLastModifiedTime(p).toMillis))
-          .toMap
-      } finally walk.close()
-    }
+    def cacheFiles() = files(s"$dir/cache")
     val before = cacheFiles()
     assert(before.keys.exists(_.contains("site_id=biz.ssu.ac.kr")))
     assert(before.keys.exists(_.contains("site_id=bioinfo.ssu.ac.kr")))
@@ -280,6 +274,37 @@ class DaemonSpec extends SparkSuite {
       .filter(col("event").isin("post_created", "post_updated")).count() > 0)
     assert(cache.filter(col("site_id") === "biz.ssu.ac.kr")
       .filter(col("content").contains("[개정판 rev1]")).count() > 0)
+  }
+
+  /** Every file below `dir`: its relative path -> (size, bytes digest,
+    * mtime in ms). */
+  private def files(dir: String): Map[String, (Long, String, Long)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(dir)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala
+      .filter(p => java.nio.file.Files.isRegularFile(p))
+      .map(p => root.relativize(p).toString -> (java.nio.file.Files.size(p),
+        sha256(java.nio.file.Files.readAllBytes(p)),
+        java.nio.file.Files.getLastModifiedTime(p).toMillis))
+      .toMap
+    finally walk.close()
+  }
+
+  test("a cycle over unchanged data rewrites no cache file and publishes no commit") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-daemon-noop").toString
+    val opts = Daemon.Options(out = s"$dir/out", cache = s"$dir/cache",
+      limit = 10, scale = 60, publishRepo = Some(s"$dir/repo"),
+      include = Seq("scatch.ssu.ac.kr", "biz.ssu.ac.kr", "bioinfo.ssu.ac.kr"))
+    Daemon.run(spark, opts)
+    def head() = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$dir/repo/.graft/HEAD")).trim
+    val (headBefore, before) = (head(), files(s"$dir/cache"))
+    assert(before.keys.count(_.endsWith(".parquet")) === 3, before.keys)
+    val res = Daemon.run(spark, opts.copy(now = flipNow))
+    assert(res.pipeline.events.filter(col("event").startsWith("post_")).count() === 0)
+    assert(files(s"$dir/cache") === before, "no cache file may be rewritten")
+    assert(head() === headBefore, "an unchanged cycle must publish no commit")
   }
 
   test("--include prunes sites BEFORE the crawl: only included sites are ever scheduled") {

@@ -33,6 +33,38 @@ class MergePropertiesSpec extends SparkSuite {
       .orderBy("site_id", "rank")
       .collect().map(_.mkString("|")).toSeq
 
+  test("the daemon's per-site pass gives the exact merge's posts, ranks and events") {
+    val rnd = new scala.util.Random(23)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(df.columns.sorted.map(col): _*).orderBy("site_id", "rank")
+        .collect().map(_.toString).toSeq
+    def events(r: Merge.MergeResult) = r.events.collect().map(_.toString).toSeq.sorted
+    (1 to 3).foreach { _ =>
+      // site_0 in both, site_1 only in the cache, site_2 only in the batch;
+      // some batch rows carry their own updated_at or a padded title, and
+      // some re-crawl a cached site_0 post whose title drifted by spaces
+      val old = randomPosts(rnd, 40, 60)
+        .map(p => if (p.site_id == "site_2") p.copy(site_id = "site_1") else p)
+      val fresh = randomPosts(rnd, 25, 60).map { p =>
+        val q = if (p.site_id == "site_1") p.copy(site_id = "site_2") else p
+        rnd.nextInt(4) match {
+          case 0 => q.copy(updated_at = Some(new Timestamp(now.getTime + 1000)))
+          case 1 => q.copy(title = s" ${q.title} ")
+          case _ => q
+        }
+      }
+      val freshKeys = fresh.map(p => (p.site_id, p.id)).toSet
+      val batch = fresh ++ old
+        .filter(o => o.site_id == "site_0" && !freshKeys((o.site_id, o.id)))
+        .take(5).map(o => o.copy(title = s"  ${o.title} "))
+      val cache = Merge.mergeEntries(old.toDF(), spark.emptyDataset[Post].toDF(), now).posts
+      val exact = Merge.mergeEntries(cache, batch.toDF(), now)
+      val pass = Merge.mergeBySite(cache, batch.toDF(), now)
+      assert(rows(pass.posts) === rows(exact.posts))
+      assert(events(pass) === events(exact))
+    }
+  }
+
   test("idempotence: merging the same batch twice is a no-op (seeded corpus)") {
     val rnd = new scala.util.Random(42)
     (1 to 5).foreach { _ =>

@@ -81,6 +81,22 @@ class MergeSpec extends SparkSuite {
     assert(row.getAs[Timestamp]("updated_at") === null)
   }
 
+  test("Post.contentsEq and the Column contentsEq give the same answers") {
+    val p = post("1", 0, "Title", "Content", category = Seq("A", "B"))
+    val variants = Seq(
+      p, p.copy(id = " 1 "), p.copy(title = "  Title "), p.copy(content = "Content  "),
+      p.copy(title = "\tTitle"), p.copy(content = "Other"), p.copy(category = Seq.empty),
+      p.copy(category = Seq("B", "A")))
+    val pairs = for (a <- variants; b <- variants) yield (a, b)
+    val column = pairs.toDF("a", "b")
+      .select(Merge.contentsEq(f => col(s"a.$f"), f => col(s"b.$f")))
+      .as[Boolean].collect().toSeq
+    assert(column === pairs.map { case (a, b) => Post.contentsEq(a, b) })
+    // the padded forms are equal, the tab, the category changes and the
+    // new content are not
+    assert(column.count(identity) === 4 * 4 + 4)
+  }
+
   test("merge is idempotent: merging the same batch twice changes nothing") {
     val oldPosts = Seq(post("1", -1, "T1", "C1"), post("0", -2, "T0", "C0"))
     val newPosts = Seq(post("1", 0, "T1-upd", "C1-upd"), post("2", 1, "T2", "C2"))
@@ -104,7 +120,7 @@ class MergeSpec extends SparkSuite {
       post("c1", 5, "C1", "CC1").copy(site_id = "site_c"),
       post("c0", 6, "C0", "CC0").copy(site_id = "site_c"))
     val exact = Merge.mergeEntries(oldPosts.toDF(), newPosts.toDF(), now).posts
-    val incr = Merge.mergeEntriesIncremental(
+    val incr = Merge.mergeBySite(
       Merge.mergeEntries(oldPosts.toDF(), spark.emptyDataset[Post].toDF(), now).posts, // ranked cache
       newPosts.toDF(), now).posts
     def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("site_id", "rank")
@@ -116,38 +132,62 @@ class MergeSpec extends SparkSuite {
       Seq("[site_c,c1,C1,1]", "[site_c,c0,C0,2]"))
   }
 
-  test("incremental merge shuffles O(batch): cache history rides a broadcast semi/anti, never an Exchange") {
+  test("the daemon merge and its layout cross one exchange") {
     // daemon-shaped input: a parquet-persisted cache (file scan, like the
-    // product path) with 20k rows of history, a 2-row batch
-    val dir = java.nio.file.Files.createTempDirectory("graft-incr-shuffle")
+    // product path) with 20k rows of history, a 2-row batch; a session of
+    // its own with AQE off, so the plan shows every exchange
+    val session = spark.newSession()
+    session.conf.set("spark.sql.adaptive.enabled", "false")
+    val dir = java.nio.file.Files.createTempDirectory("graft-merge-site").toString
     val n = 20000
-    val cache = Merge.mergeEntries(
+    Merge.mergeEntries(
       (0 until n).map(i => post(s"c$i", -n.toLong + i, s"T$i", s"C$i")).toDF(),
       spark.emptyDataset[Post].toDF(), now).posts
-    cache.write.mode("overwrite").parquet(dir.toString)
-    val cacheDf = spark.read.parquet(dir.toString)
-    val batch = Seq(
+      .write.mode("overwrite").parquet(dir)
+    val cache = session.read.parquet(dir)
+    val batch = session.createDataFrame(Seq(
       post("c10", 1, "T10-upd", "C10-upd"),
-      post("zz", 2, "TZ", "CZ")).toDF()
+      post("zz", 2, "TZ", "CZ")))
 
+    // the staged pass is the run's one localCheckpoint action
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]
+    val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
     val records = new java.util.concurrent.atomic.AtomicLong
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
         if (e.taskMetrics != null)
           records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
     }
+    session.listenerManager.register(planListener)
     spark.sparkContext.addSparkListener(listener)
     try {
-      val r = Merge.mergeEntriesIncremental(cacheDf, batch, now)
+      val r = Merge.mergeBySite(cache, batch, now)
+      awaitQuiet(records.get + plans.size)
+      val shuffled = records.get
       assert(r.posts.count() === n + 1)
-      awaitQuiet(records.get)
-      val plan = r.posts.queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin"), "batch key set must broadcast")
-      // O(batch): window/aggregate shuffles over the 3 touched + 2 batch
-      // rows plus per-partition aggregate stubs — NOT the 20k-row history
-      assert(records.get < n / 10,
-        s"merge shuffled ${records.get} records for a $n-row cache and a 2-row batch")
-    } finally spark.sparkContext.removeSparkListener(listener)
+      assert(plans.size === 1)
+      val plan = plans.peek()
+      val exchanges = plan.collect {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }
+      assert(exchanges.size === 1, plan.treeString)
+      assert(plan.collect {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+      }.isEmpty, plan.treeString)
+      // the one exchange moves the touched history and the batch once
+      assert(shuffled <= n + 2,
+        s"merge shuffled $shuffled records for a $n-row cache and a 2-row batch")
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      session.listenerManager.unregister(planListener)
+    }
   }
 
   test("exact merge plan: one (site_id, id) exchange per join side and one site exchange " +

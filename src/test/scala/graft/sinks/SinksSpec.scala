@@ -78,10 +78,15 @@ class SinksSpec extends SparkSuite {
     ics.split("\r\n").foreach(l => assert(l.getBytes("UTF-8").length <= 75))
   }
 
+  /** The layout the daemon's merge leaves: each site whole in one
+    * partition, its rows in (rank, id) order. */
+  private def clustered(posts: org.apache.spark.sql.DataFrame) =
+    posts.repartition(posts("site_id")).sortWithinPartitions("site_id", "rank", "id")
+
   /** Both feeds of each site through the one-pass render over the
     * clustered layout, as (site_id, site_json, rss_xml) sorted by site. */
   private def feeds(posts: org.apache.spark.sql.DataFrame, k: Int) =
-    Feeds.perSite(graft.operators.Merge.clusterBySite(posts), k)
+    Feeds.perSite(clustered(posts), k)
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
       .toSeq.sortBy(_._1)
 
@@ -117,7 +122,7 @@ class SinksSpec extends SparkSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val df = Seq(basicPost).toDF().withColumn("rank", lit(1L))
-    val plan = Feeds.perSite(graft.operators.Merge.clusterBySite(df), 1)
+    val plan = Feeds.perSite(clustered(df), 1)
       .queryExecution.optimizedPlan
     // to_json is runtime-replaceable: the optimizer leaves an invoke of
     // its evaluator, a literal, in place of the StructsToJson node

@@ -34,12 +34,19 @@ import graft.crawl.{Crawl, Pipeline}
  * feed a driver-side sort or count or to infer a known schema. The
  * driver-sized outputs (the reports' events, SUMMARY.md, the ICS) render
  * on the driver from one collect each. A warm cycle at `--limit 30
- * --scale 1000` over ten sites (4 cores) runs 28 Spark jobs: 11 for the
- * two-wave crawl, 3 for the merge (one site exchange and the staged pass
- * per site), 1 to collect the events, 2 feed writes from one render, 5
- * report writes (3 of them the crawl lineage, one aggregation over both
- * waves), 4 for the calendar (its merge and the ICS collect) and 2 cache
- * writes; a site whose merge created or updated no post writes none.
+ * --scale 1000` over ten sites (4 cores) runs 20 Spark jobs: 8 for the
+ * two-wave crawl (each wave's politeness exchange, stage-out write and
+ * links write; the second wave's exact seen probe collects the first
+ * wave's hashes and broadcasts them, one job each), 2 for the merge (one
+ * site exchange and the staged pass per site), 1 to collect the events,
+ * 2 feed writes from one render, 3 report writes (the crawl lineage is a
+ * local relation read from the stage-out's parquet footers), 2 for the
+ * calendar (its merge and the ICS collect) and 2 cache writes; a site
+ * whose merge created or updated no post writes none. With a caller's two
+ * checks the cycle's generated classes take 84 entries of Spark's codegen
+ * cache, under its 100-entry default: a warm cycle recompiles none of
+ * them unless more than 25 hash into one of the cache's 4 segments
+ * (`graft.CodegenProbe` counts them).
  */
 object Daemon {
 
@@ -244,7 +251,8 @@ object Daemon {
    * crawl_failed per failed site), `error_report` (main.rs:300-340) and
    * the analyze-report SUMMARY.md (action.yml:38-77 — the step-summary
    * payload; also the Slack block content, which is network-bound and out
-   * of engine scope). Returns the events as a local relation.
+   * of engine scope). Returns the events as a local relation in one
+   * partition: a driver-sized table whose aggregations need no exchange.
    */
   private def writeReports(spark: SparkSession, outDir: String,
       contentEvents: Seq[Event], crawledSites: Seq[String],
@@ -261,7 +269,7 @@ object Daemon {
       .write.mode("overwrite").json(s"$outDir/reports/error_report")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$outDir/reports/SUMMARY.md"),
       graft.sinks.Publish.markdownReport(events))
-    events
+    events.coalesce(1)
   }
 
   def main(args: Array[String]): Unit = {

@@ -2,10 +2,14 @@ package graft.crawl
 
 import scala.concurrent.Await
 import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
 import scala.util.Try
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.functions.GraftFunctions
 import graft.model.Post
 
@@ -24,7 +28,10 @@ import graft.model.Post
  *     out before any scheduling work;
  *  2. seen-set filter: incremental Bloom/cuckoo pre-filter + exact
  *     anti-join on the maybe slice ([[SeenSet.filterNewProbe]]; each
- *     branch of its union keys its own rows, one kernel call per row);
+ *     branch of its union keys its own rows, one kernel call per row). A
+ *     seen set under one task's rows (`graft.rows.per.task`) has no
+ *     sketch: the exact anti-join alone probes it, its hashes collected
+ *     into a driver-local relation;
  *  3. in-wave dedup on url_hash (keep the breadth-first-smallest order key);
  *  4. politeness schedule: per-HOST virtual clock — the k-th fetch of a
  *     host is scheduled at (k-1) * crawl_delay(host) (robots-derived
@@ -34,17 +41,19 @@ import graft.model.Post
  *     sorted per-partition pass (duplicates of a URL share its host);
  *  5. salted repartition (host_hash, salt) of the fetch stage so a hot
  *     host (Zipf rank 1 = scatch) spreads across `numSalts` partitions
- *     instead of serializing on one — the salted-key priority queue.
+ *     instead of serializing on one — the salted-key priority queue. A
+ *     wave that fits one task writes from the politeness pass directly.
  *     Priority = (depth, ready_ms, host, site, page, row), carried as
  *     explicit columns so order is independent of partitioning;
  *  6. link discovery: list pages expand to the next frontier
  *     ([[SyntheticWeb.links]]), which is written out; post documents are
  *     fetched lazily, once, where the run's posts are consumed;
  *  7. state: every wave stages out into one table root, partitioned by
- *     wave, and the run's seen set, schedule and per-(wave, partition)
- *     lineage are views over the waves it wrote, one scan each. The
- *     wave's counts are observed on the stage-out and links writes
- *     ([[Dataset.observe]]), not counted by extra jobs.
+ *     wave, and the run's seen set and schedule are views over the waves
+ *     it wrote, one scan each; the per-(wave, partition) lineage is read
+ *     from the part files' parquet footers. The wave's counts are observed
+ *     on the stage-out and links writes ([[Dataset.observe]]), not counted
+ *     by extra jobs.
  *
  * Determinism: every ordering is an explicit sort key; no
  * monotonically_increasing_id, no partition-order dependence — identical
@@ -122,6 +131,41 @@ object Crawl {
   private val StageSchema = Encoders.product[RankedRow].schema
     .add("salt", LongType).add("partition_id", IntegerType).add("wave", IntegerType)
 
+  /** A frontier of [[SyntheticWeb.Req]] rows, every column nullable. */
+  private val FrontierSchema = StructType(
+    Encoders.product[SyntheticWeb.Req].schema.map(_.copy(nullable = true)))
+
+  /** The per-(wave, partition) lineage: the stage-out's `wave` and
+    * `partition_id`, the wave's frontier offer and its duplicates, and the
+    * rows the partition staged. */
+  private val LineageSchema = StructType(Seq(
+    StructField("wave", IntegerType), StructField("partition_id", IntegerType),
+    StructField("scheduled", LongType, nullable = false),
+    StructField("deduped", LongType, nullable = false),
+    StructField("fetched", LongType, nullable = false)))
+
+  /** `(partition_id, rows)` of each non-empty part file of the stage-out
+    * wave in `dir`, in partition order, read from the parquet footers: a
+    * file's row count, and its `partition_id` statistics, whose min equals
+    * the max because one writer task wrote the file. */
+  private def partitionRows(spark: SparkSession, dir: String): Seq[(Int, Long)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(dir)
+    val files = path.getFileSystem(conf).listStatus(path).toSeq
+      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+    files.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      val blocks = try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+      val ids = blocks.filter(_.getRowCount > 0).flatMap { b =>
+        val stats = b.getColumns.asScala.find(_.getPath.toDotString == "partition_id")
+          .getOrElse(sys.error(s"${f.getPath}: no partition_id column")).getStatistics
+        Seq(stats.genericGetMin, stats.genericGetMax)
+      }.distinct
+      require(ids.size <= 1, s"${f.getPath} holds partition ids ${ids.mkString(", ")}")
+      ids.map(id => id.asInstanceOf[Integer].intValue -> blocks.map(_.getRowCount).sum)
+    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted
+  }
+
   final case class Config(
       scale: Long = 1000L,
       limitPerSite: Long = 100L, // reference POST_COUNT_LIMIT (mod.rs:26)
@@ -150,21 +194,32 @@ object Crawl {
       include: Seq[String] = Seq.empty,
       exclude: Seq[String] = Seq.empty)
 
-  final case class Result(
-      posts: DataFrame,    // fetched documents (Post schema)
-      seen: DataFrame,     // url_hash table
-      schedule: DataFrame, // the crawl-order artifact
-      lineage: DataFrame,  // per (wave, partition) lineage rows
+  /** A crawl run's outputs. `posts`, `lineage` and `batch` are built on
+    * first use: a caller that reads only the schedule and the seen set
+    * pays neither the stage-out footer reads nor the analysis of the post
+    * fetch. */
+  final class Result(
+      postsOf: => DataFrame,    // fetched documents (Post schema)
+      val seen: DataFrame,      // url_hash table
+      val schedule: DataFrame,  // the crawl-order artifact
+      lineageOf: => DataFrame,  // per (wave, partition) lineage rows
       // SSO bootstrap counter (S8): one init per partition×host that
       // touches an auth-family site — NOT one per fetched row
-      ssoBootstraps: org.apache.spark.util.LongAccumulator = null,
+      val ssoBootstraps: org.apache.spark.util.LongAccumulator,
       // sites whose fetch stage exhausted whole-site retries mid-crawl
       // (reference error tally, cli main.rs:118-125): their posts are
       // excluded from the run's output, the daemon reports crawl_failed
-      failedSites: Map[String, Throwable] = Map.empty,
+      val failedSites: Map[String, Throwable],
       // live-pacing audit trail: one (host, started_at_ms, wave) row per
       // fetch — empty unless Config.livePacing
-      fetchLog: DataFrame = null)
+      val fetchLog: DataFrame,
+      // the posts with their crawl order `seq` (page * 10^6 + row of the
+      // request that fetched each): the daemon merge's batch
+      batchOf: => DataFrame) {
+    lazy val posts: DataFrame = postsOf
+    lazy val lineage: DataFrame = lineageOf
+    lazy val batch: DataFrame = batchOf
+  }
 
   /**
    * Per-partition fetch expansion shared by the batch waves and the
@@ -207,6 +262,16 @@ object Crawl {
       (post.map(p => ExpandRow(Some(p), None)) ++
         links.map(l => ExpandRow(None, Some(l)))).iterator
     }
+  }
+
+  /** The documents half of [[expandPartition]], each with the crawl order
+    * of its request: page * 10^6 + row. */
+  private def postsPartition(
+      it: Iterator[SyntheticWeb.Req], scale: Long, limit: Long, rev: Int,
+      onBootstrap: () => Unit): Iterator[(Post, Long)] = {
+    val sessionFor = Sso.partitionSessions(onBootstrap)
+    it.flatMap(req => SyntheticWeb.expand(req, scale, limit, rev, session(req, sessionFor))._1
+      .map(p => (p, req.page * 1000000L + req.row)))
   }
 
   /** The links half of [[expandPartition]]: no document is built. */
@@ -262,7 +327,11 @@ object Crawl {
   def run(spark: SparkSession, cfg: Config): Result = {
     import spark.implicits._
     val seedReqs = seedRequests(cfg)
-    runFrom(spark, cfg, spark.createDataset(seedReqs).toDF(), wave0 = 0,
+    // typed nullable, as every later wave reads its frontier back from
+    // parquet: each wave's scheduling stages then generate the same code
+    val seeds = spark.createDataFrame(seedReqs.map(r =>
+      Row(r.url, r.site_id, r.kind, r.page, r.row, r.depth)).asJava, FrontierSchema)
+    runFrom(spark, cfg, seeds, wave0 = 0,
       seen0 = Seq.empty[(Long, Int)].toDF("url_hash", "first_wave"),
       posts0 = spark.emptyDataset[Post].toDF(),
       schedule0 = None, lineage0 = None,
@@ -337,17 +406,19 @@ object Crawl {
         "url_hash", "site_id", "page", "row", "depth", "ready_ms", "crawl_delay_ms")
       schedule0.fold(run)(_ unionByName run)
     }
-    // (wave, scheduled, deduped) per wave this run wrote: driver values
-    // the writes observed
-    val waveCounts = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
-    // ONE aggregation over every wave's stage-out; the per-wave constants
-    // ride a broadcast relation, not literals, so the generated code is
-    // wave-invariant (types: int, long, long)
+    // (scheduled, deduped) per wave this run wrote: driver values the
+    // writes observed
+    val waveCounts = scala.collection.mutable.HashMap.empty[Int, (Long, Long)]
+    // a local relation: each stage-out part file holds one writer task's
+    // rows, so its footer gives that (wave, partition)'s fetched count
+    // without a job over the data
     def lineage(waves: Seq[Int]): DataFrame = {
-      val run = staged(waves).groupBy(col("wave"), col("partition_id"))
-        .agg(count(lit(1)).as("fetched"))
-        .join(broadcast(waveCounts.toSeq.toDF("wave", "scheduled", "deduped")), "wave")
-        .select("wave", "partition_id", "scheduled", "deduped", "fetched")
+      val run = spark.createDataFrame(waves.flatMap { w =>
+        val (scheduled, deduped) = waveCounts(w)
+        partitionRows(spark, s"$stageRoot/wave=$w").map { case (pid, fetched) =>
+          Row(w, pid, scheduled, deduped, fetched)
+        }
+      }.asJava, LineageSchema)
       lineage0.fold(run)(_ unionByName run)
     }
     // The seen table carries only url_hash (and a resumed seen0 may hold a
@@ -360,16 +431,62 @@ object Crawl {
       else seen.join(schedule.filter(col("site_id").isin(midCrawlFailures.keys.toSeq: _*))
         .select("url_hash").distinct(), Seq("url_hash"), "left_anti")
 
+    // The fetch (step 6 below) is a deterministic synthetic expansion.
+    // Auth-family (SSO) sites need a bootstrapped session: init ONCE PER
+    // PARTITION per host inside mapPartitions (S8, sso.rs:26-92 — the
+    // authenticated client is constructed once and reused), counted by an
+    // accumulator so the spec can assert inits << fetches.
+    val scale = cfg.scale; val limit = cfg.limitPerSite; val rev = cfg.rev
+    val probe = cfg.probePagination
+    val onBootstrap = () => ssoBootstraps.add(1L)
+    def requests(input: DataFrame): Dataset[SyntheticWeb.Req] = input
+      .select("url", "site_id", "kind", "page", "row", "depth")
+      .as[SyntheticWeb.Req]
+    // the fast path (no faults, no live pacing) fetches each post once,
+    // where the posts are consumed: ONE expansion over the staged post
+    // rows of every wave, each document with its request's crawl order
+    val lazyFetch = cfg.faults.isEmpty && !cfg.livePacing
+    def fetchedPosts(waves: Seq[Int]): DataFrame =
+      requests(withUrls(staged(waves)).filter(col("kind") === "post"))
+        .mapPartitions(it => postsPartition(it, scale, limit, rev, onBootstrap))
+        .toDF("post", "seq").select(col("post.*"), col("seq"))
+    // posts0 and the documents the fault and live-pacing paths fetched
     val postParts = scala.collection.mutable.ArrayBuffer(posts0)
+    // a site that exhausted mid-crawl retries contributes NO posts to the
+    // run (the reference's failed plugin yields an error, not partial
+    // output — mod.rs:38-93); its schedule/lineage rows remain as the
+    // attempt record the error report cites
+    def posts(waves: Seq[Int]): DataFrame = {
+      val eager = postParts.reduce(_ unionByName _)
+      excludeFailedSites(
+        if (lazyFetch) eager.unionByName(fetchedPosts(waves).drop("seq")) else eager)
+    }
+    // the merge batch: every post with its crawl order `seq`. A post this
+    // run fetched on the fast path carries it; any other finds its request
+    // in the schedule (a fresh fast-path crawl has no other: its empty
+    // part folds away in planning)
+    def batch(waves: Seq[Int]): DataFrame = {
+      val order = schedule(waves).filter(col("site_id").isNotNull)
+        .select(col("url"), ((col("page").cast("long") * 1000000L) + col("row")).as("seq"))
+      val ordered = postParts.reduce(_ unionByName _).join(order, Seq("url"), "left")
+        .withColumn("seq", coalesce(col("seq"), lit(0L)))
+      excludeFailedSites(if (lazyFetch) ordered.unionByName(fetchedPosts(waves)) else ordered)
+    }
     val fetchLogParts = scala.collection.mutable.ArrayBuffer(
       Seq.empty[(String, Long, Int)].toDF("host", "started_at_ms", "wave"))
     var seenCount = seenRows.getOrElse(seen0.count())
+    // Scale-adaptive partition counts (guide §2.5/§6): a wave's task count
+    // follows its size, at `rowsPerTask` rows per task
+    val rowsPerTask = sys.props.getOrElse("graft.rows.per.task", "8192").toLong
     // incrementally-maintained seen sketch: each wave folds its fresh delta
     // in (O(|delta|)) instead of re-aggregating the whole seen set
-    // (O(|seen|) per wave — a full-state scan per wave at 10^10 URLs)
+    // (O(|seen|) per wave — a full-state scan per wave at 10^10 URLs). A
+    // seen set under one task's rows has none: the exact anti-join alone
+    // probes it, and the first build covers the whole set once it crosses
+    // that size
     val sketch = new SeenSet.IncrementalSketch(cfg.seenSketch,
       initialCapacity = seenCount * 4)
-    if (seenCount > 0) sketch.add(seen0, seenCount, "url_hash")(seen0)
+    if (seenCount >= rowsPerTask) sketch.add(seen0, seenCount, "url_hash")(seen0)
     var wave = wave0
     // frontier size is carried between waves (the links write observed it) —
     // no extra action per wave just to test emptiness
@@ -399,28 +516,39 @@ object Crawl {
       // fetch-stage task count follows the session's reducer knob (finer
       // than core count so stragglers overlap), not the raw core count
       val parallelism = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      // Scale-adaptive partition counts (guide §2.5/§6): the wave's task
-      // count follows the WAVE SIZE (frontierCount is already known — the
-      // producer's write observed it), capped at the core-derived counts so
-      // big-crawl plans are byte-identical to before. Without the floor a
-      // 3k-row daemon crawl fans out 128 politeness tasks + 96 writer
-      // tasks per wave — pure scheduler overhead and a 96-file stage-out
-      // for a wave that fits one task.
-      val rowsPerTask = sys.props.getOrElse("graft.rows.per.task", "8192").toLong
+      // the wave's task count follows the WAVE SIZE (frontierCount is
+      // already known — the producer's write observed it), capped at the
+      // core-derived counts so big-crawl plans are byte-identical to
+      // before. Without the floor a 3k-row daemon crawl fans out 128
+      // politeness tasks + 96 writer tasks per wave — pure scheduler
+      // overhead and a 96-file stage-out for a wave that fits one task.
       def adaptiveParts(cap: Int): Int =
         math.max(1L, math.min(cap.toLong,
           (frontierCount + rowsPerTask - 1) / rowsPerTask)).toInt
+      val politeParts = adaptiveParts(parallelism * 4)
 
       // 2-4. seen-set filter first (sketch prefilter: the big slice never
-      // joins), then ONE exchange clusters each host's rows — duplicates of
-      // a URL always share the host, so a single sorted per-partition pass
-      // does the exact in-wave dedup (breadth-smallest order key per
-      // url_hash) AND assigns the per-host politeness rank. One wave
-      // exchange + one local sort; the split row_number/min_by shapes paid
-      // two of each (dedup shuffle + host window exchange) and lost the
-      // BENCH.md §7 A/B — shuffle bytes are the scaling-limited resource.
-      val scheduled = SeenSet.filterNewProbe(keyed, seen(wave0 until wave), "url_hash",
-          sketch.probe(col("url_hash")))
+      // joins; an empty seen set needs no filter), then ONE exchange
+      // clusters each host's rows — duplicates of a URL always share the
+      // host, so a single sorted per-partition pass does the exact in-wave
+      // dedup (breadth-smallest order key per url_hash) AND assigns the
+      // per-host politeness rank. One wave exchange + one local sort; the
+      // split row_number/min_by shapes paid two of each (dedup shuffle +
+      // host window exchange) and lost the BENCH.md §7 A/B — shuffle bytes
+      // are the scaling-limited resource.
+      //
+      // Without a sketch the exact anti-join probes the seen set's hashes
+      // as a driver-local relation: its broadcast is no codegen stage, so
+      // the wave's later stages keep the stage ids, and with them the
+      // generated classes, of a wave that probes nothing.
+      val sketched = sketch.probe(col("url_hash"))
+      val fresh =
+        if (seenCount == 0) keyed
+        else SeenSet.filterNewProbe(keyed,
+          if (sketched.isDefined) seen(wave0 until wave)
+          else seen(wave0 until wave).select("url_hash").as[Long].collect().toSeq.toDF("url_hash"),
+          "url_hash", sketched)
+      val scheduled = fresh
         .select(col("site_id"), col("kind"), col("page"), col("row"),
           col("depth"), col("crawl_delay_ms"), col("url_hash"), col("host_hash"))
         .as[WaveRow]
@@ -428,7 +556,7 @@ object Crawl {
         // partitions (the politeness rank needs the host contiguous),
         // so the hot host is a fixed-size task — smaller sibling tasks
         // let the scheduler overlap it instead of idling at the barrier
-        .repartition(adaptiveParts(parallelism * 4), col("host_hash"))
+        .repartition(politeParts, col("host_hash"))
         .sortWithinPartitions(col("host_hash"), col("depth"), col("site_id"),
           col("page"), col("row"), col("url_hash"))
         .mapPartitions { it =>
@@ -459,8 +587,11 @@ object Crawl {
       // by-host exchange leaves the hot host in one partition, so writing
       // directly from it would skew both the parquet encode and the
       // read-back; Zipf rank 1 was a ~25% single-task straggler without
-      // the salt), then ONE streaming pass stages the wave out to columnar
-      // storage (parquet). Wide rows are never cached in memory: the
+      // the salt; a wave of one politeness task and one writer task has no
+      // skew to spread, and writes from the politeness pass directly: the
+      // same single partition, rows in the same order), then ONE
+      // streaming pass stages the wave out to columnar storage
+      // (parquet). Wide rows are never cached in memory: the
       // in-memory columnar cache build cost ~3x the compute at 10^6 rows
       // and is pure GC pressure at 10^10 — stage-out to storage is the
       // 100 TB design, and every downstream consumer (seen-set, lineage,
@@ -482,7 +613,9 @@ object Crawl {
       // sits in the write's result stage, where Spark merges one update per
       // partition even when a task is retried
       val stagedRows = Observation()
-      val stageOut = scheduled.repartition(writeParts, col("host_hash"), col("salt"))
+      val stageOut =
+        (if (politeParts == 1 && writeParts == 1) scheduled
+         else scheduled.repartition(writeParts, col("host_hash"), col("salt")))
         // coordinates only: like `canonical`/`host` (and like the
         // exchanges above), the wave FILE does not store the URL
         // string either — at scale 1M the big-wave stage-out parquet
@@ -515,26 +648,18 @@ object Crawl {
       val fetchInput = withUrls(staged(Seq(wave)))
 
       // 6. fetch = deterministic synthetic expansion (typed transform).
-      // Auth-family (SSO) sites need a bootstrapped session: init ONCE PER
-      // PARTITION per host inside mapPartitions (S8, sso.rs:26-92 — the
-      // authenticated client is constructed once and reused), counted by an
-      // accumulator so the spec can assert inits << fetches.
-      val scale = cfg.scale; val limit = cfg.limitPerSite; val rev = cfg.rev
-      val probe = cfg.probePagination
       val faults = cfg.faults; val wv = wave
-      val onBootstrap = () => ssoBootstraps.add(1L)
-      def requests(input: DataFrame): Dataset[SyntheticWeb.Req] = input
-        .select("url", "site_id", "kind", "page", "row", "depth")
-        .as[SyntheticWeb.Req]
       def expandDs(input: DataFrame, attempt: Int): Dataset[ExpandRow] =
         requests(input).mapPartitions(it =>
           expandPartition(it, scale, limit, rev, probe, onBootstrap,
             req => if (faults.getOrElse((req.site_id, wv), 0) > attempt)
               throw new RuntimeException(
                 s"synthetic fetch failure: ${req.site_id} wave=$wv attempt=$attempt")))
-      def split(expanded: Dataset[ExpandRow]): (DataFrame, Dataset[SyntheticWeb.Req]) =
-        (expanded.filter(_.post.isDefined).map(_.post.get).toDF(),
-          expanded.filter(_.link.isDefined).map(_.link.get))
+      // keeps the documents of an eagerly fetched wave, returns its links
+      def split(expanded: Dataset[ExpandRow]): Dataset[SyntheticWeb.Req] = {
+        postParts += expanded.filter(_.post.isDefined).map(_.post.get).toDF()
+        expanded.filter(_.link.isDefined).map(_.link.get)
+      }
       // The wave's documents stay LAZY views — caching a million Post rows
       // per wave is pure GC pressure, and downstream consumers (merge,
       // snapshots) recompute the cheap expansion from the staged inputs.
@@ -550,7 +675,7 @@ object Crawl {
       // deterministic and the seen-set/merge tolerate at-least-once
       // delivery, so a fail-then-succeed site yields byte-identical output
       // (CrawlSpec).
-      val (wavePosts, links): (DataFrame, Dataset[SyntheticWeb.Req]) =
+      val links: Dataset[SyntheticWeb.Req] =
         if (cfg.livePacing) {
           // LIVE politeness: the wave's fetch runs through the token-bucket
           // executor — real wall-clock spacing per host within each salt
@@ -570,24 +695,22 @@ object Crawl {
             fetch = (req, sessionFor) =>
               expandOne(req, scale, limit, rev, probe, sessionFor),
             onBootstrap = onBootstrap)
-          val path = s"$workDir/waves/w$wave/fetched"
-          fetched.toDF().write.mode("overwrite").parquet(path)
-          val f = spark.read.parquet(path)
+          // a wave=N leaf dir, like the stage-out: `wave` is read back as
+          // a partition column, not inlined into every wave's code as a
+          // literal
+          val root = s"$workDir/waves/w/fetched"
+          fetched.toDF().write.mode("overwrite").parquet(s"$root/wave=$wave")
+          val f = spark.read.option("basePath", root).parquet(s"$root/wave=$wave")
           fetchLogParts += f
-            .select(col("host"), col("startedAtMs").as("started_at_ms"))
-            .withColumn("wave", lit(wv))
+            .select(col("host"), col("startedAtMs").as("started_at_ms"), col("wave"))
           split(f.as[ThrottledFetch.Fetched[(Option[Post], Seq[SyntheticWeb.Req])]]
             .flatMap { fr =>
               fr.result._1.map(p => ExpandRow(Some(p), None)).toSeq ++
                 fr.result._2.map(l => ExpandRow(None, Some(l)))
             })
         } else if (faults.isEmpty)
-          (requests(fetchInput.filter(col("kind") === "post"))
-            .mapPartitions(it =>
-              expandPartition(it, scale, limit, rev, probe, onBootstrap).flatMap(_.post))
-            .toDF(),
-            requests(fetchInput.filter(col("kind") === "list"))
-              .mapPartitions(it => linksPartition(it, scale, limit, rev, probe, onBootstrap)))
+          requests(fetchInput.filter(col("kind") === "list"))
+            .mapPartitions(it => linksPartition(it, scale, limit, rev, probe, onBootstrap))
         else {
           val sites = fetchInput.select("site_id").distinct().as[String].collect().sorted
           val okParts = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -639,7 +762,7 @@ object Crawl {
         else frontierLive.count()
       val freshCount = observedRows(stagedRows, fetchInput.count())
       frontierCount = observedRows(linkRows, nextFrontier.count())
-      waveCounts += ((wave, scheduledCount, scheduledCount - freshCount))
+      waveCounts(wave) = (scheduledCount, scheduledCount - freshCount)
       val seenInput = excludeFailedSites(fetchInput)
       val seenDelta = if (midCrawlFailures.isEmpty) freshCount else seenInput.count()
       seenCount += seenDelta
@@ -648,9 +771,11 @@ object Crawl {
       // would be a full-scan aggregate + driver-side bitmap merge that no
       // probe ever reads (at the 1M-scale bench this is a ~3.7M-row Bloom
       // rebuild on the last wave, pure Amdahl overhead)
-      if (frontierCount > 0)
-        sketch.add(seenInput, seenDelta, "url_hash")(seen(wave0 to wave))
-      postParts += wavePosts
+      if (frontierCount > 0 && seenCount >= rowsPerTask) {
+        val seenAll = seen(wave0 to wave)
+        if (sketch.isEmpty) sketch.add(seenAll, seenCount, "url_hash")(seenAll)
+        else sketch.add(seenInput, seenDelta, "url_hash")(seenAll)
+      }
 
       cfg.snapshotDir.foreach { dir =>
         val done = wave0 to wave
@@ -661,7 +786,7 @@ object Crawl {
         // snapshot resume) and recorded in the manifest so a resumed run
         // still reports them
         Snapshots.write(spark, dir, wave, Map(
-          "posts" -> excludeFailedSites(postParts.reduce(_ unionByName _)),
+          "posts" -> posts(done),
           "seen" -> excludeFailedSeen(seen(done), sched),
           "frontier" -> nextFrontier,
           "schedule" -> sched,
@@ -673,20 +798,16 @@ object Crawl {
       wave += 1
     }
 
-    // a site that exhausted mid-crawl retries contributes NO posts to the
-    // run (the reference's failed plugin yields an error, not partial
-    // output — mod.rs:38-93); its schedule/lineage rows remain as the
-    // attempt record the error report cites
-    val livePosts = excludeFailedSites(postParts.reduce(_ unionByName _))
     val done = wave0 until wave
     val sched = schedule(done)
-    Result(
-      livePosts,
+    new Result(
+      posts(done),
       excludeFailedSeen(seen(done), sched),
       sched,
       lineage(done),
       ssoBootstraps,
       midCrawlFailures.toMap,
-      fetchLogParts.reduce(_ unionByName _))
+      fetchLogParts.reduce(_ unionByName _),
+      batch(done))
   }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -62,8 +61,8 @@ object FrontierKey {
   /** The key of a frontier row: its URL is rebuilt from the grammar
     * coordinates ([[UrlGrammar.url]]) and parsed once. */
   def waveKey(siteId: UTF8String, kind: UTF8String, page: Int, row: Int,
-      scale: Long, rev: Int): ArrayData =
-    ofUrl(UrlGrammar.url(siteId.toString, kind.toString, page, row, scale, rev))
+      web: WebVersion): ArrayData =
+    ofUrl(UrlGrammar.url(siteId.toString, kind.toString, page, row, web.scale, web.rev))
 
   /** `array<struct<url_hash, host_hash, crawl_delay_ms>>` of a URL column. */
   def url_key(url: Column): Column =
@@ -74,7 +73,6 @@ object FrontierKey {
   def wave_key(siteId: Column, kind: Column, page: Column, row: Column,
       scale: Long, rev: Int): Column =
     ColumnBridge.column(StaticInvoke(FrontierKey.getClass, KeyType, "waveKey",
-      Seq(siteId, kind, page, row, lit(scale), lit(rev)).map(ColumnBridge.expression),
-      inputTypes = Seq(StringType, StringType, IntegerType, IntegerType,
-        LongType, IntegerType)))
+      UrlGrammar.coordinates(siteId, kind, page, row, scale, rev),
+      inputTypes = UrlGrammar.CoordinateTypes))
 }

@@ -59,7 +59,7 @@ object Pipeline {
     val cacheTouched = cache.filter(col("site_id").isin(touched: _*))
     val cacheUntouched = cache.filter(!col("site_id").isin(touched: _*))
     val Merge.MergeResult(touchedPosts, events) =
-      Merge.mergeBySite(cacheTouched, crawlBatch(crawl), now)
+      Merge.mergeBySite(cacheTouched, crawl.batch, now)
     // feeds cover the sites this run crawled (the reference daemon emits
     // outputs per crawled plugin, main.rs:192-243 — untouched sites keep
     // their previous outputs and are neither scanned nor rewritten). Both
@@ -69,7 +69,7 @@ object Pipeline {
     val feeds = Feeds.perSite(touchedPosts, topK).localCheckpoint(eager = false)
 
     Output(
-      topPosts = Merge.topKPerSite(touchedPosts, topK),
+      topPosts = Merge.newestPerSite(touchedPosts, topK),
       cache = cacheUntouched.unionByName(touchedPosts),
       siteJson = feeds.select("site_id", "site_json"),
       rss = feeds.select("site_id", "rss_xml"),
@@ -78,16 +78,6 @@ object Pipeline {
       lineage = crawl.lineage,
       touchedCache = touchedPosts,
       touchedSites = touched)
-  }
-
-  /** A crawl's posts as a merge batch: each post with its arrival order
-    * `seq`, the crawl order (page, row) recovered from the schedule. */
-  private def crawlBatch(crawl: Crawl.Result): DataFrame = {
-    val order = crawl.schedule
-      .filter(col("site_id").isNotNull)
-      .select(col("url"), ((col("page").cast("long") * 1000000L) + col("row")).as("seq"))
-    crawl.posts.join(order, Seq("url"), "left")
-      .withColumn("seq", coalesce(col("seq"), lit(0L)))
   }
 
   /** Empty cache with the Post+rank schema (first daemon run). */
@@ -105,9 +95,9 @@ object Pipeline {
    * inference ([[graft.parse.CalendarParser]], the full port of
    * ssu-academic-calendar lib.rs:104-271), merge replace-in-range against
    * the cache, render the in-range output to one ICS document (with real
-   * DTEND lines). Parsing is distributed (one task per year page); the
-   * ICS, one string over a two-year calendar, renders on the driver from
-   * one collect.
+   * DTEND lines). The year pages parse on the driver, where the ICS, one
+   * string over a two-year calendar, renders from one collect: a hundred
+   * events are not worth a distributed parse and its generated classes.
    */
   def runCalendar(
       spark: SparkSession,
@@ -118,13 +108,15 @@ object Pipeline {
     import spark.implicits._
     val site = Sites.all.find(_.family == "calendar").get
     val years = (start.toLocalDateTime.getYear to end.toLocalDateTime.getYear).toList
-    val parsed = spark.createDataset(years).flatMap { y =>
+    def inRange(e: graft.model.CalendarEvent): Boolean =
+      e.starts_at != null && !e.starts_at.before(start) && !e.starts_at.after(end)
+    // the merge contract takes new entries all inside [start, end]; in one
+    // partition, deduplicating them needs no exchange
+    val events = spark.createDataset(years.flatMap { y =>
       val pageUrl = SyntheticWeb.listUrl(site, y - 2024)
       graft.parse.CalendarParser.parseYearPage(
         SyntheticWeb.calendarYearHtml(y, scale), y, pageUrl)
-    }.toDF()
-    // the merge contract takes new entries all inside [start, end]
-    val events = parsed.filter(col("starts_at").between(lit(start), lit(end)))
+    }.filter(inRange)).toDF().coalesce(1)
     // staged once: the ICS render below and the caller's cache write both
     // consume it, and each would re-run the parse and the merge. One
     // partition sorted in place gives the cache file the merge's
@@ -133,11 +125,11 @@ object Pipeline {
       .coalesce(1).sortWithinPartitions(col("starts_at"), col("id"))
       .localCheckpoint(eager = false)
     // that partition in reverse is calendarInRange's (starts_at desc, id
-    // desc) order: the merge keeps each id once, so no two rows tie
+    // desc) order: the merge keeps each id once, so no two rows tie. The
+    // whole partition is collected, the scan the cache write runs too
     val ics = graft.sinks.Ics.toIcs(
       "SSU Academic Calendar", "https://scatch.ssu.ac.kr/학사일정", "학사일정",
-      merged.filter(col("starts_at").between(lit(start), lit(end)))
-        .as[graft.model.CalendarEvent].collect().reverse.toSeq)
+      merged.as[graft.model.CalendarEvent].collect().filter(inRange).reverse.toSeq)
     CalendarOutput(graft.operators.Merge.calendarInRange(merged, start, end), merged, ics)
   }
 }

@@ -21,6 +21,8 @@ import org.apache.spark.util.sketch.BloomFilter
  *  - bloom says NO  -> definitely new, no join needed (the common case:
  *    at 10^10 URLs the bloom absorbs the probe side);
  *  - bloom says MAYBE -> exact left-anti join on the (small) maybe slice.
+ * A seen set under one task's rows gets no sketch: building it costs more
+ * than probing every row with the exact join.
  */
 object SeenSet {
 
@@ -69,11 +71,12 @@ object SeenSet {
    * Sketch-negative rows skip the join entirely; sketch-positive rows are
    * verified with an exact left-anti join. `probe` is the membership column
    * of an externally-maintained [[IncrementalSketch]] (Bloom or cuckoo);
-   * `None` means "seen set empty — all new".
+   * `None` means no sketch: the exact join alone probes every row, which
+   * for a seen set under one task's rows costs less than a sketch build.
    */
   def filterNewProbe(wave: DataFrame, seen: DataFrame, hashCol: String,
       probe: Option[Column]): DataFrame = probe match {
-    case None => wave
+    case None => wave.join(seen.select(hashCol), Seq(hashCol), "left_anti")
     case Some(p) =>
       val maybe = wave.filter(p)
         .join(seen.select(hashCol), Seq(hashCol), "left_anti")
@@ -102,6 +105,9 @@ object SeenSet {
     private var capacity = math.max(initialCapacity, 1L << 16)
     private var bytes: Option[Array[Byte]] = None
     private var items = 0L
+
+    /** No sketch built yet. */
+    def isEmpty: Boolean = bytes.isEmpty
 
     /** Membership-probe column against the current sketch; None = empty. */
     def probe(hash: Column): Option[Column] = bytes.map { b =>

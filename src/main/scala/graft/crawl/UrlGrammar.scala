@@ -1,11 +1,15 @@
 package graft.crawl
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{IntegerType, ObjectType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+/** The synthetic web a URL is generated from: its post-count scale and its
+  * content revision. */
+final case class WebVersion(scale: Long, rev: Int)
 
 /**
  * URL synthesis from frontier coordinates — the inverse direction of
@@ -48,17 +52,27 @@ object UrlGrammar {
 
   /** [[url]] over Spark's string type (the [[rebuild_url]] kernel). */
   def rebuildUrl(siteId: UTF8String, kind: UTF8String, page: Int, row: Int,
-      scale: Long, rev: Int): UTF8String =
-    UTF8String.fromString(url(siteId.toString, kind.toString, page, row, scale, rev))
+      web: WebVersion): UTF8String =
+    UTF8String.fromString(url(siteId.toString, kind.toString, page, row, web.scale, web.rev))
+
+  /** The kernel arguments of a frontier row's grammar coordinates at
+    * `(scale, rev)`, and their input types. The version rides as ONE
+    * object reference: Spark inlines an int or long literal into the
+    * generated Java, so `lit(scale)` and `lit(rev)` made every stage that
+    * rebuilds a URL compile a fresh class per (scale, rev) — the same
+    * machine code with other constants. An object literal is read from
+    * the stage's references array instead, and the source is the same at
+    * every version (a FrontierKeySpec case compares it). */
+  private[crawl] def coordinates(siteId: Column, kind: Column, page: Column, row: Column,
+      scale: Long, rev: Int): Seq[Expression] =
+    Seq(siteId, kind, page, row).map(ColumnBridge.expression) :+
+      Literal.fromObject(WebVersion(scale, rev))
+  private[crawl] val CoordinateTypes =
+    Seq(StringType, StringType, IntegerType, IntegerType, ObjectType(classOf[WebVersion]))
 
   /** Codegen'd column form (StaticInvoke — no UDF serialization). */
   def rebuild_url(siteId: Column, kind: Column, page: Column, row: Column,
       scale: Long, rev: Int): Column =
-    ColumnBridge.column(StaticInvoke(UrlGrammar.getClass, StringType,
-      "rebuildUrl",
-      Seq(ColumnBridge.expression(siteId), ColumnBridge.expression(kind),
-        ColumnBridge.expression(page), ColumnBridge.expression(row),
-        ColumnBridge.expression(lit(scale)), ColumnBridge.expression(lit(rev))),
-      inputTypes = Seq(StringType, StringType, IntegerType, IntegerType,
-        LongType, IntegerType)))
+    ColumnBridge.column(StaticInvoke(UrlGrammar.getClass, StringType, "rebuildUrl",
+      coordinates(siteId, kind, page, row, scale, rev), inputTypes = CoordinateTypes))
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import java.sql.Timestamp
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.catalyst.expressions.GenericRow
 import org.apache.spark.sql.expressions.Window
@@ -207,12 +208,24 @@ object Merge {
       .select(col("site_id"), col("_event").as("event"), col("id").as("post_id"),
         col("title"), col("url")))
 
-  /** Newest-first top-K per site (reference mod.rs:142-147: `.rev().take(k)`). */
-  def topKPerSite(posts: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("site_id").orderBy(col("rank").desc)
-    posts.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= k)
-      .drop("_rn")
+  /** Newest-first top-K per site (reference mod.rs:142-147: `.rev().take(k)`)
+    * of posts laid out as [[mergeBySite]] leaves them: each site's last `k`
+    * rows, in rank order. One narrow pass keeps them with the deque
+    * [[graft.sinks.Feeds.perSite]] uses, so no exchange or sort runs. */
+  def newestPerSite(clustered: DataFrame, k: Int): DataFrame = {
+    val siteIx = clustered.schema.fieldIndex("site_id")
+    clustered.mapPartitions { (in: Iterator[Row]) =>
+      val rows = in.buffered
+      Iterator.continually(rows).takeWhile(_.hasNext && k > 0).flatMap { rs =>
+        val site = rs.head.getString(siteIx)
+        val newest = new java.util.ArrayDeque[Row](k + 1)
+        while (rs.hasNext && rs.head.getString(siteIx) == site) {
+          newest.addLast(rs.next())
+          if (newest.size > k) newest.removeFirst()
+        }
+        newest.iterator.asScala
+      }
+    }(Encoders.row(clustered.schema))
   }
 
   /**
@@ -237,8 +250,10 @@ object Merge {
       } else newDf.dropDuplicates("id")
     // Old survivors: outside the range AND not superseded by a same-id new
     // entry (the reference upserts by id even across the range boundary).
+    // The anti-join probes the new ids as they come: dedup keeps each id,
+    // so deduplicating them first would only add an aggregation.
     val keptOld = oldDf.filter(!col("starts_at").between(lit(start), lit(end)))
-      .join(dedupNew.select("id"), Seq("id"), "left_anti")
+      .join(newDf.select("id"), Seq("id"), "left_anti")
     keptOld.unionByName(dedupNew.select(keptOld.columns.map(col): _*))
   }
 

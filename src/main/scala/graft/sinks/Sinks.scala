@@ -227,7 +227,7 @@ object SiteJson {
  * laid out as [[graft.operators.Merge.mergeBySite]] leaves them: every site
  * whole in one partition, its rows sorted by rank. The pass keeps the last `k` rows
  * of each site's run — its newest `k` posts, the top-K of
- * [[graft.operators.Merge.topKPerSite]] — so it needs no window, no
+ * [[graft.operators.Merge.newestPerSite]] — so it needs no window, no
  * grouping shuffle and no global sort, and its one row per site needs no
  * exchange before the per-site writes.
  */

@@ -1,6 +1,8 @@
 package graft
 
 import graft.SparkSuite
+import graft.operators.{ColumnReferences, Merge}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 object DaemonSpec {
@@ -89,6 +91,36 @@ class DaemonSpec extends SparkSuite {
     assert(jobs.get > 0 && jobs.get <= MaxWarmCycleJobs, s"${jobs.get} jobs")
   }
 
+  test("top posts are one narrow pass over the merge layout: no exchange, the window's rows") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-daemon-top").toString
+    val opts = cycleOpts(dir)
+    Daemon.run(spark, opts)
+    val out = Daemon.run(spark, opts.copy(rev = 1, now = flipNow)).pipeline
+    val plan = out.topPosts.queryExecution.executedPlan
+    assert(plan.collect { case e: org.apache.spark.sql.execution.exchange.Exchange => e }.isEmpty,
+      plan.treeString)
+    def rows(df: DataFrame) = df.select("site_id", "rank", "id")
+      .collect().map(r => (r.getString(0), r.getAs[Number](1).longValue, r.getString(2))).sorted.toSeq
+    assert(rows(out.topPosts) === rows(ColumnReferences.topKPerSite(out.touchedCache, 20)))
+    // a k under most sites' post counts drops rows
+    val top3 = rows(Merge.newestPerSite(out.touchedCache, 3))
+    assert(top3 === rows(ColumnReferences.topKPerSite(out.touchedCache, 3)))
+    assert(top3.size < out.touchedCache.count(), top3)
+  }
+
+  test("warm daemon cycles fit the codegen cache: alternating revs after a cold cycle") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-daemon-codegen").toString
+    val opts = cycleOpts(dir)
+    val cold = wholeStageCode(Daemon.run(spark, opts))
+    val warm = wholeStageCode {
+      Daemon.run(spark, opts.copy(rev = 1, now = flipNow))
+      Daemon.run(spark, opts.copy(now = java.sql.Timestamp.valueOf("2026-01-17 00:00:00")))
+    }
+    val fresh = warm -- cold
+    assert(fresh.size <= MaxFreshWarmStages, s"${fresh.size} whole-stage classes:\n" +
+      fresh.map(_.linesIterator.take(12).mkString("\n")).mkString("\n----\n"))
+  }
+
   private val ColdDigests = Map(
     "sites" -> "ed911301fdcc8c7c6a3d77cf030e17a5c23aebb108fdf92e5c8082625af05e85",
     "rss" -> "b87979145475c1a0dfa85096a34951711732afcac90741cf8abc1fb51eb8a241",
@@ -109,7 +141,15 @@ class DaemonSpec extends SparkSuite {
   // merge sorted in place, and 3 more before the reports rendered from
   // one events collect and the merge's insert order lost its exchange,
   // and 7 more before the merge became one per-site pass
-  private val MaxWarmCycleJobs = 28
+  private val MaxWarmCycleJobs = 20
+  // the whole-stage classes two warm cycles generate that the cold cycle
+  // did not: the stages that read a cache back, which a cold cycle over no
+  // cache does not run, and the stages they renumber. URL kernels that
+  // inlined the rev would add the flip's keyed and stage-out read stages.
+  // Counted as sources, not compiles: a cycle's compiles also depend on
+  // how the classes hash into the 4 segments of Spark's codegen cache,
+  // which differs from one JVM to the next
+  private val MaxFreshWarmStages = 5
 
   test("CLI option parsing mirrors the reference (mutually exclusive include/exclude)") {
     val o = Daemon.parseArgs(Array("--out", "/tmp/o", "--limit", "30",

@@ -1,6 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole test JVM. */
@@ -32,5 +36,21 @@ abstract class SparkSuite extends AnyFunSuite {
       val v = count
       if (v == last) stable += 1 else { stable = 0; last = v }
     }
+  }
+
+  /** The whole-stage code of every query `f` runs: the generated sources
+    * Spark compiles and keys its codegen cache by. */
+  protected def wholeStageCode(f: => Unit): Set[String] = {
+    val bodies = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      def onSuccess(name: String, qe: QueryExecution, ns: Long): Unit =
+        collect(qe.executedPlan) { case w: WholeStageCodegenExec => w.doCodeGen()._2.body }
+          .foreach(bodies.add)
+      def onFailure(name: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { f; awaitQuiet(bodies.size.toLong) }
+    finally spark.listenerManager.unregister(listener)
+    bodies.asScala.toSet
   }
 }

@@ -41,7 +41,7 @@ class CrawlSpec extends SparkSuite {
         assert(UrlGrammar.rebuildUrl(
           org.apache.spark.unsafe.types.UTF8String.fromString(req.site_id),
           org.apache.spark.unsafe.types.UTF8String.fromString(req.kind),
-          req.page, req.row, scale, rev).toString === req.url,
+          req.page, req.row, WebVersion(scale, rev)).toString === req.url,
           s"site=${req.site_id} kind=${req.kind} page=${req.page} row=${req.row} rev=$rev")
       }
       assert(walk.size > 500, s"rev=$rev walked only ${walk.size} reqs — walk broken?")

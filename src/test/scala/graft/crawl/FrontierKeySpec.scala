@@ -84,6 +84,18 @@ class FrontierKeySpec extends SparkSuite {
     assert("waveKey".r.findAllIn(probedPlan).size === 2, probedPlan)
   }
 
+  test("a wave's keyed stage and its stage-out read generate the same code at every (scale, rev)") {
+    // the whole-stage code of every query of a two-site crawl that calls
+    // a URL kernel
+    def kernelStages(scale: Long, rev: Int): Set[String] =
+      wholeStageCode(Crawl.run(spark, Crawl.Config(scale = scale, limitPerSite = 20,
+        rev = rev, include = Seq("biz.ssu.ac.kr", "bioinfo.ssu.ac.kr"))))
+        .filter(b => b.contains("waveKey(") || b.contains("rebuildUrl("))
+    val a = kernelStages(1000, 0)
+    assert(a.exists(_.contains("waveKey(")) && a.exists(_.contains("rebuildUrl(")), a.size)
+    assert(a === kernelStages(60, 1))
+  }
+
   // expand takes a list page's links from links(), so this pins the post
   // branch and the SSO check; the list branch is pinned by the crawl's
   // recorded counts (WaveCountsSpec) and fingerprints

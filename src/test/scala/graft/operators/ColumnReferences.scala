@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
@@ -108,5 +109,14 @@ object ColumnReferences {
       when(dotExpr >= 0, lit(1L << p)).otherwise(lit(0L))
     }
     sigBits.reduce((a, b) => a.bitwiseOR(b))
+  }
+
+  /** The window formulation of [[Merge.newestPerSite]]: newest-first
+    * top-K per site over posts in any layout. */
+  def topKPerSite(posts: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("site_id").orderBy(col("rank").desc)
+    posts.withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") <= k)
+      .drop("_rn")
   }
 }

@@ -211,8 +211,12 @@ class MergeSpec extends SparkSuite {
     val posts = (0 until 10).map(i => post(s"$i", i, s"T$i", s"C$i"))
     val ranked = Merge.mergeEntries(
       spark.emptyDataset[Post].toDF(), posts.toDF(), now).posts
-    val top3 = Merge.topKPerSite(ranked, 3).orderBy(col("rank").desc).collect()
+    val top3 = ColumnReferences.topKPerSite(ranked, 3).orderBy(col("rank").desc).collect()
     assert(top3.map(_.getAs[String]("id")).toSeq === Seq("9", "8", "7"))
+    // the narrow pass over the per-site merge's layout keeps the same rows
+    val clustered = Merge.mergeBySite(ranked.limit(0), posts.toDF(), now).posts
+    assert(Merge.newestPerSite(clustered, 3).collect().map(_.getAs[String]("id")).toSeq ===
+      Seq("7", "8", "9"))
   }
 
   test("calendar replace-in-range ported scenario (mod.rs:829-894)") {

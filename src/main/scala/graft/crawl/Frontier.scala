@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
 import graft.functions.GraftFunctions
 import graft.model.Post
 
-/**
+/*
  * The frontier scheduler: breadth-ordered crawl over the (synthetic) web,
  * generalizing the reference's per-site sequential crawl
  * (packages/cli/src/main.rs:110-114 all sites concurrent;
@@ -39,21 +39,27 @@ import graft.model.Post
  *     wordpress/mod.rs:146). Multiple sites on one host (cse/sw boards)
  *     share the bucket. Steps 3 and 4 are ONE by-host exchange plus one
  *     sorted per-partition pass (duplicates of a URL share its host);
- *  5. salted repartition (host_hash, salt) of the fetch stage so a hot
- *     host (Zipf rank 1 = scatch) spreads across `numSalts` partitions
+ *  5. salted repartition (host_hash, salt) of the wave's stage-out so a
+ *     hot host (Zipf rank 1 = scatch) spreads across `numSalts` partitions
  *     instead of serializing on one — the salted-key priority queue. A
  *     wave that fits one task writes from the politeness pass directly.
  *     Priority = (depth, ready_ms, host, site, page, row), carried as
  *     explicit columns so order is independent of partitioning;
- *  6. link discovery: list pages expand to the next frontier
- *     ([[SyntheticWeb.links]]), which is written out; post documents are
- *     fetched lazily, once, where the run's posts are consumed;
+ *  6. fetch: the wave writes only the links it discovers, the next
+ *     frontier ([[linksPartition]]). Every fetch mode does: the default
+ *     expands the list pages alone; fault injection runs each site's slice
+ *     under whole-site [[Retry]], with the fault check on every request;
+ *     live pacing fetches every request through [[ThrottledFetch]] and
+ *     stages its links and its document under `fetched/wave=N`. The posts
+ *     are fetched once, where the run's posts are consumed
+ *     ([[postsPartition]] over the staged post rows), or, under live
+ *     pacing, read back from the paced fetch's waves;
  *  7. state: every wave stages out into one table root, partitioned by
- *     wave, and the run's seen set and schedule are views over the waves
- *     it wrote, one scan each; the per-(wave, partition) lineage is read
- *     from the part files' parquet footers. The wave's counts are observed
- *     on the stage-out and links writes ([[Dataset.observe]]), not counted
- *     by extra jobs.
+ *     wave, and the run's seen set, schedule, posts, merge batch and fetch
+ *     log are views over the waves it wrote; the per-(wave, partition)
+ *     lineage is read from the part files' parquet footers. The wave's
+ *     counts are observed on the stage-out and links writes
+ *     ([[Dataset.observe]]), not counted by extra jobs.
  *
  * Determinism: every ordering is an explicit sort key; no
  * monotonically_increasing_id, no partition-order dependence — identical
@@ -70,9 +76,6 @@ import graft.model.Post
  * ([[Robots]]) — Crawl-delay feeds the politeness clock, Disallow filters
  * the frontier before any scheduling work (both inside step 1's kernel).
  */
-/** One output row of the fetch stage: a document or a discovered link. */
-final case class ExpandRow(post: Option[Post], link: Option[SyntheticWeb.Req])
-
 /** A frontier row entering the fused dedup+politeness pass. */
 final case class WaveRow(site_id: String, kind: String, page: Int, row: Int,
     depth: Int, crawl_delay_ms: Int, url_hash: Long, host_hash: Long)
@@ -131,6 +134,15 @@ object Crawl {
   private val StageSchema = Encoders.product[RankedRow].schema
     .add("salt", LongType).add("partition_id", IntegerType).add("wave", IntegerType)
 
+  /** What the live-paced fetch stages for one request: its document with
+    * its crawl order, and its links. */
+  private type LiveFetch = (Option[(Post, Long)], Seq[SyntheticWeb.Req])
+
+  /** The live-paced fetch as staged (host, start time and [[LiveFetch]] of
+    * each request), then the `wave` directory column. */
+  private val FetchedSchema = Encoders.product[ThrottledFetch.Fetched[LiveFetch]].schema
+    .add("wave", IntegerType)
+
   /** A frontier of [[SyntheticWeb.Req]] rows, every column nullable. */
   private val FrontierSchema = StructType(
     Encoders.product[SyntheticWeb.Req].schema.map(_.copy(nullable = true)))
@@ -179,10 +191,10 @@ object Crawl {
       // ((site_id, wave) -> number of attempts that fail). The reference
       // tests inject failing plugins the same way to drive run_with_retry
       // (mod.rs:38-93 + the gnuboard try_collect whole-plugin retry,
-      // gnuboard mod.rs:76-81). Non-empty faults switch the fetch stage to
-      // per-site materialized slices wrapped in whole-site Retry.
+      // gnuboard mod.rs:76-81). Non-empty faults write each site's links
+      // of a wave as one job, retried whole by Retry.
       faults: Map[(String, Int), Int] = Map.empty,
-      // Live pacing: route the fetch stage through the ThrottledFetch
+      // Live pacing: fetch every request through the ThrottledFetch
       // token bucket (real wall-clock politeness + real SSO sessions)
       // instead of the virtual-clock schedule alone. Off by default —
       // the no-network sandbox needs no wall-clock pacing; the spec
@@ -221,23 +233,27 @@ object Crawl {
     lazy val batch: DataFrame = batchOf
   }
 
-  /**
-   * Per-partition fetch expansion shared by the batch waves and the
-   * streaming crawl: lazy once-per-host SSO bootstrap for auth-family
-   * sites (S8), then the deterministic synthetic fetch. `faultCheck` is
-   * the executor-side fault-injection hook (throws to simulate a failed
-   * fetch — a task failure that fails the site's whole slice, like a
-   * failed HTTP request fails the reference's whole plugin attempt).
-   */
-  /** Expand ONE request with an already-resolved session provider — the
-    * single expansion used by the batch fetch stage AND the live-pacing
-    * path (so probe/link semantics can never diverge between the two). */
-  private[graft] def expandOne(
-      req: SyntheticWeb.Req, scale: Long, limit: Long, rev: Int, probe: Boolean,
-      sessionFor: String => Sso.Session): (Option[Post], Seq[SyntheticWeb.Req]) = {
-    val (post, links) = SyntheticWeb.expand(req, scale, limit, rev, session(req, sessionFor))
-    (post, discovered(links, probe))
-  }
+  // The crawl's two expansion kernels, shared by every fetch mode and the
+  // streaming crawl. Each expands the requests of one task with its
+  // session provider: a lazy once-per-host SSO bootstrap for auth-family
+  // sites (S8, [[Sso.partitionSessions]]), then the deterministic
+  // synthetic fetch.
+
+  /** The documents of the post requests in `it`, each with the crawl order
+    * of its request: page * 10^6 + row. */
+  private[graft] def postsPartition(
+      it: Iterator[SyntheticWeb.Req], scale: Long, limit: Long, rev: Int,
+      sessionFor: String => Sso.Session): Iterator[(Post, Long)] =
+    it.flatMap(req => SyntheticWeb.expand(req, scale, limit, rev, session(req, sessionFor))._1
+      .map(p => (p, req.page * 1000000L + req.row)))
+
+  /** The links the requests in `it` discover. No document is built: a post
+    * page links nothing. */
+  private[graft] def linksPartition(
+      it: Iterator[SyntheticWeb.Req], scale: Long, limit: Long, rev: Int,
+      probe: Boolean, sessionFor: String => Sso.Session): Iterator[SyntheticWeb.Req] =
+    it.flatMap(req =>
+      discovered(SyntheticWeb.links(req, scale, limit, rev, session(req, sessionFor)), probe))
 
   private def session(req: SyntheticWeb.Req,
       sessionFor: String => Sso.Session): Option[Sso.Session] = {
@@ -250,38 +266,6 @@ object Crawl {
   // seen set anyway; this just avoids scheduling work)
   private def discovered(links: Seq[SyntheticWeb.Req], probe: Boolean): Seq[SyntheticWeb.Req] =
     if (probe) links.filter(_.kind != "list") else links
-
-  private[graft] def expandPartition(
-      it: Iterator[SyntheticWeb.Req], scale: Long, limit: Long, rev: Int,
-      probe: Boolean, onBootstrap: () => Unit,
-      faultCheck: SyntheticWeb.Req => Unit = _ => ()): Iterator[ExpandRow] = {
-    val sessionFor = Sso.partitionSessions(onBootstrap)
-    it.flatMap { req =>
-      faultCheck(req)
-      val (post, links) = expandOne(req, scale, limit, rev, probe, sessionFor)
-      (post.map(p => ExpandRow(Some(p), None)) ++
-        links.map(l => ExpandRow(None, Some(l)))).iterator
-    }
-  }
-
-  /** The documents half of [[expandPartition]], each with the crawl order
-    * of its request: page * 10^6 + row. */
-  private def postsPartition(
-      it: Iterator[SyntheticWeb.Req], scale: Long, limit: Long, rev: Int,
-      onBootstrap: () => Unit): Iterator[(Post, Long)] = {
-    val sessionFor = Sso.partitionSessions(onBootstrap)
-    it.flatMap(req => SyntheticWeb.expand(req, scale, limit, rev, session(req, sessionFor))._1
-      .map(p => (p, req.page * 1000000L + req.row)))
-  }
-
-  /** The links half of [[expandPartition]]: no document is built. */
-  private[graft] def linksPartition(
-      it: Iterator[SyntheticWeb.Req], scale: Long, limit: Long, rev: Int,
-      probe: Boolean, onBootstrap: () => Unit): Iterator[SyntheticWeb.Req] = {
-    val sessionFor = Sso.partitionSessions(onBootstrap)
-    it.flatMap(req =>
-      discovered(SyntheticWeb.links(req, scale, limit, rev, session(req, sessionFor)), probe))
-  }
 
   /** Rows that `obs` counted on the write that just ran (a wave write or
     * a snapshot table). The count is a by-product of that write job. An
@@ -350,6 +334,10 @@ object Crawl {
       failures0: Map[String, Throwable] = Map.empty,
       frontierRows: Option[Long] = None, seenRows: Option[Long] = None): Result = {
     import spark.implicits._
+    require(!cfg.livePacing || cfg.faults.isEmpty,
+      "livePacing and fault injection are separate test modes")
+    require(cfg.seenSketch == "bloom" || cfg.seenSketch == "cuckoo",
+      s"seenSketch must be \"bloom\" or \"cuckoo\", got \"${cfg.seenSketch}\"")
 
     val ssoBootstraps = spark.sparkContext.longAccumulator("sso_bootstraps")
     // wave stage-out root: the snapshot dir when snapshotting, else a
@@ -362,8 +350,6 @@ object Crawl {
     // the Req url) and resumed snapshots (already url-free) alike
     var frontier = frontier0.drop("url")
 
-    require(!cfg.livePacing || cfg.faults.isEmpty,
-      "livePacing and fault injection are separate test modes")
     val midCrawlFailures = scala.collection.mutable.LinkedHashMap.empty[String, Throwable]
     midCrawlFailures ++= failures0
     // A failed site contributes NO rows to persisted/returned posts — its
@@ -380,11 +366,17 @@ object Crawl {
     // re-plan the ever-larger plan — a serial driver cost that destroys
     // N->4N scaling efficiency. The root itself is never listed: a resumed
     // snapshot dir can still hold stage-outs of waves after its CURRENT.
+    def scan(root: String, schema: StructType)(waves: Seq[Int]): DataFrame =
+      if (waves.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+      else spark.read.schema(schema).option("basePath", root)
+        .parquet(waves.map(w => s"$root/wave=$w"): _*)
     val stageRoot = s"$workDir/waves/w/schedule"
-    def staged(waves: Seq[Int]): DataFrame =
-      if (waves.isEmpty) spark.createDataFrame(java.util.List.of[Row](), StageSchema)
-      else spark.read.schema(StageSchema).option("basePath", stageRoot)
-        .parquet(waves.map(w => s"$stageRoot/wave=$w"): _*)
+    def staged(waves: Seq[Int]): DataFrame = scan(stageRoot, StageSchema)(waves)
+    // the live-paced fetch stages its results beside the stage-out; a run
+    // without live pacing has none
+    val fetchedRoot = s"$workDir/waves/w/fetched"
+    def fetched(waves: Seq[Int]): DataFrame =
+      scan(fetchedRoot, FetchedSchema)(if (cfg.livePacing) waves else Nil)
     // the URL string re-enters HERE, at read time (one grammar-kernel
     // evaluation per consuming projection — per-row CPU in parallel
     // stages, traded for the dominant stage-out write/read bytes)
@@ -442,38 +434,36 @@ object Crawl {
     def requests(input: DataFrame): Dataset[SyntheticWeb.Req] = input
       .select("url", "site_id", "kind", "page", "row", "depth")
       .as[SyntheticWeb.Req]
-    // the fast path (no faults, no live pacing) fetches each post once,
-    // where the posts are consumed: ONE expansion over the staged post
-    // rows of every wave, each document with its request's crawl order
-    val lazyFetch = cfg.faults.isEmpty && !cfg.livePacing
+    // The documents this run fetched, each with its request's crawl order.
+    // A wave builds none: each post is fetched once, here, where the posts
+    // are consumed — ONE expansion over the staged post rows of every wave,
+    // or, under live pacing, a scan of what the paced fetch staged
     def fetchedPosts(waves: Seq[Int]): DataFrame =
-      requests(withUrls(staged(waves)).filter(col("kind") === "post"))
-        .mapPartitions(it => postsPartition(it, scale, limit, rev, onBootstrap))
-        .toDF("post", "seq").select(col("post.*"), col("seq"))
-    // posts0 and the documents the fault and live-pacing paths fetched
-    val postParts = scala.collection.mutable.ArrayBuffer(posts0)
+      if (cfg.livePacing)
+        fetched(waves).filter(col("result._1").isNotNull)
+          .select(col("result._1._1.*"), col("result._1._2").as("seq"))
+      else
+        requests(withUrls(staged(waves)).filter(col("kind") === "post"))
+          .mapPartitions(it =>
+            postsPartition(it, scale, limit, rev, Sso.partitionSessions(onBootstrap)))
+          .toDF("post", "seq").select(col("post.*"), col("seq"))
     // a site that exhausted mid-crawl retries contributes NO posts to the
     // run (the reference's failed plugin yields an error, not partial
     // output — mod.rs:38-93); its schedule/lineage rows remain as the
     // attempt record the error report cites
-    def posts(waves: Seq[Int]): DataFrame = {
-      val eager = postParts.reduce(_ unionByName _)
-      excludeFailedSites(
-        if (lazyFetch) eager.unionByName(fetchedPosts(waves).drop("seq")) else eager)
-    }
-    // the merge batch: every post with its crawl order `seq`. A post this
-    // run fetched on the fast path carries it; any other finds its request
-    // in the schedule (a fresh fast-path crawl has no other: its empty
-    // part folds away in planning)
+    def posts(waves: Seq[Int]): DataFrame =
+      excludeFailedSites(posts0.unionByName(fetchedPosts(waves).drop("seq")))
+    // the merge batch: the posts with their crawl order `seq`. A post of a
+    // resumed run's earlier waves (posts0) finds its request in the
+    // schedule; a fresh crawl has none, and its empty part folds away in
+    // planning
     def batch(waves: Seq[Int]): DataFrame = {
       val order = schedule(waves).filter(col("site_id").isNotNull)
         .select(col("url"), ((col("page").cast("long") * 1000000L) + col("row")).as("seq"))
-      val ordered = postParts.reduce(_ unionByName _).join(order, Seq("url"), "left")
+      val ordered = posts0.join(order, Seq("url"), "left")
         .withColumn("seq", coalesce(col("seq"), lit(0L)))
-      excludeFailedSites(if (lazyFetch) ordered.unionByName(fetchedPosts(waves)) else ordered)
+      excludeFailedSites(ordered.unionByName(fetchedPosts(waves)))
     }
-    val fetchLogParts = scala.collection.mutable.ArrayBuffer(
-      Seq.empty[(String, Long, Int)].toDF("host", "started_at_ms", "wave"))
     var seenCount = seenRows.getOrElse(seen0.count())
     // Scale-adaptive partition counts (guide §2.5/§6): a wave's task count
     // follows its size, at `rowsPerTask` rows per task
@@ -647,31 +637,9 @@ object Crawl {
         .parquet(s"$stageRoot/wave=$wave")
       val fetchInput = withUrls(staged(Seq(wave)))
 
-      // 6. fetch = deterministic synthetic expansion (typed transform).
-      val faults = cfg.faults; val wv = wave
-      def expandDs(input: DataFrame, attempt: Int): Dataset[ExpandRow] =
-        requests(input).mapPartitions(it =>
-          expandPartition(it, scale, limit, rev, probe, onBootstrap,
-            req => if (faults.getOrElse((req.site_id, wv), 0) > attempt)
-              throw new RuntimeException(
-                s"synthetic fetch failure: ${req.site_id} wave=$wv attempt=$attempt")))
-      // keeps the documents of an eagerly fetched wave, returns its links
-      def split(expanded: Dataset[ExpandRow]): Dataset[SyntheticWeb.Req] = {
-        postParts += expanded.filter(_.post.isDefined).map(_.post.get).toDF()
-        expanded.filter(_.link.isDefined).map(_.link.get)
-      }
-      // The wave's documents stay LAZY views — caching a million Post rows
-      // per wave is pure GC pressure, and downstream consumers (merge,
-      // snapshots) recompute the cheap expansion from the staged inputs.
-      // Mid-crawl WHOLE-SITE retry (reference run_with_retry around the
-      // whole plugin attempt, mod.rs:38-93; a failed detail fetch retries
-      // the site from scratch, gnuboard mod.rs:76-81 try_collect). The
-      // fast path (no faults configured) keeps the fetch lazy: post pages
-      // link nothing, so the links write expands only the list pages
-      // without building a document, and each post is fetched once, where
-      // the posts are consumed. With faults the wave's fetch runs as
-      // per-site materialized slices so one site's failure neither poisons
-      // nor re-runs its siblings. Re-fetch is idempotent: the expansion is
+      // 6. fetch: the wave writes only the links it discovers; each post is
+      // fetched once, where the run's posts are consumed (`posts` and
+      // `batch` above). Re-fetch is idempotent: the expansion is
       // deterministic and the seen-set/merge tolerate at-least-once
       // delivery, so a fail-then-succeed site yields byte-identical output
       // (CrawlSpec).
@@ -680,56 +648,61 @@ object Crawl {
           // LIVE politeness: the wave's fetch runs through the token-bucket
           // executor — real wall-clock spacing per host within each salt
           // lane (numSalts=1 => strict per-host pacing), real lazy SSO
-          // sessions (one bootstrap per task×host). The paced result is
-          // staged out ONCE so downstream consumers re-read files instead
-          // of re-triggering paced fetches.
+          // sessions (one bootstrap per task×host). Each request's links and
+          // document are staged out ONCE, in a wave=N leaf dir like the
+          // stage-out's, so the links write, the posts and the fetch log
+          // re-read files instead of re-triggering paced fetches.
           val delays: Map[String, Long] =
             Robots.fleetRules.map(r => r.host -> r.crawl_delay_ms.toLong).toMap
-          val fetched = ThrottledFetch.run[
-              SyntheticWeb.Req, (Option[Post], Seq[SyntheticWeb.Req])](
+          ThrottledFetch.run[SyntheticWeb.Req, LiveFetch](
             requests(fetchInput),
             hostOf = r => SyntheticWeb.siteById(r.site_id).host,
             delayMsFor = h => delays.getOrElse(h, FrontierKey.DefaultDelayMs.toLong),
-            // the SAME expansion as the batch fetch stage (expandOne), and
-            // the same bootstrap accounting — live mode must not diverge
-            fetch = (req, sessionFor) =>
-              expandOne(req, scale, limit, rev, probe, sessionFor),
+            // the same two kernels as every other mode, on the paced
+            // task's sessions
+            fetch = (req, sessionFor) => (
+              postsPartition(Iterator.single(req), scale, limit, rev, sessionFor).nextOption(),
+              linksPartition(Iterator.single(req), scale, limit, rev, probe, sessionFor).toSeq),
             onBootstrap = onBootstrap)
-          // a wave=N leaf dir, like the stage-out: `wave` is read back as
-          // a partition column, not inlined into every wave's code as a
-          // literal
-          val root = s"$workDir/waves/w/fetched"
-          fetched.toDF().write.mode("overwrite").parquet(s"$root/wave=$wave")
-          val f = spark.read.option("basePath", root).parquet(s"$root/wave=$wave")
-          fetchLogParts += f
-            .select(col("host"), col("startedAtMs").as("started_at_ms"), col("wave"))
-          split(f.as[ThrottledFetch.Fetched[(Option[Post], Seq[SyntheticWeb.Req])]]
-            .flatMap { fr =>
-              fr.result._1.map(p => ExpandRow(Some(p), None)).toSeq ++
-                fr.result._2.map(l => ExpandRow(None, Some(l)))
-            })
-        } else if (faults.isEmpty)
+            .toDF().write.mode("overwrite").parquet(s"$fetchedRoot/wave=$wave")
+          fetched(Seq(wave)).select(inline(col("result._2"))).as[SyntheticWeb.Req]
+        } else if (cfg.faults.isEmpty)
+          // post pages link nothing: only the list pages are expanded
           requests(fetchInput.filter(col("kind") === "list"))
-            .mapPartitions(it => linksPartition(it, scale, limit, rev, probe, onBootstrap))
+            .mapPartitions(it => linksPartition(it, scale, limit, rev, probe,
+              Sso.partitionSessions(onBootstrap)))
         else {
+          // Mid-crawl WHOLE-SITE retry (reference run_with_retry around the
+          // whole plugin attempt, mod.rs:38-93; a failed detail fetch
+          // retries the site from scratch, gnuboard mod.rs:76-81
+          // try_collect). Each site's slice, post rows included, is one job
+          // that checks for an injected fault on every request: a failed
+          // check fails the task and with it the site's attempt, like a
+          // failed HTTP request fails the reference's plugin attempt. One
+          // site's failure neither poisons nor re-runs its siblings.
+          val faults = cfg.faults; val wv = wave
           val sites = fetchInput.select("site_id").distinct().as[String].collect().sorted
           val okParts = scala.collection.mutable.ArrayBuffer.empty[String]
           sites.foreach { sid =>
-            val p = s"$workDir/waves/w$wave/expand/" +
+            val p = s"$workDir/waves/w$wave/site-links/" +
               java.net.URLEncoder.encode(sid, "UTF-8")
             try {
               Retry.withRetry(3) { attempt =>
-                expandDs(fetchInput.filter(col("site_id") === sid), attempt)
-                  .toDF().write.mode("overwrite").parquet(p)
+                requests(fetchInput.filter(col("site_id") === sid))
+                  .mapPartitions(it => linksPartition(
+                    it.tapEach(req => if (faults.getOrElse((req.site_id, wv), 0) > attempt)
+                      throw new RuntimeException(
+                        s"synthetic fetch failure: ${req.site_id} wave=$wv attempt=$attempt")),
+                    scale, limit, rev, probe, Sso.partitionSessions(onBootstrap)))
+                  .write.mode("overwrite").parquet(p)
               }
               okParts += p
             } catch {
               case e: Retry.RetryExhausted => midCrawlFailures(sid) = e
             }
           }
-          split(
-            if (okParts.isEmpty) spark.emptyDataset[ExpandRow]
-            else spark.read.parquet(okParts.toSeq: _*).as[ExpandRow])
+          if (okParts.isEmpty) spark.emptyDataset[SyntheticWeb.Req]
+          else spark.read.schema(FrontierSchema).parquet(okParts.toSeq: _*).as[SyntheticWeb.Req]
         }
 
       // The discovered-link frontier is staged to parquet like every other
@@ -807,7 +780,7 @@ object Crawl {
       lineage(done),
       ssoBootstraps,
       midCrawlFailures.toMap,
-      fetchLogParts.reduce(_ unionByName _),
+      fetched(done).select(col("host"), col("startedAtMs").as("started_at_ms"), col("wave")),
       batch(done))
   }
 }

@@ -210,22 +210,30 @@ object Merge {
 
   /** Newest-first top-K per site (reference mod.rs:142-147: `.rev().take(k)`)
     * of posts laid out as [[mergeBySite]] leaves them: each site's last `k`
-    * rows, in rank order. One narrow pass keeps them with the deque
-    * [[graft.sinks.Feeds.perSite]] uses, so no exchange or sort runs. */
+    * rows, in rank order. One narrow pass keeps them ([[lastPerSite]], as
+    * [[graft.sinks.Feeds.perSite]] does), so no exchange or sort runs. */
   def newestPerSite(clustered: DataFrame, k: Int): DataFrame = {
     val siteIx = clustered.schema.fieldIndex("site_id")
-    clustered.mapPartitions { (in: Iterator[Row]) =>
-      val rows = in.buffered
-      Iterator.continually(rows).takeWhile(_.hasNext && k > 0).flatMap { rs =>
-        val site = rs.head.getString(siteIx)
-        val newest = new java.util.ArrayDeque[Row](k + 1)
-        while (rs.hasNext && rs.head.getString(siteIx) == site) {
-          newest.addLast(rs.next())
-          if (newest.size > k) newest.removeFirst()
-        }
-        newest.iterator.asScala
+    clustered.mapPartitions((in: Iterator[Row]) =>
+      lastPerSite(in, k)(_.getString(siteIx)).flatMap(_._2)
+    )(Encoders.row(clustered.schema))
+  }
+
+  /** Each site's run of rows in `in` (every site whole and contiguous, its
+    * rows in rank order) cut to its last `k` rows, in rank order: one
+    * bounded deque per site, so memory stays at `k` rows. */
+  private[graft] def lastPerSite[T](in: Iterator[T], k: Int)(
+      siteOf: T => String): Iterator[(String, Seq[T])] = {
+    val rows = in.buffered
+    Iterator.continually(rows).takeWhile(_.hasNext && k > 0).map { rs =>
+      val site = siteOf(rs.head)
+      val last = new java.util.ArrayDeque[T](k + 1)
+      while (rs.hasNext && siteOf(rs.head) == site) {
+        last.addLast(rs.next())
+        if (last.size > k) last.removeFirst()
       }
-    }(Encoders.row(clustered.schema))
+      site -> last.asScala.toSeq
+    }
   }
 
   /**

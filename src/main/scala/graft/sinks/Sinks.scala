@@ -8,6 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.TextKernel
 import graft.model.{CalendarEvent, Post}
+import graft.operators.Merge
 
 /**
  * Output sinks — faithful re-expressions of the reference emitters:
@@ -237,23 +238,11 @@ object Feeds {
   def perSite(clusteredPosts: DataFrame, k: Int): DataFrame = {
     import clusteredPosts.sparkSession.implicits._
     clusteredPosts.as[Post]
-      .mapPartitions { rows =>
-        val in = rows.buffered
-        new Iterator[(String, String, String)] {
-          def hasNext: Boolean = in.hasNext && k > 0
-          def next(): (String, String, String) = {
-            val site = in.head.site_id
-            val newest = new java.util.ArrayDeque[Post](k + 1)
-            while (in.hasNext && in.head.site_id == site) {
-              newest.addFirst(in.next())
-              if (newest.size > k) newest.removeLast()
-            }
-            val posts = newest.toArray(new Array[Post](0)).toSeq
-            (site, SiteJson.document(site, posts),
-              Rss.channelXml(site, s"https://$site", s"$site notices", posts))
-          }
-        }
-      }
+      .mapPartitions(rows => Merge.lastPerSite(rows, k)(_.site_id).map { case (site, last) =>
+        val posts = last.reverse // newest first
+        (site, SiteJson.document(site, posts),
+          Rss.channelXml(site, s"https://$site", s"$site notices", posts))
+      })
       .toDF("site_id", "site_json", "rss_xml")
   }
 }

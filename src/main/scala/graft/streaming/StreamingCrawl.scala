@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
-import graft.crawl.{Crawl, FrontierKey, SyntheticWeb}
+import graft.crawl.{Crawl, FrontierKey, Sso, SyntheticWeb}
 
 /**
  * The crawl's wave loop as a SELF-FEEDING Structured Streaming query
@@ -18,8 +18,8 @@ import graft.crawl.{Crawl, FrontierKey, SyntheticWeb}
  *  - each micro-batch canonicalizes + robots-filters + seen-filters its
  *    slice (the seen set is a parquet state table swapped per batch,
  *    exactly like [[StreamingMerge.foreachBatchMerge]]'s cache), fetches
- *    via the shared per-partition expansion (SSO bootstrap included), and
- *    APPENDS the fetched posts to the output table;
+ *    with the batch crawl's two expansion kernels (SSO bootstrap
+ *    included), and APPENDS the fetched posts to the output table;
  *  - `query.processAllAvailable()` drains until the frontier stops
  *    growing — the streaming analog of "crawl until the frontier is empty".
  *
@@ -77,14 +77,18 @@ object StreamingCrawl {
         val fresh = keyed.join(seen, Seq("url_hash"), "left_anti")
           .select("url_hash", "url", "site_id", "kind", "page", "row", "depth")
           .cache()
-        val expanded = fresh
+        // the batch crawl's two expansion kernels, each one pass over the
+        // cached slice
+        val reqs = fresh
           .select("url", "site_id", "kind", "page", "row", "depth")
           .as[SyntheticWeb.Req]
-          .mapPartitions(it => Crawl.expandPartition(it, scale, limit, rev, probe, () => ()))
-        expanded.filter(_.post.isDefined).map(_.post.get).toDF()
+        reqs.mapPartitions(it =>
+            Crawl.postsPartition(it, scale, limit, rev, Sso.partitionSessions(() => ())))
+          .map(_._1).toDF()
           .write.mode("append").parquet(postsDir)
         // discovered links feed the WATCHED directory -> next micro-batch
-        val links = expanded.filter(_.link.isDefined).map(_.link.get).toDF()
+        val links = reqs.mapPartitions(it => Crawl.linksPartition(it, scale, limit, rev, probe,
+          Sso.partitionSessions(() => ()))).toDF()
         if (!links.isEmpty) links.write.mode("append").parquet(frontierDir)
         // seen-state swap: the same checked rename-aside commit as
         // foreachBatchMerge's cache, so old state is never deleted before

@@ -50,18 +50,16 @@ object ProfileCrawl {
     time("e_+repartition")(rep)
     val persisted = rep.persist()
     time("f_+persist")(persisted)
-    // expand typed flatMap
+    // expand typed flatMap: every request's document and links are built,
+    // the links are counted
     val exp = persisted.select("url","site_id","kind","page","row","depth").as[graft.crawl.SyntheticWeb.Req]
       .mapPartitions { it =>
-        val sessions = scala.collection.mutable.HashMap.empty[String, graft.crawl.Sso.Session]
+        val sessionFor = graft.crawl.Sso.partitionSessions(() => ())
         it.flatMap { req =>
           val site = graft.crawl.SyntheticWeb.siteById(req.site_id)
-          val s = if (site.family == "auth")
-            Some(sessions.getOrElseUpdate(site.host, graft.crawl.Sso.bootstrap(site.host)))
-          else None
-          val (p, l) = graft.crawl.SyntheticWeb.expand(req, 1000000, 300000, 0, s)
-          (p.map(x => graft.crawl.ExpandRow(Some(x), None)) ++ l.map(x => graft.crawl.ExpandRow(None, Some(x)))).iterator } }
-    time("g_expand")(exp.filter((r: graft.crawl.ExpandRow) => r.link.isDefined).toDF())
+          val s = if (site.family == "auth") Some(sessionFor(site.host)) else None
+          graft.crawl.SyntheticWeb.expand(req, 1000000, 300000, 0, s)._2 } }
+    time("g_expand")(exp.toDF())
     spark.stop()
   }
 }

@@ -184,6 +184,38 @@ class CrawlSpec extends SparkSuite {
     }
   }
 
+  test("every fetch mode produces the clean run's merge batch, crawl order included") {
+    val sites = Seq("biz.ssu.ac.kr", "bioinfo.ssu.ac.kr")
+    val small = Crawl.Config(scale = 60, limitPerSite = 6, include = sites, numSalts = 1)
+    def batchKey(r: Crawl.Result): Seq[String] =
+      r.batch.select("site_id", "id", "seq", "content")
+        .orderBy("site_id", "id").collect().map(_.mkString("|")).toSeq
+    val clean = batchKey(Crawl.run(spark, small))
+    assert(clean.nonEmpty)
+    // biz's post wave fails twice, then succeeds
+    assert(batchKey(Crawl.run(spark,
+      small.copy(faults = Map(("biz.ssu.ac.kr", 1) -> 2)))) === clean, "fault run")
+    assert(batchKey(Crawl.run(spark, small.copy(livePacing = true))) === clean, "live-paced run")
+    // a snapshot of wave 0 holds the list pages only: the resumed run
+    // fetches every post
+    val dir = java.nio.file.Files.createTempDirectory("graft-snap-batch").toString
+    Crawl.run(spark, small.copy(maxWaves = 1, snapshotDir = Some(dir)))
+    assert(batchKey(Snapshots.resume(spark, dir, small)) === clean, "resumed run")
+    // the sequential page walk's wave-1 snapshot holds page 1's posts:
+    // the resumed run finds their crawl order in the snapshot's schedule
+    val walk = small.copy(limitPerSite = 20, probePagination = false)
+    val walkDir = java.nio.file.Files.createTempDirectory("graft-snap-walk").toString
+    Crawl.run(spark, walk.copy(maxWaves = 2, snapshotDir = Some(walkDir)))
+    assert(Snapshots.read(spark, walkDir, "posts").count() > 0)
+    assert(batchKey(Snapshots.resume(spark, walkDir, walk)) ===
+      batchKey(Crawl.run(spark, walk)), "resumed page walk")
+  }
+
+  test("runFrom rejects a seenSketch other than bloom or cuckoo") {
+    val e = intercept[IllegalArgumentException](Crawl.run(spark, cfg.copy(seenSketch = "cukoo")))
+    assert(e.getMessage.contains("\"cukoo\""), e.getMessage)
+  }
+
   test("multi-wave failure: snapshot excludes the failed site's EARLIER-wave posts and seen hashes; resume keeps reporting it") {
     // sequential page walk (probePagination = false) so biz's posts span
     // two waves: wave1 = page-1 posts, wave2 = page-2 posts. Failing wave 2

@@ -139,8 +139,10 @@ object Crawl {
   private type LiveFetch = (Option[(Post, Long)], Seq[SyntheticWeb.Req])
 
   /** The live-paced fetch as staged (host, start time and [[LiveFetch]] of
-    * each request), then the `wave` directory column. */
-  private val FetchedSchema = Encoders.product[ThrottledFetch.Fetched[LiveFetch]].schema
+    * each request), then the `wave` directory column. Lazy, like the fetch
+    * log: deriving the encoder is start-up time only a live-paced run
+    * needs. */
+  private lazy val FetchedSchema = Encoders.product[ThrottledFetch.Fetched[LiveFetch]].schema
     .add("wave", IntegerType)
 
   /** A frontier of [[SyntheticWeb.Req]] rows, every column nullable. */
@@ -206,10 +208,10 @@ object Crawl {
       include: Seq[String] = Seq.empty,
       exclude: Seq[String] = Seq.empty)
 
-  /** A crawl run's outputs. `posts`, `lineage` and `batch` are built on
-    * first use: a caller that reads only the schedule and the seen set
-    * pays neither the stage-out footer reads nor the analysis of the post
-    * fetch. */
+  /** A crawl run's outputs. `posts`, `lineage`, `fetchLog` and `batch` are
+    * built on first use: a caller that reads only the schedule and the seen
+    * set pays neither the stage-out footer reads nor the analysis of the
+    * post fetch. */
   final class Result(
       postsOf: => DataFrame,    // fetched documents (Post schema)
       val seen: DataFrame,      // url_hash table
@@ -224,12 +226,13 @@ object Crawl {
       val failedSites: Map[String, Throwable],
       // live-pacing audit trail: one (host, started_at_ms, wave) row per
       // fetch — empty unless Config.livePacing
-      val fetchLog: DataFrame,
+      fetchLogOf: => DataFrame,
       // the posts with their crawl order `seq` (page * 10^6 + row of the
       // request that fetched each): the daemon merge's batch
       batchOf: => DataFrame) {
     lazy val posts: DataFrame = postsOf
     lazy val lineage: DataFrame = lineageOf
+    lazy val fetchLog: DataFrame = fetchLogOf
     lazy val batch: DataFrame = batchOf
   }
 

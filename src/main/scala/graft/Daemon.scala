@@ -263,7 +263,7 @@ object Daemon {
       failed.toSeq.map { case (site, e) =>
         (site, "crawl_failed", null: String, e.getMessage, null: String) })
       .toDF("site_id", "event", "post_id", "title", "url")
-    graft.sinks.Report.write(events, s"$outDir/reports/content_report")
+    events.write.mode("overwrite").json(s"$outDir/reports/content_report")
     failed.toSeq.map { case (site, e) => (site, e.getMessage) }
       .toDF("site_id", "error")
       .write.mode("overwrite").json(s"$outDir/reports/error_report")

@@ -82,7 +82,7 @@ object Compaction {
       val old = Paths.get(dir, s".compact_old_${ps.partition}")
       Files.move(pdir, old)
       Files.move(staged, pdir)
-      deleteRecursively(old)
+      TempDirs.deleteRecursively(old)
       // drop Spark's _SUCCESS marker inside the partition dir — the cache
       // root is the table, partition dirs hold data files only
       val marker = pdir.resolve("_SUCCESS")
@@ -99,7 +99,8 @@ object Compaction {
    * Expire old snapshot versions, keeping the newest `keepLast` (CURRENT
    * always survives — it is among the newest by construction). Returns
    * the expired version numbers. The Iceberg `expire_snapshots` analog:
-   * bounded metadata + data growth for a long-lived daemon.
+   * bounded metadata growth for a long-lived daemon. An expired version is
+   * its manifest dir; its waves stay, as every later version reads them.
    */
   def expireSnapshots(dir: String, keepLast: Int): Seq[Int] = {
     require(keepLast >= 1, s"keepLast must be >= 1, got $keepLast")
@@ -109,7 +110,7 @@ object Compaction {
     expire.foreach { v =>
       require(!current.contains(v),
         s"refusing to expire CURRENT snapshot v$v")
-      deleteRecursively(Paths.get(dir, "snapshots", s"v$v"))
+      TempDirs.deleteRecursively(Paths.get(dir, "snapshots", s"v$v"))
     }
     expire
   }
@@ -132,18 +133,9 @@ object Compaction {
     entries.filter(_.startsWith(".compact_old_")).foreach { n =>
       val part = root.resolve(n.stripPrefix(".compact_old_"))
       if (!Files.exists(part)) Files.move(root.resolve(n), part)
-      else deleteRecursively(root.resolve(n))
+      else TempDirs.deleteRecursively(root.resolve(n))
     }
     entries.filter(_.startsWith(".compact_tmp_")).foreach(n =>
-      deleteRecursively(root.resolve(n)))
-  }
-
-  private def deleteRecursively(p: Path): Unit = {
-    if (Files.exists(p)) {
-      val s = Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .iterator().asScala.foreach(Files.delete)
-      finally s.close()
-    }
+      TempDirs.deleteRecursively(root.resolve(n)))
   }
 }

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Try
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.BlockMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -92,23 +93,23 @@ final case class RankedRow(site_id: String, kind: String, page: Int, row: Int,
  * JVM-wide registry of transient work dirs (the crawl's wave stage-out,
  * the streaming queries' fixtures), reclaimed by ONE shutdown hook
  * (registering a hook per Crawl.run would accumulate threads in
- * long-lived sessions). Deletion walks depth-first with the directory
- * stream closed eagerly (Files.walk in try/finally — Files.list left open
- * leaks an fd per directory during the recursive delete).
+ * long-lived sessions).
  */
 private[graft] object TempDirs {
   private val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
   private lazy val hook: Unit = Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    dirs.forEach { dir =>
-      try {
-        val walk = java.nio.file.Files.walk(dir)
-        try {
-          walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-            .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        } finally walk.close()
-      } catch { case _: Throwable => () }
-    }
+    dirs.forEach(dir => try deleteRecursively(dir) catch { case _: Throwable => () })
   }))
+
+  /** Delete `p` and everything under it, depth-first, closing the walk's
+    * directory stream eagerly (one left open leaks an fd per directory). */
+  def deleteRecursively(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val walk = java.nio.file.Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .iterator().asScala.foreach(java.nio.file.Files.delete)
+      finally walk.close()
+    }
 
   /** A fresh dir for transient work files, reclaimed at JVM exit: on tmpfs
     * when `/dev/shm` is writable (RAM-backed scratch has no fsync or disk
@@ -146,7 +147,7 @@ object Crawl {
     .add("wave", IntegerType)
 
   /** A frontier of [[SyntheticWeb.Req]] rows, every column nullable. */
-  private val FrontierSchema = StructType(
+  private[crawl] val FrontierSchema = StructType(
     Encoders.product[SyntheticWeb.Req].schema.map(_.copy(nullable = true)))
 
   /** The per-(wave, partition) lineage: the stage-out's `wave` and
@@ -158,27 +159,36 @@ object Crawl {
     StructField("deduped", LongType, nullable = false),
     StructField("fetched", LongType, nullable = false)))
 
+  /** The row groups of each part file in `dir`, from its parquet footer. */
+  private[crawl] def footers(spark: SparkSession, dir: String): Seq[(Path, Seq[BlockMetaData])] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new Path(dir)
+    path.getFileSystem(conf).listStatus(path).toSeq
+      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
+      .map { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        f.getPath -> (try reader.getFooter.getBlocks.asScala.toSeq finally reader.close())
+      }
+  }
+
   /** `(partition_id, rows)` of each non-empty part file of the stage-out
     * wave in `dir`, in partition order, read from the parquet footers: a
     * file's row count, and its `partition_id` statistics, whose min equals
     * the max because one writer task wrote the file. */
-  private def partitionRows(spark: SparkSession, dir: String): Seq[(Int, Long)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = new Path(dir)
-    val files = path.getFileSystem(conf).listStatus(path).toSeq
-      .filter(f => f.isFile && f.getPath.getName.startsWith("part-"))
-    files.flatMap { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
-      val blocks = try reader.getFooter.getBlocks.asScala.toSeq finally reader.close()
+  private def partitionRows(spark: SparkSession, dir: String): Seq[(Int, Long)] =
+    footers(spark, dir).flatMap { case (file, blocks) =>
       val ids = blocks.filter(_.getRowCount > 0).flatMap { b =>
         val stats = b.getColumns.asScala.find(_.getPath.toDotString == "partition_id")
-          .getOrElse(sys.error(s"${f.getPath}: no partition_id column")).getStatistics
+          .getOrElse(sys.error(s"$file: no partition_id column")).getStatistics
         Seq(stats.genericGetMin, stats.genericGetMax)
       }.distinct
-      require(ids.size <= 1, s"${f.getPath} holds partition ids ${ids.mkString(", ")}")
+      require(ids.size <= 1, s"$file holds partition ids ${ids.mkString(", ")}")
       ids.map(id => id.asInstanceOf[Integer].intValue -> blocks.map(_.getRowCount).sum)
     }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.sorted
-  }
+
+  /** A crawl dir's stage-out root, and one wave's links (the next frontier). */
+  private[crawl] def stageRoot(dir: String): String = s"$dir/waves/w/schedule"
+  private[crawl] def linksDir(dir: String, wave: Int): String = s"$dir/waves/w$wave/links"
 
   final case class Config(
       scale: Long = 1000L,
@@ -247,8 +257,9 @@ object Crawl {
   private[graft] def postsPartition(
       it: Iterator[SyntheticWeb.Req], scale: Long, limit: Long, rev: Int,
       sessionFor: String => Sso.Session): Iterator[(Post, Long)] =
-    it.flatMap(req => SyntheticWeb.expand(req, scale, limit, rev, session(req, sessionFor))._1
-      .map(p => (p, req.page * 1000000L + req.row)))
+    it.filter(_.kind == "post").flatMap(req =>
+      SyntheticWeb.expand(req, scale, limit, rev, session(req, sessionFor))._1
+        .map(p => (p, req.page * 1000000L + req.row)))
 
   /** The links the requests in `it` discover. No document is built: a post
     * page links nothing. */
@@ -270,12 +281,12 @@ object Crawl {
   private def discovered(links: Seq[SyntheticWeb.Req], probe: Boolean): Seq[SyntheticWeb.Req] =
     if (probe) links.filter(_.kind != "list") else links
 
-  /** Rows that `obs` counted on the write that just ran (a wave write or
-    * a snapshot table). The count is a by-product of that write job. An
+  /** Rows that `obs` counted on the write that just ran (a stage-out or
+    * links write). The count is a by-product of that write job. An
     * observation Spark could not fill (its plan lost the metrics node, or
     * the listener event never came) falls back to `recount`, an exact
     * count of what was written. */
-  private[crawl] def observedRows(obs: Observation, recount: => Long): Long =
+  private def observedRows(obs: Observation, recount: => Long): Long =
     Try(Await.result(obs.future, 1.minute)).toOption
       .filter(_.length > 0).map(_.getLong(0))
       .getOrElse(recount)
@@ -325,17 +336,21 @@ object Crawl {
       frontierRows = Some(seedReqs.size.toLong), seenRows = Some(0L))
   }
 
-  /** Continue a crawl from an arbitrary state (used by snapshot resume).
-    * `failures0` carries a resumed snapshot's recorded mid-crawl failures
-    * forward so the resumed run still reports (and keeps excluding) them.
-    * `frontierRows`/`seenRows` are the row counts of `frontier0`/`seen0`
-    * when the caller already knows them; a missing one is counted here. */
+  /** Continue a crawl from an arbitrary state. `waves0` maps the waves
+    * before `wave0` already staged in `cfg.snapshotDir` (a snapshot resume)
+    * to their `(scheduled, deduped)` counts: every view of the run ranges
+    * over them too. `failures0` carries a resumed snapshot's recorded
+    * mid-crawl failures forward so the resumed run still reports (and
+    * keeps excluding) them. `frontierRows`/`seenRows` are the row counts of
+    * `frontier0` and of the starting seen set (`seen0` and `waves0`) when
+    * the caller already knows them; a missing one is counted here. */
   def runFrom(
       spark: SparkSession, cfg: Config, frontier0: DataFrame, wave0: Int,
       seen0: DataFrame, posts0: DataFrame,
       schedule0: Option[DataFrame], lineage0: Option[DataFrame],
       failures0: Map[String, Throwable] = Map.empty,
-      frontierRows: Option[Long] = None, seenRows: Option[Long] = None): Result = {
+      frontierRows: Option[Long] = None, seenRows: Option[Long] = None,
+      waves0: Map[Int, (Long, Long)] = Map.empty): Result = {
     import spark.implicits._
     require(!cfg.livePacing || cfg.faults.isEmpty,
       "livePacing and fault injection are separate test modes")
@@ -347,6 +362,8 @@ object Crawl {
     // transient dir — without the exit cleanup every crawl would leak its
     // wave files into tmpfs
     val workDir = cfg.snapshotDir.getOrElse(TempDirs.create("graft-crawl-"))
+    // the waves staged before wave `w`: those of the dir, then this run's
+    def wavesBefore(w: Int): Seq[Int] = waves0.keys.toSeq.sorted ++ (wave0 until w)
     // the frontier is url-free inside the wave loop (UrlGrammar derives
     // the string from coordinates at the consumption edges); dropping the
     // column here normalizes every entry path — fresh seeds (which carry
@@ -364,7 +381,7 @@ object Crawl {
 
     // Every wave stages out into ONE table root, hive-partitioned by wave,
     // and the run's seen, schedule and lineage are views over the waves it
-    // wrote: one scan of their explicit leaf dirs per view. A union tree
+    // staged: one scan of their explicit leaf dirs per view. A union tree
     // of per-wave frames would grow every wave, and Catalyst/AQE would
     // re-plan the ever-larger plan — a serial driver cost that destroys
     // N->4N scaling efficiency. The root itself is never listed: a resumed
@@ -373,7 +390,7 @@ object Crawl {
       if (waves.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
       else spark.read.schema(schema).option("basePath", root)
         .parquet(waves.map(w => s"$root/wave=$w"): _*)
-    val stageRoot = s"$workDir/waves/w/schedule"
+    val stageRoot = Crawl.stageRoot(workDir)
     def staged(waves: Seq[Int]): DataFrame = scan(stageRoot, StageSchema)(waves)
     // the live-paced fetch stages its results beside the stage-out; a run
     // without live pacing has none
@@ -388,12 +405,10 @@ object Crawl {
         col("page"), col("row"), cfg.scale, cfg.rev))
       .withColumn("canonical", GraftFunctions.url_canonicalize(col("url")))
       .withColumn("host", GraftFunctions.url_host(col("url")))
-    // seen0 is not persisted: it is an empty local relation or a snapshot
-    // parquet read, both cheap to re-scan. A site that exhausted mid-crawl
-    // retries keeps its URLs OUT of the seen set: its fetches never
-    // happened, so a snapshot resume (or the next daemon run) must
-    // re-schedule them — its schedule rows remain as the attempt record
-    // the error report cites
+    // A site that exhausted mid-crawl retries keeps its URLs OUT of the
+    // seen set: its fetches never happened, so a snapshot resume (or the
+    // next daemon run) must re-schedule them — its schedule rows remain as
+    // the attempt record the error report cites
     def seen(waves: Seq[Int]): DataFrame = seen0.unionByName(
       excludeFailedSites(staged(waves)).select(col("url_hash"), col("wave").as("first_wave")))
     def schedule(waves: Seq[Int]): DataFrame = {
@@ -401,9 +416,9 @@ object Crawl {
         "url_hash", "site_id", "page", "row", "depth", "ready_ms", "crawl_delay_ms")
       schedule0.fold(run)(_ unionByName run)
     }
-    // (scheduled, deduped) per wave this run wrote: driver values the
-    // writes observed
-    val waveCounts = scala.collection.mutable.HashMap.empty[Int, (Long, Long)]
+    // (scheduled, deduped) per staged wave: driver values the writes
+    // observed
+    val waveCounts = scala.collection.mutable.HashMap.empty[Int, (Long, Long)] ++= waves0
     // a local relation: each stage-out part file holds one writer task's
     // rows, so its footer gives that (wave, partition)'s fetched count
     // without a job over the data
@@ -468,6 +483,10 @@ object Crawl {
       excludeFailedSites(ordered.unionByName(fetchedPosts(waves)))
     }
     var seenCount = seenRows.getOrElse(seen0.count())
+    var wave = wave0
+    // frontier size is carried between waves (the links write observed it) —
+    // no extra action per wave just to test emptiness
+    var frontierCount = frontierRows.getOrElse(frontier.count())
     // Scale-adaptive partition counts (guide §2.5/§6): a wave's task count
     // follows its size, at `rowsPerTask` rows per task
     val rowsPerTask = sys.props.getOrElse("graft.rows.per.task", "8192").toLong
@@ -476,14 +495,11 @@ object Crawl {
     // (O(|seen|) per wave — a full-state scan per wave at 10^10 URLs). A
     // seen set under one task's rows has none: the exact anti-join alone
     // probes it, and the first build covers the whole set once it crosses
-    // that size
+    // that size: a resumed run's covers the waves it read from the dir
     val sketch = new SeenSet.IncrementalSketch(cfg.seenSketch,
       initialCapacity = seenCount * 4)
-    if (seenCount >= rowsPerTask) sketch.add(seen0, seenCount, "url_hash")(seen0)
-    var wave = wave0
-    // frontier size is carried between waves (the links write observed it) —
-    // no extra action per wave just to test emptiness
-    var frontierCount = frontierRows.getOrElse(frontier.count())
+    if (seenCount >= rowsPerTask && wave < cfg.maxWaves && frontierCount > 0)
+      sketch.add(seen(wavesBefore(wave)), seenCount, "url_hash")(seen(wavesBefore(wave)))
 
     while (wave < cfg.maxWaves && frontierCount > 0) {
       // a site that already exhausted its retries fetches nothing further
@@ -538,8 +554,8 @@ object Crawl {
       val fresh =
         if (seenCount == 0) keyed
         else SeenSet.filterNewProbe(keyed,
-          if (sketched.isDefined) seen(wave0 until wave)
-          else seen(wave0 until wave).select("url_hash").as[Long].collect().toSeq.toDF("url_hash"),
+          if (sketched.isDefined) seen(wavesBefore(wave))
+          else seen(wavesBefore(wave)).select("url_hash").as[Long].collect().toSeq.toDF("url_hash"),
           "url_hash", sketched)
       val scheduled = fresh
         .select(col("site_id"), col("kind"), col("page"), col("row"),
@@ -615,8 +631,7 @@ object Crawl {
         // drops 93 → 55 MB (the residue is the incompressible 8-byte
         // url/host hashes), the dominant wave-write cost. Consumers
         // re-derive url/canonical/host from the grammar kernel at
-        // read time (fetchInput below); the PERSISTED
-        // schedule/snapshot artifacts still materialize the URL.
+        // read time (fetchInput below and every view of the run).
         .withColumn("partition_id", spark_partition_id())
       stageOut.observe(stagedRows, count(lit(1)))
         .write.mode("overwrite")
@@ -719,7 +734,7 @@ object Crawl {
       // inter-wave frontier file (written AND re-read every wave) by ~2/3;
       // the next wave's `keyed` re-materializes it (UrlGrammar)
       val linksDf = links.toDF().drop("url")
-      val linksPath = s"$workDir/waves/w$wave/links"
+      val linksPath = linksDir(workDir, wave)
       // the next frontier's size is observed on this write (result stage,
       // as for the stage-out above)
       val linkRows = Observation()
@@ -748,33 +763,21 @@ object Crawl {
       // probe ever reads (at the 1M-scale bench this is a ~3.7M-row Bloom
       // rebuild on the last wave, pure Amdahl overhead)
       if (frontierCount > 0 && seenCount >= rowsPerTask) {
-        val seenAll = seen(wave0 to wave)
+        val seenAll = seen(wavesBefore(wave + 1))
         if (sketch.isEmpty) sketch.add(seenAll, seenCount, "url_hash")(seenAll)
         else sketch.add(seenInput, seenDelta, "url_hash")(seenAll)
       }
 
-      cfg.snapshotDir.foreach { dir =>
-        val done = wave0 to wave
-        val sched = schedule(done)
-        // failed sites are filtered OUT of the persisted posts/seen state
-        // (their earlier-wave contributions included — the 'failed plugin
-        // yields an error, not partial output' contract must survive a
-        // snapshot resume) and recorded in the manifest so a resumed run
-        // still reports them
-        Snapshots.write(spark, dir, wave, Map(
-          "posts" -> posts(done),
-          "seen" -> excludeFailedSeen(seen(done), sched),
-          "frontier" -> nextFrontier,
-          "schedule" -> sched,
-          "lineage" -> lineage(done)), cfg,
-          failures = midCrawlFailures.toMap.view.mapValues(_.getMessage).toMap)
-      }
+      // the version commits counts over the waves staged in the dir, and
+      // the failed sites a resumed run keeps excluding and reporting
+      cfg.snapshotDir.foreach(
+        Snapshots.write(_, wave, cfg, waveCounts, frontierCount, midCrawlFailures))
 
       frontier = nextFrontier
       wave += 1
     }
 
-    val done = wave0 until wave
+    val done = wavesBefore(wave)
     val sched = schedule(done)
     new Result(
       posts(done),

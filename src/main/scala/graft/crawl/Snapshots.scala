@@ -1,17 +1,21 @@
 package graft.crawl
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
+import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.model.Post
 
 /**
- * Iceberg-STYLE snapshot convention over Parquet (no Iceberg runtime jar is
- * available offline — SURVEY.md §7): versioned snapshot dirs
- * `snapshots/v<N>/<table>/` + a JSON manifest with per-partition lineage,
- * and an atomically-replaced `CURRENT` pointer. This gives the properties
- * the north rule exercises — resumability, snapshot isolation, lineage —
- * behind a small API a real Iceberg catalog could replace.
+ * Iceberg-STYLE snapshots over Parquet (no Iceberg runtime jar is available
+ * offline — SURVEY.md §7). A snapshot crawl stages its waves in its dir
+ * like any crawl (`waves/w/schedule/wave=N`, `waves/wN/links`); version N is
+ * metadata over them, never a copy: `snapshots/vN/manifest.json` records
+ * the pinned config, the counts of waves 0..N and the failed sites, and an
+ * atomically-replaced `CURRENT` names the latest. Reading or resuming
+ * version N is the crawl's own views over waves 0..N: resumability,
+ * snapshot isolation and lineage behind a small API a real Iceberg catalog
+ * could replace.
  *
  * Reference analog: the crawl output repo itself is the checkpoint
  * (cache JSON round-tripped through git, .github/workflows/
@@ -19,38 +23,37 @@ import org.apache.spark.sql.functions.{count, lit}
  */
 object Snapshots {
 
-  /** The config fields a snapshot's coordinates-only frontier depends on:
-    * the URL grammar rebuilds different URLs under any other values, so
-    * the manifest records them and [[resume]] refuses a mismatch. */
+  /** The config fields a snapshot's waves depend on (the URL grammar, the
+    * place of a live-paced crawl's documents): the manifest records them
+    * and [[resume]] refuses a mismatch. */
   private def pinned(cfg: Crawl.Config): Seq[(String, Any)] = Seq(
     "scale" -> cfg.scale, "limit_per_site" -> cfg.limitPerSite, "rev" -> cfg.rev,
-    "num_salts" -> cfg.numSalts, "probe_pagination" -> cfg.probePagination)
+    "num_salts" -> cfg.numSalts, "probe_pagination" -> cfg.probePagination,
+    "live_pacing" -> cfg.livePacing)
 
-  def write(spark: SparkSession, dir: String, wave: Int,
-      tables: Map[String, DataFrame], cfg: Crawl.Config,
-      failures: Map[String, String] = Map.empty): Unit = {
+  /** Commit version `wave`: `waves` maps every wave staged in `dir` up to
+    * it to its `(scheduled, deduped)` counts, `links` is the rows of its
+    * links file. */
+  private[crawl] def write(dir: String, wave: Int, cfg: Crawl.Config,
+      waves: collection.Map[Int, (Long, Long)], links: Long,
+      failures: collection.Map[String, Throwable]): Unit = {
     val vdir = Paths.get(dir, "snapshots", s"v$wave")
-    // each table's row count is observed on its write; the fallback
-    // recount pins the schema, as an empty write may leave no part file
-    val rowCounts = tables.toSeq.map { case (name, df) =>
-      val path = vdir.resolve(name).toString
-      val rows = Observation()
-      df.observe(rows, count(lit(1))).write.mode("overwrite").parquet(path)
-      name -> Crawl.observedRows(rows, spark.read.schema(df.schema).parquet(path).count())
-    }
     // jackson-rendered (site messages are free text — hand-quoting would
     // break the manifest on the first embedded quote)
     val node = graft.sinks.SiteJson.mapper.createObjectNode()
     node.put("wave", wave)
     pinned(cfg).foreach { case (k, v) =>
       node.set[JsonNode](k, graft.sinks.SiteJson.mapper.valueToTree[JsonNode](v)) }
-    val counts = node.putObject("row_counts")
-    rowCounts.foreach { case (n, rows) => counts.put(n, rows) }
-    // mid-crawl retry-exhausted sites: their state rows are already
-    // filtered out of posts/seen above; the record here lets a RESUMED run
-    // keep reporting (and excluding) them
+    val staged = node.putArray("waves")
+    waves.toSeq.sorted.foreach { case (w, (scheduled, deduped)) =>
+      staged.addObject().put("wave", w).put("scheduled", scheduled)
+        .put("deduped", deduped).put("staged", scheduled - deduped)
+    }
+    node.put("links", links)
+    // mid-crawl retry-exhausted sites: a resumed or time-travel read
+    // excludes their rows from every view and keeps reporting them
     val fails = node.putObject("failed_sites")
-    failures.toSeq.sortBy(_._1).foreach { case (s, m) => fails.put(s, m) }
+    failures.toSeq.sortBy(_._1).foreach { case (s, e) => fails.put(s, e.getMessage) }
     Files.createDirectories(vdir)
     // the manifest's EXISTENCE is the version's commit marker (versions()/
     // read() key on it), so it must appear atomically: tmp + ATOMIC_MOVE,
@@ -73,14 +76,13 @@ object Snapshots {
   }
 
   /** All committed snapshot versions, oldest first. A version directory
-    * only counts once its manifest exists (the table writes precede the
+    * only counts once its manifest exists (the wave writes precede the
     * manifest, so a crashed half-written snapshot is invisible here). */
   def versions(dir: String): Seq[Int] = {
     val root = Paths.get(dir, "snapshots")
     if (!Files.isDirectory(root)) return Seq.empty
     val stream = Files.list(root)
     try {
-      import scala.jdk.CollectionConverters._
       stream.iterator().asScala
         .map(_.getFileName.toString)
         .filter(n => n.length > 1 && n.startsWith("v") && n.drop(1).forall(_.isDigit))
@@ -91,18 +93,26 @@ object Snapshots {
   }
 
   /**
-   * Time-travel read of a snapshotted table: `version = None` reads the
-   * CURRENT snapshot, `Some(v)` reads exactly version v — every committed
-   * version stays readable (the Iceberg snapshot-isolation property: a
-   * reader pinned to v sees v's files regardless of later commits).
+   * Time-travel read of `posts`, `seen`, `schedule`, `lineage` or
+   * `frontier`: `version = None` reads the CURRENT snapshot, `Some(v)`
+   * exactly version v, whatever was committed later (the Iceberg
+   * snapshot-isolation property). The frontier is wave v's links; every
+   * other table is that view of the crawl continued at v for no wave.
    */
   def read(spark: SparkSession, dir: String, table: String,
       version: Option[Int] = None): DataFrame = {
     val v = version.orElse(currentVersion(dir)).getOrElse(
       throw new IllegalStateException(s"no CURRENT snapshot under $dir"))
-    require(Files.exists(Paths.get(dir, "snapshots", s"v$v", "manifest.json")),
-      s"snapshot v$v is not committed under $dir")
-    readTable(spark, dir, v, table)
+    val node = manifest(dir, v)
+    lazy val r = continueAt(spark, dir, v, node, recorded(node).copy(maxWaves = v + 1))
+    table match {
+      case "frontier" => frontier(spark, dir, v)
+      case "posts"    => r.posts
+      case "seen"     => r.seen
+      case "schedule" => r.schedule
+      case "lineage"  => r.lineage
+      case _ => throw new IllegalArgumentException(s"no snapshot table $table")
+    }
   }
 
   /**
@@ -123,65 +133,72 @@ object Snapshots {
     else to.join(read(spark, dir, table, Some(fromV)), keyCols, "left_anti")
   }
 
-  private def readTable(spark: SparkSession, dir: String, v: Int, name: String): DataFrame =
-    spark.read.parquet(Paths.get(dir, "snapshots", s"v$v", name).toString)
-
   /**
-   * Resume a crawl from the latest snapshot: re-enter the wave loop at
-   * wave v+1 with the persisted frontier/seen/posts state. Idempotent by
+   * Resume the crawl staged in `dir` from its CURRENT version v: re-enter
+   * the wave loop at wave v+1 with wave v's links as the frontier, staging
+   * and committing in `dir` whatever `cfg.snapshotDir` names. Idempotent by
    * construction: the seen-set makes re-fetching a no-op and the schedule
    * is a pure function of the frontier. Throws if `cfg` differs from the
-   * snapshot's config in any [[pinned]] field, or if the frontier or seen
-   * table read back holds other than the manifest's row count.
+   * snapshot's config in any [[pinned]] field, or a staged wave or wave v's
+   * links hold other than the manifest's row count.
    */
   def resume(spark: SparkSession, dir: String, cfg: Crawl.Config): Crawl.Result = {
     val v = currentVersion(dir).getOrElse(
       throw new IllegalStateException(s"no CURRENT snapshot under $dir"))
-    val manifest = Paths.get(dir, "snapshots", s"v$v", "manifest.json")
-    require(Files.exists(manifest), s"snapshot v$v is not committed under $dir")
-    val node = graft.sinks.SiteJson.mapper.readTree(Files.readString(manifest))
-    val mismatched = pinned(cfg).flatMap { case (k, want) =>
-      val got = Option(node.get(k)).map(_.asText).orNull
-      if (got == want.toString) None else Some(s"$k: snapshot $got, config $want")
+    val node = manifest(dir, v)
+    val mismatched = pinned(cfg).zip(pinned(recorded(node))).collect {
+      case ((k, want), (_, got)) if want != got => s"$k: snapshot $got, config $want"
     }
     require(mismatched.isEmpty, s"snapshot v$v under $dir was written by a " +
       s"different crawl config (${mismatched.mkString("; ")})")
-    val failures0: Map[String, Throwable] =
-      Option(node.get("failed_sites")).toSeq.flatMap { f =>
-        val it = f.fields()
-        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-          .map(e => e.getKey -> (new RuntimeException(e.getValue.asText()): Throwable))
-          .toSeq
-      }.toMap
-    // the frontier and seen tables are counted anyway (the crawl sizes its
-    // first wave and its seen sketch from them), so checking them against
-    // the manifest's row_counts costs no extra job: a truncated vN — a
-    // lost part file — fails here instead of silently re-crawling less
-    val frontier0 = readTable(spark, dir, v, "frontier")
-    val seen0 = readTable(spark, dir, v, "seen")
-    val frontierRows = checkedCount(node, v, dir, "frontier", frontier0)
-    val seenRows = checkedCount(node, v, dir, "seen", seen0)
-    Crawl.runFrom(spark, cfg,
-      frontier0 = frontier0,
-      wave0 = v + 1,
-      seen0 = seen0,
-      posts0 = readTable(spark, dir, v, "posts"),
-      schedule0 = Some(readTable(spark, dir, v, "schedule")),
-      lineage0 = Some(readTable(spark, dir, v, "lineage")),
-      failures0 = failures0,
-      frontierRows = Some(frontierRows), seenRows = Some(seenRows))
+    continueAt(spark, dir, v, node, cfg)
   }
 
-  /** Row count of `table` as read back, which must equal the count the
-    * manifest recorded when version `v` was written. */
-  private def checkedCount(manifest: JsonNode, v: Int, dir: String,
-      table: String, df: DataFrame): Long = {
-    val want = Option(manifest.path("row_counts").get(table)).map(_.asLong).getOrElse(
-      throw new IllegalStateException(s"snapshot v$v under $dir records no $table row count"))
-    val got = df.count()
-    if (got != want) throw new IllegalStateException(
-      s"snapshot v$v under $dir is incomplete: $table has $got rows, " +
-        s"its manifest row_counts records $want")
-    got
+  /** The committed manifest of version `v`. One without wave counts, a
+    * copy of the crawl's tables, is refused. */
+  private def manifest(dir: String, v: Int): JsonNode = {
+    val path = Paths.get(dir, "snapshots", s"v$v", "manifest.json")
+    require(Files.exists(path), s"snapshot v$v is not committed under $dir")
+    val node = graft.sinks.SiteJson.mapper.readTree(Files.readString(path))
+    if (node.has("waves")) node
+    else throw new IllegalStateException(s"snapshot v$v under $dir records no wave counts")
+  }
+
+  /** The crawl config that a manifest pins. */
+  private def recorded(node: JsonNode): Crawl.Config = Crawl.Config(
+    scale = node.get("scale").asLong, limitPerSite = node.get("limit_per_site").asLong,
+    rev = node.get("rev").asInt, numSalts = node.get("num_salts").asInt,
+    probePagination = node.get("probe_pagination").asBoolean,
+    livePacing = node.get("live_pacing").asBoolean)
+
+  private def frontier(spark: SparkSession, dir: String, v: Int): DataFrame =
+    spark.read.schema(Crawl.FrontierSchema).parquet(Crawl.linksDir(dir, v)).drop("url")
+
+  /** The crawl staged in `dir`, continued at version `v` under `cfg`. Every
+    * staged wave and wave v's links are checked against the manifest's row
+    * counts, read from the parquet footers: a truncated wave — a lost part
+    * file — fails here instead of silently re-crawling less. */
+  private def continueAt(spark: SparkSession, dir: String, v: Int, node: JsonNode,
+      cfg: Crawl.Config): Crawl.Result = {
+    import spark.implicits._
+    def checked(what: String, path: String, want: Long): Long = {
+      val got = Crawl.footers(spark, path).flatMap(_._2).map(_.getRowCount).sum
+      if (got == want) got else throw new IllegalStateException(
+        s"snapshot v$v under $dir is incomplete: $what has $got rows, its manifest records $want")
+    }
+    val waves = node.get("waves").elements().asScala.map { w =>
+      val wave = w.get("wave").asInt
+      checked(s"wave $wave's stage-out", s"${Crawl.stageRoot(dir)}/wave=$wave",
+        w.get("staged").asLong)
+      wave -> (w.get("scheduled").asLong, w.get("deduped").asLong)
+    }.toSeq
+    val links = checked(s"waves/w$v/links", Crawl.linksDir(dir, v), node.get("links").asLong)
+    val failures0 = node.get("failed_sites").fields().asScala
+      .map(e => e.getKey -> (new RuntimeException(e.getValue.asText()): Throwable)).toMap
+    Crawl.runFrom(spark, cfg.copy(snapshotDir = Some(dir)), frontier(spark, dir, v), v + 1,
+      seen0 = Seq.empty[(Long, Int)].toDF("url_hash", "first_wave"),
+      posts0 = spark.emptyDataset[Post].toDF(), schedule0 = None, lineage0 = None, failures0,
+      frontierRows = Some(links), seenRows = Some(waves.map { case (_, (s, d)) => s - d }.sum),
+      waves0 = waves.toMap)
   }
 }

@@ -5,7 +5,6 @@ import java.time.format.DateTimeFormatter
 import java.time.{Instant, ZoneOffset}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import graft.functions.TextKernel
 import graft.model.{CalendarEvent, Post}
 import graft.operators.Merge
@@ -245,15 +244,4 @@ object Feeds {
       })
       .toDF("site_id", "site_json", "rss_xml")
   }
-}
-
-/** Crawl report (K5): JSON-lines event stream + the jq-style aggregation. */
-object Report {
-
-  def write(events: DataFrame, outDir: String): Unit =
-    events.write.mode("overwrite").json(outDir)
-
-  /** analyze-report aggregation (action.yml:40-52): counts by event type. */
-  def summary(events: DataFrame): DataFrame =
-    events.groupBy("event").agg(count(lit(1)).as("n"))
 }

@@ -86,20 +86,19 @@ class CompactionSpec extends SparkSuite {
 
   test("expireSnapshots keeps the newest K and CURRENT stays readable") {
     val dir = Files.createTempDirectory("graft-expire").toString
-    val cfg = Crawl.Config(scale = 5, limitPerSite = 3)
-    (1 to 3).foreach { v =>
-      Snapshots.write(spark, dir, v,
-        Map("posts" -> Seq((v.toLong, s"p$v")).toDF("id", "title")), cfg)
-    }
-    assert(Snapshots.versions(dir) === Seq(1, 2, 3))
+    // the three-wave sequential page walk: versions 0, 1 and 2
+    val cfg = Crawl.Config(scale = 60, limitPerSite = 20,
+      include = Seq("biz.ssu.ac.kr", "bioinfo.ssu.ac.kr"), probePagination = false)
+    val whole = Crawl.run(spark, cfg.copy(snapshotDir = Some(dir))).posts.count()
+    assert(Snapshots.versions(dir) === Seq(0, 1, 2))
     val expired = Compaction.expireSnapshots(dir, keepLast = 2)
-    assert(expired === Seq(1))
-    assert(Snapshots.versions(dir) === Seq(2, 3))
-    // CURRENT (v3) still reads
-    assert(Snapshots.read(spark, dir, "posts").collect().map(_.getLong(0)).toSeq === Seq(3L))
+    assert(expired === Seq(0))
+    assert(Snapshots.versions(dir) === Seq(1, 2))
+    // CURRENT (v2) still reads
+    assert(Snapshots.read(spark, dir, "posts").count() === whole)
     // expired version is no longer committed
     intercept[IllegalArgumentException] {
-      Snapshots.read(spark, dir, "posts", Some(1))
+      Snapshots.read(spark, dir, "posts", Some(0))
     }
     // keepLast larger than history: nothing expires
     assert(Compaction.expireSnapshots(dir, keepLast = 10) === Seq.empty)

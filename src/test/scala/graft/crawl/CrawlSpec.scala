@@ -236,8 +236,8 @@ class CrawlSpec extends SparkSuite {
       "failed site's url hashes must not be 'seen' — the next run re-schedules them")
     // the persisted snapshot is equally clean
     val v = Snapshots.currentVersion(dir).get
-    val snapPosts = spark.read.parquet(s"$dir/snapshots/v$v/posts")
-    val snapSeen = spark.read.parquet(s"$dir/snapshots/v$v/seen")
+    val snapPosts = Snapshots.read(spark, dir, "posts", Some(v))
+    val snapSeen = Snapshots.read(spark, dir, "seen", Some(v))
     assert(snapPosts.filter(col("site_id") === "biz.ssu.ac.kr").count() === 0)
     assert(snapSeen.join(bizHashes, Seq("url_hash"), "left_semi").count() === 0)
     // manifest records the failure; a resume carries it forward
@@ -315,7 +315,7 @@ class CrawlSpec extends SparkSuite {
     val freshSeen = Seq.empty[(Long, Int)].toDF("url_hash", "first_wave")
     assert(!CacheProbe.isCached(freshSeen), "the fresh crawl's empty seen table is cached")
     Snapshots.resume(spark, dir, small).schedule.count()
-    val resumedSeen = spark.read.parquet(s"$dir/snapshots/v0/seen")
+    val resumedSeen = Snapshots.read(spark, dir, "seen", Some(0))
     assert(!CacheProbe.isCached(resumedSeen), "the resumed crawl's seen table is cached")
     assert(CacheProbe.entries(spark) === before)
   }
@@ -327,22 +327,26 @@ class CrawlSpec extends SparkSuite {
       val s = Files.list(Paths.get(dir))
       try s.iterator().asScala.toSeq finally s.close()
     }
-    val dir = Files.createTempDirectory("graft-snap-trunc").toString
     val small = Crawl.Config(scale = 60, limitPerSite = 20,
       include = Seq("biz.ssu.ac.kr", "bioinfo.ssu.ac.kr"))
-    Crawl.run(spark, small.copy(maxWaves = 1, snapshotDir = Some(dir)))
-    // a crawl this small writes its frontier as one file: rewrite the same
-    // rows as two files, so that losing one still leaves a readable table
-    val frontier = s"$dir/snapshots/v0/frontier"
-    spark.read.parquet(frontier).repartition(2).write.parquet(s"$dir/frontier2")
-    list(frontier).foreach(Files.delete)
-    Files.delete(Paths.get(frontier))
-    Files.move(Paths.get(s"$dir/frontier2"), Paths.get(frontier))
-    val parts = list(frontier).filter(_.getFileName.toString.startsWith("part-"))
-    assert(parts.size === 2)
-    Files.delete(parts.head)
-    val e = intercept[IllegalStateException](Snapshots.resume(spark, dir, small))
-    assert(e.getMessage.contains("frontier has"), e.getMessage)
+    // wave 0's links (the resumed frontier), then its stage-out
+    Seq("waves/w0/links" -> "waves/w0/links has",
+        "waves/w/schedule/wave=0" -> "wave 0's stage-out has").foreach { case (file, refusal) =>
+      val dir = Files.createTempDirectory("graft-snap-trunc").toString
+      Crawl.run(spark, small.copy(maxWaves = 1, snapshotDir = Some(dir)))
+      // a crawl this small writes the file as one part: rewrite the same
+      // rows as two parts, so that losing one still leaves a readable table
+      val path = s"$dir/$file"
+      spark.read.parquet(path).repartition(2).write.parquet(s"$dir/rewritten")
+      list(path).foreach(Files.delete)
+      Files.delete(Paths.get(path))
+      Files.move(Paths.get(s"$dir/rewritten"), Paths.get(path))
+      val parts = list(path).filter(_.getFileName.toString.startsWith("part-"))
+      assert(parts.size === 2)
+      Files.delete(parts.head)
+      val e = intercept[IllegalStateException](Snapshots.resume(spark, dir, small))
+      assert(e.getMessage.contains(refusal), e.getMessage)
+    }
   }
 
   test("snapshot kill-and-resume reproduces the uninterrupted crawl exactly") {

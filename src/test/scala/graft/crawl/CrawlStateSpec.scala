@@ -47,19 +47,27 @@ class CrawlStateSpec extends SparkSuite {
 
   test("rollback resume: CURRENT at any committed version, later waves left on disk, " +
       "reproduces the uninterrupted crawl") {
-    val dir = Files.createTempDirectory("graft-rollback").toString
-    val cfg = walk.copy(snapshotDir = Some(dir))
-    // collected before any resume: a resume rewrites the later waves' files
-    val whole = fingerprint(Crawl.run(spark, cfg))
-    val versions = Snapshots.versions(dir)
-    assert(versions === Seq(0, 1, 2))
-    versions.foreach { v =>
-      // a crash after version v's tables, before a later CURRENT flip:
-      // CURRENT names v, and every later wave's stage-out and snapshot
-      // stay on disk
-      Files.writeString(Paths.get(dir, "snapshots", "CURRENT"), s"v$v")
-      assert(fingerprint(Snapshots.resume(spark, dir, cfg)) === whole, s"resumed at v$v")
-      assert(Snapshots.currentVersion(dir) === Some(versions.last))
+    // with one row per task the resumed run builds its first seen sketch
+    // from the waves it reads from the dir
+    Seq(None, Some("4")).foreach { rowsPerTask =>
+      rowsPerTask.foreach(sys.props("graft.rows.per.task") = _)
+      try {
+        val dir = Files.createTempDirectory("graft-rollback").toString
+        val cfg = walk.copy(snapshotDir = Some(dir))
+        // collected before any resume: a resume rewrites the later waves' files
+        val whole = fingerprint(Crawl.run(spark, cfg))
+        val versions = Snapshots.versions(dir)
+        assert(versions === Seq(0, 1, 2))
+        versions.foreach { v =>
+          // a crash after version v's waves, before a later CURRENT flip:
+          // CURRENT names v, and every later wave's stage-out and manifest
+          // stay on disk
+          Files.writeString(Paths.get(dir, "snapshots", "CURRENT"), s"v$v")
+          assert(fingerprint(Snapshots.resume(spark, dir, cfg)) === whole,
+            s"resumed at v$v, rows per task $rowsPerTask")
+          assert(Snapshots.currentVersion(dir) === Some(versions.last))
+        }
+      } finally sys.props.remove("graft.rows.per.task")
     }
   }
 }

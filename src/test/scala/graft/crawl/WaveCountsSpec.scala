@@ -1,5 +1,6 @@
 package graft.crawl
 
+import scala.jdk.CollectionConverters._
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
 
@@ -14,14 +15,15 @@ class WaveCountsSpec extends SparkSuite {
     r.lineage.groupBy("wave").agg(first("scheduled"), first("deduped"), sum("fetched"))
       .orderBy("wave").collect().map(_.mkString(",")).mkString(";")
 
-  /** Per committed snapshot version: the manifest's row counts. */
+  /** Per committed snapshot version, from its manifest: the frontier rows
+    * (its links) and the schedule rows (the staged rows of its waves). */
   private def rowCounts(dir: String): String =
     Snapshots.versions(dir).map { v =>
       val manifest = java.nio.file.Files.readString(
         java.nio.file.Paths.get(s"$dir/snapshots/v$v/manifest.json"))
-      val n = graft.sinks.SiteJson.mapper.readTree(manifest).path("row_counts")
-      Seq("posts", "seen", "frontier", "schedule", "lineage")
-        .map(k => n.path(k).asLong()).mkString(",")
+      val n = graft.sinks.SiteJson.mapper.readTree(manifest)
+      val staged = n.path("waves").elements().asScala.map(_.path("staged").asLong()).sum
+      s"${n.path("links").asLong()},$staged"
     }.mkString(";")
 
   private def crawl(cfg: Crawl.Config): (Crawl.Result, String) = {
@@ -31,6 +33,30 @@ class WaveCountsSpec extends SparkSuite {
   }
 
   private val two = Seq("biz.ssu.ac.kr", "bioinfo.ssu.ac.kr")
+
+  test("a snapshot crawl starts as many Spark jobs as the same crawl without a snapshot dir") {
+    val walk = Crawl.Config(scale = 60, limitPerSite = 20, include = two,
+      probePagination = false)
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(cfg: Crawl.Config): Long = {
+      awaitQuiet(jobs.get)
+      val before = jobs.get
+      Crawl.run(spark, cfg).schedule.count()
+      awaitQuiet(jobs.get)
+      jobs.get - before
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (plain, snapshot) = try {
+      val dir = java.nio.file.Files.createTempDirectory("graft-snap-jobs").toString
+      (jobsOf(walk), jobsOf(walk.copy(snapshotDir = Some(dir))))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(plain > 0)
+    assert(snapshot === plain)
+  }
 
   test("a snapshot crawl starts no count job from Snapshots") {
     // a query execution is described by its action's call site (its jobs
@@ -52,21 +78,21 @@ class WaveCountsSpec extends SparkSuite {
       awaitQuiet(counts.size.toLong)
       r
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(rows === "0,2,22,2,1;20,24,12,24,2;32,36,0,36,3")
+    assert(rows === "22,2;12,24;0,36")
     assert(counts.isEmpty, counts)
   }
 
   test("observed counts: fleet crawl whose last wave discovers no links") {
     val (r, counts) = crawl(Crawl.Config(scale = 200, limitPerSite = 50))
     assert(tally(r) === "0,86,0,86;1,717,3,714")
-    assert(counts === "0,86,717,86,1;714,800,0,800,2")
+    assert(counts === "717,86;0,800")
   }
 
   test("observed counts: sequential page walk over three waves") {
     val (r, counts) = crawl(Crawl.Config(scale = 60, limitPerSite = 20, include = two,
       probePagination = false))
     assert(tally(r) === "0,2,0,2;1,22,0,22;2,12,0,12")
-    assert(counts === "0,2,22,2,1;20,24,12,24,2;32,36,0,36,3")
+    assert(counts === "22,2;12,24;0,36")
   }
 
   test("observed counts: every site fails its post wave") {
@@ -74,7 +100,7 @@ class WaveCountsSpec extends SparkSuite {
       include = Seq("biz.ssu.ac.kr"), faults = Map(("biz.ssu.ac.kr", 1) -> 3)))
     assert(r.failedSites.keySet === Set("biz.ssu.ac.kr"))
     assert(tally(r) === "0,2,0,2;1,20,0,20")
-    assert(counts === "0,2,20,2,1;0,0,0,22,2")
+    assert(counts === "20,2;0,22")
   }
 
   test("observed counts: every site fails wave 0, so the links write has no input") {
@@ -82,7 +108,7 @@ class WaveCountsSpec extends SparkSuite {
       faults = two.map(s => (s, 0) -> 3).toMap))
     assert(r.failedSites.keySet === two.toSet)
     assert(tally(r) === "0,4,0,4")
-    assert(counts === "0,0,0,4,1")
+    assert(counts === "0,4")
     assert(r.posts.count() === 0)
   }
 }

@@ -57,10 +57,11 @@ import graft.model.Post
  *     pacing, read back from the paced fetch's waves;
  *  7. state: every wave stages out into one table root, partitioned by
  *     wave, and the run's seen set, schedule, posts, merge batch and fetch
- *     log are views over the waves it wrote; the per-(wave, partition)
- *     lineage is read from the part files' parquet footers. The wave's
- *     counts are observed on the stage-out and links writes
- *     ([[Dataset.observe]]), not counted by extra jobs.
+ *     log are views over the waves staged there — a resumed crawl's
+ *     earlier waves, then this run's — and over nothing else; the
+ *     per-(wave, partition) lineage is read from the part files' parquet
+ *     footers. The wave's counts are observed on the stage-out and links
+ *     writes ([[Dataset.observe]]), not counted by extra jobs.
  *
  * Determinism: every ordering is an explicit sort key; no
  * monotonically_increasing_id, no partition-order dependence — identical
@@ -223,7 +224,6 @@ object Crawl {
     * set pays neither the stage-out footer reads nor the analysis of the
     * post fetch. */
   final class Result(
-      postsOf: => DataFrame,    // fetched documents (Post schema)
       val seen: DataFrame,      // url_hash table
       val schedule: DataFrame,  // the crawl-order artifact
       lineageOf: => DataFrame,  // per (wave, partition) lineage rows
@@ -240,10 +240,11 @@ object Crawl {
       // the posts with their crawl order `seq` (page * 10^6 + row of the
       // request that fetched each): the daemon merge's batch
       batchOf: => DataFrame) {
-    lazy val posts: DataFrame = postsOf
     lazy val lineage: DataFrame = lineageOf
     lazy val fetchLog: DataFrame = fetchLogOf
     lazy val batch: DataFrame = batchOf
+    /** The fetched documents (Post schema): the batch without its order. */
+    lazy val posts: DataFrame = batch.drop("seq")
   }
 
   // The crawl's two expansion kernels, shared by every fetch mode and the
@@ -323,33 +324,37 @@ object Crawl {
   }
 
   def run(spark: SparkSession, cfg: Config): Result = {
-    import spark.implicits._
     val seedReqs = seedRequests(cfg)
     // typed nullable, as every later wave reads its frontier back from
     // parquet: each wave's scheduling stages then generate the same code
     val seeds = spark.createDataFrame(seedReqs.map(r =>
       Row(r.url, r.site_id, r.kind, r.page, r.row, r.depth)).asJava, FrontierSchema)
-    runFrom(spark, cfg, seeds, wave0 = 0,
-      seen0 = Seq.empty[(Long, Int)].toDF("url_hash", "first_wave"),
-      posts0 = spark.emptyDataset[Post].toDF(),
-      schedule0 = None, lineage0 = None,
-      frontierRows = Some(seedReqs.size.toLong), seenRows = Some(0L))
+    crawlFrom(spark, cfg, seeds, wave0 = 0, frontierRows = Some(seedReqs.size.toLong))
   }
 
-  /** Continue a crawl from an arbitrary state. `waves0` maps the waves
-    * before `wave0` already staged in `cfg.snapshotDir` (a snapshot resume)
-    * to their `(scheduled, deduped)` counts: every view of the run ranges
-    * over them too. `failures0` carries a resumed snapshot's recorded
-    * mid-crawl failures forward so the resumed run still reports (and
-    * keeps excluding) them. `frontierRows`/`seenRows` are the row counts of
-    * `frontier0` and of the starting seen set (`seen0` and `waves0`) when
-    * the caller already knows them; a missing one is counted here. */
+  /** Crawl from `frontier0` at `wave0` with no crawl state: a crawl
+    * resumes one way, [[Snapshots.resume]]. The state parameters are
+    * accepted only empty, checked on their plans with no job. */
   def runFrom(
       spark: SparkSession, cfg: Config, frontier0: DataFrame, wave0: Int,
       seen0: DataFrame, posts0: DataFrame,
-      schedule0: Option[DataFrame], lineage0: Option[DataFrame],
+      schedule0: Option[DataFrame], lineage0: Option[DataFrame]): Result = {
+    require(Seq(seen0, posts0).forall(_.queryExecution.analyzed.maxRows.contains(0L)) &&
+      schedule0.isEmpty && lineage0.isEmpty, "runFrom takes no crawl state: seen0 and posts0 " +
+      "must be empty, schedule0 and lineage0 None; resume a crawl with Snapshots.resume")
+    crawlFrom(spark, cfg, frontier0, wave0)
+  }
+
+  /** Crawl from `frontier0` at `wave0`. `waves0` maps the waves before
+    * `wave0` already staged in `cfg.snapshotDir` (a snapshot resume) to
+    * their `(scheduled, deduped)` counts: the run's only starting state,
+    * over which its views range too. `failures0` carries a resumed
+    * snapshot's mid-crawl failures forward, still reported and excluded.
+    * `frontierRows` is `frontier0`'s row count when the caller knows it. */
+  private[crawl] def crawlFrom(
+      spark: SparkSession, cfg: Config, frontier0: DataFrame, wave0: Int,
       failures0: Map[String, Throwable] = Map.empty,
-      frontierRows: Option[Long] = None, seenRows: Option[Long] = None,
+      frontierRows: Option[Long] = None,
       waves0: Map[Int, (Long, Long)] = Map.empty): Result = {
     import spark.implicits._
     require(!cfg.livePacing || cfg.faults.isEmpty,
@@ -409,37 +414,24 @@ object Crawl {
     // seen set: its fetches never happened, so a snapshot resume (or the
     // next daemon run) must re-schedule them — its schedule rows remain as
     // the attempt record the error report cites
-    def seen(waves: Seq[Int]): DataFrame = seen0.unionByName(
-      excludeFailedSites(staged(waves)).select(col("url_hash"), col("wave").as("first_wave")))
-    def schedule(waves: Seq[Int]): DataFrame = {
-      val run = withUrls(staged(waves)).select("wave", "host", "url", "canonical",
+    def seen(waves: Seq[Int]): DataFrame =
+      excludeFailedSites(staged(waves)).select(col("url_hash"), col("wave").as("first_wave"))
+    def schedule(waves: Seq[Int]): DataFrame =
+      withUrls(staged(waves)).select("wave", "host", "url", "canonical",
         "url_hash", "site_id", "page", "row", "depth", "ready_ms", "crawl_delay_ms")
-      schedule0.fold(run)(_ unionByName run)
-    }
     // (scheduled, deduped) per staged wave: driver values the writes
     // observed
     val waveCounts = scala.collection.mutable.HashMap.empty[Int, (Long, Long)] ++= waves0
     // a local relation: each stage-out part file holds one writer task's
     // rows, so its footer gives that (wave, partition)'s fetched count
     // without a job over the data
-    def lineage(waves: Seq[Int]): DataFrame = {
-      val run = spark.createDataFrame(waves.flatMap { w =>
+    def lineage(waves: Seq[Int]): DataFrame =
+      spark.createDataFrame(waves.flatMap { w =>
         val (scheduled, deduped) = waveCounts(w)
         partitionRows(spark, s"$stageRoot/wave=$w").map { case (pid, fetched) =>
           Row(w, pid, scheduled, deduped, fetched)
         }
       }.asJava, LineageSchema)
-      lineage0.fold(run)(_ unionByName run)
-    }
-    // The seen table carries only url_hash (and a resumed seen0 may hold a
-    // site that fails later in this run) — recover the failed sites'
-    // hashes from the schedule (every seen hash has a schedule row) and
-    // anti-join them out. Bounded by the failed sites' slice, and only
-    // runs on failure.
-    def excludeFailedSeen(seen: DataFrame, schedule: DataFrame): DataFrame =
-      if (midCrawlFailures.isEmpty) seen
-      else seen.join(schedule.filter(col("site_id").isin(midCrawlFailures.keys.toSeq: _*))
-        .select("url_hash").distinct(), Seq("url_hash"), "left_anti")
 
     // The fetch (step 6 below) is a deterministic synthetic expansion.
     // Auth-family (SSO) sites need a bootstrapped session: init ONCE PER
@@ -465,24 +457,14 @@ object Crawl {
           .mapPartitions(it =>
             postsPartition(it, scale, limit, rev, Sso.partitionSessions(onBootstrap)))
           .toDF("post", "seq").select(col("post.*"), col("seq"))
-    // a site that exhausted mid-crawl retries contributes NO posts to the
-    // run (the reference's failed plugin yields an error, not partial
-    // output — mod.rs:38-93); its schedule/lineage rows remain as the
-    // attempt record the error report cites
-    def posts(waves: Seq[Int]): DataFrame =
-      excludeFailedSites(posts0.unionByName(fetchedPosts(waves).drop("seq")))
-    // the merge batch: the posts with their crawl order `seq`. A post of a
-    // resumed run's earlier waves (posts0) finds its request in the
-    // schedule; a fresh crawl has none, and its empty part folds away in
-    // planning
-    def batch(waves: Seq[Int]): DataFrame = {
-      val order = schedule(waves).filter(col("site_id").isNotNull)
-        .select(col("url"), ((col("page").cast("long") * 1000000L) + col("row")).as("seq"))
-      val ordered = posts0.join(order, Seq("url"), "left")
-        .withColumn("seq", coalesce(col("seq"), lit(0L)))
-      excludeFailedSites(ordered.unionByName(fetchedPosts(waves)))
-    }
-    var seenCount = seenRows.getOrElse(seen0.count())
+    // the merge batch: the posts with their crawl order `seq`. A site that
+    // exhausted mid-crawl retries contributes NO posts to the run (the
+    // reference's failed plugin yields an error, not partial output —
+    // mod.rs:38-93); its schedule/lineage rows remain as the attempt record
+    // the error report cites
+    def batch(waves: Seq[Int]): DataFrame = excludeFailedSites(fetchedPosts(waves))
+    // the starting seen set is the staged rows of the dir's waves
+    var seenCount = waves0.values.map { case (scheduled, deduped) => scheduled - deduped }.sum
     var wave = wave0
     // frontier size is carried between waves (the links write observed it) —
     // no extra action per wave just to test emptiness
@@ -633,6 +615,9 @@ object Crawl {
         // re-derive url/canonical/host from the grammar kernel at
         // read time (fetchInput below and every view of the run).
         .withColumn("partition_id", spark_partition_id())
+      // a reused snapshot dir's versions from this wave on would mix two
+      // crawls' waves
+      cfg.snapshotDir.foreach(Snapshots.uncommitFrom(_, wave))
       stageOut.observe(stagedRows, count(lit(1)))
         .write.mode("overwrite")
         // wave files are transient single-reader stage-out; pinned A/B at
@@ -778,11 +763,9 @@ object Crawl {
     }
 
     val done = wavesBefore(wave)
-    val sched = schedule(done)
     new Result(
-      posts(done),
-      excludeFailedSeen(seen(done), sched),
-      sched,
+      seen(done),
+      schedule(done),
       lineage(done),
       ssoBootstraps,
       midCrawlFailures.toMap,

@@ -98,8 +98,12 @@ object Sites {
     math.max(1L, math.ceil(scale.toDouble / site.zipf_rank).toLong)
 
   /** Fleet selection (reference pre-task pruning, cli macros.rs:46-113):
-    * empty include = all sites; exclude always wins. Registry order kept. */
-  def selected(include: Seq[String], exclude: Seq[String]): Seq[Site] =
+    * empty include = all sites; exclude always wins. Registry order kept.
+    * An unknown id fails rather than silently select nothing. */
+  def selected(include: Seq[String], exclude: Seq[String]): Seq[Site] = {
+    val unknown = (include ++ exclude).filterNot(id => all.exists(_.site_id == id))
+    require(unknown.isEmpty, s"unknown site id: ${unknown.mkString(", ")}")
     all.filter(s => (include.isEmpty || include.contains(s.site_id)) &&
       !exclude.contains(s.site_id))
+  }
 }

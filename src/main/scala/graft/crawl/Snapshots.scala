@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.model.Post
 
 /**
  * Iceberg-STYLE snapshots over Parquet (no Iceberg runtime jar is available
@@ -13,9 +12,10 @@ import graft.model.Post
  * metadata over them, never a copy: `snapshots/vN/manifest.json` records
  * the pinned config, the counts of waves 0..N and the failed sites, and an
  * atomically-replaced `CURRENT` names the latest. Reading or resuming
- * version N is the crawl's own views over waves 0..N: resumability,
- * snapshot isolation and lineage behind a small API a real Iceberg catalog
- * could replace.
+ * version N is the crawl's own views over waves 0..N, a resume's only
+ * state; staging wave N uncommits any versions from N on. Resumability,
+ * snapshot isolation and lineage behind a small API a real Iceberg
+ * catalog could replace.
  *
  * Reference analog: the crawl output repo itself is the checkpoint
  * (cache JSON round-tripped through git, .github/workflows/
@@ -67,6 +67,16 @@ object Snapshots {
     Files.writeString(tmp, s"v$wave")
     Files.move(tmp, Paths.get(dir, "snapshots", "CURRENT"),
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  /** Uncommit every version from `wave` on, before wave `wave` is staged
+    * in `dir`: a crawl reusing an earlier, longer crawl's dir must leave no
+    * version that mixes the two crawls' waves. A CURRENT among them goes
+    * first, so a crash never leaves it naming a removed version. */
+  private[crawl] def uncommitFrom(dir: String, wave: Int): Unit = {
+    if (currentVersion(dir).exists(_ >= wave)) Files.delete(Paths.get(dir, "snapshots", "CURRENT"))
+    versions(dir).filter(_ >= wave).foreach(v =>
+      TempDirs.deleteRecursively(Paths.get(dir, "snapshots", s"v$v")))
   }
 
   def currentVersion(dir: String): Option[Int] = {
@@ -180,7 +190,6 @@ object Snapshots {
     * file — fails here instead of silently re-crawling less. */
   private def continueAt(spark: SparkSession, dir: String, v: Int, node: JsonNode,
       cfg: Crawl.Config): Crawl.Result = {
-    import spark.implicits._
     def checked(what: String, path: String, want: Long): Long = {
       val got = Crawl.footers(spark, path).flatMap(_._2).map(_.getRowCount).sum
       if (got == want) got else throw new IllegalStateException(
@@ -191,14 +200,11 @@ object Snapshots {
       checked(s"wave $wave's stage-out", s"${Crawl.stageRoot(dir)}/wave=$wave",
         w.get("staged").asLong)
       wave -> (w.get("scheduled").asLong, w.get("deduped").asLong)
-    }.toSeq
+    }.toMap
     val links = checked(s"waves/w$v/links", Crawl.linksDir(dir, v), node.get("links").asLong)
     val failures0 = node.get("failed_sites").fields().asScala
       .map(e => e.getKey -> (new RuntimeException(e.getValue.asText()): Throwable)).toMap
-    Crawl.runFrom(spark, cfg.copy(snapshotDir = Some(dir)), frontier(spark, dir, v), v + 1,
-      seen0 = Seq.empty[(Long, Int)].toDF("url_hash", "first_wave"),
-      posts0 = spark.emptyDataset[Post].toDF(), schedule0 = None, lineage0 = None, failures0,
-      frontierRows = Some(links), seenRows = Some(waves.map { case (_, (s, d)) => s - d }.sum),
-      waves0 = waves.toMap)
+    Crawl.crawlFrom(spark, cfg.copy(snapshotDir = Some(dir)), frontier(spark, dir, v), v + 1,
+      failures0, frontierRows = Some(links), waves0 = waves)
   }
 }

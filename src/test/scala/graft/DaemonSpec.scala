@@ -163,6 +163,17 @@ class DaemonSpec extends SparkSuite {
     }
   }
 
+  test("an unknown site id in --include or --exclude fails the run and names the id") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-daemon-typo").toString
+    val opts = Daemon.Options(out = s"$dir/out", cache = s"$dir/cache", limit = 5, scale = 60)
+    Seq(opts.copy(include = Seq("biz.ssu.ac.kr", "bizz.ssu.ac.kr")) -> "bizz.ssu.ac.kr",
+        opts.copy(exclude = Seq("typo")) -> "typo").foreach { case (o, id) =>
+      val e = intercept[IllegalArgumentException](Daemon.run(spark, o))
+      assert(e.getMessage.contains(s"unknown site id: $id"), e.getMessage)
+    }
+    assert(!new java.io.File(s"$dir/out").exists(), "a refused run writes nothing")
+  }
+
   test("daemon run end-to-end: filtered crawl, merge, sinks on disk") {
     val dir = java.nio.file.Files.createTempDirectory("graft-daemon").toString
     val opts = Daemon.Options(out = s"$dir/out", cache = s"$dir/cache",

@@ -211,6 +211,47 @@ class CrawlSpec extends SparkSuite {
       batchKey(Crawl.run(spark, walk)), "resumed page walk")
   }
 
+  test("runFrom takes the benchmark's call: no job for its empty state, any other state refused") {
+    // the call of perfbench's crawl_bulk, verbatim
+    val seedRows = Crawl.seeds(spark, cfg).collect().toSeq
+    val cores = spark.sparkContext.defaultParallelism
+    val frontier0 = spark.sparkContext.parallelize(seedRows, cores).toDF()
+    val seen0 = Seq.empty[(Long, Int)].toDF("url_hash", "first_wave")
+    val posts0 = spark.emptyDataset[graft.model.Post].toDF()
+    def runFrom(cfg: Crawl.Config): Crawl.Result =
+      Crawl.runFrom(spark, cfg, frontier0, wave0 = 0, seen0, posts0,
+        schedule0 = None, lineage0 = None)
+    assert(orderKey(runFrom(cfg).schedule) === orderKey(schedule1))
+    // with no wave, the call's only jobs count its frontier
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(f: => Unit): Long = {
+      awaitQuiet(jobs.get)
+      val before = jobs.get
+      f
+      awaitQuiet(jobs.get)
+      jobs.get - before
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (started, frontierCount) =
+      try (jobsOf(runFrom(cfg.copy(maxWaves = 0))), jobsOf(frontier0.count()))
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(started === frontierCount)
+    Seq(
+      () => Crawl.runFrom(spark, cfg, frontier0, wave0 = 0,
+        Seq((1L, 0)).toDF("url_hash", "first_wave"), posts0, schedule0 = None, lineage0 = None),
+      () => Crawl.runFrom(spark, cfg, frontier0, wave0 = 0, run1.seen, posts0,
+        schedule0 = None, lineage0 = None),
+      () => Crawl.runFrom(spark, cfg, frontier0, wave0 = 0, seen0, posts0,
+        schedule0 = Some(run1.schedule), lineage0 = None)).foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("Snapshots.resume"), e.getMessage)
+    }
+  }
+
   test("runFrom rejects a seenSketch other than bloom or cuckoo") {
     val e = intercept[IllegalArgumentException](Crawl.run(spark, cfg.copy(seenSketch = "cukoo")))
     assert(e.getMessage.contains("\"cukoo\""), e.getMessage)

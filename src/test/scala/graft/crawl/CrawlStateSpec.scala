@@ -47,27 +47,51 @@ class CrawlStateSpec extends SparkSuite {
 
   test("rollback resume: CURRENT at any committed version, later waves left on disk, " +
       "reproduces the uninterrupted crawl") {
-    // with one row per task the resumed run builds its first seen sketch
-    // from the waves it reads from the dir
-    Seq(None, Some("4")).foreach { rowsPerTask =>
+    // the three-wave walk, also with one row per task, so that the resumed
+    // run builds its first seen sketch from the waves it reads from the
+    // dir; then CrawlSpec's two-wave fleet crawl
+    Seq((walk, None, 3), (walk, Some("4"), 3),
+        (Crawl.Config(scale = 200, limitPerSite = 50), None, 2)).foreach {
+      case (shape, rowsPerTask, waves) =>
       rowsPerTask.foreach(sys.props("graft.rows.per.task") = _)
       try {
         val dir = Files.createTempDirectory("graft-rollback").toString
-        val cfg = walk.copy(snapshotDir = Some(dir))
+        val cfg = shape.copy(snapshotDir = Some(dir))
         // collected before any resume: a resume rewrites the later waves' files
         val whole = fingerprint(Crawl.run(spark, cfg))
         val versions = Snapshots.versions(dir)
-        assert(versions === Seq(0, 1, 2))
+        assert(versions === (0 until waves))
         versions.foreach { v =>
           // a crash after version v's waves, before a later CURRENT flip:
           // CURRENT names v, and every later wave's stage-out and manifest
-          // stay on disk
-          Files.writeString(Paths.get(dir, "snapshots", "CURRENT"), s"v$v")
-          assert(fingerprint(Snapshots.resume(spark, dir, cfg)) === whole,
-            s"resumed at v$v, rows per task $rowsPerTask")
-          assert(Snapshots.currentVersion(dir) === Some(versions.last))
+          // stay on disk; or a crash in wave v + 1 between its stage-out
+          // write and its links write
+          val crashes = Seq("later waves left" -> (() => ())) ++
+            (if (v == versions.last) Nil
+             else Seq(s"wave ${v + 1}'s links lost" ->
+               (() => TempDirs.deleteRecursively(Paths.get(Crawl.linksDir(dir, v + 1))))))
+          crashes.foreach { case (crash, at) =>
+            Files.writeString(Paths.get(dir, "snapshots", "CURRENT"), s"v$v")
+            at()
+            assert(fingerprint(Snapshots.resume(spark, dir, cfg)) === whole,
+              s"resumed at v$v, $crash, rows per task $rowsPerTask, $shape")
+            assert(Snapshots.currentVersion(dir) === Some(versions.last))
+          }
         }
       } finally sys.props.remove("graft.rows.per.task")
     }
+  }
+
+  test("a shorter crawl into a reused snapshot dir uncommits the longer crawl's later versions") {
+    val dir = Files.createTempDirectory("graft-reused").toString
+    Crawl.run(spark, walk.copy(snapshotDir = Some(dir)))
+    // a zero-wave continuation stages nothing, so it uncommits nothing
+    assert(Snapshots.read(spark, dir, "schedule", Some(0)).count() > 0)
+    assert(Snapshots.versions(dir) === Seq(0, 1, 2))
+    Crawl.run(spark, walk.copy(snapshotDir = Some(dir), maxWaves = 1))
+    assert(Snapshots.versions(dir) === Seq(0))
+    assert(Snapshots.currentVersion(dir) === Some(0))
+    intercept[IllegalArgumentException](Snapshots.read(spark, dir, "posts", Some(2)))
+    assert(Compaction.expireSnapshots(dir, 1) === Seq.empty)
   }
 }
